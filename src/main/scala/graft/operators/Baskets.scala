@@ -35,7 +35,10 @@ object Baskets {
     // guarded y > x) realize every item_a < item_b pair exactly once —
     // the join's output verbatim. Per-basket blowup is C(k,2), bounded
     // by basket size exactly as the join's was.
-    val g = ob.groupBy("basket")
+    // a NULL basket is no basket and a NULL item no item: neither
+    // forms pairs nor counts toward n_baskets
+    val g = ob.filter(col("basket").isNotNull && col("item").isNotNull)
+      .groupBy("basket")
       .agg(sort_array(collect_list(col("item"))).as("items"))
       .localCheckpoint()
     val n = g.agg(count(lit(1)).as("n_baskets"))

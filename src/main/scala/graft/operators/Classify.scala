@@ -74,8 +74,10 @@ object Classify {
   def nbClassify(train: DataFrame, test: DataFrame,
                  labelCol: String = "label", toksCol: String = "toks",
                  idCol: String = "id"): DataFrame = {
+    // a NULL array element is no token: it counts neither in the
+    // vocabulary nor in a class's token total
     val tok = train.select(col(labelCol).as("lang"),
-      explode(col(toksCol)).as("t"))
+      explode(col(toksCol)).as("t")).filter(col("t").isNotNull)
     // the ONLY aggregation over the exploded train corpus (guide §2.3):
     // vocabulary (vt/voc) and the per-class totals (tc) all derive from
     // these (class, token) counts — exactly equivalent (ct holds every
@@ -88,7 +90,7 @@ object Classify {
     val dAll = cls.agg(sum("d_c").as("d_all"))
     val tc = ct.groupBy("lang").agg(sum("n_ct").as("t_c"))
     val vt = ct.select("t").distinct()
-    val voc = vt.agg(count(lit(1)).as("v"))
+    val voc = vt.agg(count(col("t")).as("v"))
     // per-class scalars: log prior + the unseen-in-class (count 0 + 1
     // smoothing) default, both in micro-nats — #classes rows, broadcast
     val pri = cls.join(tc, "lang")

@@ -544,8 +544,8 @@ object Ingest {
     * re-upsert of a lazily-deleted key correctly records `insert`.
     *
     * `sortCols` + `filesPerBucket` pin an IN-BUCKET layout (table
-    * properties): each bucket rewrite range-slices its rows on
-    * (bucket, sortCols) into ~filesPerBucket sorted files and the
+    * properties): each bucket rewrite sorts its rows on sortCols and
+    * cuts them into ~filesPerBucket files of equal row count, and the
     * version commits a per-file min/max `_stats/` manifest (fresh for
     * rewritten buckets, carried+path-remapped for linked ones) — the
     * bucket+sort-order layout [[readUpsertTableWhere]]'s file-list
@@ -688,8 +688,8 @@ object Ingest {
                     txn: Option[(String, Long)] = None)
                    (batch: DataFrame, batchId: Long)
                    (implicit store: TableStore): Unit = {
-    import org.apache.spark.sql.functions.{broadcast, col, collect_set,
-      count, first, lit, max, pmod, sum, when, xxhash64}
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count,
+      first, lit, max, pmod, when, xxhash64}
     val spark = batch.sparkSession
     val root = tableDir
     store.mkdirs(root)
@@ -976,20 +976,23 @@ object Ingest {
           bkAll.filter(!((delFlag <=> lit(false)) && (anyViol <=> lit(true))))
         }
       }
-      // ONE aggregation job answers empty?, key-unique?, the touched
-      // bucket set, AND which of those buckets have upserts (vs only
-      // tombstones — the lazy-delete split). ≤ 2·nBuckets small ints,
-      // the only driver-side collect in the sink; the cached batch then
-      // feeds the merge without recomputing its upstream per action
+      // ONE shuffle answers empty?, key-unique?, the touched bucket set,
+      // which of those buckets have upserts (vs only tombstones — the
+      // lazy-delete split), the NULL delete flags and each bucket's
+      // range of upserted sort keys: the per-key rows fold within each
+      // shuffle partition, and the partials (≤ 3·nBuckets small numbers
+      // each) fold on the driver — the only driver-side collect in the
+      // sink. The cached batch then feeds the merge without recomputing
+      // its upstream per action
+      val sortKey = sortCols.headOption
+        .flatMap(c => rangeKey(col(c), tableSchema(c).dataType))
       val summary = phase("summary")(bk
         .groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as("cnt"), first(col(UpsertBucketCol)).as("b"),
-          first(delFlag).as("isDel"))
-        .agg(max(col("cnt")).as("max_cnt"), collect_set(col("b")).as("bs"),
-          collect_set(when(!col("isDel"), col("b"))).as("ubs"),
-          sum(when(col("isDel").isNull, 1L).otherwise(0L)).as("null_flags"))
-        .head())
-      if (summary.isNullAt(0)) { // empty batch
+        .agg(count(lit(1)), first(col(UpsertBucketCol)), first(delFlag),
+          first(sortKey.getOrElse(lit(null).cast("double"))))
+        .rdd.mapPartitions(BatchSummary.of(keys.size))
+        .collect().reduceOption(_ merge _))
+      if (summary.isEmpty) { // empty batch
         // a fully-diverted batch (every row quarantined) reaches this
         // path with its diversion write still in flight: the dead
         // letters must be durable before the ledger records the batch,
@@ -1016,22 +1019,22 @@ object Ingest {
         }
         commit(); return
       }
-      if (summary.getLong(0) != 1L)
+      val BatchSummary(maxCount, touched, upsertBuckets, nullFlags,
+        upsertRanges) = summary.get
+      if (maxCount != 1L)
         throw new IllegalArgumentException(
-          s"upsertParquet: batch $batchId has up to ${summary.getLong(0)} " +
+          s"upsertParquet: batch $batchId has up to $maxCount " +
             s"rows for one ${keys.mkString(",")} key — pre-reduce the batch " +
             "(e.g. max_by on an ordering column; a key may appear as an " +
             "upsert OR a tombstone, not both)")
       // a NULL delete flag is neither an upsert nor a tombstone — the
       // eager path would evict it while the lazy path would silently
       // keep the old row. Fail loudly instead of diverging by mode.
-      if (summary.getLong(3) != 0L)
+      if (nullFlags != 0L)
         throw new IllegalArgumentException(
-          s"upsertParquet: batch $batchId has ${summary.getLong(3)} row(s) " +
+          s"upsertParquet: batch $batchId has $nullFlags row(s) " +
             s"with a NULL '${deleteCol.get}' flag — coalesce it to " +
             "false (upsert) or true (delete) before writing")
-      val touched: Set[Long] = summary.getSeq[Long](1).toSet
-      val upsertBuckets: Set[Long] = summary.getSeq[Long](2).toSet
       // buckets this batch REWRITES: all touched buckets — minus, in
       // lazy mode, the delete-only buckets whose tombstones go to the
       // deletion vector instead
@@ -1121,21 +1124,25 @@ object Ingest {
         val old = prevDvKeys.fold(rawOld)(dv =>
           rawOld.join(broadcast(dv), keys, "left_anti"))
         // pre-images: the table rows this batch replaces or deletes —
-        // ≤ batch-size rows by construction; checkpointed so the
-        // classification join and the output union don't re-scan the
-        // touched buckets a third time
+        // at most one per batch key, since table keys are unique.
+        // Post-images: the batch's upserts, an update when their key
+        // has a pre-image and an insert otherwise — classified by one
+        // small shuffle of both on the key, so the touched buckets are
+        // scanned once and nothing is materialized twice
         val pre = old.join(
           broadcast(bk.select(keys.map(col) :+ flag.as("_is_delete"): _*)),
-          keys, "inner").localCheckpoint()
-        val preKeys = pre.select(keys.map(col): _*).distinct()
-        val post = upserts.join(
-          broadcast(preKeys.withColumn("_existed", lit(true))), keys, "left")
-        val changes = pre.select(dataCols :+
-            when(col("_is_delete"), "delete")
-              .otherwise("update_preimage").as("_change_type"): _*)
-          .unionByName(post.select(dataCols :+
-            when(col("_existed"), "update_postimage")
-              .otherwise("insert").as("_change_type"): _*))
+          keys, "inner")
+          .select(dataCols :+ when(col("_is_delete"), "delete")
+            .otherwise("update_preimage").as("_change_type") :+
+            lit(1).as("_pre"): _*)
+        val post = upserts.select(dataCols :+
+          lit(null: String).as("_change_type") :+ lit(0).as("_pre"): _*)
+        val existed = max(col("_pre")).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*))
+        val changes = pre.unionByName(post)
+          .select(dataCols :+ coalesce(col("_change_type"),
+            when(existed === 1, "update_postimage").otherwise("insert"))
+            .as("_change_type"): _*)
           .withColumn("_batch_id", lit(batchId))
         changes.coalesce(math.max(1, touched.size))
           .write.parquet(store.child(newV, "_changes"))
@@ -1163,16 +1170,38 @@ object Ingest {
       // bucket by default; with pinned sortCols, RANGE-partitioned on
       // (bucket, sortCols) into ~filesPerBucket slices per bucket and
       // sorted within — each file then covers a tight sortCols range,
-      // which is what makes the per-file manifest below actually prune
-      // (hash buckets alone have full-range bounds on every column)
+      // which is what makes the per-file manifest actually prune (hash
+      // buckets alone have full-range bounds on every column). The range
+      // bounds come from the rewritten files' footer stats — the values
+      // their manifest rows hold — and the batch's key ranges
+      // ([[rangeBounds]]); only when those lack a rewritten bucket (the
+      // first commit, a newly filled bucket) or exact stats does the
+      // range partitioning sample the merged rows for them, one job more
       val laidOut =
         if (sortCols.isEmpty)
           merged.repartition(math.max(1, rewriteB.size), col(UpsertBucketCol))
-        else merged.repartitionByRange(
-          math.max(1, rewriteB.size * filesPerBucket),
-          (col(UpsertBucketCol) +: sortCols.map(col)): _*)
-          .sortWithinPartitions(
-            (col(UpsertBucketCol) +: sortCols.map(col)): _*)
+        else {
+          import org.apache.spark.sql.functions.{element_at, filter, size, typedLit}
+          val order = col(UpsertBucketCol) +: sortCols.map(col)
+          val parts = math.max(1, rewriteB.size * filesPerBucket)
+          val prior = sortKey.fold(Map.empty[Long, Seq[FileRange]])(_ =>
+            footerRanges(spark, rewriteDirs, sortCols.head, tableSchema))
+          val ranged =
+            if (rewriteB.nonEmpty && rewriteB.forall(prior.contains)) {
+              // the batch's upserts count as one more file per bucket, so
+              // keys beyond the old range (an append-only time column)
+              // get slices of their own
+              val (first, bounds) = rangeBounds(
+                prior.map { case (b, fs) => b -> (fs ++ upsertRanges.get(b)) },
+                rewriteB.toSeq.sorted, parts)
+              merged.repartitionById(parts,
+                element_at(typedLit(first), col(UpsertBucketCol)) +
+                  size(filter(element_at(typedLit(bounds),
+                    col(UpsertBucketCol)), sortKey.get > _)))
+            }
+            else merged.repartitionByRange(parts, order: _*)
+          ranged.sortWithinPartitions(order: _*)
+        }
       // append, NOT overwrite: newV was freshly deleteTree'd+mkdirs'd
       // above, so overwrite's implicit whole-dir delete is redundant —
       // and it would race the OVERLAPPED _changes/_deletes writers'
@@ -1193,62 +1222,9 @@ object Ingest {
               .foreach(n => linkInto(store.child(bdir, n), dst))
           }
       }
-      // per-file min/max manifest for the pinned sortCols — the
-      // file-LIST skipping layer (StatsManifest) composed into the
-      // format. Fresh rows come from a narrow scan of the REWRITTEN
-      // buckets only; rows for hard-linked buckets are CARRIED from
-      // the previous version's manifest with their paths remapped
-      // (same inodes, so the stats hold verbatim) — manifest cost
-      // rides the merge's O(touched), never a table scan. Written
-      // inside the version dir pre-swap: atomic with the snapshot,
-      // swept with it, invisible to snapshot reads (underscore).
-      if (sortCols.nonEmpty) {
-        import org.apache.spark.sql.functions.{input_file_name, regexp_extract}
-        val aggs = StatsManifest.statsAggs(sortCols)
-        val freshDirs = rewriteB.toSeq.sorted
-          .map(b => store.child(newV, s"$UpsertBucketCol=$b"))
-          .filter(store.isDirectory)
-        // footer-derived stats first (r17, guide §6 — no second read
-        // of the data just written); scan-based derivation is the
-        // fallback whenever any column's footer stats aren't exact
-        val footerFresh =
-          if (freshDirs.isEmpty) None
-          else footerFreshManifest(spark, newV, Some(rewriteB), sortCols,
-            Some(tableSchema))
-        val fresh =
-          if (freshDirs.isEmpty) None
-          else footerFresh
-            .orElse(Some(spark.read.schema(tableSchema)
-              .option("basePath", newV)
-              .parquet(freshDirs: _*)
-              .select(sortCols.map(col): _*)
-              .groupBy(StatsManifest.relFile(vName).as("file"))
-              .agg(aggs.head, aggs.tail: _*)))
-        val carried = curDir
-          .map(d => store.child(d, StatsManifest.ManifestDir))
-          .filter(store.isDirectory)
-          .flatMap { md =>
-            val parts = store.listNames(md)
-              .filter(_.endsWith(".parquet")).map(store.child(md, _))
-            if (parts.isEmpty) None
-            else Some(spark.read.parquet(parts: _*)
-              .filter(!regexp_extract(col("file"),
-                s"(^|/)$UpsertBucketCol=(\\d+)/", 2).cast("long")
-                .isin(rewriteB.toSeq: _*))
-              .withColumn("file",
-                org.apache.spark.sql.functions.regexp_replace(col("file"),
-                  java.util.regex.Pattern.quote(
-                    s"/${store.baseName(curDir.get)}/"),
-                  s"/$vName/")))
-          }
-        // the emptiness probe is a Spark job; skip it when the footer
-        // path produced the fresh rows (≥1 row per file by construction)
-        phase("manifest")((fresh.toSeq ++ carried.toSeq)
-          .reduceOption(_.unionByName(_))
-          .filter(m => footerFresh.isDefined || m.head(1).nonEmpty)
-          .foreach(_.coalesce(1).write.parquet(
-            store.child(newV, StatsManifest.ManifestDir))))
-      }
+      if (sortCols.nonEmpty)
+        phase("manifest")(writeVersionManifest(spark, newV, Some(rewriteB),
+          curDir, sortCols, Some(tableSchema)))
       // overlapped data-plane writes (capture / dv / quarantine) must
       // all be durable before the snapshot becomes visible
       awaitDataPlane()
@@ -1318,8 +1294,8 @@ object Ingest {
     * applies the row-level predicate. A version without a manifest
     * (table never pinned sortCols) degrades to the full snapshot scan
     * — never a wrong answer. Why it works: with pinned sortCols the
-    * merge range-partitions each rewritten bucket into
-    * ~`filesPerBucket` sorted slices, so each file covers a tight
+    * merge cuts each rewritten bucket into ~`filesPerBucket` sorted
+    * slices, so each file covers a tight
     * sortCols range — a selective range probe then reads O(buckets)
     * files instead of O(buckets × filesPerBucket) (and at 100 TB,
     * "files the manifest discards" are object-store GETs that never
@@ -2092,33 +2068,236 @@ object Ingest {
       org.apache.spark.sql.types.DataType.fromJson(json)
         .asInstanceOf[StructType])
 
-  /** Fresh stats-manifest rows for the (optionally bucket-restricted)
-    * parquet files of a just-built version dir, derived from parquet
-    * FOOTERS — no second read of the data the rewrite just wrote (r17,
-    * guide §6). `None` whenever any file/column lacks exact footer
-    * stats ([[StatsManifest.footerManifestRows]]); callers fall back
-    * to the scan-based derivation.
+  /** What the sink's summary learns about a batch, per key: the
+    * largest row count for one key, the buckets it touches, the
+    * buckets holding upserts (not only tombstones), the rows with a
+    * NULL delete flag, and per bucket the [[FileRange]] of the
+    * upserts' finite sort keys. Folded within each shuffle partition
+    * ([[BatchSummary.of]]) and then across partitions on the driver.
     */
-  private def footerFreshManifest(spark: SparkSession, newV: String,
-                                  buckets: Option[Set[Long]],
-                                  sortCols: Seq[String],
-                                  schema: Option[StructType])
-                                 (implicit store: TableStore)
-      : Option[DataFrame] = {
-    val sch = schema.getOrElse(return None)
-    val dirs = store.listNames(newV)
-      .filter(_.startsWith(s"$UpsertBucketCol="))
-      .filter(n => store.isDirectory(store.child(newV, n)))
-      .filter(n => buckets.forall(bs => scala.util.Try(
-        n.stripPrefix(s"$UpsertBucketCol=").toLong).toOption.exists(bs)))
-      .map(store.child(newV, _))
+  private final case class BatchSummary(maxCount: Long, buckets: Set[Long],
+                                        upsertBuckets: Set[Long],
+                                        nullFlags: Long,
+                                        upsertRanges: Map[Long, FileRange]) {
+    def merge(o: BatchSummary): BatchSummary =
+      BatchSummary(maxCount max o.maxCount, buckets ++ o.buckets,
+        upsertBuckets ++ o.upsertBuckets, nullFlags + o.nullFlags,
+        o.upsertRanges.foldLeft(upsertRanges) { case (m, (b, r)) =>
+          m.updated(b, m.get(b).fold(r)(BatchSummary.span(_, r))) })
+  }
+
+  private object BatchSummary {
+    def span(a: FileRange, b: FileRange): FileRange =
+      (a._1 min b._1, a._2 max b._2, a._3 + b._3)
+
+    /** One partition's partial over per-key rows: `nKeys` key columns,
+      * then the key's row count, bucket, delete flag and sort key (read
+      * by position, so no key name can shadow them); empty for an empty
+      * partition.
+      */
+    def of(nKeys: Int)(rows: Iterator[org.apache.spark.sql.Row])
+        : Iterator[BatchSummary] =
+      if (!rows.hasNext) Iterator.empty
+      else {
+        var maxCount = 0L
+        var nullFlags = 0L
+        val buckets = scala.collection.mutable.Set.empty[Long]
+        val upsertBuckets = scala.collection.mutable.Set.empty[Long]
+        val ranges = scala.collection.mutable.Map.empty[Long, FileRange]
+        rows.foreach { r =>
+          val (b, del, key) = (r.getLong(nKeys + 1), nKeys + 2, nKeys + 3)
+          maxCount = maxCount max r.getLong(nKeys)
+          buckets += b
+          if (r.isNullAt(del)) nullFlags += 1
+          else if (!r.getBoolean(del)) {
+            upsertBuckets += b
+            if (!r.isNullAt(key) &&
+                java.lang.Double.isFinite(r.getDouble(key))) {
+              val k = (r.getDouble(key), r.getDouble(key), 1L)
+              ranges(b) = ranges.get(b).fold(k)(span(_, k))
+            }
+          }
+        }
+        Iterator(BatchSummary(maxCount, buckets.toSet, upsertBuckets.toSet,
+          nullFlags, ranges.toMap))
+      }
+  }
+
+  /** A sort column's value as a double, for placing range bounds:
+    * numbers as themselves, dates as epoch days, timestamps as epoch
+    * micros. `None` for types with no such order-preserving map
+    * (strings, booleans, nested).
+    */
+  private def rangeKey(c: org.apache.spark.sql.Column,
+                       dt: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions.{unix_date, unix_micros}
+    import org.apache.spark.sql.types.{DateType, NumericType, TimestampType}
+    dt match {
+      case DateType => Some(unix_date(c).cast("double"))
+      case TimestampType => Some(unix_micros(c).cast("double"))
+      case _: NumericType => Some(c.cast("double"))
+      case _ => None
+    }
+  }
+
+  /** One data file's rows on a sort column: [[rangeKey]] of its min and
+    * its max, and its row count.
+    */
+  private type FileRange = (Double, Double, Long)
+
+  /** The [[FileRange]] on `sortCol` of every parquet file in the bucket
+    * dirs `dirs`, by bucket, from the footers — the exact statistics the
+    * version's manifest rows hold. Files whose bounds are NULL or not
+    * finite are left out; everything is empty when a footer lacks exact
+    * statistics ([[StatsManifest.footerFileStats]]).
+    */
+  private def footerRanges(spark: SparkSession, dirs: Seq[String],
+                           sortCol: String, schema: StructType)
+                          (implicit store: TableStore)
+      : Map[Long, Seq[FileRange]] = {
     val files = dirs.flatMap { d =>
+      val b = store.baseName(d).stripPrefix(s"$UpsertBucketCol=").toLong
+      store.listNames(d).filter(_.endsWith(".parquet"))
+        .map(n => b -> store.child(d, n))
+    }
+    // the driver-side twin of rangeKey
+    def key(v: Any): Option[Double] = Option(v).collect {
+      case n: java.lang.Number => n.doubleValue
+      case d: java.time.LocalDate => d.toEpochDay.toDouble
+      case i: java.time.Instant =>
+        i.getEpochSecond * 1e6 + i.getNano / 1000
+    }.filter(java.lang.Double.isFinite)
+    StatsManifest.footerFileStats(spark, files.map(_._2), Seq(sortCol), schema)
+      .fold(Map.empty[Long, Seq[FileRange]])(stats =>
+        files.map(_._1).zip(stats).flatMap { case (b, st) =>
+          for (lo <- key(st(0)); hi <- key(st(1)))
+            yield b -> (lo, hi, st(3).asInstanceOf[Long])
+        }.groupMap(_._1)(_._2))
+  }
+
+  /** Range-partition bounds for a sorted rewrite of `buckets` into
+    * `parts` partitions — the bounds a range partitioning on (bucket,
+    * sort key) samples from the rows, placed here from file ranges
+    * instead: the rows in (bucket, key) order split into `parts` runs
+    * of about equal size, each file's rows assumed spread evenly between
+    * its min and max (so a bucket compacted to one file still splits).
+    * A row of bucket `b` with key `k` goes to partition `first(b)` plus
+    * the number of `bounds(b)` below `k`; a NULL key sorts first, as in
+    * the range partitioning.
+    */
+  private def rangeBounds(ranges: Map[Long, Seq[FileRange]],
+                          buckets: Seq[Long], parts: Int)
+      : (Map[Long, Int], Map[Long, Seq[Double]]) = {
+    val sizes = buckets.map(b => ranges(b).map(_._3).sum.toDouble)
+    val before = sizes.scanLeft(0.0)(_ + _)
+    // rows of one bucket's files at or below x
+    def below(fs: Seq[FileRange], x: Double): Double = fs.map {
+      case (lo, hi, n) =>
+        if (x >= hi) n.toDouble
+        else if (x < lo) 0.0
+        else n * (x - lo) / (hi - lo)
+    }.sum
+    val cuts = (1 until parts).map { j =>
+      val target = before.last * j / parts
+      val i = sizes.indices.find(i => before(i + 1) >= target).get
+      val fs = ranges(buckets(i))
+      // the least x with `below(x)` reaching the target, bisected
+      var lo = fs.map(_._1).min
+      var hi = fs.map(_._2).max
+      (0 until 64).foreach { _ =>
+        val mid = lo + (hi - lo) / 2
+        if (below(fs, mid) < target - before(i)) lo = mid else hi = mid
+      }
+      (i, hi)
+    }
+    (buckets.indices.map(i => buckets(i) -> cuts.count(_._1 < i)).toMap,
+      buckets.indices.map(i =>
+        buckets(i) -> cuts.filter(_._1 == i).map(_._2)).toMap)
+  }
+
+  /** The manifest step every version build shares (sink merge,
+    * selective compaction, generation rewrite): write `newV`'s
+    * per-file min/max manifest for the pinned `sortCols` — the
+    * file-LIST skipping layer ([[StatsManifest]]) composed into the
+    * format.
+    *
+    *  - Fresh rows for the files of the `fresh` buckets (every bucket
+    *    when `None`) come from the parquet FOOTERS — no second read of
+    *    the data just written (r17, guide §6) — and fall back to a
+    *    narrow scan of those buckets whenever any footer lacks exact
+    *    stats ([[StatsManifest.footerManifestRows]]).
+    *  - Rows for every other bucket dir of `newV` are CARRIED from the
+    *    previous version's manifest with their version segment
+    *    re-rooted (same files, so the stats hold verbatim): manifest
+    *    cost rides the rewrite, never a table scan. When no bucket is
+    *    carried nothing is read from the previous manifest, and a
+    *    carried manifest is read with [[StatsManifest.manifestSchema]],
+    *    so no schema-inference job runs.
+    *
+    * Written inside `newV` before the swap: atomic with the snapshot,
+    * swept with it, invisible to snapshot reads (underscore). Performs
+    * no control-plane mutation — the crash windows are the caller's.
+    */
+  private def writeVersionManifest(spark: SparkSession, newV: String,
+                                   fresh: Option[Set[Long]],
+                                   prevV: Option[String],
+                                   sortCols: Seq[String],
+                                   schema: Option[StructType])
+                                  (implicit store: TableStore): Unit = {
+    import org.apache.spark.sql.functions.{col, regexp_extract, regexp_replace}
+    val newName = store.baseName(newV)
+    val (freshDirs, carriedDirs) = store.listNames(newV)
+      .filter(_.startsWith(s"$UpsertBucketCol="))
+      .flatMap(n => scala.util.Try(
+        n.stripPrefix(s"$UpsertBucketCol=").toLong).toOption
+        .map(_ -> store.child(newV, n)))
+      .filter { case (_, d) => store.isDirectory(d) }
+      .partition { case (b, _) => fresh.forall(_(b)) }
+    val files = freshDirs.flatMap { case (_, d) =>
       store.listNames(d).filter(_.endsWith(".parquet"))
         .filterNot(n => store.isDirectory(store.child(d, n)))
         .map(n => (store.child(d, n), s"${store.baseName(d)}/$n"))
     }
-    if (files.isEmpty) None
-    else StatsManifest.footerManifestRows(spark, files, sortCols, sch)
+    val freshRows =
+      if (files.isEmpty) None
+      else schema.flatMap(StatsManifest.footerManifestRows(
+          spark, files, sortCols, _))
+        .orElse {
+          val aggs = StatsManifest.statsAggs(sortCols)
+          Some(schema.fold(spark.read)(spark.read.schema(_))
+            .option("basePath", newV)
+            .parquet(freshDirs.map(_._2): _*)
+            .select(sortCols.map(col): _*)
+            .groupBy(StatsManifest.relFile(newName).as("file"))
+            .agg(aggs.head, aggs.tail: _*))
+        }
+    val carried = prevV.filter(_ => carriedDirs.nonEmpty).flatMap { pv =>
+      val md = store.child(pv, StatsManifest.ManifestDir)
+      val parts =
+        if (!store.isDirectory(md)) Nil
+        else store.listNames(md).filter(_.endsWith(".parquet"))
+          .map(store.child(md, _))
+      val known = schema.flatMap(StatsManifest.manifestSchema(sortCols, _))
+      if (parts.isEmpty) None
+      else Some(known.fold(spark.read)(spark.read.schema(_))
+        .parquet(parts: _*)
+        .filter(!regexp_extract(col("file"),
+          s"(^|/)$UpsertBucketCol=(\\d+)/", 2).cast("long")
+          .isin(fresh.toSeq.flatten: _*))
+        // carry by VERSION-DIR SEGMENT, not full-path prefix: on a
+        // link-copied tree an absolute recorded path is the pristine
+        // tree's, so a full-prefix replace would be a silent no-op and
+        // leave the OLD version segment outside StatsManifest.rebase's
+        // reach (it keys on the new version-dir name). Version-relative
+        // paths (r17) pass through unchanged.
+        .withColumn("file", regexp_replace(col("file"),
+          java.util.regex.Pattern.quote(s"/${store.baseName(pv)}/"),
+          java.util.regex.Matcher.quoteReplacement(s"/$newName/"))))
+    }
+    (freshRows.toSeq ++ carried.toSeq).reduceOption(_.unionByName(_))
+      .foreach(_.coalesce(1).write.parquet(
+        store.child(newV, StatsManifest.ManifestDir)))
   }
 
   // --- column mapping (metadata-only RENAME / DROP COLUMN) ---
@@ -2705,45 +2884,9 @@ object Ingest {
         store.mkdirs(dst)
         parquetsIn(d).foreach(n => linkInto(store.child(d, n), dst))
       }
-    if (sortCols.nonEmpty) {
-      // manifest: carried rows re-rooted to the new generation's
-      // paths, fresh rows scanned only for the rewritten buckets
-      import org.apache.spark.sql.functions.{input_file_name, regexp_replace}
-      val aggs = StatsManifest.statsAggs(sortCols)
-      val footerFresh = footerFreshManifest(spark, newV,
-        Some(rewrite.map(_.toLong)), sortCols, pinnedSchema(root))
-      val fresh = footerFresh
-        .getOrElse(pinnedReader(spark, root).option("basePath", newV)
-          .parquet(newV)
-          .filter(col(UpsertBucketCol).isin(rewrite.toSeq.map(_.toLong): _*))
-          .select(sortCols.map(col): _*)
-          .groupBy(StatsManifest.relFile(newName).as("file"))
-          .agg(aggs.head, aggs.tail: _*))
-      val oldMan = store.child(curDir, StatsManifest.ManifestDir)
-      val carriedOpt =
-        if (!store.isDirectory(oldMan)) None
-        else {
-          val dropPat = rewrite.toSeq.sorted
-            .map(bk => "(^|/)" + java.util.regex.Pattern
-              .quote(s"$UpsertBucketCol=$bk/")).mkString("|")
-          // carry by VERSION-DIR SEGMENT, not full-path prefix: on a
-          // link-copied tree the recorded paths are the pristine
-          // tree's, so a full-prefix replace is a silent no-op and the
-          // carried rows would keep the OLD version segment under a
-          // foreign prefix — outside StatsManifest.rebase's reach
-          // (it keys on the NEW version-dir name). Matches the merge
-          // path's carry (ADVICE r16).
-          Some(spark.read.parquet(oldMan)
-            .filter(!col("file").rlike(dropPat))
-            .withColumn("file", regexp_replace(col("file"),
-              java.util.regex.Pattern.quote(s"/${curName.get}/"),
-              java.util.regex.Matcher.quoteReplacement(s"/$newName/"))))
-        }
-      val manifest = carriedOpt.fold(fresh)(c => fresh.unionByName(c))
-      if (footerFresh.isDefined || manifest.head(1).nonEmpty)
-        manifest.coalesce(1).write.parquet(
-          store.child(newV, StatsManifest.ManifestDir))
-    }
+    if (sortCols.nonEmpty)
+      writeVersionManifest(spark, newV, Some(rewrite.map(_.toLong)),
+        Some(curDir), sortCols, pinnedSchema(root))
     val oldCh = store.child(curDir, "_changes")
     if (store.isDirectory(oldCh)) {
       val dst = store.child(newV, "_changes")
@@ -3615,22 +3758,9 @@ object Ingest {
         .sortWithinPartitions((col(UpsertBucketCol) +: sortCols.map(col)): _*)
     rehashedLaid
       .write.partitionBy(UpsertBucketCol).mode("overwrite").parquet(newV)
-    if (sortCols.nonEmpty) {
-      // fresh manifest for the fully-rewritten generation
-      import org.apache.spark.sql.functions.input_file_name
-      val aggs = StatsManifest.statsAggs(sortCols)
-      val footerFresh = footerFreshManifest(spark, newV, None, sortCols,
+    if (sortCols.nonEmpty)
+      writeVersionManifest(spark, newV, None, None, sortCols,
         pinnedSchema(root))
-      val m = footerFresh
-        .getOrElse(pinnedReader(spark, root).option("basePath", newV)
-          .parquet(newV)
-          .select(sortCols.map(col): _*)
-          .groupBy(StatsManifest.relFile(newName).as("file"))
-          .agg(aggs.head, aggs.tail: _*))
-      if (footerFresh.isDefined || m.head(1).nonEmpty)
-        m.coalesce(1).write.parquet(
-          store.child(newV, StatsManifest.ManifestDir))
-    }
     val oldCh = store.child(curDir, "_changes")
     if (store.isDirectory(oldCh)) {
       val dst = store.child(newV, "_changes")

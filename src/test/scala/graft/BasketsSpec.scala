@@ -31,6 +31,21 @@ class BasketsSpec extends AnyFunSuite {
     assert(Baskets.rules(ob, minSupport = 2).count() === 1)
   }
 
+  test("rules: NULL baskets and NULL items are ignored") {
+    import spark.implicits._
+    val ob = Seq[(Option[Long], Option[String])](
+      (Some(1L), Some("x")), (Some(1L), Some("y")),
+      (Some(2L), Some("x")), (Some(2L), Some("y")),
+      (Some(3L), Some("x")), (Some(3L), Some("z"))).toDF("basket", "item")
+    val withNulls = ob.unionByName(Seq[(Option[Long], Option[String])](
+      (None, Some("x")), (None, Some("y")), // a NULL basket holding x and y
+      (Some(1L), None),                     // a NULL item in a real basket
+      (Some(4L), None)).toDF("basket", "item")) // a basket of only NULL
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      Baskets.rules(df, minSupport = 1).collect().map(_.toSeq).toSet
+    assert(rows(withNulls) === rows(ob))
+  }
+
   test("linkBest: exact match wins; key tie-break on equal scores") {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)

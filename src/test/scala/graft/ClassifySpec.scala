@@ -64,6 +64,23 @@ class ClassifySpec extends AnyFunSuite {
     assert(out === 0L, s"degenerate single-class model scores 0, got $out")
   }
 
+  test("NB ignores NULL tokens: scores equal the corpus without them") {
+    val rows = Seq(
+      (1L, "sports", "goal match team goal"),
+      (2L, "sports", "team win"),
+      (3L, "science", "atom quark atom"))
+    val train = toks(rows).select("label", "toks")
+    // the same documents with a NULL element in every token array
+    val withNulls = toks(rows).select(col("label"),
+      concat(col("toks"), array(lit(null).cast("string"))).as("toks"))
+    val test = toks(Seq((10L, "?", "goal atom"), (11L, "?", "quark win")))
+      .select("id", "toks")
+    def scores(tr: org.apache.spark.sql.DataFrame) =
+      Classify.nbClassify(tr, test).orderBy("id")
+        .select("id", "pred", "score_u").as[(Long, String, Long)].collect().toSeq
+    assert(scores(withNulls) === scores(train))
+  }
+
   test("DSIR ranks target-like candidates first and is seed-stable") {
     val docs = (
       // target: English-ish bigram world

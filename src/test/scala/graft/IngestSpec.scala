@@ -1409,6 +1409,126 @@ abstract class IngestSuiteBase extends AnyFunSuite {
       Ingest.readUpsertTable(spark, table).inputFiles.length)
   }
 
+  /** The CURRENT version's manifest rows against the rows
+    * `StatsManifest.statsAggs` derives by scanning that version's data
+    * files: equal as multisets, or the test fails with both sides.
+    */
+  private def assertManifestMatchesScan(table: String,
+                                        sortCols: Seq[String]): Unit = {
+    val vName = currentName(table)
+    val vDir = new java.io.File(table, vName)
+    val parts = Option(new java.io.File(vDir, "_stats").listFiles()).toSeq
+      .flatten.filter(_.getName.endsWith(".parquet")).map(_.getPath)
+    assert(parts.nonEmpty, s"$vName has no manifest")
+    val manifest = spark.read.parquet(parts: _*)
+    val aggs = graft.sources.StatsManifest.statsAggs(sortCols)
+    val scan = spark.read.parquet(vDir.getPath)
+      .select(sortCols.map(col): _*)
+      .groupBy(graft.sources.StatsManifest.relFile(vName).as("file"))
+      .agg(aggs.head, aggs.tail: _*)
+      .select(manifest.columns.map(col): _*)
+    val extra = manifest.exceptAll(scan).collect()
+    val missing = scan.exceptAll(manifest).collect()
+    assert(extra.isEmpty && missing.isEmpty,
+      s"$vName manifest differs from the scan: manifest-only " +
+        s"${extra.mkString(", ")}; scan-only ${missing.mkString(", ")}")
+  }
+
+  test("manifest rows equal the scan after full and partial rewrites; " +
+    "INT96 sort columns fall back to the scan") {
+    import spark.implicits._
+    val table = tmp() + "/manifest_eq"
+    def up(id: Long, rows: Seq[(Long, Double, Boolean)]): Unit =
+      Ingest.upsertParquet(table, Seq("user_id"), nBuckets = 4,
+        keepVersions = 4, deleteCol = Some("_del"), changeFeed = true,
+        sortCols = Seq("value"), filesPerBucket = 3)(
+        rows.toDF("user_id", "value", "_del"), id)
+    up(0, (1L to 400L).map(i => (i, (i * 37 % 400).toDouble, false)))
+    up(1, (1L to 400L by 3).map(i => (i, -i.toDouble, i % 2 == 0)))
+    assertManifestMatchesScan(table, Seq("value"))
+    // a batch whose keys all hash to one bucket rewrites only that one;
+    // the other three carry their rows from the previous manifest
+    val oneBucket = (1L to 400L).toDF("user_id")
+      .filter(pmod(xxhash64(col("user_id")), lit(4L)) === 0L)
+      .as[Long].collect().take(20)
+    val before = inodesByBucket(table)
+    up(2, oneBucket.map(k => (k, 1000.0 + k, false)))
+    val after = inodesByBucket(table)
+    assert(after.count { case (b, ids) =>
+      b.startsWith("bkt=") && before.get(b).contains(ids) } === 3,
+      "expected exactly one rewritten bucket")
+    assertManifestMatchesScan(table, Seq("value"))
+
+    // INT96 timestamps carry no usable footer stats: the footer path
+    // must decline and the manifest still equal the scan
+    val prev = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try {
+      val tsTable = tmp() + "/manifest_int96"
+      def upTs(id: Long, rows: Seq[(Long, Long)]): Unit =
+        Ingest.upsertParquet(tsTable, Seq("user_id"), nBuckets = 2,
+          keepVersions = 4, sortCols = Seq("ts"), filesPerBucket = 2)(
+          rows.toDF("user_id", "sec")
+            .select(col("user_id"), timestamp_seconds(col("sec")).as("ts")),
+          id)
+      upTs(0, (1L to 100L).map(i => (i, i * 60)))
+      upTs(1, (1L to 100L by 7).map(i => (i, i * 3600)))
+      val vDir = new java.io.File(tsTable, currentName(tsTable))
+      val files = Option(vDir.listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("bkt=")).flatMap(d =>
+          d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+            .map(f => (f.getPath, s"${d.getName}/${f.getName}")))
+      assert(files.nonEmpty)
+      assert(graft.sources.StatsManifest.footerManifestRows(spark, files,
+        Seq("ts"), Ingest.readUpsertTable(spark, tsTable).schema).isEmpty,
+        "INT96 footers must not serve manifest rows")
+      assertManifestMatchesScan(tsTable, Seq("ts"))
+    } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+  }
+
+  test("a steady-state sorted commit runs at most 10 Spark jobs, all labeled") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val table = tmp() + "/job_budget"
+    // batch ids no other suite uses: the sink's side threads carry no
+    // job group, so their jobs are matched by their `b=<id>` label
+    def up(id: Long, rows: Seq[(Long, Double, Boolean)]): Unit =
+      Ingest.upsertParquet(table, Seq("user_id"), nBuckets = 4,
+        keepVersions = 4, deleteCol = Some("_del"), changeFeed = true,
+        sortCols = Seq("value"))(rows.toDF("user_id", "value", "_del"), id)
+    up(7700000L, (1L to 2000L).map(i => (i, (i * 7919 % 2000).toDouble, false)))
+    // the first commit after the bootstrap, then the measured one:
+    // updates, inserts and deletes in every bucket
+    up(7700001L, (1L to 2000L by 5).map(i => (i, i + 0.5, false)))
+    val group = s"sink-job-budget-${System.nanoTime()}"
+    val batchId = 7700002L
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        def prop(k: String): String = Option(js.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        val desc = prop("spark.job.description")
+        if (prop("spark.jobGroup.id") == group || desc.endsWith(s" b=$batchId"))
+          descs.add(desc)
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "sink job budget")
+    try {
+      up(batchId, (3L to 2000L by 7).map(i => (i, -i.toDouble, i % 3 == 0)) ++
+        (2001L to 2200L).map(i => (i, i.toDouble, false)))
+      org.apache.spark.GraftTestAccess.waitUntilListenerBusEmpty(
+        spark.sparkContext, 30000)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val jobs = descs.toArray.toSeq.map(_.toString)
+    val label = s"sink:[a-z-]+ b=$batchId".r
+    assert(jobs.forall(label.matches), s"unlabeled sink jobs: $jobs")
+    assert(jobs.size <= 10, s"${jobs.size} jobs: ${jobs.sorted.mkString(", ")}")
+  }
+
   test("optimizeUpsertTable: same-count generation rewrite clears debt, keeps layout") {
     import spark.implicits._
     val table = tmp() + "/opt_table"
