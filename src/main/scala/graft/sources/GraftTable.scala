@@ -504,7 +504,7 @@ private[sources] final class GraftScan(spark: SparkSession,
     * must anti-filter rows the projection would not otherwise carry.
     */
   private lazy val physKeys: Seq[String] =
-    Ingest.tableMeta(root).apply("keys").split(",").toSeq
+    Ingest.tableLayout(root).keys
 
   override def readSchema(): StructType = aggs match {
     case Some(as) => StructType(as.map(_.outField))

@@ -306,6 +306,32 @@ object Ingest {
     store.deleteTree(dir)
   }
 
+  /** Swap CURRENT from `expected` to `to` — the one pointer write of
+    * every commit, sink merge and generation rewrite alike. Optimistic
+    * concurrency: the sink is SINGLE-writer by contract (a streaming
+    * query's sequential batches), but a misconfigured second writer is
+    * a silent-corruption hazard — both read the same CURRENT, build
+    * independently, and the second swap DROPS the first writer's batch
+    * from history (or a maintenance pass points CURRENT back at the
+    * pre-commit snapshot). Each commit records the snapshot it built
+    * on; the swap is a compare-and-set ([[TableStore.putConditional]])
+    * that fails loudly on a competing commit instead of publishing a
+    * lost update. The CAS is as atomic as the store backend allows:
+    * airtight within one JVM and on conditional-put object stores,
+    * best-effort (microsecond window) across processes on a plain
+    * filesystem.
+    */
+  private def swapCurrent(root: String, expected: Option[String], to: String,
+                          during: String)(implicit store: TableStore): Unit =
+    if (!store.putConditional(root, "CURRENT", expected, to))
+      throw new java.util.ConcurrentModificationException(
+        s"$during: CURRENT of $root moved from " +
+          s"${expected.getOrElse("<none>")} to " +
+          s"${readCurrentName(root).getOrElse("<none>")} while it was " +
+          "built — a concurrent writer committed. Nothing was swapped " +
+          "(the next cleanup sweeps the orphan build); re-run against " +
+          "the new snapshot")
+
   /** The servable dir (full path) for committed batch `b`: its highest
     * COMPLETE generation (a maintenance rewrite holds the same state
     * laid out better, so newest generation always wins).
@@ -433,6 +459,44 @@ object Ingest {
   private def linkInto(src: String, dstDir: String)
                       (implicit store: TableStore): Unit =
     store.linkOrCopy(src, store.child(dstDir, store.baseName(src)))
+
+  /** Link every file of `src` (subdirectories excluded) into `dst` —
+    * how a version carries an untouched bucket or its change slice
+    * forward: zero data I/O, byte-identical, and each file's sidecars
+    * (the parquet writer's `.crc` checksums) travel with it.
+    */
+  private def linkFiles(src: String, dst: String)
+                       (implicit store: TableStore): Unit = {
+    store.mkdirs(dst)
+    store.listNames(src).filterNot(n => store.isDirectory(store.child(src, n)))
+      .foreach(n => linkInto(store.child(src, n), dst))
+  }
+
+  /** The `.parquet` files directly in `dir` — none when it is absent. */
+  private def parquetFiles(dir: String)
+                          (implicit store: TableStore): Seq[String] =
+    if (!store.isDirectory(dir)) Nil
+    else store.listNames(dir).filter(_.endsWith(".parquet"))
+      .map(store.child(dir, _))
+
+  /** The bucket dirs of version dir `vDir` as (bucket id, path). */
+  private def bucketDirs(vDir: String)
+                        (implicit store: TableStore): Seq[(Long, String)] =
+    store.listNames(vDir).filter(_.startsWith(s"$UpsertBucketCol="))
+      .flatMap(n => scala.util.Try(n.stripPrefix(s"$UpsertBucketCol=").toLong)
+        .toOption.map(_ -> store.child(vDir, n)))
+      .filter { case (_, d) => store.isDirectory(d) }
+
+  /** An empty build dir for version `name`, clear of any partial build
+    * a crashed attempt left there.
+    */
+  private def freshVersion(root: String, name: String)
+                          (implicit store: TableStore): String = {
+    val v = store.child(root, name)
+    store.deleteTree(v)
+    store.mkdirs(v)
+    v
+  }
 
   /** Keyed MERGE/upsert for a [[foreachBatchSink]] body — a minimal
     * copy-on-write table format with the exactly-once REPLAY contract
@@ -613,85 +677,86 @@ object Ingest {
     // column mapping: callers speak LOGICAL names (keys, sortCols and
     // the batch itself); storage speaks physical — translate once here
     val cm = colMap(tableDir)
+    val layout = TableLayout(keys.map(toPhysicalName(cm, _)), nBuckets,
+      sortCols.map(toPhysicalName(cm, _)), filesPerBucket)
+    val physBatch = physicalizeBatch(tableDir, batch, deleteCol.toSet)
     // occMode reflects "this TABLE is operated two-writer" and must
     // survive the retry countdown: deriving it from retries-remaining
     // would run the LAST retry's post-commit cleanup with no in-flight
     // shield, re-opening the sweep race on exactly the attempt that
     // can no longer re-merge
-    upsertWithRetry(tableDir, keys.map(toPhysicalName(cm, _)), nBuckets,
-      keepVersions, deleteCol,
-      graceMs, changeFeed, lazyDeletes,
-      sortCols.map(toPhysicalName(cm, _)), filesPerBucket,
-      constraints, occRetries, occMode = occRetries > 0,
-      quarantine = quarantine, txn = txn)(
-      physicalizeBatch(tableDir, batch, deleteCol.toSet), batchId)
-  }
-
-  private def upsertWithRetry(tableDir: String, keys: Seq[String],
-                    nBuckets: Int, keepVersions: Int,
-                    deleteCol: Option[String], graceMs: Long,
-                    changeFeed: Boolean, lazyDeletes: Boolean,
-                    sortCols: Seq[String], filesPerBucket: Int,
-                    constraints: Seq[(String, String)],
-                    retriesLeft: Int, occMode: Boolean,
-                    quarantine: Boolean = false,
-                    txn: Option[(String, Long)] = None)
-                   (batch: DataFrame, batchId: Long)
-                   (implicit store: TableStore): Unit = {
-    // consulted only by the OCC conflict guard below — single-writer
-    // tables (the default, dominant path) skip the extra control read
-    val before = if (occMode) readCurrentName(tableDir) else None
-    def retry(): Unit =
-      upsertWithRetry(tableDir, keys, nBuckets, keepVersions, deleteCol,
-        graceMs, changeFeed, lazyDeletes, sortCols, filesPerBucket,
-        constraints, retriesLeft - 1, occMode, quarantine, txn)(batch, batchId)
-    try upsertOnce(tableDir, keys, nBuckets, keepVersions, deleteCol,
-      graceMs, changeFeed, lazyDeletes, sortCols, filesPerBucket,
-      constraints, occMode = occMode, quarantine = quarantine,
-      txn = txn)(batch, batchId)
-    catch {
-      // a competing commit moved CURRENT mid-merge: nothing durable was
-      // written, the merge is replay-idempotent, so re-merging against
-      // the competitor's snapshot is a clean second attempt
-      case _: java.util.ConcurrentModificationException if retriesLeft > 0 =>
-        retry()
-      // any OTHER failure while CURRENT provably moved under us is the
-      // same conflict wearing a different exception: the competitor's
-      // post-commit cleanup may have swept this writer's in-flight
-      // v_<batchId> build (killing the Spark write with an arbitrary
-      // IOException before the CAS could lose cleanly). Our pointer
-      // never swapped — or swapped and the replay path below completes
-      // the commit idempotently — so a re-merge is safe either way.
-      // EXCEPT the sink's own deterministic batch validation
-      // (IllegalArgumentException: constraint violations, NULL delete
-      // flags, duplicate keys, meta mismatches) — a permanently-bad
-      // batch fails identically against any snapshot, so re-merging
-      // because a competitor HAPPENED to commit concurrently would
-      // burn every retry at full merge cost and bury the real error
-      // until the last attempt.
-      case scala.util.control.NonFatal(e)
-          if retriesLeft > 0 && !e.isInstanceOf[IllegalArgumentException] &&
-            readCurrentName(tableDir) != before =>
-        retry()
+    val occMode = occRetries > 0
+    def attempt(retriesLeft: Int): Unit = {
+      // consulted only by the OCC conflict guard below — single-writer
+      // tables (the default, dominant path) skip the extra control read
+      val before = if (occMode) readCurrentName(tableDir) else None
+      try upsertOnce(tableDir, layout, keepVersions, deleteCol, graceMs,
+        changeFeed, lazyDeletes, constraints, occMode, quarantine, txn)(
+        physBatch, batchId)
+      catch {
+        // a competing commit moved CURRENT mid-merge: nothing durable was
+        // written, the merge is replay-idempotent, so re-merging against
+        // the competitor's snapshot is a clean second attempt
+        case _: java.util.ConcurrentModificationException if retriesLeft > 0 =>
+          attempt(retriesLeft - 1)
+        // any OTHER failure while CURRENT provably moved under us is the
+        // same conflict wearing a different exception: the competitor's
+        // post-commit cleanup may have swept this writer's in-flight
+        // v_<batchId> build (killing the Spark write with an arbitrary
+        // IOException before the CAS could lose cleanly). Our pointer
+        // never swapped — or swapped and the sink's replay path completes
+        // the commit idempotently — so a re-merge is safe either way.
+        // EXCEPT the sink's own deterministic batch validation
+        // (IllegalArgumentException: constraint violations, NULL delete
+        // flags, duplicate keys, meta mismatches) — a permanently-bad
+        // batch fails identically against any snapshot, so re-merging
+        // because a competitor HAPPENED to commit concurrently would
+        // burn every retry at full merge cost and bury the real error
+        // until the last attempt.
+        case scala.util.control.NonFatal(e)
+            if retriesLeft > 0 && !e.isInstanceOf[IllegalArgumentException] &&
+              readCurrentName(tableDir) != before =>
+          attempt(retriesLeft - 1)
+      }
     }
+    attempt(occRetries)
   }
 
-  private def upsertOnce(tableDir: String, keys: Seq[String], nBuckets: Int,
+  /** The sink entry for the commits an operation makes itself (RESTORE,
+    * PUBLISH, DML, MERGE, upsertInto, requeue, the dangling-commit
+    * heal): the table's pinned `layout` (physical names) and its
+    * pinned change-feed flag, so an op's batch always matches the
+    * table it lands in. Single-writer, no constraints passed (the
+    * pinned set still screens).
+    */
+  private def commitPinned(tableDir: String, layout: TableLayout,
+                           keepVersions: Int, graceMs: Long = 0L,
+                           deleteCol: Option[String] = None,
+                           lazyDeletes: Boolean = false,
+                           quarantine: Boolean = false,
+                           txn: Option[(String, Long)] = None)
+                          (batch: DataFrame, batchId: Long)
+                          (implicit store: TableStore): Unit =
+    upsertOnce(tableDir, layout, keepVersions, deleteCol, graceMs,
+      changeFeed = store.exists(store.child(tableDir, "_cdf")), lazyDeletes,
+      constraints = Nil, occMode = false, quarantine, txn)(
+      physicalizeBatch(tableDir, batch, deleteCol.toSet), batchId)
+
+  private def upsertOnce(tableDir: String, layout: TableLayout,
                     keepVersions: Int, deleteCol: Option[String],
                     graceMs: Long, changeFeed: Boolean,
                     lazyDeletes: Boolean,
-                    sortCols: Seq[String],
-                    filesPerBucket: Int,
                     constraints: Seq[(String, String)],
                     occMode: Boolean,
                     quarantine: Boolean,
-                    txn: Option[(String, Long)] = None)
+                    txn: Option[(String, Long)])
                    (batch: DataFrame, batchId: Long)
                    (implicit store: TableStore): Unit = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, count,
       first, lit, max, pmod, when, xxhash64}
     val spark = batch.sparkSession
     val root = tableDir
+    val TableLayout(keys, nBuckets, sortCols, filesPerBucket) = layout
     store.mkdirs(root)
     val commitsPath = store.child(root, "_commits")
 
@@ -703,9 +768,7 @@ object Ingest {
     require(sortCols.forall(batch.columns.contains),
       s"upsertParquet: sortCols ${sortCols.mkString(",")} not all present " +
         s"in the batch (columns: ${batch.columns.mkString(",")})")
-    val metaStr = s"keys=${keys.mkString(",")}\nbuckets=$nBuckets\n" +
-      (if (sortCols.isEmpty) ""
-       else s"sort=${sortCols.mkString(",")}\nfpb=$filesPerBucket\n")
+    val metaStr = layout.render
     store.read(store.child(root, "_meta")) match {
       case None => store.writeAtomic(root, "_meta", metaStr)
       case Some(have) => require(have == metaStr,
@@ -823,13 +886,11 @@ object Ingest {
     def dataOf(df: DataFrame): DataFrame = deleteCol.fold(df)(df.drop(_))
     val batchSchema = dataOf(bkAll).schema
     val tableSchema: StructType =
-      store.read(store.child(root, "_schema")) match {
+      pinnedSchema(root) match {
         case None =>
         store.writeAtomic(root, "_schema", batchSchema.json)
         batchSchema
-        case Some(pinnedJson) =>
-        val pinned = org.apache.spark.sql.types.DataType.fromJson(pinnedJson)
-          .asInstanceOf[StructType]
+        case Some(pinned) =>
         val pinnedByName = pinned.fields.map(f => f.name -> f.dataType).toMap
         val batchByName = batchSchema.fields.map(f => f.name -> f.dataType).toMap
         val missing = pinned.fieldNames.filterNot(batchByName.contains)
@@ -853,29 +914,11 @@ object Ingest {
           widened
         }
       }
-    // Optimistic concurrency: the sink is SINGLE-writer by contract
-    // (a streaming query's sequential batches), but a misconfigured
-    // second writer is a silent-corruption hazard — both read the same
-    // CURRENT, merge independently, and the second swap DROPS the
-    // first writer's batch from history. The merge records the
-    // snapshot it read; the swap is a compare-and-set on the pointer
-    // ([[TableStore.putConditional]]) that fails loudly on a competing
-    // commit instead of publishing a lost-update. The CAS is as atomic
-    // as the store backend allows: airtight within one JVM and on
-    // conditional-put object stores, best-effort (microsecond window)
-    // across processes on a plain filesystem.
+    // the snapshot this merge is based on: the swap CASes CURRENT
+    // from it, so a competing commit fails loudly ([[swapCurrent]])
     var mergeBase: Option[String] = None
-    def swapCurrent(): Unit = {
-      if (!store.putConditional(root, "CURRENT", mergeBase, vName)) {
-        val now = readCurrent()
-        throw new java.util.ConcurrentModificationException(
-          s"upsertParquet: CURRENT of $tableDir moved from " +
-            s"${mergeBase.getOrElse("<none>")} to ${now.getOrElse("<none>")} " +
-            s"while batch $batchId merged — a concurrent writer committed. " +
-            "This batch wrote nothing durable; replay it against the new " +
-            "snapshot (the sink is single-writer; fix the deployment)")
-      }
-    }
+    def swap(): Unit = swapCurrent(root, mergeBase, vName,
+      s"upsertParquet: batch $batchId")
     // independent data-plane writes launched during the merge and all
     // awaited BEFORE the pointer swap (and in the finally, so a crashed
     // attempt never leaves a job racing a caller's cleanup)
@@ -1015,7 +1058,7 @@ object Ingest {
           store.deleteTree(newV)
           dataOf(bk).write.partitionBy(UpsertBucketCol)
             .mode("overwrite").parquet(newV)
-          swapCurrent()
+          swap()
         }
         commit(); return
       }
@@ -1040,9 +1083,7 @@ object Ingest {
       // deletion vector instead
       val rewriteB: Set[Long] = if (lazyDeletes) upsertBuckets else touched
 
-      val newV = store.child(root, vName)
-      store.deleteTree(newV) // partial build from a previous crashed attempt
-      store.mkdirs(newV)
+      val newV = freshVersion(root, vName)
       mergeBase = readCurrent() // the snapshot this merge is based on
       val curDir = mergeBase.map(store.child(root, _))
       // a rebucket that crashed between its pointer swap and its _meta
@@ -1065,7 +1106,7 @@ object Ingest {
       // the prior version's deletion vector (keys + bucket), if any
       val prevDv: Option[DataFrame] = curDir
         .map(d => store.child(d, "_deletes"))
-        .filter(d => store.listNames(d).exists(_.endsWith(".parquet")))
+        .filter(d => parquetFiles(d).nonEmpty)
         .map(d => spark.read.parquet(d))
       val prevDvKeys = prevDv.map(_.select(keys.map(col): _*))
       // every batch key — upsert or tombstone — evicts its old row from
@@ -1147,25 +1188,22 @@ object Ingest {
         changes.coalesce(math.max(1, touched.size))
           .write.parquet(store.child(newV, "_changes"))
       } }
-      val merged = {
-        val base =
-          if (rewriteDirs.isEmpty) upserts
-          // read old rows through the (possibly just-widened) table
-          // schema: files from before a widening surface the new columns
-          // as null, so survivors and upserts always union cleanly
-          else {
-            val survivors = spark.read.schema(tableSchema)
-              .option("basePath", curDir.get)
-              .parquet(rewriteDirs: _*)
-              .join(broadcast(bk.select(keys.map(col): _*)), keys, "left_anti")
-            // pending vector entries for rewritten buckets are APPLIED
-            // here (and leave the vector below) — the debt self-compacts
-            prevDvKeys.fold(survivors)(dv =>
-              survivors.join(broadcast(dv), keys, "left_anti"))
-              .unionByName(upserts)
-          }
-        base
-      }
+      val merged =
+        if (rewriteDirs.isEmpty) upserts
+        // read old rows through the (possibly just-widened) table
+        // schema: files from before a widening surface the new columns
+        // as null, so survivors and upserts always union cleanly
+        else {
+          val survivors = spark.read.schema(tableSchema)
+            .option("basePath", curDir.get)
+            .parquet(rewriteDirs: _*)
+            .join(broadcast(bk.select(keys.map(col): _*)), keys, "left_anti")
+          // pending vector entries for rewritten buckets are APPLIED
+          // here (and leave the vector below) — the debt self-compacts
+          prevDvKeys.fold(survivors)(dv =>
+            survivors.join(broadcast(dv), keys, "left_anti"))
+            .unionByName(upserts)
+        }
       // layout of the rewritten buckets: hash-partitioned one-file-per-
       // bucket by default; with pinned sortCols, RANGE-partitioned on
       // (bucket, sortCols) into ~filesPerBucket slices per bucket and
@@ -1202,33 +1240,12 @@ object Ingest {
             else merged.repartitionByRange(parts, order: _*)
           ranged.sortWithinPartitions(order: _*)
         }
-      // append, NOT overwrite: newV was freshly deleteTree'd+mkdirs'd
-      // above, so overwrite's implicit whole-dir delete is redundant —
-      // and it would race the OVERLAPPED _changes/_deletes writers'
-      // staging dirs inside newV (they may start before this job)
-      phase("merge-write")(laidOut
-        .write.partitionBy(UpsertBucketCol).mode("append").parquet(newV))
-      curDir.foreach { d =>
-        store.listNames(d)
-          .filter(n => n.startsWith(s"$UpsertBucketCol=") &&
-            store.isDirectory(store.child(d, n)) &&
-            !rewriteB.contains(n.stripPrefix(s"$UpsertBucketCol=").toLong))
-          .foreach { bname =>
-            val bdir = store.child(d, bname)
-            val dst = store.child(newV, bname)
-            store.mkdirs(dst)
-            store.listNames(bdir)
-              .filterNot(n => store.isDirectory(store.child(bdir, n)))
-              .foreach(n => linkInto(store.child(bdir, n), dst))
-          }
-      }
-      if (sortCols.nonEmpty)
-        phase("manifest")(writeVersionManifest(spark, newV, Some(rewriteB),
-          curDir, sortCols, Some(tableSchema)))
+      rewriteBuckets(spark, newV, laidOut, Some(rewriteB), curDir, sortCols,
+        Some(tableSchema), (name, body) => phase(name)(body()))
       // overlapped data-plane writes (capture / dv / quarantine) must
       // all be durable before the snapshot becomes visible
       awaitDataPlane()
-      swapCurrent()
+      swap()
       commit()
     } finally {
       // a failed merge must not leave an overlapped job racing the
@@ -1238,6 +1255,23 @@ object Ingest {
           scala.concurrent.duration.Duration.Inf)))
       bkAll.unpersist(); ()
     }
+  }
+
+  /** The table's pinned key columns, in LOGICAL (user-facing) names. */
+  def tableKeyColumns(tableDir: String)
+                     (implicit store: TableStore): Seq[String] = {
+    val cm = colMap(tableDir)
+    tableLayout(tableDir).keys.map(toLogicalName(cm, _))
+  }
+
+  /** The table's pinned sort (stats) columns in LOGICAL names — empty
+    * when the table never pinned `sortCols` (no manifest, no pruned
+    * reads). The columns a reader may push range bounds on.
+    */
+  def tableSortColumns(tableDir: String)
+                      (implicit store: TableStore): Seq[String] = {
+    val cm = colMap(tableDir)
+    tableLayout(tableDir).sortCols.map(toLogicalName(cm, _))
   }
 
   /** Read an [[upsertParquet]] table — its CURRENT snapshot, or (time
@@ -1254,25 +1288,6 @@ object Ingest {
     * current one; asking for a batch older than the retention window
     * fails loudly rather than silently serving a newer state.
     */
-  /** The table's pinned key columns, in LOGICAL (user-facing) names. */
-  def tableKeyColumns(tableDir: String)
-                     (implicit store: TableStore): Seq[String] = {
-    val cm = colMap(tableDir)
-    tableMeta(tableDir).apply("keys").split(",").toSeq
-      .map(toLogicalName(cm, _))
-  }
-
-  /** The table's pinned sort (stats) columns in LOGICAL names — empty
-    * when the table never pinned `sortCols` (no manifest, no pruned
-    * reads). The columns a reader may push range bounds on.
-    */
-  def tableSortColumns(tableDir: String)
-                      (implicit store: TableStore): Seq[String] = {
-    val cm = colMap(tableDir)
-    tableMeta(tableDir).get("sort").toSeq
-      .flatMap(_.split(",").toSeq).map(toLogicalName(cm, _))
-  }
-
   def readUpsertTable(spark: SparkSession, tableDir: String,
                       asOfBatch: Option[Long] = None)
                      (implicit store: TableStore): DataFrame = {
@@ -1379,10 +1394,7 @@ object Ingest {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val vDir = resolveVersionDir(tableDir, None)
     val manDir = store.child(vDir, StatsManifest.ManifestDir)
-    val mparts =
-      if (!store.isDirectory(manDir)) Nil
-      else store.listNames(manDir).filter(_.endsWith(".parquet"))
-        .map(store.child(manDir, _))
+    val mparts = parquetFiles(manDir)
     val hasDv = store.exists(store.child(vDir, "_deletes"))
     // bounds arrive LOGICAL; the manifest and raw files are physical
     val cm = colMap(tableDir)
@@ -1451,16 +1463,12 @@ object Ingest {
     import org.apache.spark.sql.functions.{max, min}
     val vDir = resolveVersionDir(tableDir, None)
     val manDir = store.child(vDir, StatsManifest.ManifestDir)
-    val mparts =
-      if (!store.isDirectory(manDir)) Nil
-      else store.listNames(manDir).filter(_.endsWith(".parquet"))
-        .map(store.child(manDir, _))
+    val mparts = parquetFiles(manDir)
     if (mparts.isEmpty ||
         store.exists(store.child(vDir, "_deletes"))) None
     else {
       val manifest = spark.read.parquet(mparts: _*)
-      val sortCols = tableMeta(tableDir).get("sort")
-        .map(_.split(",").toSeq).getOrElse(Nil)
+      val sortCols = tableLayout(tableDir).sortCols
       val cm = colMap(tableDir) // output aliases use LOGICAL names
       def lg(c: String): String = toLogicalName(cm, c)
       if (sortCols.isEmpty) None
@@ -1523,7 +1531,7 @@ object Ingest {
   def describeDetailUpsertTable(spark: SparkSession, tableDir: String)
                                (implicit store: TableStore): DataFrame = {
     val root = tableDir
-    val meta = tableMeta(root)
+    val layout = tableLayout(root)
     val curName = readCurrentName(root)
     require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
     val (curBatch, gen) = parseVersion(curName.get).get
@@ -1543,8 +1551,9 @@ object Ingest {
       .map(_.linesIterator.count(_.contains('='))).getOrElse(0)
     import spark.implicits._
     Seq((
-      meta("keys"), meta("buckets").toInt,
-      meta.get("sort").orNull, meta.get("fpb").map(_.toInt).getOrElse(4),
+      layout.keys.mkString(","), layout.buckets,
+      if (layout.sortCols.isEmpty) null else layout.sortCols.mkString(","),
+      layout.fpb,
       curBatch, gen.toLong,
       readLedger(root).size.toLong,
       versionDirs(root).size.toLong,
@@ -1753,11 +1762,7 @@ object Ingest {
       logicalView(tableDir)(
         spark.read.option("mergeSchema", "true").parquet(dirs: _*))
     else {
-      val base = store.read(store.child(tableDir, "_schema")) match {
-        case Some(json) => org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[StructType]
-        case None => new StructType()
-      }
+      val base = pinnedSchema(tableDir).getOrElse(new StructType())
       val fields = base.fields.filterNot(_.name == UpsertBucketCol) ++ Seq(
         org.apache.spark.sql.types.StructField(QuarantineReasonCol,
           org.apache.spark.sql.types.ArrayType(
@@ -1804,9 +1809,7 @@ object Ingest {
                         keepVersions: Int = 2)
                        (implicit store: TableStore): (Long, Long) = {
     import org.apache.spark.sql.functions.{col, max_by, struct}
-    val meta = tableMeta(tableDir)
-    val keys = meta("keys").split(",").toSeq
-    val nBuckets = meta("buckets").toInt
+    val keys = tableKeyColumns(tableDir) // the letters read logical
     val qRoot = store.child(tableDir, QuarantineDir)
     // what this invocation consumes: every committed dead-letter dir
     // BELOW asBatch — strictly below, never `!=`: a replay with an old
@@ -1843,7 +1846,7 @@ object Ingest {
             struct(col(QuarantineBatchCol), rowStruct)).as("m"))
           .select(col("m.*"))
           .drop(QuarantineReasonCol, QuarantineBatchCol))
-      upsertParquet(tableDir, keys, nBuckets, keepVersions = keepVersions,
+      commitPinned(tableDir, tableLayout(tableDir), keepVersions,
         quarantine = true)(healedInput, asBatch)
     }
     // sweep the consumed dirs, oldest first (the sweep invariant);
@@ -1933,29 +1936,23 @@ object Ingest {
                            vDir: String, df: DataFrame)
                           (implicit store: TableStore): DataFrame = {
     val dvDir = store.child(vDir, "_deletes")
-    val hasDv = store.listNames(dvDir).exists(_.endsWith(".parquet"))
+    val hasDv = parquetFiles(dvDir).nonEmpty
     if (!hasDv) df
     else {
-      val keys = tableMeta(root).apply("keys").split(",").toSeq
+      val keys = tableLayout(root).keys
       df.join(spark.read.parquet(dvDir)
         .select(keys.map(org.apache.spark.sql.functions.col): _*),
         keys, "left_anti")
     }
   }
 
-  /** Parse the pinned `_meta` table properties (keys, buckets). */
-  private[sources] def tableMeta(root: String)
-                       (implicit store: TableStore): Map[String, String] =
-    store.read(store.child(root, "_meta"))
+  /** The table's pinned `_meta` layout ([[TableLayout]]). */
+  private[sources] def tableLayout(root: String)
+                                  (implicit store: TableStore): TableLayout =
+    TableLayout.parse(store.read(store.child(root, "_meta"))
       .getOrElse(throw new IllegalArgumentException(
-        s"not an upsert table (no _meta): $root"))
-      .linesIterator.map(_.split("=", 2)).collect {
-        case Array(k, v) => k -> v
-      }.toMap
+        s"not an upsert table (no _meta): $root")))
 
-  /** The snapshot dir for CURRENT / a committed as-of batch (the
-    * resolution rules documented on [[readUpsertTable]]).
-    */
   /** The version directory a snapshot read serves — public so the
     * `graft` DataSource can price the relation (`sizeInBytes` =
     * physical bytes of exactly these files) for the broadcast-join
@@ -2054,12 +2051,7 @@ object Ingest {
     */
   private[sources] def pinnedReader(spark: SparkSession, root: String)
                           (implicit store: TableStore) =
-    store.read(store.child(root, "_schema")) match {
-      case None => spark.read
-      case Some(json) => spark.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(json)
-          .asInstanceOf[StructType])
-    }
+    pinnedSchema(root).fold(spark.read)(spark.read.schema(_))
 
   /** The pinned `_schema` as a StructType, when present. */
   private def pinnedSchema(root: String)
@@ -2067,6 +2059,33 @@ object Ingest {
     store.read(store.child(root, "_schema")).map(json =>
       org.apache.spark.sql.types.DataType.fromJson(json)
         .asInstanceOf[StructType])
+
+  /** The layout a table pins in `_meta` at its first commit, in
+    * PHYSICAL column names: hash keys, bucket count, and — when the
+    * table keeps a stats manifest — the in-bucket sort columns and
+    * files per bucket. Only a rebucket changes the count.
+    */
+  private[sources] final case class TableLayout(keys: Seq[String],
+                                                buckets: Int,
+                                                sortCols: Seq[String] = Nil,
+                                                fpb: Int = 4) {
+    /** The `_meta` text — the one rendering, compared verbatim by the
+      * sink's pin check.
+      */
+    def render: String = s"keys=${keys.mkString(",")}\nbuckets=$buckets\n" +
+      (if (sortCols.isEmpty) ""
+       else s"sort=${sortCols.mkString(",")}\nfpb=$fpb\n")
+  }
+
+  private[sources] object TableLayout {
+    def parse(meta: String): TableLayout = {
+      val m = meta.linesIterator.map(_.split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap
+      TableLayout(m("keys").split(",").toSeq, m("buckets").toInt,
+        m.get("sort").map(_.split(",").toSeq).getOrElse(Nil),
+        m.get("fpb").map(_.toInt).getOrElse(4))
+    }
+  }
 
   /** What the sink's summary learns about a batch, per key: the
     * largest row count for one key, the buckets it touches, the
@@ -2158,8 +2177,7 @@ object Ingest {
       : Map[Long, Seq[FileRange]] = {
     val files = dirs.flatMap { d =>
       val b = store.baseName(d).stripPrefix(s"$UpsertBucketCol=").toLong
-      store.listNames(d).filter(_.endsWith(".parquet"))
-        .map(n => b -> store.child(d, n))
+      parquetFiles(d).map(b -> _)
     }
     // the driver-side twin of rangeKey
     def key(v: Any): Option[Double] = Option(v).collect {
@@ -2216,6 +2234,66 @@ object Ingest {
         buckets(i) -> cuts.filter(_._1 == i).map(_._2)).toMap)
   }
 
+  /** The bucket rewrite every version build shares (sink merge,
+    * selective compaction, generation rewrite): write `laidOut` — the
+    * rows of the `rewritten` buckets (every bucket when `None`), laid
+    * out by the caller — into the fresh build dir `newV`, link every
+    * other bucket of `base` (the snapshot being replaced) forward
+    * ([[linkFiles]]), then build the manifest when `sortCols` are
+    * pinned ([[writeVersionManifest]]). `phase` labels the write and
+    * manifest jobs. Data plane only: the caller's commit makes the
+    * version visible.
+    */
+  private def rewriteBuckets(spark: SparkSession, newV: String,
+                             laidOut: DataFrame, rewritten: Option[Set[Long]],
+                             base: Option[String], sortCols: Seq[String],
+                             schema: Option[StructType],
+                             phase: (String, () => Unit) => Unit =
+                               (_, body) => body())
+                            (implicit store: TableStore): Unit = {
+    // append, NOT overwrite: newV is a fresh build dir, so overwrite's
+    // implicit whole-dir delete is redundant — and in the sink it would
+    // race the OVERLAPPED _changes/_deletes writers' staging dirs inside
+    // newV (they may start before this job)
+    phase("merge-write", () => laidOut
+      .write.partitionBy(UpsertBucketCol).mode("append").parquet(newV))
+    base.toSeq.flatMap(bucketDirs)
+      .filterNot { case (b, _) => rewritten.forall(_(b)) }
+      .foreach { case (_, d) =>
+        linkFiles(d, store.child(newV, store.baseName(d))) }
+    if (sortCols.nonEmpty)
+      phase("manifest", () => writeVersionManifest(spark, newV, rewritten,
+        base, sortCols, schema))
+  }
+
+  /** The one generation commit (selective compaction, OPTIMIZE,
+    * rebucket) of `newName`, a complete build of CURRENT `curName`'s
+    * batch: link the change slice forward (the feed lives inside its
+    * version), stamp the dir's bucket count, then `_gen_commit` — the
+    * LAST write inside the dir: a gen dir without it is a crashed
+    * build, never served, swept by the next cleanup — then CAS CURRENT
+    * ([[swapCurrent]]), run `afterSwap`, and sweep the superseded
+    * generation (a crash mid-delete leaves it `_sweeping`-marked, never
+    * served). A crash after the swap serves the new generation; the
+    * next cleanup sweeps the old one and re-running the op completes
+    * what `afterSwap` left undone.
+    */
+  private def commitGeneration(during: String, root: String,
+                               curName: String, newName: String,
+                               nBuckets: Int, afterSwap: => Unit = ())
+                              (implicit store: TableStore): Unit = {
+    val curDir = store.child(root, curName)
+    val newV = store.child(root, newName)
+    val oldCh = store.child(curDir, "_changes")
+    if (store.isDirectory(oldCh))
+      linkFiles(oldCh, store.child(newV, "_changes"))
+    store.writeAtomic(newV, "_nbuckets", s"$nBuckets\n")
+    store.writeAtomic(newV, "_gen_commit", "")
+    swapCurrent(root, Some(curName), newName, during)
+    afterSwap
+    sweepDir(curDir)
+  }
+
   /** The manifest step every version build shares (sink merge,
     * selective compaction, generation rewrite): write `newV`'s
     * per-file min/max manifest for the pinned `sortCols` — the
@@ -2247,18 +2325,10 @@ object Ingest {
                                   (implicit store: TableStore): Unit = {
     import org.apache.spark.sql.functions.{col, regexp_extract, regexp_replace}
     val newName = store.baseName(newV)
-    val (freshDirs, carriedDirs) = store.listNames(newV)
-      .filter(_.startsWith(s"$UpsertBucketCol="))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(s"$UpsertBucketCol=").toLong).toOption
-        .map(_ -> store.child(newV, n)))
-      .filter { case (_, d) => store.isDirectory(d) }
+    val (freshDirs, carriedDirs) = bucketDirs(newV)
       .partition { case (b, _) => fresh.forall(_(b)) }
-    val files = freshDirs.flatMap { case (_, d) =>
-      store.listNames(d).filter(_.endsWith(".parquet"))
-        .filterNot(n => store.isDirectory(store.child(d, n)))
-        .map(n => (store.child(d, n), s"${store.baseName(d)}/$n"))
-    }
+    val files = freshDirs.flatMap { case (_, d) => parquetFiles(d)
+      .map(f => (f, s"${store.baseName(d)}/${store.baseName(f)}")) }
     val freshRows =
       if (files.isEmpty) None
       else schema.flatMap(StatsManifest.footerManifestRows(
@@ -2273,11 +2343,7 @@ object Ingest {
             .agg(aggs.head, aggs.tail: _*))
         }
     val carried = prevV.filter(_ => carriedDirs.nonEmpty).flatMap { pv =>
-      val md = store.child(pv, StatsManifest.ManifestDir)
-      val parts =
-        if (!store.isDirectory(md)) Nil
-        else store.listNames(md).filter(_.endsWith(".parquet"))
-          .map(store.child(md, _))
+      val parts = parquetFiles(store.child(pv, StatsManifest.ManifestDir))
       val known = schema.flatMap(StatsManifest.manifestSchema(sortCols, _))
       if (parts.isEmpty) None
       else Some(known.fold(spark.read)(spark.read.schema(_))
@@ -2369,10 +2435,7 @@ object Ingest {
   private def logicalNames(root: String,
                            cm: Seq[(String, String, Boolean)])
                           (implicit store: TableStore): Seq[String] = {
-    val phys = store.read(store.child(root, "_schema"))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType].fieldNames.toSeq)
-      .getOrElse(Seq.empty)
+    val phys = pinnedSchema(root).map(_.fieldNames.toSeq).getOrElse(Nil)
     val dead = cm.filterNot(_._3).map(_._1).toSet
     phys.filterNot(dead).filterNot(_ == UpsertBucketCol)
       .map(p => toLogicalName(cm, p))
@@ -2478,9 +2541,7 @@ object Ingest {
     require(!logical.contains(to),
       s"renameColumn: column '$to' already exists")
     val phys = toPhysicalName(cm, from)
-    val pinnedPhys = store.read(store.child(tableDir, "_schema"))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType].fieldNames.toSet)
+    val pinnedPhys = pinnedSchema(tableDir).map(_.fieldNames.toSet)
       .getOrElse(Set.empty)
     require(to == phys || !pinnedPhys.contains(to),
       s"renameColumn: '$to' collides with a physical column name — " +
@@ -2503,10 +2564,10 @@ object Ingest {
     require(logical.contains(name),
       s"dropColumn: no column '$name' (columns: ${logical.mkString(",")})")
     val phys = toPhysicalName(cm, name)
-    val meta = tableMeta(tableDir)
-    require(!meta("keys").split(",").contains(phys),
+    val layout = tableLayout(tableDir)
+    require(!layout.keys.contains(phys),
       s"dropColumn: '$name' is a key column — the layout is pinned on it")
-    require(!meta.get("sort").exists(_.split(",").contains(phys)),
+    require(!layout.sortCols.contains(phys),
       s"dropColumn: '$name' is a sort/stats column — the manifest is " +
         "pinned on it (REBUCKET/OPTIMIZE to a new layout first)")
     writeColMap(tableDir, cm.filterNot(_._1 == phys) :+ ((phys, name, false)))
@@ -2532,9 +2593,7 @@ object Ingest {
         df = df.withColumnRenamed(lg, p)
     }
     val retired = cm.filterNot(_._3).map(_._1).toSet
-    val pinned = store.read(store.child(root, "_schema"))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
+    val pinned = pinnedSchema(root)
     val pinnedNames = pinned.map(_.fieldNames.toSet).getOrElse(Set.empty)
     df.columns.filter(c => retired.contains(c) && !skipCols(c)).foreach { c =>
       val taken = pinnedNames ++ df.columns ++ retired
@@ -2582,11 +2641,10 @@ object Ingest {
                      (implicit store: TableStore): DataFrame = {
     import spark.implicits._
     val root = tableDir
-    val meta = tableMeta(root)
     val curName = readCurrentName(root)
     require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
     val curDir = store.child(root, curName.get)
-    val fpb = meta.get("fpb").map(_.toInt).getOrElse(4)
+    val fpb = tableLayout(root).fpb
     val out = Seq.newBuilder[(String, String, String, String)]
     if (store.exists(store.child(curDir, "_deletes")))
       out += (("OPTIMIZE", root,
@@ -2658,39 +2716,13 @@ object Ingest {
                         probe: DataFrame,
                         asOfBatch: Option[Long] = None)
                        (implicit store: TableStore): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit, pmod, xxhash64}
-    val root = tableDir
-    val meta = tableMeta(root)
-    val cm = colMap(root) // probe speaks logical; _meta pins physical
-    val keys = meta("keys").split(",").toSeq.map(toLogicalName(cm, _))
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val keys = tableKeyColumns(tableDir) // the probe speaks logical names
     keys.foreach(k => require(probe.columns.contains(k),
       s"lookup probe is missing key column '$k' (table keys: " +
         s"${keys.mkString(",")})"))
-    val vDir = resolveVersionDir(root, asOfBatch)
-    // the bucket count that hashed THIS version's layout: the dir's own
-    // `_nbuckets` annotation when present (stamped by rebucket — a
-    // retained pre-rebucket snapshot keeps its original count), the
-    // table-level `_meta` otherwise
-    val nBuckets = versionBuckets(vDir).getOrElse(meta("buckets").toInt)
     val probeKeys = probe.select(keys.map(col): _*).distinct()
-    // ≤ nBuckets small ints — bounded by the table property, not data
-    val buckets: Seq[Long] = probeKeys
-      .select(pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val bucketDirs = buckets
-      .map(b => store.child(vDir, s"$UpsertBucketCol=$b"))
-      .filter(store.isDirectory)
-    val reader = pinnedReader(spark, root)
-    val scan =
-      if (bucketDirs.isEmpty)
-        // typed empty via the pinned schema over the (possibly empty)
-        // version dir — same trick the snapshot read uses
-        reader.option("basePath", vDir).parquet(vDir)
-          .filter(lit(false))
-      else reader.option("basePath", vDir)
-        .parquet(bucketDirs: _*)
-    logicalView(root)(
-      applyDeletes(spark, root, vDir, scan).drop(UpsertBucketCol))
+    bucketScopedSnapshot(spark, tableDir, probeKeys, keys, asOfBatch)
       .join(broadcast(probeKeys), keys, "left_semi")
   }
 
@@ -2711,17 +2743,15 @@ object Ingest {
     *      move — the annotation makes it explicit, so time-travel
     *      point lookups keep pruning correctly);
     *   2. build the new generation (data re-hashed + re-partitioned,
-    *      one file per bucket; the change feed hard-linked forward —
-    *      the feed lives inside its version);
-    *   3. `_gen_commit` marker (a gen dir without it is a crashed
-    *      build: never served, swept by the next cleanup);
-    *   4. atomic CURRENT swap;
-    *   5. `_meta` update to the new count (later writers must pass it
-    *      — the sink fails loudly on a count that doesn't match
-    *      CURRENT's `_nbuckets`, and re-running this op completes an
-    *      interrupted rebucket idempotently);
-    *   6. sweep the superseded generation (same reader race as
-    *      retention: single-writer, readers-on-retained-snapshots).
+    *      one file per bucket — [[rewriteBuckets]]);
+    *   3. the one generation commit ([[commitGeneration]]): feed
+    *      linked forward, `_gen_commit` marker, CURRENT swap, sweep of
+    *      the superseded generation (same reader race as retention:
+    *      single-writer, readers-on-retained-snapshots) — with, between
+    *      swap and sweep, the `_meta` update to the new count (later
+    *      writers must pass it — the sink fails loudly on a count that
+    *      doesn't match CURRENT's `_nbuckets`, and re-running this op
+    *      completes an interrupted rebucket idempotently).
     *
     * Doubles as small-file compaction for the snapshot: the rewrite
     * yields exactly one file per non-empty bucket.
@@ -2736,18 +2766,17 @@ object Ingest {
     * compacts each bucket's accumulated small files (range-slice churn
     * from sorted merges, link history), applies and clears any pending
     * merge-on-read deletion vector, restores the pinned in-bucket sort
-    * order, and rebuilds the stats manifest fresh. The crash-safe
-    * generation protocol (stamp → build → `_gen_commit` → swap → sweep)
-    * is [[rebucketUpsertTable]]'s — same committed batch, no batchId
-    * minted, idempotent completion — which is why this is one flag on
-    * the shared body, not a second protocol. At 100 TB this is the
-    * scheduled compaction job: run it when delete debt or file counts
-    * cross a threshold, at full-rewrite cost, deliberately and rarely.
+    * order, and rebuilds the stats manifest fresh. It commits through
+    * the one generation commit ([[commitGeneration]]) like
+    * [[rebucketUpsertTable]] — same committed batch, no batchId minted,
+    * idempotent completion. At 100 TB this is the scheduled compaction
+    * job: run it when delete debt or file counts cross a threshold, at
+    * full-rewrite cost, deliberately and rarely.
     */
   def optimizeUpsertTable(spark: SparkSession, tableDir: String,
                           purgeColumns: Boolean = false)
                          (implicit store: TableStore): Unit = {
-    val n = tableMeta(tableDir).apply("buckets").toInt
+    val n = tableLayout(tableDir).buckets
     // purgeColumns (`GRAFT OPTIMIZE … PURGE COLUMNS`, Delta's REORG …
     // PURGE): the rewrite additionally excludes column-mapping-dropped
     // physical columns from the new generation, then narrows the
@@ -2787,8 +2816,8 @@ object Ingest {
   def optimizeUpsertTableZorder(spark: SparkSession, tableDir: String,
                                 zorderBy: Seq[String])
                                (implicit store: TableStore): Unit = {
-    val meta = tableMeta(tableDir)
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
+    val layout = tableLayout(tableDir)
+    val sortCols = layout.sortCols
     require(zorderBy.size == 2 || zorderBy.size == 3,
       s"optimizeUpsertTableZorder: 2 or 3 columns, got ${zorderBy.size}")
     require(sortCols.nonEmpty && zorderBy.toSet == sortCols.toSet,
@@ -2796,7 +2825,7 @@ object Ingest {
         s"must be a permutation of the pinned stats columns " +
         s"(${sortCols.mkString(",")}) — the manifest schema every later " +
         "merge carries must not change")
-    rewriteGeneration(spark, tableDir, meta("buckets").toInt,
+    rewriteGeneration(spark, tableDir, layout.buckets,
       forceSameCount = true, zorderCols = zorderBy)
   }
 
@@ -2810,14 +2839,12 @@ object Ingest {
     * range-slice churn compacts to its pinned layout; the other 99%
     * of the table moves zero data bytes (hard links under POSIX).
     *
-    * Protocol is the generation rewrite's, unchanged: build
-    * `v_<b>.<g+1>` (rewritten buckets written, carried buckets
-    * linked, stats-manifest rows carried with their paths re-rooted +
-    * rebuilt fresh for rewritten buckets, feed slice linked),
-    * `_gen_commit` last, CAS swap, sweep the superseded generation —
-    * so the crash windows are the ones CrashWindowSpec already
-    * sweeps. The deletion vector is fully applied (its buckets are
-    * forced into the rewrite set) and NOT carried forward.
+    * It builds `v_<b>.<g+1>` through [[rewriteBuckets]] (rewritten
+    * buckets written, carried buckets linked, manifest rows carried
+    * for them and fresh for the rest) and commits it through the one
+    * generation commit ([[commitGeneration]]). The deletion vector is
+    * fully applied (its buckets are forced into the rewrite set) and
+    * NOT carried forward.
     *
     * Returns the bucket ids rewritten — empty means no debt anywhere
     * and NO new generation was minted (a true no-op).
@@ -2828,43 +2855,30 @@ object Ingest {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     require(filesOver >= 1, s"compactUpsertTable: bad threshold $filesOver")
     val root = tableDir
-    val meta = tableMeta(root)
-    val keys = meta("keys").split(",").toSeq
+    val layout = tableLayout(root)
     val curName = readCurrentName(root)
     require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
     val curDir = store.child(root, curName.get)
-    val nBuckets = versionBuckets(curDir).getOrElse(meta("buckets").toInt)
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
-
-    def bucketOf(name: String): Option[Int] =
-      if (name.startsWith(s"$UpsertBucketCol="))
-        scala.util.Try(name.stripPrefix(s"$UpsertBucketCol=").toInt).toOption
-      else None
-    val bucketDirs: Seq[(Int, String)] = store.listNames(curDir)
-      .flatMap(n => bucketOf(n).map(_ -> store.child(curDir, n)))
-    def parquetsIn(d: String): Seq[String] =
-      store.listNames(d).filter(_.endsWith(".parquet"))
-        .filterNot(n => store.isDirectory(store.child(d, n)))
-    val overgrown = bucketDirs
-      .filter { case (_, d) => parquetsIn(d).size > filesOver }
+    val nBuckets = versionBuckets(curDir).getOrElse(layout.buckets)
+    val overgrown = bucketDirs(curDir)
+      .filter { case (_, d) =>
+        store.listNames(d).count(_.endsWith(".parquet")) > filesOver }
       .map(_._1).toSet
     // delete debt forces its buckets in: compaction is how the vector
     // drains, and a partial apply would tear it
     val delDir = store.child(curDir, "_deletes")
-    val debt: Set[Int] =
+    val debt: Set[Long] =
       if (!store.isDirectory(delDir)) Set.empty
       else spark.read.parquet(delDir)
-        .select(pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong))
-          .cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet
+        .select(pmod(xxhash64(layout.keys.map(col): _*),
+          lit(nBuckets.toLong)).as("b"))
+        .distinct().collect().map(_.getLong(0)).toSet
     val rewrite = overgrown ++ debt
     if (rewrite.isEmpty) return Nil
 
     val (b, g) = parseVersion(curName.get).get
     val newName = versionName(b, g + 1)
-    val newV = store.child(root, newName)
-    store.deleteTree(newV)
-    store.mkdirs(newV)
+    val newV = freshVersion(root, newName)
     // rewritten buckets collapse to ONE sorted file each — maximum
     // compaction, and the reason a second pass is a guaranteed no-op.
     // (A single file's manifest bounds span the whole bucket; the
@@ -2872,41 +2886,16 @@ object Ingest {
     // layout when tight per-file pruning matters more than file count.)
     val selected = applyDeletes(spark, root, curDir,
       pinnedReader(spark, root).option("basePath", curDir).parquet(curDir))
-      .filter(col(UpsertBucketCol).isin(rewrite.toSeq.map(_.toLong): _*))
+      .filter(col(UpsertBucketCol).isin(rewrite.toSeq: _*))
     val laid = selected
       .repartition(math.max(1, rewrite.size), col(UpsertBucketCol))
-      .sortWithinPartitions((col(UpsertBucketCol) +: sortCols.map(col)): _*)
-    laid.write.partitionBy(UpsertBucketCol).mode("append").parquet(newV)
-    // carried buckets: links, zero data movement
-    bucketDirs.filterNot { case (bk, _) => rewrite.contains(bk) }
-      .foreach { case (bk, d) =>
-        val dst = store.child(newV, s"$UpsertBucketCol=$bk")
-        store.mkdirs(dst)
-        parquetsIn(d).foreach(n => linkInto(store.child(d, n), dst))
-      }
-    if (sortCols.nonEmpty)
-      writeVersionManifest(spark, newV, Some(rewrite.map(_.toLong)),
-        Some(curDir), sortCols, pinnedSchema(root))
-    val oldCh = store.child(curDir, "_changes")
-    if (store.isDirectory(oldCh)) {
-      val dst = store.child(newV, "_changes")
-      store.mkdirs(dst)
-      store.listNames(oldCh)
-        .filterNot(n => store.isDirectory(store.child(oldCh, n)))
-        .foreach(n => linkInto(store.child(oldCh, n), dst))
-    }
-    store.writeAtomic(newV, "_nbuckets", s"$nBuckets\n")
-    store.writeAtomic(newV, "_gen_commit", "")
-    if (!store.putConditional(root, "CURRENT", curName, newName)) {
-      val nowName = readCurrentName(root)
-      throw new java.util.ConcurrentModificationException(
-        s"compactUpsertTable: CURRENT of $tableDir moved from " +
-          s"${curName.getOrElse("<none>")} to ${nowName.getOrElse("<none>")} " +
-          "while the compacted generation was built — a concurrent writer " +
-          "committed. Nothing was swapped; re-run against the new snapshot")
-    }
-    sweepDir(curDir)
-    rewrite.toSeq.sorted
+      .sortWithinPartitions(
+        (col(UpsertBucketCol) +: layout.sortCols.map(col)): _*)
+    rewriteBuckets(spark, newV, laid, Some(rewrite), Some(curDir),
+      layout.sortCols, pinnedSchema(root))
+    commitGeneration("compactUpsertTable", root, curName.get, newName,
+      nBuckets)
+    rewrite.toSeq.sorted.map(_.toInt)
   }
 
   /** RESTORE: make the table's state equal its committed snapshot at
@@ -2931,33 +2920,18 @@ object Ingest {
   def restoreUpsertTable(spark: SparkSession, tableDir: String, toBatch: Long,
                          keepVersions: Int = 2, graceMs: Long = 0L)
                         (implicit store: TableStore): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val meta = tableMeta(tableDir)
-    val keys = meta("keys").split(",").toSeq
-    val nBuckets = meta("buckets").toInt
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
-    val fpb = meta.get("fpb").map(_.toInt).getOrElse(4)
-    val feed = store.exists(store.child(tableDir, "_cdf"))
     val committed = readLedger(tableDir)
     require(committed.contains(toBatch),
       s"restoreUpsertTable: batch $toBatch is not committed in $tableDir " +
         s"(committed: ${committed.toSeq.sorted.mkString(",")})")
     val newBatch = committed.max + 1
-    val target = readUpsertTable(spark, tableDir, Some(toBatch))
-    val current = readUpsertTable(spark, tableDir)
-    val flag = "_restore_deleted"
-    require(!target.columns.contains(flag),
-      s"restoreUpsertTable: table has a reserved column name $flag")
     // rows to write: any target row differing from current (changed or
     // re-inserted); keys to tombstone: present now, absent at toBatch
-    val ups = target.exceptAll(current).withColumn(flag, lit(false))
-    val dels = current
-      .join(target.select(keys.map(col): _*), keys, "left_anti")
-      .withColumn(flag, lit(true))
-    upsertParquet(tableDir, keys, nBuckets = nBuckets,
-      keepVersions = keepVersions, deleteCol = Some(flag),
-      graceMs = graceMs, changeFeed = feed, sortCols = sortCols,
-      filesPerBucket = fpb)(ups.unionByName(dels), newBatch)
+    val diff = diffBatch(s"restoreUpsertTable: $tableDir",
+      readUpsertTable(spark, tableDir, Some(toBatch)),
+      readUpsertTable(spark, tableDir), tableKeyColumns(tableDir))
+    commitPinned(tableDir, tableLayout(tableDir), keepVersions, graceMs,
+      Some(TombstoneCol))(diff, newBatch)
     newBatch
   }
 
@@ -3007,8 +2981,7 @@ object Ingest {
   private def cloneInto(spark: SparkSession, srcDir: String, dstDir: String,
                         lineage: Option[String => String])
                        (implicit store: TableStore): String = {
-    require(tableMeta(srcDir).contains("keys"), // fails fast on non-tables
-      s"cloneUpsertTable: $srcDir has no pinned keys")
+    tableLayout(srcDir) // fails fast on non-tables
     val curName = readCurrentName(srcDir)
     require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $srcDir")
     require(readCurrentName(dstDir).isEmpty,
@@ -3092,7 +3065,6 @@ object Ingest {
                          keepVersions: Int = 2, graceMs: Long = 0L,
                          force: Boolean = false)
                         (implicit store: TableStore): Option[Long] = {
-    import org.apache.spark.sql.functions.{col, lit}
     val lineage = store.read(store.child(branchDir, "_branch_base"))
       .getOrElse(throw new IllegalArgumentException(
         s"publishUpsertTable: $branchDir is not a WAP branch " +
@@ -3102,39 +3074,15 @@ object Ingest {
     val srcDir = kv("src")
     require(readLedger(branchDir).contains(0L), // branch batch 0 = the fork
       s"publishUpsertTable: branch $branchDir has no committed fork batch")
-    val meta = tableMeta(srcDir)
-    val keys = meta("keys").split(",").toSeq
-    val nBuckets = meta("buckets").toInt
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
-    val fpb = meta.get("fpb").map(_.toInt).getOrElse(4)
-    val feed = store.exists(store.child(srcDir, "_cdf"))
-    val flag = "_publish_deleted"
     val target = readUpsertTable(spark, branchDir)
     // heal a swap-to-append crash window FIRST — skipping straight to
     // the empty-diff no-op would strand the version uncommitted
     completeDanglingCommit(spark, srcDir, keepVersions, graceMs)
-    require(!target.columns.contains(flag),
-      s"publishUpsertTable: table has a reserved column name $flag")
-    // full-state diff of the branch vs a reference snapshot: upsert
-    // rows = branch rows the reference lacks (changed or inserted),
-    // tombstones = reference keys the branch dropped. The branch may
-    // have WIDENED (the sink's evolution path publishes the new
-    // columns); the reference side aligns with typed nulls.
-    def diffVs(ref0: DataFrame): DataFrame = {
-      require(ref0.columns.forall(target.columns.contains),
-        s"publishUpsertTable: branch $branchDir dropped columns " +
-          s"${ref0.columns.filterNot(target.columns.contains).mkString(",")} " +
-          "— the format's evolution is widen-only")
-      val ref = target.columns.filterNot(ref0.columns.contains)
-        .foldLeft(ref0)((d, c) =>
-          d.withColumn(c, lit(null).cast(target.schema(c).dataType)))
-        .select(target.columns.map(col): _*)
-      val ups = target.exceptAll(ref).withColumn(flag, lit(false))
-      val dels = ref
-        .join(target.select(keys.map(col): _*), keys, "left_anti")
-        .withColumn(flag, lit(true))
-      ups.unionByName(dels)
-    }
+    // the branch may have WIDENED (the sink's evolution path publishes
+    // the new columns)
+    def diffVs(ref: DataFrame): DataFrame =
+      diffBatch(s"publishUpsertTable: branch $branchDir", target, ref,
+        tableKeyColumns(srcDir))
     // already in sync (a re-run after a committed publish, or a branch
     // the source caught up with) → convergent no-op
     val syncDiff = diffVs(readUpsertTable(spark, srcDir))
@@ -3155,10 +3103,8 @@ object Ingest {
       else syncDiff
     if (force && diff.isEmpty) return None // untouched branch, src moved
     val newBatch = head + 1
-    upsertParquet(srcDir, keys, nBuckets = nBuckets,
-      keepVersions = keepVersions, deleteCol = Some(flag),
-      graceMs = graceMs, changeFeed = feed, sortCols = sortCols,
-      filesPerBucket = fpb)(diff, newBatch)
+    commitPinned(srcDir, tableLayout(srcDir), keepVersions, graceMs,
+      Some(TombstoneCol))(diff, newBatch)
     Some(newBatch)
   }
 
@@ -3182,7 +3128,7 @@ object Ingest {
                  (implicit store: TableStore): Option[(Long, Long)] =
     dmlBatch(spark, tableDir, keepVersions, graceMs, lazyDeletes) { cur =>
       import org.apache.spark.sql.functions.{expr, lit}
-      cur.filter(expr(predicate)).withColumn(DmlFlag, lit(true))
+      cur.filter(expr(predicate)).withColumn(TombstoneCol, lit(true))
     }
 
   /** Row-level UPDATE as SQL-style DML on the table format: for every
@@ -3200,8 +3146,7 @@ object Ingest {
                   set: Seq[(String, String)], predicate: String,
                   keepVersions: Int = 2, graceMs: Long = 0L)
                  (implicit store: TableStore): Option[(Long, Long)] = {
-    val keys = tableMeta(tableDir).apply("keys").split(",").toSeq
-      .map(toLogicalName(colMap(tableDir), _)) // assignments are logical
+    val keys = tableKeyColumns(tableDir) // assignments are logical
     set.foreach { case (c, _) =>
       require(!keys.contains(c),
         s"updateWhere: cannot assign key column '$c' — an update that " +
@@ -3229,7 +3174,7 @@ object Ingest {
       // no-op assignments write nothing: only rows that actually
       // changed ride into the sink (bag semantics are safe — keys are
       // unique in a snapshot, so exceptAll here is a keyed set diff)
-      updated.exceptAll(matched).withColumn(DmlFlag, lit(false))
+      updated.exceptAll(matched).withColumn(TombstoneCol, lit(false))
     }
   }
 
@@ -3296,26 +3241,19 @@ object Ingest {
         s"upsertInto: pinned batch id $a is below an already-committed " +
           s"id of $tableDir — stale checkpoint / foreign id space")
     }
-    val meta: Map[String, String] =
-      if (store.exists(store.child(tableDir, "_meta"))) tableMeta(tableDir)
-      else Map.empty // fresh dir: this call creates the table
-    val (k, b) = meta.get("keys") match {
-      case Some(mk) =>
+    val layout =
+      if (store.exists(store.child(tableDir, "_meta"))) {
         // callers speak logical names; _meta pins physical
-        val pinned = mk.split(",").toSeq
-          .map(toLogicalName(colMap(tableDir), _))
+        val pinned = tableKeyColumns(tableDir)
         require(keys.isEmpty || keys == pinned,
           s"upsertInto: $tableDir pins keys [${pinned.mkString(",")}] " +
             s"but the call passed [${keys.mkString(",")}]")
-        (pinned, meta("buckets").toInt)
-      case None =>
+        tableLayout(tableDir)
+      } else { // fresh dir: this call creates the table
         require(keys.nonEmpty,
           s"upsertInto: $tableDir does not exist — pass keys to create it")
-        (keys, nBuckets)
-    }
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
-    val fpb = meta.get("fpb").map(_.toInt).getOrElse(4)
-    val feed = store.exists(store.child(tableDir, "_cdf"))
+        TableLayout(keys, nBuckets)
+      }
     val batchId = asBatch.getOrElse(
       readLedger(tableDir).reduceOption(_ max _).getOrElse(-1L) + 1)
     // the source can be an arbitrary (expensive) query — evaluate it
@@ -3323,9 +3261,8 @@ object Ingest {
     val cached = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = cached.count()
-      upsertParquet(tableDir, k, nBuckets = b, keepVersions = keepVersions,
-        deleteCol = deleteCol, graceMs = graceMs, changeFeed = feed,
-        sortCols = sortCols, filesPerBucket = fpb, txn = txn)(cached, batchId)
+      commitPinned(tableDir, layout, keepVersions, graceMs, deleteCol,
+        txn = txn)(cached, batchId)
       (batchId, n)
     } finally { cached.unpersist(); () }
   }
@@ -3411,11 +3348,10 @@ object Ingest {
     // micro-batch — skip BEFORE building a change set against the
     // post-merge snapshot (which would describe a different batch)
     if (asBatch.exists(readLedger(tableDir).contains)) return None
-    val meta = tableMeta(tableDir)
+    val layout = tableLayout(tableDir)
     // the merge speaks LOGICAL names end to end (cur is the logical
     // view, the sink translates back); _meta pins physical
-    val keys = meta("keys").split(",").toSeq
-      .map(toLogicalName(colMap(tableDir), _))
+    val keys = layout.keys.map(toLogicalName(colMap(tableDir), _))
     def checkSet(set: Seq[(String, String)]): Unit = {
       require(set.nonEmpty, "mergeInto: empty SET list")
       require(set.map(_._1).distinct.size == set.size,
@@ -3453,8 +3389,7 @@ object Ingest {
       val cur =
         if (needFullTarget) readUpsertTable(spark, tableDir)
         else bucketScopedSnapshot(spark, tableDir, src, keys)
-      require(!cur.columns.contains(DmlFlag),
-        s"DML: table has a reserved column name $DmlFlag")
+      requireNoTombstoneCol(cur)
       require(!cur.columns.contains("_mrg") && !src.columns.contains("_mrg"),
         "mergeInto: '_mrg' is reserved for the clause-routing column")
       val tSchema = cur.schema
@@ -3496,7 +3431,7 @@ object Ingest {
         val flag =
           if (delIdx.isEmpty) lit(false)
           else col("_mrg").isin(delIdx: _*)
-        out.select(dataCols :+ flag.as(DmlFlag): _*)
+        out.select(dataCols :+ flag.as(TombstoneCol): _*)
       }
       val idx = clauses.zipWithIndex
       val matchedCls = idx.filter {
@@ -3533,21 +3468,17 @@ object Ingest {
         if (n == 0) return None
         val newBatch = asBatch.getOrElse(
           readLedger(tableDir).reduceOption(_ max _).getOrElse(-1L) + 1)
-        upsertParquet(tableDir, keys, nBuckets = meta("buckets").toInt,
-          keepVersions = keepVersions, deleteCol = Some(DmlFlag),
-          graceMs = graceMs,
-          changeFeed = store.exists(store.child(tableDir, "_cdf")),
-          sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil),
-          filesPerBucket = meta.get("fpb").map(_.toInt).getOrElse(4))(
-          change, newBatch)
+        commitPinned(tableDir, layout, keepVersions, graceMs,
+          Some(TombstoneCol))(change, newBatch)
         Some((newBatch, n))
       } finally { change.unpersist(); () }
     } finally { src.unpersist(); () }
   }
 
-  /** The CURRENT snapshot restricted to the bucket dirs `probe`'s keys
-    * hash to — complete for any per-key question about the probe's key
-    * set ([[mergeInto]]'s matched + insert legs): a key's row can live
+  /** The snapshot (CURRENT, or as of `asOfBatch`) restricted to the
+    * bucket dirs `probe`'s keys hash to — complete for any per-key
+    * question about the probe's key set ([[lookupUpsertTable]],
+    * [[mergeInto]]'s matched + insert legs): a key's row can live
     * in exactly one bucket, so rows outside these dirs cannot match.
     * Unlike [[lookupUpsertTable]] the probe is NOT broadcast-semi-joined
     * in (merge sources can be large); only the ≤ nBuckets distinct
@@ -3555,12 +3486,18 @@ object Ingest {
     * snapshot read.
     */
   private def bucketScopedSnapshot(spark: SparkSession, tableDir: String,
-                                   probe: DataFrame, keys: Seq[String])
+                                   probe: DataFrame, keys: Seq[String],
+                                   asOfBatch: Option[Long] = None)
                                   (implicit store: TableStore): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val vDir = resolveVersionDir(tableDir, None)
+    val vDir = resolveVersionDir(tableDir, asOfBatch)
+    // the bucket count that hashed THIS version's layout: the dir's own
+    // `_nbuckets` annotation when present (stamped by rebucket — a
+    // retained pre-rebucket snapshot keeps its original count), the
+    // table-level `_meta` otherwise
     val nBuckets = versionBuckets(vDir)
-      .getOrElse(tableMeta(tableDir).apply("buckets").toInt)
+      .getOrElse(tableLayout(tableDir).buckets)
+    // ≤ nBuckets small ints — bounded by the table property, not data
     val buckets: Seq[Long] = probe
       .select(pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
@@ -3570,13 +3507,48 @@ object Ingest {
     val reader = pinnedReader(spark, tableDir)
     val scan =
       if (dirs.isEmpty)
+        // typed empty via the pinned schema over the (possibly empty)
+        // version dir — same trick the snapshot read uses
         reader.option("basePath", vDir).parquet(vDir).filter(lit(false))
       else reader.option("basePath", vDir).parquet(dirs: _*)
     logicalView(tableDir)(
       applyDeletes(spark, tableDir, vDir, scan).drop(UpsertBucketCol))
   }
 
-  private val DmlFlag = "_dml_deleted"
+  /** The tombstone flag column of the batches operations build
+    * themselves (RESTORE, PUBLISH, DML, MERGE) — reserved: a table with
+    * a column of this name refuses them.
+    */
+  private val TombstoneCol = "_op_deleted"
+
+  private def requireNoTombstoneCol(table: DataFrame): Unit =
+    require(!table.columns.contains(TombstoneCol),
+      s"table has a column named $TombstoneCol, which table operations " +
+        "reserve for their tombstone flag")
+
+  /** The batch that turns snapshot `ref0` into `target`, flagged on
+    * [[TombstoneCol]]: upsert rows = target rows the reference lacks
+    * (changed or inserted), tombstones = reference keys the target
+    * dropped. A target that WIDENED the schema diffs against the
+    * reference aligned with typed nulls; a narrowed one is refused
+    * (evolution is widen-only).
+    */
+  private def diffBatch(what: String, target: DataFrame, ref0: DataFrame,
+                        keys: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    requireNoTombstoneCol(target)
+    require(ref0.columns.forall(target.columns.contains),
+      s"$what dropped columns " +
+        s"${ref0.columns.filterNot(target.columns.contains).mkString(",")} " +
+        "— the format's evolution is widen-only")
+    val ref = target.columns.filterNot(ref0.columns.contains)
+      .foldLeft(ref0)((d, c) =>
+        d.withColumn(c, lit(null).cast(target.schema(c).dataType)))
+      .select(target.columns.map(col): _*)
+    target.exceptAll(ref).withColumn(TombstoneCol, lit(false))
+      .unionByName(ref.join(target.select(keys.map(col): _*), keys,
+        "left_anti").withColumn(TombstoneCol, lit(true)))
+  }
 
   /** Complete a swap-to-append sink crash: CURRENT points at a
     * complete generation-0 version whose batch id is missing from the
@@ -3597,13 +3569,7 @@ object Ingest {
                                     (implicit store: TableStore): Unit =
     readCurrentName(tableDir).flatMap(parseVersion).map(_._1)
       .filterNot(readLedger(tableDir).contains).foreach { b =>
-        val meta = tableMeta(tableDir)
-        upsertParquet(tableDir, meta.apply("keys").split(",").toSeq,
-          nBuckets = meta("buckets").toInt, keepVersions = keepVersions,
-          graceMs = graceMs,
-          changeFeed = store.exists(store.child(tableDir, "_cdf")),
-          sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil),
-          filesPerBucket = meta.get("fpb").map(_.toInt).getOrElse(4))(
+        commitPinned(tableDir, tableLayout(tableDir), keepVersions, graceMs)(
           readUpsertTable(spark, tableDir).limit(0), b)
       }
 
@@ -3615,18 +3581,11 @@ object Ingest {
                        keepVersions: Int, graceMs: Long, lazyDel: Boolean)
                       (change: DataFrame => DataFrame)
                       (implicit store: TableStore): Option[(Long, Long)] = {
-    val meta = tableMeta(tableDir)
-    val keys = meta("keys").split(",").toSeq
-    val nBuckets = meta("buckets").toInt
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
-    val fpb = meta.get("fpb").map(_.toInt).getOrElse(4)
-    val feed = store.exists(store.child(tableDir, "_cdf"))
     // the change set derives from CURRENT, which already reflects a
     // swap-to-append-crashed write — commit it before deciding no-op
     completeDanglingCommit(spark, tableDir, keepVersions, graceMs)
     val cur = readUpsertTable(spark, tableDir)
-    require(!cur.columns.contains(DmlFlag),
-      s"DML: table has a reserved column name $DmlFlag")
+    requireNoTombstoneCol(cur)
     // the change set derives from a snapshot scan — evaluate it once
     // for both the emptiness check and the merge
     val batch = change(cur)
@@ -3635,10 +3594,8 @@ object Ingest {
       val n = batch.count()
       if (n == 0) return None
       val newBatch = readLedger(tableDir).reduceOption(_ max _).getOrElse(-1L) + 1
-      upsertParquet(tableDir, keys, nBuckets = nBuckets,
-        keepVersions = keepVersions, deleteCol = Some(DmlFlag),
-        graceMs = graceMs, changeFeed = feed, lazyDeletes = lazyDel,
-        sortCols = sortCols, filesPerBucket = fpb)(batch, newBatch)
+      commitPinned(tableDir, tableLayout(tableDir), keepVersions, graceMs,
+        Some(TombstoneCol), lazyDel)(batch, newBatch)
       Some((newBatch, n))
     } finally { batch.unpersist(); () }
   }
@@ -3665,19 +3622,15 @@ object Ingest {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     require(newBuckets > 0, s"rebucketUpsertTable: bad bucket count $newBuckets")
     val root = tableDir
-    val meta = tableMeta(root)
-    val keys = meta("keys").split(",").toSeq
-    val metaBuckets = meta("buckets").toInt
+    val layout = tableLayout(root)
+    val TableLayout(keys, metaBuckets, sortCols, fpb) = layout
     val curName = readCurrentName(root)
     require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
     val curDir = store.child(root, curName.get)
     // preserve pinned layout properties (sort/fpb) across the bucket-
     // count change — dropping them would silently stop manifest builds
-    val sortCols = meta.get("sort").map(_.split(",").toSeq).getOrElse(Nil)
-    val fpb = meta.get("fpb").map(_.toInt).getOrElse(4)
     def syncMeta(): Unit = store.writeAtomic(root, "_meta",
-      s"keys=${keys.mkString(",")}\nbuckets=$newBuckets\n" +
-        (if (sortCols.isEmpty) "" else s"sort=${sortCols.mkString(",")}\nfpb=$fpb\n"))
+      layout.copy(buckets = newBuckets).render)
     if (!forceSameCount &&
         versionBuckets(curDir).getOrElse(metaBuckets) == newBuckets) {
       // no-op, or completing a rebucket that crashed after the pointer
@@ -3696,8 +3649,7 @@ object Ingest {
     // step 2: the new generation
     val (b, g) = parseVersion(curName.get).get
     val newName = versionName(b, g + 1)
-    val newV = store.child(root, newName)
-    store.deleteTree(newV) // partial build from a previous crashed attempt
+    val newV = freshVersion(root, newName)
     // the full rewrite applies (and therefore clears) any pending
     // deletion vector — rebucket doubles as delete-debt compaction
     // PURGE COLUMNS: the full rewrite is the one moment dropped
@@ -3756,56 +3708,28 @@ object Ingest {
       else rehashed.repartitionByRange(newBuckets * fpb,
           (col(UpsertBucketCol) +: sortCols.map(col)): _*)
         .sortWithinPartitions((col(UpsertBucketCol) +: sortCols.map(col)): _*)
-    rehashedLaid
-      .write.partitionBy(UpsertBucketCol).mode("overwrite").parquet(newV)
-    if (sortCols.nonEmpty)
-      writeVersionManifest(spark, newV, None, None, sortCols,
-        pinnedSchema(root))
-    val oldCh = store.child(curDir, "_changes")
-    if (store.isDirectory(oldCh)) {
-      val dst = store.child(newV, "_changes")
-      store.mkdirs(dst)
-      store.listNames(oldCh)
-        .filterNot(n => store.isDirectory(store.child(oldCh, n)))
-        .foreach(n => linkInto(store.child(oldCh, n), dst))
-    }
-    store.writeAtomic(newV, "_nbuckets", s"$newBuckets\n")
-    // step 3: completeness marker — LAST thing inside the dir
-    store.writeAtomic(newV, "_gen_commit", "")
-    // steps 4–6. Same optimistic-concurrency CAS as the sink's
-    // swapCurrent: a maintenance pass racing a committing writer must
-    // not point CURRENT back at the pre-commit snapshot (that would
-    // silently drop the writer's batch from history). Atomicity is the
-    // store backend's (airtight in-JVM / conditional-put, best-effort
-    // cross-process on a plain filesystem).
-    if (!store.putConditional(root, "CURRENT", curName, newName)) {
-      val nowName = readCurrentName(root)
-      throw new java.util.ConcurrentModificationException(
-        s"rewriteGeneration: CURRENT of $tableDir moved from " +
-          s"${curName.getOrElse("<none>")} to ${nowName.getOrElse("<none>")} " +
-          "while the new generation was built — a concurrent writer " +
-          "committed. Nothing was swapped (the crashed-build sweep " +
-          "reclaims the orphan generation); re-run against the new snapshot")
-    }
-    syncMeta()
-    if (purgeDeadCols && deadPhys.nonEmpty) {
-      // narrow the pinned schema to the surviving physicals and clear
-      // the dead mapping entries. Crash BETWEEN the swap and here is
-      // sound — a wide schema over the narrow new files reads NULL for
-      // the purged columns and the view still hides them — and a
-      // re-run of the purge completes the narrowing. Retained
-      // PRE-purge versions keep their bytes until retention sweeps
-      // them (their time-travel reads column-prune through whatever
-      // schema is pinned — parquet subset reads are always legal).
-      store.read(store.child(root, "_schema")).foreach { j =>
-        val s = org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType]
-        store.writeAtomic(root, "_schema", StructType(
-          s.fields.filterNot(f => deadPhys.contains(f.name)).toSeq).json)
+    rewriteBuckets(spark, newV, rehashedLaid, None, None, sortCols,
+      pinnedSchema(root))
+    // steps 3–6 ([[commitGeneration]]): the _meta update (and PURGE's
+    // narrowing) runs between the swap and the sweep
+    commitGeneration("rewriteGeneration", root, curName.get, newName,
+      newBuckets, afterSwap = {
+      syncMeta()
+      if (purgeDeadCols && deadPhys.nonEmpty) {
+        // narrow the pinned schema to the surviving physicals and clear
+        // the dead mapping entries. Crash BETWEEN the swap and here is
+        // sound — a wide schema over the narrow new files reads NULL
+        // for the purged columns and the view still hides them — and a
+        // re-run of the purge completes the narrowing. Retained
+        // PRE-purge versions keep their bytes until retention sweeps
+        // them (their time-travel reads column-prune through whatever
+        // schema is pinned — parquet subset reads are always legal).
+        pinnedSchema(root).foreach(s => store.writeAtomic(root, "_schema",
+          StructType(s.fields.filterNot(f => deadPhys.contains(f.name))
+            .toSeq).json))
+        writeColMap(root, colMap(root).filter(_._3))
       }
-      writeColMap(root, colMap(root).filter(_._3))
-    }
-    sweepDir(curDir) // crash mid-delete leaves it marked, never served
+    })
   }
 
   /** Read the change-data-feed of an [[upsertParquet]] table written
@@ -3864,11 +3788,8 @@ object Ingest {
     */
   private[sources] def changeSchema(root: String)
                           (implicit store: TableStore): StructType = {
-    val json = store.read(store.child(root, "_schema"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$root has no _schema file"))
-    val dataSchema = org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[StructType]
+    val dataSchema = pinnedSchema(root).getOrElse(
+      throw new IllegalArgumentException(s"$root has no _schema file"))
     StructType(
       dataSchema.fields.filterNot(_.name == UpsertBucketCol).toSeq ++ Seq(
         org.apache.spark.sql.types.StructField("_change_type",
@@ -3895,12 +3816,10 @@ object Ingest {
   private[sources] def physicalDataSchema(root: String)
                                          (implicit store: TableStore)
       : StructType = {
-    val json = store.read(store.child(root, "_schema"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"$root has no _schema file"))
+    val pinned = pinnedSchema(root).getOrElse(
+      throw new IllegalArgumentException(s"$root has no _schema file"))
     val dead = colMap(root).filterNot(_._3).map(_._1).toSet
-    StructType(org.apache.spark.sql.types.DataType.fromJson(json)
-      .asInstanceOf[StructType].fields
+    StructType(pinned.fields
       .filterNot(f => f.name == UpsertBucketCol || dead(f.name)).toSeq)
   }
 
@@ -3943,12 +3862,8 @@ object Ingest {
     */
   private[sources] def deletionVectorFiles(vDir: String)
                                           (implicit store: TableStore)
-      : Seq[String] = {
-    val dvDir = store.child(vDir, "_deletes")
-    if (!store.isDirectory(dvDir)) Nil
-    else store.listNames(dvDir).filter(_.endsWith(".parquet"))
-      .map(store.child(dvDir, _))
-  }
+      : Seq[String] =
+    parquetFiles(store.child(vDir, "_deletes"))
 
   /** Change-slice parquet files of committed batches in
     * `[fromBatch, toBatch]` — the bounded-CDC file list

@@ -126,7 +126,13 @@ class CrashWindowSpec extends AnyFunSuite {
   /** Sweep the MAINTENANCE protocol (rebucket generation rewrite) and
     * a VACUUM pass; returns (rebucket windows, vacuum windows).
     */
-  private def sweepMaintenance(delegate: () => TableStore): (Int, Int) = {
+  private def sweepMaintenance(delegate: () => TableStore): (Int, Int) =
+    (sweepRebucket(delegate), sweepVacuum(delegate))
+
+  /** Sweep the rebucket generation rewrite; returns windows swept.
+    * `stride` samples every stride-th window, as in [[sweepSink]].
+    */
+  private def sweepRebucket(delegate: () => TableStore, stride: Int = 1): Int = {
     import spark.implicits._
     val want = Map(1L -> 1.0, 2L -> 22.0, 3L -> 3.0)
     var k = 0
@@ -168,11 +174,17 @@ class CrashWindowSpec extends AnyFunSuite {
         assert(Ingest.readTableChanges(spark, table, 0, 2).count() >= 5)
         LocalTableStore.deleteTree(table)
       }
-      k += 1
+      k += stride
     }
     assert(exhausted, "rebucket sweep never ran past the protocol")
+    windows
+  }
 
-    // VACUUM: crash anywhere in the audited sweep; re-run completes
+  /** VACUUM: crash anywhere in the audited sweep; re-run completes.
+    * Returns windows swept.
+    */
+  private def sweepVacuum(delegate: () => TableStore): Int = {
+    import spark.implicits._
     var kv = 0
     var vExhausted = false
     var vWindows = 0
@@ -219,7 +231,7 @@ class CrashWindowSpec extends AnyFunSuite {
       kv += 1
     }
     assert(vExhausted, "vacuum sweep never ran past the protocol")
-    (windows, vWindows)
+    vWindows
   }
 
   /** Sweep VACUUM against a TAG PIN: the pinned snapshot must survive
@@ -343,8 +355,9 @@ class CrashWindowSpec extends AnyFunSuite {
     * rewrite), while a pre-CAS crash leaves the debt standing and the
     * re-run must drain it — either way the table converges to the
     * same debt-free state and a further pass mints no generation.
+    * `stride` samples every stride-th window, as in [[sweepSink]].
     */
-  private def sweepCompact(delegate: () => TableStore): Int = {
+  private def sweepCompact(delegate: () => TableStore, stride: Int = 1): Int = {
     import spark.implicits._
     val want = Map(1L -> 1.0, 3L -> 3.0)
     var k = 0
@@ -391,7 +404,7 @@ class CrashWindowSpec extends AnyFunSuite {
         assert(Ingest.readTableChanges(spark, table, 0, 2).count() >= 5)
         LocalTableStore.deleteTree(table)
       }
-      k += 1
+      k += stride
     }
     assert(exhausted, "compact sweep never ran past the protocol")
     windows
@@ -1002,7 +1015,8 @@ class CrashWindowSpec extends AnyFunSuite {
   }
 
   // Fast default-lane smokes: STRIDED sweeps of the central SINK
-  // protocol on both control-plane semantics (every 5th window, so the
+  // protocol and of the generation commit (selective compaction,
+  // rebucket) on both control-plane semantics (every 5th window, so the
   // whole protocol span is still crossed and exhaustion still checked).
   // The exhaustive batteries above are tagged Slow and excluded from
   // the default `sbt test` lane (build.sbt) so the suite fits the
@@ -1021,6 +1035,38 @@ class CrashWindowSpec extends AnyFunSuite {
       val w = sweepSink(() => new ObjectTableStore, stride = 5)
       assert(w > 0, "strided smoke hit no crash window")
       info(s"$w strided crash windows swept, all converged")
+    }
+  }
+
+  test("compact protocol smoke: strided crash windows converge (POSIX)") {
+    withSmallShuffle {
+      val w = sweepCompact(() => LocalTableStore, stride = 5)
+      assert(w > 0, "strided smoke hit no crash window")
+      info(s"$w strided compact windows swept, all converged")
+    }
+  }
+
+  test("compact protocol smoke: strided crash windows converge (object store)") {
+    withSmallShuffle {
+      val w = sweepCompact(() => new ObjectTableStore, stride = 5)
+      assert(w > 0, "strided smoke hit no crash window")
+      info(s"$w strided compact windows swept, all converged")
+    }
+  }
+
+  test("rebucket protocol smoke: strided crash windows converge (POSIX)") {
+    withSmallShuffle {
+      val w = sweepRebucket(() => LocalTableStore, stride = 5)
+      assert(w > 0, "strided smoke hit no crash window")
+      info(s"$w strided rebucket windows swept, all converged")
+    }
+  }
+
+  test("rebucket protocol smoke: strided crash windows converge (object store)") {
+    withSmallShuffle {
+      val w = sweepRebucket(() => new ObjectTableStore, stride = 5)
+      assert(w > 0, "strided smoke hit no crash window")
+      info(s"$w strided rebucket windows swept, all converged")
     }
   }
 }

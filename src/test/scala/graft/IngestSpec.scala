@@ -780,6 +780,32 @@ abstract class IngestSuiteBase extends AnyFunSuite {
     assert(!Ingest.committedBatchIds(table).contains(7L))
   }
 
+  test("quarantine requeue on a sorted change-feed table heals into the table and feed") {
+    import spark.implicits._
+    val table = tmp() + "/quarantine_requeue_sorted_feed"
+    def up(id: Long, rows: (Long, Double)*): Unit =
+      Ingest.upsertParquet(table, Seq("user_id"), nBuckets = 4,
+        keepVersions = 8, changeFeed = true, sortCols = Seq("value"),
+        filesPerBucket = 2,
+        constraints = Seq("value_nonneg" -> "value >= 0"),
+        quarantine = true)(rows.toDF("user_id", "value"), id)
+    up(0, (1L, 1.0), (2L, -2.0))
+    up(1, (3L, -3.0), (4L, 4.0))
+    // the requeue commits under the table's pinned sortCols and feed
+    val (healed, rediverted) = Ingest.requeueQuarantine(spark, table, 2L,
+      fix = _.withColumn("value", abs(col("value"))))
+    assert((healed, rediverted) === (2L, 0L))
+    assert(Ingest.readUpsertTable(spark, table).orderBy("user_id")
+      .as[(Long, Double)].collect().toSeq ===
+      Seq((1L, 1.0), (2L, 2.0), (3L, 3.0), (4L, 4.0)))
+    assert(Ingest.readQuarantine(spark, table).count() === 0)
+    assert(Ingest.tableSortColumns(table) === Seq("value"))
+    assert(Ingest.readTableChanges(spark, table, 2L, 2L)
+      .select("user_id", "value", "_change_type")
+      .as[(Long, Double, String)].collect().toSet ===
+      Set((2L, 2.0, "insert"), (3L, 3.0, "insert")))
+  }
+
   test("a crashed quarantine prune leaves a refusable half-dir the next prune finishes") {
     import spark.implicits._
     val table = tmp() + "/quarantine_halfswept_table"
@@ -1457,6 +1483,19 @@ abstract class IngestSuiteBase extends AnyFunSuite {
     assert(after.count { case (b, ids) =>
       b.startsWith("bkt=") && before.get(b).contains(ids) } === 3,
       "expected exactly one rewritten bucket")
+    assertManifestMatchesScan(table, Seq("value"))
+
+    // maintenance rewrites build their manifests through the same step:
+    // a full compaction, then one of only the bucket a batch refragments
+    // (the other three carry their rows), OPTIMIZE and a rebucket
+    assert(Ingest.compactUpsertTable(spark, table, filesOver = 1).nonEmpty)
+    assertManifestMatchesScan(table, Seq("value"))
+    up(3, oneBucket.map(k => (k, 2000.0 + k, false)))
+    assert(Ingest.compactUpsertTable(spark, table, filesOver = 1) === Seq(0))
+    assertManifestMatchesScan(table, Seq("value"))
+    Ingest.optimizeUpsertTable(spark, table)
+    assertManifestMatchesScan(table, Seq("value"))
+    Ingest.rebucketUpsertTable(spark, table, 2)
     assertManifestMatchesScan(table, Seq("value"))
 
     // INT96 timestamps carry no usable footer stats: the footer path
@@ -2197,6 +2236,34 @@ abstract class IngestSuiteBase extends AnyFunSuite {
   */
 class IngestSpec extends IngestSuiteBase {
   implicit def store: graft.sources.TableStore = graft.sources.LocalTableStore
+
+  test("compaction carries each linked file's checksum sidecar") {
+    import spark.implicits._
+    val t = Files.createTempDirectory("graft-ingest").toString + "/compact_crc"
+    def up(id: Long, rows: Seq[(Long, Double, Boolean)]): Unit =
+      Ingest.upsertParquet(t, Seq("k"), nBuckets = 4, keepVersions = 2,
+        deleteCol = Some("_del"), lazyDeletes = true, sortCols = Seq("k"))(
+        rows.toDF("k", "v", "_del"), id)
+    up(0, (1L to 200L).map(k => (k, k.toDouble, false)))
+    // a lazy delete leaves debt in one bucket: compaction rewrites it and
+    // carries the other three by link
+    up(1, Seq((7L, 0.0, true)))
+    def parts(v: String): Map[String, Seq[java.io.File]] =
+      Option(new java.io.File(t, v).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("bkt=")).map(d => d.getName ->
+          d.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))).toMap
+    def sidecar(f: java.io.File): java.io.File =
+      new java.io.File(f.getParentFile, s".${f.getName}.crc")
+    assert(parts("v_1").values.flatten.forall(sidecar(_).isFile),
+      "premise: the writer left no checksum sidecars")
+    val rewritten = Ingest.compactUpsertTable(spark, t, filesOver = 100)
+    assert(rewritten.size === 1)
+    val carried = parts("v_1.1") -- rewritten.map(b => s"bkt=$b")
+    assert(carried.size === 3)
+    carried.values.flatten.foreach(f =>
+      assert(sidecar(f).isFile, s"carried $f lost its checksum sidecar"))
+    assert(Ingest.readUpsertTable(spark, t).count() === 199)
+  }
   def posixLinks: Boolean = true
   def fileId(f: java.io.File): String =
     java.nio.file.Files.getAttribute(f.toPath, "unix:ino").toString
