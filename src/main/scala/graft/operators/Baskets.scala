@@ -18,6 +18,14 @@ object Baskets {
     * DISTINCT basket-item membership): pairs with support count ≥
     * `minSupport`, plus support / confidence / lift. See qBasketRules
     * for the determinism and scale arguments.
+    *
+    * Eager and lineage-free: the per-basket item arrays are
+    * `localCheckpoint`ed, so calling `rules` runs a Spark job at
+    * DataFrame construction even if the result is never used, and the
+    * checkpointed blocks carry no lineage — losing an executor fails
+    * the job instead of recomputing it. That fits local mode; on a
+    * cluster this is a persist(MEMORY_AND_DISK) or a parquet-staged
+    * basket table, the same derive-once shape (as `Graph.triangleStats`).
     */
   def rules(ob: org.apache.spark.sql.DataFrame, minSupport: Int)
       : org.apache.spark.sql.DataFrame = {

@@ -515,9 +515,9 @@ object VectorOps {
     * the oracle-checked contract (the BQ/PQ/LSH discipline). int8
     * preserves the cosine ordering almost exactly (rounding drift
     * ≤0.02 per `q_embed_quantized`): measured on this fixture
-    * (graft.tools.Sq8Probe, 50 probes @ sf0.01) recall@5 = 1.0 at
+    * (`QuantizedRecallSpec`, 50 probes @ sf0.01) recall@5 = 1.0 at
     * shortlist 8, 16 AND 32 — where 64-bit BQ needed shortlist 64
-    * for 0.63. That is the quantization-ladder guidance a production
+    * for 0.628. That is the quantization-ladder guidance a production
     * tuner needs: BQ when bytes dominate (32× compression, coarse),
     * PQ between, SQ8 when recall matters (4×, near-exact).
     */
@@ -588,8 +588,8 @@ object VectorOps {
     * corpus at sf0.01): rows-only by design — recall at a bounded
     * shortlist is corpus-dependent — with the exactness twin below as
     * its oracle-checked contract (the PQ/LSH discipline). Measured on
-    * this fixture (graft.tools.BqProbe, 50 probes @ sf0.01): recall@5
-    * = 0.28 / 0.43 / 0.63 at shortlist 16 / 32 / 64 — 64 sign bits
+    * this fixture (`QuantizedRecallSpec`, 50 probes @ sf0.01): recall@5
+    * = 0.276 / 0.432 / 0.628 at shortlist 16 / 32 / 64 — 64 sign bits
     * order 64-dim SYNTHETIC near-uniform vectors only coarsely, the
     * known BQ caveat (it sharpens on higher-dim real embeddings with
     * anisotropic structure, and composes with IVF the same way PQ

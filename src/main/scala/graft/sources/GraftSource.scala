@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.execution.streaming.Sink
-import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -42,16 +40,15 @@ import org.apache.spark.sql.types.StructType
   * spark.readStream.format("graft").option("read", "changes").load(dir)
   * }}}
   *
-  * Scale shape: the read path is [[Ingest.readUpsertTableWhereOpt]] —
-  * pushed-down range/equality filters on the table's pinned sort
-  * columns become stats-manifest FILE-LIST skipping before any footer
-  * I/O, then ride into the inner parquet scan as ordinary pushed
-  * predicates (`unhandledFilters` keeps Spark re-applying every
-  * filter row-level, so pruning is strictly a superset optimization —
-  * never a correctness dependency). `sizeInBytes` reports the CURRENT
-  * snapshot's physical bytes so Catalyst's broadcast-join threshold
-  * sees a small dimension table as small — without it every graft
-  * relation defaults to "huge" and a 10 MB dim joins by shuffle.
+  * Every read — `format("graft")`, `CREATE TABLE … USING graft` and the
+  * catalog — resolves through [[getTable]] to the V2 [[GraftTable]]
+  * scan: pushed-down range/equality filters on the table's pinned sort
+  * columns become stats-manifest FILE-LIST skipping before any data
+  * I/O ([[GraftSourceOptions.boundsFromFilters]]) and are re-applied
+  * row-exactly inside the reader, and the scan's statistics report
+  * the served snapshot's physical bytes so Catalyst's broadcast-join
+  * threshold sees a small dimension table as small. The V1
+  * [[GraftRelation]] below serves only the write verbs.
   *
   * The streaming SOURCE is the V2 `MicroBatchStream` in
   * [[GraftTable]] (r16 — the V1 `StreamSourceProvider` could not
@@ -241,8 +238,8 @@ private[graft] object GraftSourceOptions {
     * independently — `c = 7` to a closed point, `c >= x` to a
     * lo-only bound (strict `>` relaxes to inclusive: pruning is a
     * superset guarantee, the row-level filter stays exact). Filters
-    * on non-stat columns, disjunctions, IN-lists: no bound (still
-    * pushed to the inner parquet scan by [[filterToColumn]]).
+    * on non-stat columns, disjunctions, IN-lists: no bound (the
+    * scan's reader still re-applies them row-level).
     */
   def boundsFromFilters(filters: Seq[Filter], statCols: Set[String])
       : Seq[(String, Option[Any], Option[Any])] =
@@ -254,58 +251,17 @@ private[graft] object GraftSourceOptions {
       case LessThanOrEqual(c, v) if statCols(c) => Some((c, None, Some(v)))
       case _ => None
     }
-
-  /** Best-effort V1 `Filter` → `Column` so translatable predicates
-    * reach the INNER parquet scan (footer/page-level pushdown there).
-    * `And` translates partially (either conjunct alone is sound);
-    * `Or` only when both children translate. Under `Not` the partial
-    * `And` rule flips from sound to WRONG — `NOT(a AND b)` with only
-    * `a` translated yields `!a`, which drops rows `(a=true, b=false)`
-    * that Spark's row-level re-application can never restore — so
-    * inside a negation every child must translate EXACTLY or the
-    * whole filter is skipped. Untranslatable filters are simply not
-    * applied here — Spark re-applies the full set row-level above the
-    * relation (`unhandledFilters` default).
-    */
-  def filterToColumn(f: Filter): Option[Column] =
-    filterToColumn(f, exact = false)
-
-  private def filterToColumn(f: Filter, exact: Boolean)
-      : Option[Column] = f match {
-    case EqualTo(c, v) => Some(col(c) === lit(v))
-    case EqualNullSafe(c, v) => Some(col(c) <=> lit(v))
-    case GreaterThan(c, v) => Some(col(c) > lit(v))
-    case GreaterThanOrEqual(c, v) => Some(col(c) >= lit(v))
-    case LessThan(c, v) => Some(col(c) < lit(v))
-    case LessThanOrEqual(c, v) => Some(col(c) <= lit(v))
-    case In(c, vs) => Some(col(c).isin(vs.toIndexedSeq: _*))
-    case IsNull(c) => Some(col(c).isNull)
-    case IsNotNull(c) => Some(col(c).isNotNull)
-    case StringStartsWith(c, v) => Some(col(c).startsWith(v))
-    case StringEndsWith(c, v) => Some(col(c).endsWith(v))
-    case StringContains(c, v) => Some(col(c).contains(v))
-    case And(l, r) =>
-      (filterToColumn(l, exact), filterToColumn(r, exact)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (Some(a), None) if !exact => Some(a)
-        case (None, Some(b)) if !exact => Some(b)
-        case _ => None
-      }
-    case Or(l, r) =>
-      for (a <- filterToColumn(l, exact); b <- filterToColumn(r, exact))
-        yield a || b
-    case Not(child) => filterToColumn(child, exact = true).map(!_)
-    case _ => None
-  }
 }
 
 /** One graft table (or its change feed / dead-letter area) as a V1
-  * relation: schema from the pinned logical view, scans through the
-  * format's own readers, inserts through the sink.
+  * relation for the write verbs: the relation `createRelation`
+  * returns after a batch write, and the target of `INSERT INTO`
+  * (through the sink). Reads never reach it — they resolve to the V2
+  * [[GraftTable]].
   */
 private[graft] final class GraftRelation(
     ctx: SQLContext, opts: GraftSourceOptions)
-    extends BaseRelation with PrunedFilteredScan with InsertableRelation {
+    extends BaseRelation with InsertableRelation {
 
   private implicit val store: TableStore = opts.store
   private def spark = ctx.sparkSession
@@ -325,44 +281,6 @@ private[graft] final class GraftRelation(
   }
 
   override val schema: StructType = base.schema
-
-  /** Physical bytes of the served snapshot (bounded file count:
-    * buckets × filesPerBucket), so the broadcast-join planner sees a
-    * small dim table as broadcastable. Non-snapshot modes and stores
-    * the Hadoop API can't reach fall back to the conservative default
-    * (never wrongly broadcast).
-    */
-  override def sizeInBytes: Long =
-    if (opts.readMode != "snapshot") super.sizeInBytes
-    else try {
-      val vDir = Ingest.snapshotVersionDir(opts.path,
-        opts.tag.map(t => Ingest.tagBatch(opts.path, t))
-          .orElse(opts.versionAsOf))
-      val hp = new org.apache.hadoop.fs.Path(vDir)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .getContentSummary(hp).getLength
-    } catch { case scala.util.control.NonFatal(_) => super.sizeInBytes }
-
-  override def buildScan(requiredColumns: Array[String],
-                         filters: Array[Filter]): RDD[Row] = {
-    val pruned =
-      if (opts.readMode == "snapshot" && opts.tag.isEmpty) {
-        val statCols = Ingest.tableSortColumns(opts.path).toSet
-        val bounds = GraftSourceOptions.boundsFromFilters(
-          filters.toIndexedSeq, statCols)
-        if (bounds.nonEmpty)
-          Ingest.readUpsertTableWhereOpt(spark, opts.path, bounds,
-            opts.versionAsOf)
-        else base
-      } else base
-    val filtered = filters.toIndexedSeq
-      .flatMap(GraftSourceOptions.filterToColumn)
-      .foldLeft(pruned)(_ filter _)
-    val projected =
-      if (requiredColumns.isEmpty) filtered
-      else filtered.select(requiredColumns.toIndexedSeq.map(col): _*)
-    projected.rdd
-  }
 
   /** `INSERT INTO t SELECT …` — one committed upsert batch. INSERT
     * OVERWRITE is refused for the same reason as SaveMode.Overwrite.

@@ -523,8 +523,10 @@ private[sources] final class GraftScan(spark: SparkSession,
 
   // ---- statistics -----------------------------------------------------
   /** Physical bytes of the served snapshot so the broadcast-join
-    * planner prices a small dim as small — the V1 relation's
-    * `sizeInBytes` contract, kept on the V2 path.
+    * planner prices a small dim as small (without it every graft scan
+    * defaults to "huge" and a 10 MB dim joins by shuffle). Non-snapshot
+    * modes and stores the Hadoop API can't reach report no size, the
+    * conservative default (never wrongly broadcast).
     */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): OptionalLong =

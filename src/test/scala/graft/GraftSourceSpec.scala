@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, Row, SaveMode}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThanOrEqual, Not, Or, StringStartsWith}
+import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThanOrEqual}
 import graft.sources.{GraftSource, GraftSourceOptions, Ingest, TableStore}
 import java.nio.file.Files
 
@@ -102,28 +102,6 @@ class GraftSourceSpec extends AnyFunSuite {
       Seq(("v", Some(70), Some(70)))).get
     assert(hit.nonEmpty && hit.size < all.size,
       s"expected a strict prune: ${hit.size} of ${all.size}")
-  }
-
-  test("filterToColumn translates the full conjunct/disjunct surface") {
-    import GraftSourceOptions.filterToColumn
-    assert(filterToColumn(Or(EqualTo("v", 1), EqualTo("v", 2))).isDefined)
-    assert(filterToColumn(StringStartsWith("s", "a")).isDefined)
-    // a partially-translatable And keeps the sound half
-    val half = filterToColumn(org.apache.spark.sql.sources.And(
-      EqualTo("v", 1),
-      org.apache.spark.sql.sources.AlwaysTrue()))
-    assert(half.isDefined)
-    // an Or with an untranslatable side must NOT drop that side
-    assert(filterToColumn(Or(EqualTo("v", 1),
-      org.apache.spark.sql.sources.AlwaysTrue())).isEmpty)
-    // under Not the partial-And rule flips unsound: NOT(a AND ?) as
-    // !a would over-filter — a negation translates exactly or not at all
-    assert(filterToColumn(Not(org.apache.spark.sql.sources.And(
-      EqualTo("v", 1),
-      org.apache.spark.sql.sources.AlwaysTrue()))).isEmpty)
-    assert(filterToColumn(Not(EqualTo("v", 1))).isDefined)
-    assert(filterToColumn(Not(org.apache.spark.sql.sources.And(
-      EqualTo("v", 1), EqualTo("s", "a")))).isDefined)
   }
 
   test("read=changes and read=quarantine wrap the API reads") {
@@ -373,11 +351,10 @@ class GraftSourceSpec extends AnyFunSuite {
   test("sizeInBytes prices the snapshot so small dims broadcast") {
     val dir = tmp() + "/t"
     buildTable(dir)
-    val rel = new GraftSource().createRelation(spark.sqlContext,
-      Map("path" -> dir))
-    assert(rel.sizeInBytes > 0L)
-    assert(rel.sizeInBytes < 10L * 1024 * 1024,
-      s"tiny table priced at ${rel.sizeInBytes}")
+    val size = spark.read.format("graft").load(dir)
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size > 0)
+    assert(size < 10L * 1024 * 1024, s"tiny table priced at $size")
 
     // and the planner acts on it: graft dim ⋈ big fact broadcasts
     import spark.implicits._
