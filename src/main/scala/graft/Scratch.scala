@@ -23,11 +23,6 @@ package graft
 object Scratch {
   private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
   private lazy val root: java.io.File = {
     val shm = new java.io.File("/dev/shm")
     val base = if (shm.isDirectory && shm.canWrite) shm
@@ -38,12 +33,14 @@ object Scratch {
     Option(r.listFiles()).toSeq.flatten.filter(_.isDirectory).foreach { d =>
       scala.util.Try(d.getName.toLong).toOption.foreach { p =>
         val h = ProcessHandle.of(p)
-        if (!h.isPresent || !h.get.isAlive) rmTree(d)
+        if (!h.isPresent || !h.get.isAlive)
+          graft.sources.LocalTableStore.deleteTree(d.getPath)
       }
     }
     val mine = new java.io.File(r, ProcessHandle.current().pid().toString)
     mine.mkdirs()
-    Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(mine)))
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      graft.sources.LocalTableStore.deleteTree(mine.getPath)))
     mine
   }
 

@@ -28,11 +28,7 @@ object Verify {
         // compared as if it were this run's result (stale-parquet trap).
         // Recursive: an execution-time failure leaves nested _temporary/
         // dirs that a flat delete would silently skip.
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(s"$outDir/$name"))
+        graft.sources.LocalTableStore.deleteTree(s"$outDir/$name")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -59,9 +59,7 @@ object AnnIndex {
 
   def sharedEmbCdcTable(spark: SparkSession, dir: String): String =
     embCdcMemo.getOrElseUpdate((spark, dir), {
-      val base = graft.Scratch.dir("ann-emb-cdc")
-      LocalTableStore.deleteTree(base)
-      val table = s"$base/table"
+      val table = graft.Scratch.dir("ann-emb-cdc") + "/table"
       val emb = Tables.load(spark, dir, "embeddings")
       val perturbed = emb.filter(col("vec_id") % 5 === 0)
         .withColumn("embedding", reverse(col("embedding")))
@@ -73,7 +71,7 @@ object AnnIndex {
         emb.filter(col("vec_id") % 5 === 0).withColumn("_del", lit(false)),
         ghosts.withColumn("_del", lit(true)),
         emb.filter(col("vec_id") % 7 === 0).withColumn("_del", lit(false)))
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         batches.zipWithIndex.foreach { case (b, i) =>
           Ingest.upsertParquet(table, Seq("vec_id"), nBuckets = 4,
             keepVersions = 8, deleteCol = Some("_del"), changeFeed = true)(
@@ -202,7 +200,7 @@ object AnnIndex {
         buildDriftedIndex(spark, dir, idx)
         ()
       }
-      val fresh = EventOps.withStreamSizing(spark) {
+      val fresh = StreamRun.withStreamSizing(spark) {
         optimizeIndex(spark, idx, batchId = 100L)
       }
       val state = Ingest.readUpsertTable(spark, idx)
@@ -238,7 +236,7 @@ object AnnIndex {
                                        idx: String): DataFrame = {
     val table = sharedEmbCdcTable(spark, dir)
     val stale = staleCentroids(spark, dir)
-    EventOps.withStreamSizing(spark) {
+    StreamRun.withStreamSizing(spark) {
       (0L until 4L).foreach { b =>
         foldSlice(Ingest.readTableChanges(spark, table, b, b),
           stale, idx, b)
@@ -256,8 +254,7 @@ object AnnIndex {
       val ivfPath = Ivf.ensureIndex(spark, dir)
       val centroids = spark.read.parquet(s"$ivfPath/centroids")
       val idx = graft.Scratch.dir("ann-index-batch") + "/idx"
-      LocalTableStore.deleteTree(idx)
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         (0L until 4L).foreach { b =>
           foldSlice(Ingest.readTableChanges(spark, table, b, b),
             centroids, idx, b)
@@ -294,9 +291,8 @@ object AnnIndex {
       val table = sharedEmbCdcTable(spark, dir)
       val ivfPath = Ivf.ensureIndex(spark, dir)
       val centroids = spark.read.parquet(s"$ivfPath/centroids")
-      val base = graft.Scratch.dir("ann-index-stream")
-      LocalTableStore.deleteTree(base)
-      val idx = s"$base/idx"
+      val run = StreamRun(spark, "ann-index-stream")
+      val idx = s"${run.base}/idx"
       def fold(batch: DataFrame, id: Long): Unit = {
         // after the preimage filter a key has ONE record per base
         // batch, so max_by over _batch_id is the per-key winner of
@@ -330,14 +326,9 @@ object AnnIndex {
             merged, id)
         } finally { winners.unpersist(); () }
       }
-      EventOps.withStreamSizing(spark) {
-        val src = Ingest.changeFeedStream(spark, table,
-          maxFilesPerTrigger = Some(3))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(fold)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      }
+      StreamRun.toEnd(spark)(Ingest.foreachBatchSink(
+        Ingest.changeFeedStream(spark, table, maxFilesPerTrigger = Some(3)),
+        run.checkpoint)(fold))
       searchMaintained(spark, dir,
         Ingest.readUpsertTable(spark, idx).filter(col("live")),
         idx, k = 5, nProbe = 16)
@@ -455,7 +446,7 @@ object AnnIndex {
       Ingest.readTableChanges(spark, table, 0, 0)
         .filter(col("_change_type") === "insert")
         .select("vec_id", "embedding")).localCheckpoint()
-    EventOps.withStreamSizing(spark) {
+    StreamRun.withStreamSizing(spark) {
       (0L until 4L).foreach { b =>
         foldPqSlice(Ingest.readTableChanges(spark, table, b, b),
           stale, codesTable, b)
@@ -490,7 +481,7 @@ object AnnIndex {
         ()
       }
       val emb = Tables.load(spark, dir, "embeddings")
-      val cb = EventOps.withStreamSizing(spark) {
+      val cb = StreamRun.withStreamSizing(spark) {
         optimizePqCodes(spark, codesTable, emb, batchId = 100L)
       }
       val optimized = Ingest.readUpsertTable(spark, codesTable)
@@ -525,10 +516,8 @@ object AnnIndex {
       GraftFunctions.register(spark)
       val table = sharedEmbCdcTable(spark, dir)
       val (cb, freshCodes) = Pq.indexFor(spark, dir)
-      val base = graft.Scratch.dir("ann-index-pq")
-      LocalTableStore.deleteTree(base)
-      val codesTable = s"$base/codes"
-      EventOps.withStreamSizing(spark) {
+      val codesTable = graft.Scratch.dir("ann-index-pq") + "/codes"
+      StreamRun.withStreamSizing(spark) {
         (0L until 4L).foreach { b =>
           foldPqSlice(Ingest.readTableChanges(spark, table, b, b),
             cb, codesTable, b)
@@ -576,9 +565,8 @@ object AnnIndex {
       GraftFunctions.register(spark)
       val table = sharedEmbCdcTable(spark, dir)
       val (cb, freshCodes) = Pq.indexFor(spark, dir)
-      val base = graft.Scratch.dir("ann-pq-stream")
-      LocalTableStore.deleteTree(base)
-      val codesTable = s"$base/codes"
+      val run = StreamRun(spark, "ann-pq-stream")
+      val codesTable = s"${run.base}/codes"
       def fold(batch: DataFrame, id: Long): Unit = {
         // persisted for the trigger's lifetime (guide §5): consumed by
         // the emptiness guard, the live/dead splits, the _bid join and
@@ -618,14 +606,9 @@ object AnnIndex {
             keepVersions = 1)(merged, id)
         } finally { winners.unpersist(); () }
       }
-      EventOps.withStreamSizing(spark) {
-        val src = Ingest.changeFeedStream(spark, table,
-          maxFilesPerTrigger = Some(3))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(fold)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      }
+      StreamRun.toEnd(spark)(Ingest.foreachBatchSink(
+        Ingest.changeFeedStream(spark, table, maxFilesPerTrigger = Some(3)),
+        run.checkpoint)(fold))
       val maintained = Ingest.readUpsertTable(spark, codesTable)
         .filter(col("live"))
       val diverged = maintained

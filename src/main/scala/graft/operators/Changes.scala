@@ -181,6 +181,68 @@ object Changes {
         col("m.o_orderpriority").as("o_orderpriority"),
         (col("m.op") === "D").as("_deleted"))
 
+  /** Date-RANGE chunking of a changelog on `o_orderdate`: chunk i of
+    * `n` holds the rows whose date falls in the i-th of `n` equal day
+    * spans of `log`. Value-based, so equal dates never split a chunk
+    * and cross-chunk recency is exactly chunk order. The two bounds are
+    * read when the first predicate is built.
+    */
+  private[operators] def dateChunk(log: DataFrame, n: Int): Int => Column = {
+    lazy val (d0, span) = {
+      // o_orderdate is a TIMESTAMP in the fixture; chunk on its DATE
+      val b = log.agg(min(to_date(col("o_orderdate"))),
+        max(to_date(col("o_orderdate")))).head() // 2 scalars
+      val (lo, hi) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
+      (lo, java.time.temporal.ChronoUnit.DAYS.between(lo, hi) + 1)
+    }
+    i => expr(s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span") === i
+  }
+
+  /** A change record's sign in a view folded from the feed: +1 when it
+    * adds its row (`insert`, `update_postimage`), −1 when it removes it
+    * (`delete`, `update_preimage`).
+    */
+  private val changeSign: Column =
+    when(col("_change_type").isin("insert", "update_postimage"), lit(1L))
+      .otherwise(lit(-1L))
+
+  /** The per-priority view's signed contributions of `changes`: per
+    * `prio`, the net row count `n` and the net spend in exact integer
+    * `cents`, so fold order cannot nudge FP.
+    */
+  private def prioDelta(changes: DataFrame): DataFrame =
+    changes.select(col("o_orderpriority").as("prio"), changeSign.as("s"),
+        (changeSign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
+      .groupBy("prio").agg(sum("s").as("n"), sum("sc").as("cents"))
+
+  /** Fold one batch of change records into the per-priority MV upsert
+    * table at `mv` as batch `id`; the MV's ledger makes a replayed fold
+    * a no-op.
+    */
+  private def foldPrioMv(spark: SparkSession, mv: String)
+                        (changes: DataFrame, id: Long): Unit = {
+    val delta = prioDelta(changes)
+    val merged =
+      if (!new java.io.File(mv, "CURRENT").exists()) delta
+      else graft.sources.Ingest.readUpsertTable(spark, mv)
+        .unionByName(delta)
+        .groupBy("prio").agg(sum("n").as("n"), sum("cents").as("cents"))
+    // one bucket: the MV is keyed on the 5 priority groups — a
+    // cardinality that does NOT grow with data — so extra hash
+    // buckets only multiply per-commit write partitions (r17)
+    graft.sources.Ingest.upsertParquet(mv, Seq("prio"), nBuckets = 1)(
+      merged, id)
+  }
+
+  /** The per-priority view as the rows return it: a group whose rows
+    * all vanished no longer exists in the view.
+    */
+  private def prioView(agg: DataFrame): DataFrame =
+    agg.filter(col("n") =!= 0)
+      .select(col("prio"), col("n"),
+        (col("cents").cast("double") / 100).as("spend"))
+      .orderBy("prio")
+
   /** The changelog applied to the TABLE FORMAT by the streaming
     * engine — the composition of [[qCdcApply]] (what a compacted
     * changelog means) with the tombstone-aware upsert sink (how a
@@ -202,49 +264,16 @@ object Changes {
     qCdcApply.oracle, // shared — table-applied CDC must equal batch CDC
     (spark, dir) => {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("stream-cdc-table") // tmpfs-backed
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
+      val run = StreamRun(spark, "stream-cdc-table")
+      val table = s"${run.base}/table"
       val log = orderChangelog(spark, dir)
-      val n = 4
-      // o_orderdate is a TIMESTAMP in the fixture; chunk on its DATE
-      val b = log.agg(min(to_date(col("o_orderdate"))),
-        max(to_date(col("o_orderdate")))).head() // 2 scalars
-      val (d0, d1) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-      val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
+      val inChunk = dateChunk(log, 4)
       def writer(batch: DataFrame, id: Long): Unit =
         Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8,
           deleteCol = Some("_deleted"))(latestChangePerCustomer(batch), id)
-      val src = Ingest.readStreamFiles(spark, s"$in/*.parquet",
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "o_custkey BIGINT, o_orderdate TIMESTAMP, o_orderkey BIGINT, " +
-            "o_totalprice DOUBLE, o_orderpriority STRING, op STRING"),
-        basePath = Some(in))
-      // micro-batch jobs are batch-sized: run the drain at streaming
-      // state sizing
-      EventOps.withStreamSizing(spark) {
-        // date-RANGE buckets (value-based, not row-based): equal
-        // dates can never split a chunk, so cross-batch recency is
-        // exactly batch order; chunks staged once per fixture (r16),
-        // copied into this invocation's fresh source dir
-        val parts = EventOps.stagedChunks(spark, dir, "stream-cdc", n)(i =>
-          log.filter(expr(
-            s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span")
-            === i))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(writer).start()
-        try (0 until n).foreach { i =>
-          java.nio.file.Files.copy(parts(i),
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // each date-range chunk = one batch
-        } finally q.stop()
-      }
+      run.chunked(dir, "stream-cdc", log.schema, 4)(i =>
+        log.filter(inChunk(i)))(src =>
+        Ingest.foreachBatchSink(src, run.checkpoint)(writer).start())
       Ingest.readUpsertTable(spark, table)
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
           round(col("o_totalprice"), 2).as("o_totalprice"),
@@ -311,15 +340,11 @@ object Changes {
                                 : Unit = {
     import graft.sources.Ingest
     val log = orderChangelog(spark, dir)
-    val bounds = log.agg(min(to_date(col("o_orderdate"))),
-      max(to_date(col("o_orderdate")))).head() // 2 scalars
-    val (d0, d1) = (bounds.getDate(0).toLocalDate, bounds.getDate(1).toLocalDate)
-    val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
+    val inChunk = dateChunk(log, n)
     // batch-sized merge jobs, not corpus-sized
-    EventOps.withStreamSizing(spark) {
+    StreamRun.withStreamSizing(spark) {
       (0 until n).foreach { i =>
-        val chunk = log.filter(expr(
-          s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span") === i)
+        val chunk = log.filter(inChunk(i))
         Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8,
           keepVersions = n, deleteCol = Some("_deleted"),
           changeFeed = changeFeed, sortCols = sortCols,
@@ -565,20 +590,11 @@ object Changes {
       FROM win GROUP BY 1 ORDER BY prio"""),
     (spark, dir) => {
       import graft.sources.{Ingest, Tables}
-      val base = graft.Scratch.dir("upsert-evolve") // tmpfs-backed
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val table = s"$base/table"
+      val table = graft.Scratch.dir("upsert-evolve") + "/table"
       val log = Tables.load(spark, dir, "orders").select(
         col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
         col("o_totalprice"), col("o_orderpriority"))
-      val bounds = log.agg(min(to_date(col("o_orderdate"))),
-        max(to_date(col("o_orderdate")))).head() // 2 scalars
-      val (d0, d1) = (bounds.getDate(0).toLocalDate, bounds.getDate(1).toLocalDate)
-      val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
+      val inChunk = dateChunk(log, 4)
       def latest(df: DataFrame): DataFrame = {
         val payload = df.columns.filterNot(_ == "o_custkey")
         df.groupBy("o_custkey")
@@ -586,10 +602,9 @@ object Changes {
             struct(col("o_orderdate"), col("o_orderkey"))).as("m"))
           .select(col("o_custkey") +: payload.map(c => col(s"m.$c").as(c)): _*)
       }
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         (0 until 4).foreach { i =>
-          val chunk = log.filter(expr(
-            s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * 4 DIV $span") === i)
+          val chunk = log.filter(inChunk(i))
           // the first wave predates the o_orderpriority column
           val shaped = if (i == 0) chunk.drop("o_orderpriority") else chunk
           Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8)(
@@ -1094,18 +1109,8 @@ object Changes {
       import graft.sources.Ingest
       val n = 4
       val table = sharedCdcTable(spark, dir)
-      val sign = when(col("_change_type").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
-      Ingest.readTableChanges(spark, table, 0L, (n - 1).toLong)
-        .select(col("o_orderpriority").as("prio"),
-          sign.as("s"),
-          (sign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
-        .groupBy("prio")
-        .agg(sum("s").as("n"), sum("sc").as("cents"))
-        .filter(col("n") =!= 0)
-        .select(col("prio"), col("n"),
-          (col("cents").cast("double") / 100).as("spend"))
-        .orderBy("prio")
+      prioView(prioDelta(
+        Ingest.readTableChanges(spark, table, 0L, (n - 1).toLong)))
     })
 
   /** The full derived-table pipeline, driven by the STREAMING engine
@@ -1132,67 +1137,23 @@ object Changes {
     qCdfMv.oracle,
     (spark, dir) => {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("stream-cdf-mv")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
-      val mv = s"$base/mv"
+      val run = StreamRun(spark, "stream-cdf-mv")
+      val table = s"${run.base}/table"
+      val mv = s"${run.base}/mv"
       val log = orderChangelog(spark, dir)
       val n = 4
-      val b = log.agg(min(to_date(col("o_orderdate"))),
-        max(to_date(col("o_orderdate")))).head() // 2 scalars
-      val (d0, d1) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-      val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
-      val sign = when(col("_change_type").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
+      val inChunk = dateChunk(log, n)
       def writer(batch: DataFrame, id: Long): Unit = {
         Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8,
           keepVersions = n, deleteCol = Some("_deleted"),
           changeFeed = true)(latestChangePerCustomer(batch), id)
         // fold THIS batch's feed slice into the standing view
-        val delta = Ingest.readTableChanges(spark, table, id, id)
-          .select(col("o_orderpriority").as("prio"), sign.as("s"),
-            (sign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
-          .groupBy("prio").agg(sum("s").as("n"), sum("sc").as("cents"))
-        val merged =
-          if (!new java.io.File(mv, "CURRENT").exists()) delta
-          else Ingest.readUpsertTable(spark, mv)
-            .unionByName(delta)
-            .groupBy("prio").agg(sum("n").as("n"), sum("cents").as("cents"))
-        // one bucket: the MV is keyed on the 5 priority groups — a
-        // cardinality that does NOT grow with data — so extra hash
-        // buckets only multiply per-commit write partitions (r17)
-        Ingest.upsertParquet(mv, Seq("prio"), nBuckets = 1)(merged, id)
+        foldPrioMv(spark, mv)(Ingest.readTableChanges(spark, table, id, id), id)
       }
-      val src = Ingest.readStreamFiles(spark, s"$in/*.parquet",
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "o_custkey BIGINT, o_orderdate TIMESTAMP, o_orderkey BIGINT, " +
-            "o_totalprice DOUBLE, o_orderpriority STRING, op STRING"),
-        basePath = Some(in))
-      EventOps.withStreamSizing(spark) {
-        // chunks staged once per fixture (r16), copied per invocation
-        val parts = EventOps.stagedChunks(spark, dir, "stream-cdf-mv", n)(i =>
-          log.filter(expr(
-            s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span")
-            === i))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(writer).start()
-        try (0 until n).foreach { i =>
-          java.nio.file.Files.copy(parts(i),
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // each date-range chunk = one batch
-        } finally q.stop()
-      }
-      Ingest.readUpsertTable(spark, mv)
-        .filter(col("n") =!= 0) // a group whose rows all vanished
-        .select(col("prio"), col("n"),
-          (col("cents").cast("double") / 100).as("spend"))
-        .orderBy("prio")
+      run.chunked(dir, "stream-cdf-mv", log.schema, n)(i =>
+        log.filter(inChunk(i)))(src =>
+        Ingest.foreachBatchSink(src, run.checkpoint)(writer).start())
+      prioView(Ingest.readUpsertTable(spark, mv))
     })
 
   /** The table format as a STREAMING SOURCE: a downstream consumer
@@ -1223,49 +1184,17 @@ object Changes {
     (spark, dir) => {
       import graft.sources.Ingest
       val table = sharedCdcTable(spark, dir) // publishes feed/ at commit
-      val base = graft.Scratch.dir("stream-feed-mv")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      new java.io.File(base).mkdirs()
-      val mv = s"$base/mv"
-      val sign = when(col("_change_type").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
-      def fold(batch: DataFrame, id: Long): Unit = {
-        val delta = batch
-          .select(col("o_orderpriority").as("prio"), sign.as("s"),
-            (sign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
-          .groupBy("prio").agg(sum("s").as("n"), sum("sc").as("cents"))
-        val merged =
-          if (!new java.io.File(mv, "CURRENT").exists()) delta
-          else Ingest.readUpsertTable(spark, mv)
-            .unionByName(delta)
-            .groupBy("prio").agg(sum("n").as("n"), sum("cents").as("cents"))
-        // one bucket: the MV is keyed on the 5 priority groups — a
-        // cardinality that does NOT grow with data — so extra hash
-        // buckets only multiply per-commit write partitions (r17)
-        Ingest.upsertParquet(mv, Seq("prio"), nBuckets = 1)(merged, id)
-      }
-      EventOps.withStreamSizing(spark) {
-        // 5 files per trigger: not a divisor of the per-batch feed file
-        // count, so slices still split across micro-batches (the
-        // file-atomicity property under test) at ~half the trigger
-        // count of smaller caps — trigger overhead, not data volume,
-        // dominates this row's cost
-        val src = Ingest.changeFeedStream(spark, table,
-          maxFilesPerTrigger = Some(5))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(fold)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      }
-      Ingest.readUpsertTable(spark, mv)
-        .filter(col("n") =!= 0) // a group whose rows all vanished
-        .select(col("prio"), col("n"),
-          (col("cents").cast("double") / 100).as("spend"))
-        .orderBy("prio")
+      val run = StreamRun(spark, "stream-feed-mv")
+      val mv = s"${run.base}/mv"
+      // 5 files per trigger: not a divisor of the per-batch feed file
+      // count, so slices still split across micro-batches (the
+      // file-atomicity property under test) at ~half the trigger
+      // count of smaller caps — trigger overhead, not data volume,
+      // dominates this row's cost
+      StreamRun.toEnd(spark)(Ingest.foreachBatchSink(
+        Ingest.changeFeedStream(spark, table, maxFilesPerTrigger = Some(5)),
+        run.checkpoint)(foldPrioMv(spark, mv)))
+      prioView(Ingest.readUpsertTable(spark, mv))
     })
 
   /** MERGE-ON-READ deletes in the table format: the changelog's
@@ -1305,30 +1234,18 @@ object Changes {
       ORDER BY o_custkey"""),
     (spark, dir) => {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("upsert-mor")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val table = s"$base/table"
+      val table = graft.Scratch.dir("upsert-mor") + "/table"
       val log = orderChangelog(spark, dir)
       val ups = log.filter(col("op") =!= "D")
       val n = 4
-      val b = ups.agg(min(to_date(col("o_orderdate"))),
-        max(to_date(col("o_orderdate")))).head() // 2 scalars
-      val (d0, d1) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-      val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
+      val inChunk = dateChunk(ups, n)
       def up(batch: DataFrame, id: Long): Unit =
         Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8,
           keepVersions = 10, deleteCol = Some("_deleted"),
           lazyDeletes = true)(batch, id)
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         (0 until n).foreach { i =>
-          val chunk = ups.filter(expr(
-            s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span")
-            === i)
-          up(latestChangePerCustomer(chunk), i.toLong)
+          up(latestChangePerCustomer(ups.filter(inChunk(i))), i.toLong)
         }
         // the erasure batch: global tombstone winners, deletes only
         up(latestChangePerCustomer(log).filter(col("_deleted")), n.toLong)
@@ -1460,26 +1377,21 @@ object Changes {
         "upsert-optimize") { table =>
         val log = orderChangelog(spark, dir)
         val ups = log.filter(col("op") =!= "D")
-        val b = ups.agg(min(to_date(col("o_orderdate"))),
-          max(to_date(col("o_orderdate")))).head() // 2 scalars
-        val (d0, d1) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-        val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
+        val inChunk = dateChunk(ups, n)
         def up(batch: DataFrame, id: Long): Unit =
           Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8,
             keepVersions = 10, deleteCol = Some("_deleted"),
             lazyDeletes = true, sortCols = Seq("o_orderdate"))(batch, id)
-        EventOps.withStreamSizing(spark) {
+        StreamRun.withStreamSizing(spark) {
           (0 until n).foreach { i =>
-            up(latestChangePerCustomer(ups.filter(expr(
-              s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span")
-              === i)), i.toLong)
+            up(latestChangePerCustomer(ups.filter(inChunk(i))), i.toLong)
           }
           up(latestChangePerCustomer(log).filter(col("_deleted")), n.toLong)
         }
         require(new java.io.File(table, s"v_$n/_deletes").isDirectory,
           "setup: the lazy erasure batch recorded no vector debt")
       }
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         Ingest.optimizeUpsertTable(spark, table)
       }
       def cur(): java.io.File = new java.io.File(table,
@@ -1540,7 +1452,7 @@ object Changes {
       import graft.sources.Ingest
       val table = sharedCdcTable(spark, dir)
       val idx = graft.Scratch.dir("secondary-index") + "/idx"
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         (0L until 4L).foreach { b =>
           val entries = Ingest.readTableChanges(spark, table, b, b)
             .groupBy(col("o_orderpriority"), col("o_custkey"))
@@ -1621,19 +1533,11 @@ object Changes {
     (spark, dir) => {
       import graft.sources.Ingest
       val table = sharedCdcTable(spark, dir) // publishes feed/ at commit
-      val base = graft.Scratch.dir("stream-index")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      new java.io.File(base).mkdirs()
-      val idx = s"$base/idx"
-      val sign = when(col("_change_type").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
+      val run = StreamRun(spark, "stream-index")
+      val idx = s"${run.base}/idx"
       def fold(batch: DataFrame, id: Long): Unit = {
         val delta = batch
-          .select(col("o_orderpriority"), col("o_custkey"), sign.as("s"))
+          .select(col("o_orderpriority"), col("o_custkey"), changeSign.as("s"))
           .groupBy("o_orderpriority", "o_custkey").agg(sum("s").as("cnt"))
         // merge against the CURRENT rows of ONLY this trigger's keys
         // (bucket-pruned lookup — O(trigger), never an index scan),
@@ -1660,14 +1564,9 @@ object Changes {
           sortCols = Seq("o_orderpriority"), filesPerBucket = 2)(
           merged.withColumn("_dead", col("cnt") === 0), id)
       }
-      EventOps.withStreamSizing(spark) {
-        val src = Ingest.changeFeedStream(spark, table,
-          maxFilesPerTrigger = Some(9))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(fold)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-      }
+      StreamRun.toEnd(spark)(Ingest.foreachBatchSink(
+        Ingest.changeFeedStream(spark, table, maxFilesPerTrigger = Some(9)),
+        run.checkpoint)(fold))
       val probe = Ingest.readUpsertTableWhere(spark, idx,
         Seq(("o_orderpriority", "1-URGENT", "1-URGENT")))
         .filter(col("o_orderpriority") === "1-URGENT" && col("cnt") > 0)
@@ -1769,12 +1668,7 @@ object Changes {
       val n = 4
       val base = sharedCdcTable(spark, dir)
       val rep = graft.Scratch.dir("table-replica") + "/rep"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(rep))
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         (0L until n.toLong).foreach { b =>
           val slice = Ingest.readTableChanges(spark, base, b, b)
           val entries = slice
@@ -1914,13 +1808,11 @@ object Changes {
         .select(col("c_custkey"), col("c_mktsegment"))
       val base = graft.Scratch.dir("star-mv")
       val mv = s"$base/mv"
-      val sign = when(col("_change_type").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
       (0 until n).foreach { b =>
         val delta = Ingest.readTableChanges(spark, table, b, b)
           .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-          .select(col("c_mktsegment"), sign.as("s"),
-            (sign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
+          .select(col("c_mktsegment"), changeSign.as("s"),
+            (changeSign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
           .groupBy("c_mktsegment").agg(sum("s").as("n"), sum("sc").as("cents"))
         val merged =
           if (b == 0) delta
@@ -2101,12 +1993,10 @@ object Changes {
   private[graft] def tagTableFor(spark: SparkSession, dir: String): String =
     taggedTableMemo.getOrElseUpdate((spark, dir), {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("upsert-tag")
-      graft.sources.LocalTableStore.deleteTree(base)
-      val t = s"$base/table"
+      val t = graft.Scratch.dir("upsert-tag") + "/table"
       val log = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         def up(i: Long, df: DataFrame): Unit =
           Ingest.upsertParquet(t, Seq("o_orderkey"), nBuckets = 8,
             keepVersions = 1)(df, i)
@@ -2128,13 +2018,11 @@ object Changes {
                                         dir: String): String =
     quarantineTableMemo.getOrElseUpdate((spark, dir), {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("upsert-quarantine")
-      graft.sources.LocalTableStore.deleteTree(base)
-      val t = s"$base/table"
+      val t = graft.Scratch.dir("upsert-quarantine") + "/table"
       val log = Tables.load(spark, dir, "orders")
         .select(col("o_orderkey"), col("o_orderpriority"),
           col("o_totalprice"))
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         (0L to 1L).foreach { i =>
           Ingest.upsertParquet(t, Seq("o_orderkey"), nBuckets = 8,
             keepVersions = 2,
@@ -2230,7 +2118,7 @@ object Changes {
         "upsert-zorder") { t =>
         val log = Tables.load(spark, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        EventOps.withStreamSizing(spark) {
+        StreamRun.withStreamSizing(spark) {
           (0L to 1L).foreach { i =>
             Ingest.upsertParquet(t, Seq("o_orderkey"), nBuckets = 4,
               keepVersions = 4, sortCols = Seq("o_custkey", "o_totalprice"),
@@ -2242,7 +2130,7 @@ object Changes {
       val bounds = Seq[(String, Any, Any)](
         ("o_totalprice", 50000.0, 60000.0))
       val boxPred = col("o_totalprice").between(50000.0, 60000.0)
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         val fullBefore = Ingest.readUpsertTable(spark, t).count()
         val linear = Ingest.readUpsertTableWhere(spark, t, bounds)
         val linearFiles = linear.inputFiles.length
@@ -2295,7 +2183,7 @@ object Changes {
         val log = Tables.load(spark, dir, "orders")
           .select(col("o_orderkey"), col("o_orderpriority"),
             col("o_totalprice"))
-        EventOps.withStreamSizing(spark) {
+        StreamRun.withStreamSizing(spark) {
           (0L to 1L).foreach { i =>
             Ingest.upsertParquet(t, Seq("o_orderkey"), nBuckets = 8,
               keepVersions = 4,
@@ -2305,7 +2193,7 @@ object Changes {
           }
         }
       }
-      EventOps.withStreamSizing(spark) {
+      StreamRun.withStreamSizing(spark) {
         val expected = Ingest.readQuarantine(spark, t).count()
         val (healed, rediverted) = Ingest.requeueQuarantine(spark, t, 2L,
           fix = _.withColumn("o_totalprice",
@@ -2360,11 +2248,8 @@ object Changes {
       ORDER BY src, user_id, event_id"""),
     (spark, dir) => {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("stream-quarantine")
-      graft.sources.LocalTableStore.deleteTree(base)
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
+      val run = StreamRun(spark, "stream-quarantine")
+      val table = s"${run.base}/table"
       val raw = spark.read.schema(Tables.eventsRaw)
         .parquet(s"$dir/events.parquet")
       def writer(b: DataFrame, id: Long): Unit =
@@ -2379,20 +2264,9 @@ object Changes {
               col("m.event_id").as("event_id"), col("m.value").as("value"))
             .withColumn("b", lit(id)),
           id)
-      val src = Ingest.readStreamFiles(
-        spark, s"$in/*.parquet", Tables.eventsRaw, basePath = Some(in))
-      EventOps.withStreamSizing(spark) {
-        // chunks staged once per fixture (r16), copied per invocation
-        val parts = EventOps.stagedChunks(spark, dir, "stream-quarantine",
-          4)(i => raw.filter(pmod(col("event_id"), lit(4)) === i))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(writer).start()
-        try (0 until 4).foreach { i =>
-          java.nio.file.Files.copy(parts(i),
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // chunk i drains as batch i
-        } finally q.stop()
-      }
+      run.chunked(dir, "stream-quarantine", Tables.eventsRaw, 4)(i =>
+        raw.filter(pmod(col("event_id"), lit(4)) === i))(src =>
+        Ingest.foreachBatchSink(src, run.checkpoint)(writer).start())
       require(Ingest.committedBatchIds(table) == Set(0L, 1L, 2L, 3L),
         s"committed: ${Ingest.committedBatchIds(table)}")
       val dead = Ingest.readQuarantine(spark, table)
@@ -2711,19 +2585,14 @@ object Changes {
       import graft.sources.Ingest
       implicit val tstore: graft.sources.TableStore =
         graft.sources.TableStore.local
-      val base = graft.Scratch.dir("stream-merge")
-      tstore.deleteTree(base)
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
+      val run = StreamRun(spark, "stream-merge")
+      tstore.deleteTree(run.base)
+      val table = s"${run.base}/table"
       val log = Tables.load(spark, dir, "orders").select(
         col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
         round(col("o_totalprice"), 2).as("price"), col("o_orderpriority"))
       val n = 4
-      val b = log.agg(min(to_date(col("o_orderdate"))),
-        max(to_date(col("o_orderdate")))).head() // 2 scalars
-      val (d0, d1) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-      val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
+      val inChunk = dateChunk(log, n)
       def writer(batch: DataFrame, id: Long): Unit = {
         // per-key pre-reduce: the batch's richest order (price, then
         // orderkey) — the MERGE cardinality contract per micro-batch
@@ -2748,25 +2617,9 @@ object Changes {
           ()
         }
       }
-      val src = Ingest.readStreamFiles(spark, s"$in/*.parquet",
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "o_custkey BIGINT, o_orderdate TIMESTAMP, o_orderkey BIGINT, " +
-            "price DOUBLE, o_orderpriority STRING"),
-        basePath = Some(in))
-      EventOps.withStreamSizing(spark) {
-        // chunks staged once per fixture (r16), copied per invocation
-        val parts = EventOps.stagedChunks(spark, dir, "stream-merge", n)(i =>
-          log.filter(expr(
-            s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * $n DIV $span")
-            === i))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(writer).start()
-        try (0 until n).foreach { i =>
-          java.nio.file.Files.copy(parts(i),
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // each date-range chunk = one batch
-        } finally q.stop()
-      }
+      run.chunked(dir, "stream-merge", log.schema, n)(i =>
+        log.filter(inChunk(i)))(src =>
+        Ingest.foreachBatchSink(src, run.checkpoint)(writer).start())
       Ingest.readUpsertTable(spark, table)
         .select(col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
           col("price"), col("o_orderpriority"))
@@ -2990,48 +2843,18 @@ object Changes {
     (spark, dir) => {
       import graft.sources.Ingest
       val table = sharedSourceTable(spark, dir) // feed on, 4 batches
-      val base = graft.Scratch.dir("stream-source-format")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      new java.io.File(base).mkdirs()
-      val mv = s"$base/mv"
-      val sign = when(col("_change_type").isin("insert", "update_postimage"),
-        lit(1L)).otherwise(lit(-1L))
-      def fold(batch: DataFrame, id: Long): Unit = {
-        val delta = batch
-          .select(col("o_orderpriority").as("prio"), sign.as("s"),
-            (sign * round(col("o_totalprice") * 100, 0).cast("long")).as("sc"))
-          .groupBy("prio").agg(sum("s").as("n"), sum("sc").as("cents"))
-        val merged =
-          if (!new java.io.File(mv, "CURRENT").exists()) delta
-          else Ingest.readUpsertTable(spark, mv)
-            .unionByName(delta)
-            .groupBy("prio").agg(sum("n").as("n"), sum("cents").as("cents"))
-        // one bucket: the MV is keyed on the 5 priority groups — a
-        // cardinality that does NOT grow with data — so extra hash
-        // buckets only multiply per-commit write partitions (r17)
-        Ingest.upsertParquet(mv, Seq("prio"), nBuckets = 1)(merged, id)
-      }
-      EventOps.withStreamSizing(spark) {
-        // one ledger batch per trigger: exercises the admission-control
-        // path and proves the fold is batch-incremental end to end
+      val run = StreamRun(spark, "stream-source-format")
+      val mv = s"${run.base}/mv"
+      // one ledger batch per trigger: exercises the admission-control
+      // path and proves the fold is batch-incremental end to end
+      StreamRun.toEnd(spark) {
         val src = spark.readStream.format("graft")
           .option("read", "changes")
           .option("maxBatchesPerTrigger", "1").load(table)
         require(src.isStreaming, "format stream is not a streaming frame")
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(fold)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
+        Ingest.foreachBatchSink(src, run.checkpoint)(foldPrioMv(spark, mv))
       }
-      Ingest.readUpsertTable(spark, mv)
-        .filter(col("n") =!= 0)
-        .select(col("prio"), col("n"),
-          (col("cents").cast("double") / 100).as("spend"))
-        .orderBy("prio")
+      prioView(Ingest.readUpsertTable(spark, mv))
     })
 
   /** Metadata aggregates from PLAIN SQL: `SELECT count(*) [WHERE

@@ -659,18 +659,9 @@ object Epi {
     "q_stream_ears",
     qEarsAlerts.oracle,
     (spark, dir) => {
-      val base = graft.Scratch.dir("stream-ears")
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
       val raw = Tables.load(spark, dir, "orders")
-      // chunks staged once per fixture (r16), copied per invocation
-      val parts = EventOps.stagedChunks(spark, dir, "stream-ears", 4)(i =>
+      val in = StreamRun.staged(spark, dir, "stream-ears", 4)(i =>
         raw.filter(pmod(col("o_orderkey"), lit(4L)) === i))
-      (0 until 4).foreach { i =>
-        java.nio.file.Files.copy(parts(i),
-          java.nio.file.Paths.get(s"$in/c$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
       val src = spark.readStream.schema(Tables.orders)
         .option("maxFilesPerTrigger", 1).parquet(s"$in/*.parquet")
       val daily = EventOps.runStreamToTable(

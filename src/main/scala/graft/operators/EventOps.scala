@@ -594,93 +594,26 @@ object EventOps {
     Tables.withEventTsAt(spark, dir)(graft.sources.Ingest.readStreamFiles(
       spark, s"$dir/events.*", Tables.eventsRaw))
 
-  /** Drain a streaming aggregate into a complete-mode memory sink via
-    * `Trigger.AvailableNow` and return the sink table. Query names are
+  /** Drain a streaming aggregate into a memory sink with
+    * [[StreamRun.toEnd]] and return the sink table. Query names are
     * unique per invocation: reps in the same session must not collide on
     * an active query name or serve a stale memory table.
     */
-  /** Stateful-stage parallelism for the streaming twins. A streaming
-    * query pins one state-store instance per shuffle partition, and
-    * EVERY micro-batch pays per-store commit I/O whether or not the
-    * partition holds state — so state partitions must be sized to state
-    * VOLUME (here: 150 users / a few thousand windows), not to core
-    * count. 32 stores over this state ran the stream-stream join at
-    * 9.3 s; 8 runs it at ~3.9 s, same result. On a cluster the same
-    * sizing rule holds in the other direction: state partitions grow
-    * with keyspace (and the store moves to RocksDB), independent of the
-    * batch side's shuffle sizing, and the number is fixed at first
-    * start because it is baked into the checkpoint.
-    */
-  private val StreamStatePartitions = 8
-
-  /** Run `body` (which must START any streaming query it creates
-    * before returning control here... in practice: the whole drain)
-    * at streaming-state shuffle sizing, restoring the session's batch
-    * sizing after. The conf is read when a query STARTS (it defines
-    * the state layout for the checkpoint's lifetime), and micro-batch
-    * jobs inside a `foreachBatch` sink plan per batch — so sinks that
-    * merge inside the drain hold the sizing for the stream's whole
-    * lifetime. One helper so every streaming row shares the
-    * [[StreamStatePartitions]] rationale instead of restating an
-    * ad-hoc `8`.
-    */
-  private[operators] def withStreamSizing[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  private val stagedChunksMemo =
-    graft.Memo[(SparkSession, String, String), IndexedSeq[java.nio.file.Path]]()
-
-  /** Stage `n` one-file parquet chunks ONCE per (session, fixture,
-    * tag) and return the chunk part files (r16, guide §1.2): the
-    * file-stream rows drain a fresh source dir + checkpoint per
-    * invocation — that isolation needs a per-rep COPY of each staged
-    * file, not a per-rep REWRITE of the chunking query. `chunk(i)`
-    * must be deterministic in (fixture, i), which every caller's
-    * value-based chunking already is.
-    */
-  private[operators] def stagedChunks(spark: SparkSession, dir: String,
-                                      tag: String, n: Int)
-                                     (chunk: Int => DataFrame)
-                                     : IndexedSeq[java.nio.file.Path] = {
-    val staged = stagedChunksMemo.getOrElseUpdate((spark, dir, tag), {
-      val stage = graft.Scratch.dir(s"$tag-chunks")
-      (0 until n).map { i =>
-        val tmp = s"$stage/stage_$i"
-        chunk(i).coalesce(1).write.mode("overwrite").parquet(tmp)
-        new java.io.File(tmp).listFiles()
-          .filter(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet")).head.toPath
-      }
-    })
-    // the memo key omits n and the chunk fn: a tag MUST uniquely
-    // determine the chunking (ADVICE r16) — fail loudly if reused
-    require(staged.length == n,
-      s"stagedChunks: tag '$tag' was first staged with n=${staged.length}, " +
-        s"now requested with n=$n — tags must uniquely determine the chunking")
-    staged
-  }
-
   private[operators] def runStreamToTable(agg: DataFrame,
                                mode: String = "complete",
                                checkpoint: Option[String] = None): DataFrame = {
     val spark = agg.sparkSession
     val name = "graft_stream_" + streamSeq.incrementAndGet()
-    val q = withStreamSizing(spark) {
-        val w = agg.writeStream.format("memory").queryName(name)
-          .outputMode(mode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        // the engine permits checkpoint RECOVERY into a memory sink only
-        // in complete mode (state lives in the state store, the sink is
-        // rebuilt each trigger) — exactly the resume-proof shape.
-        // (Checkpoint placement was A/B'd in r17 — the session default
-        // already lands on tmpfs scratch; an explicit per-query Scratch
-        // dir measured identical over 5 reps, so the default stands.)
-        checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-      }
-    q.awaitTermination()
+    StreamRun.toEnd(spark) {
+      val w = agg.writeStream.format("memory").queryName(name).outputMode(mode)
+      // the engine permits checkpoint RECOVERY into a memory sink only
+      // in complete mode (state lives in the state store, the sink is
+      // rebuilt each trigger) — exactly the resume-proof shape.
+      // (Checkpoint placement was A/B'd in r17 — the session default
+      // already lands on tmpfs scratch; an explicit per-query Scratch
+      // dir measured identical over 5 reps, so the default stands.)
+      checkpoint.fold(w)(c => w.option("checkpointLocation", c))
+    }
     // eager copy, then drop the sink's temp view: repeated invocations
     // (bench reps) must not pin every run's full result in the driver
     // forever — the localCheckpoint blocks are context-cleaned once the
@@ -691,37 +624,6 @@ object EventOps {
   }
 
   private val streamSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Stage the events fixture as `n` parquet files (chunked by
-    * event_id mod n) in a fresh per-invocation dir — generic
-    * multi-micro-batch staging for streaming twins that need real
-    * cross-batch STATE (pair with `maxFilesPerTrigger = 1` so each
-    * file is its own AvailableNow micro-batch). Unlike
-    * [[streamResumePhases]] there is no checkpoint here; callers get
-    * the input dir and own the query lifecycle.
-    */
-  private[operators] def stageEventChunks(spark: SparkSession, dir: String,
-                                          n: Int): String = {
-    val base = graft.Scratch.dir("stream-chunks") // tmpfs-backed staging
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(base))
-    val in = s"$base/in"
-    new java.io.File(in).mkdirs()
-    val raw = spark.read.schema(Tables.eventsRaw)
-      .parquet(s"$dir/events.parquet")
-    // chunks staged once per (fixture, n) (r16), copied per invocation
-    val parts = stagedChunks(spark, dir, s"stream-chunks-$n", n)(i =>
-      raw.filter(pmod(col("event_id"), lit(n)) === i))
-    (0 until n).foreach { i =>
-      java.nio.file.Files.copy(parts(i),
-        java.nio.file.Paths.get(s"$in/c$i.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    in
-  }
 
   /** Crash-resume drill behind [[qStreamResume]]: stage the events
     * fixture as two parquet files, drain file A through a CHECKPOINTED
@@ -741,37 +643,23 @@ object EventOps {
     */
   private[graft] def streamResumePhases(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // fresh tmpfs-backed dir per invocation: a checkpoint binds to one
-    // source history, so reps must never share one
-    val base = graft.Scratch.dir("stream-resume")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete()
-    }
-    rm(new java.io.File(base))
-    val in = s"$base/in"
-    new java.io.File(in).mkdirs()
+    val run = StreamRun(spark, "stream-resume")
     // halves staged with the RAW schema (long nanos ts) so the streamed
     // read is byte-identical to the fixture path in streamedEvents
     val raw = spark.read.schema(Tables.eventsRaw)
       .parquet(s"$dir/events.parquet")
-    // halves staged once per fixture (r16), copied per invocation
-    val halves = stagedChunks(spark, dir, "stream-resume", 2)(i =>
+    val halves = StreamRun.stagedChunks(spark, dir, "stream-resume", 2)(i =>
       raw.filter(col("event_id") % 2 === i))
-    val (pa, pb) = (halves(0), halves(1))
     def drain(): DataFrame = {
       val src = Tables.withEventTs(graft.sources.Ingest.readStreamFiles(
-        spark, s"$in/*.parquet", Tables.eventsRaw))
+        spark, s"${run.in}/*.parquet", Tables.eventsRaw))
       runStreamToTable(
         graft.streaming.Streams.tumblingCounts(src, watermark = "3650 days"),
-        checkpoint = Some(s"$base/ckpt"))
+        checkpoint = Some(run.checkpoint))
     }
-    Files.copy(pa, Paths.get(s"$in/a.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
+    run.land(halves, 0)
     val afterA = drain()
-    Files.copy(pb, Paths.get(s"$in/b.parquet"),
-      StandardCopyOption.REPLACE_EXISTING)
+    run.land(halves, 1)
     (afterA, drain())
   }
 
@@ -983,6 +871,23 @@ object EventOps {
         .orderBy("event_id")
     })
 
+  /** The events fixture as `n` ts-RANGE chunks: chunk i holds the
+    * events in the i-th of `n` equal ts spans. Value-based, so equal
+    * timestamps never split and cross-chunk recency is chunk order.
+    * The bounds are read only when the chunks are staged.
+    */
+  private def tsChunks(spark: SparkSession, dir: String,
+                       n: Int): Int => DataFrame = {
+    val raw = spark.read.schema(Tables.eventsRaw)
+      .parquet(s"$dir/events.parquet")
+    lazy val bounds = raw.agg(min("ts"), max("ts")).head() // 2 scalars
+    i => {
+      val tmin = bounds.getLong(0)
+      val step = (bounds.getLong(1) - tmin) / n + 1 // bucket ∈ [0, n-1]
+      raw.filter(expr(s"(ts - ${tmin}L) DIV ${step}L") === i)
+    }
+  }
+
   /** The exactly-once upsert sink driven END-TO-END by the streaming
     * engine — the 17th streaming oracle row, closing VERDICT r8 item 3:
     * events land as 4 time-ordered file micro-batches, each batch
@@ -1007,21 +912,8 @@ object EventOps {
       WHERE rn = 1 ORDER BY user_id"""),
     (spark, dir) => {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("stream-upsert") // tmpfs-backed
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
-      val raw = spark.read.schema(Tables.eventsRaw)
-        .parquet(s"$dir/events.parquet")
-      val n = 4
-      val bounds = raw.agg(min("ts"), max("ts")).head() // 2 scalars
-      val tmin = bounds.getLong(0)
-      val step = (bounds.getLong(1) - tmin) / n + 1 // bucket ∈ [0, n-1]
+      val run = StreamRun(spark, "stream-upsert")
+      val table = s"${run.base}/table"
       def writer(b: DataFrame, id: Long): Unit =
         Ingest.upsertParquet(table, Seq("user_id"), nBuckets = 8)(
           b.groupBy("user_id")
@@ -1031,26 +923,9 @@ object EventOps {
             .select(col("user_id"), col("m.ts").as("ts"),
               col("m.event_type").as("event_type"), col("m.value").as("value")),
           id)
-      val src = graft.sources.Ingest.readStreamFiles(
-        spark, s"$in/*.parquet", Tables.eventsRaw, basePath = Some(in))
-      // micro-batch jobs are batch-sized, not corpus-sized: run the
-      // whole drain (the writer's merge jobs plan per batch, so the
-      // conf must hold until the stream stops) at streaming state sizing
-      withStreamSizing(spark) {
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(writer).start()
-        try (0 until n).foreach { i =>
-          val tmp = s"$base/stage_$i"
-          raw.filter(expr(s"(ts - ${tmin}L) DIV ${step}L") === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head.toPath
-          java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // each ts-range chunk is its own batch
-        } finally q.stop()
-      }
+      run.chunked(dir, "stream-ts-4", Tables.eventsRaw, 4)(
+        tsChunks(spark, dir, 4))(src =>
+        Ingest.foreachBatchSink(src, run.checkpoint)(writer).start())
       Tables.withEventTs(Ingest.readUpsertTable(spark, table))
         .select(col("user_id"), col("ts").as("last_ts"),
           col("event_type").as("last_type"), col("value").as("last_value"))
@@ -1078,47 +953,21 @@ object EventOps {
     qStreamUpsert.oracle,
     (spark, dir) => {
       import graft.sources.Ingest
-      val base = graft.Scratch.dir("stream-sink-format") // tmpfs-backed
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
-      val raw = spark.read.schema(Tables.eventsRaw)
-        .parquet(s"$dir/events.parquet")
-      val n = 4
-      val bounds = raw.agg(min("ts"), max("ts")).head() // 2 scalars
-      val tmin = bounds.getLong(0)
-      val step = (bounds.getLong(1) - tmin) / n + 1 // bucket ∈ [0, n-1]
-      val src = Ingest.readStreamFiles(
-        spark, s"$in/*.parquet", Tables.eventsRaw, basePath = Some(in))
-      val latest = src.groupBy("user_id")
-        .agg(max_by(
-          struct(col("ts"), col("event_id"), col("event_type"), col("value")),
-          struct(col("ts"), col("event_id"))).as("m"))
-        .select(col("user_id"), col("m.ts").as("ts"),
-          col("m.event_type").as("event_type"), col("m.value").as("value"))
-      withStreamSizing(spark) {
-        val q = latest.writeStream.format("graft")
+      val run = StreamRun(spark, "stream-sink-format")
+      val table = s"${run.base}/table"
+      run.chunked(dir, "stream-ts-4", Tables.eventsRaw, 4)(
+        tsChunks(spark, dir, 4)) { src =>
+        src.groupBy("user_id")
+          .agg(max_by(
+            struct(col("ts"), col("event_id"), col("event_type"), col("value")),
+            struct(col("ts"), col("event_id"))).as("m"))
+          .select(col("user_id"), col("m.ts").as("ts"),
+            col("m.event_type").as("event_type"), col("m.value").as("value"))
+          .writeStream.format("graft")
           .option("keys", "user_id").option("buckets", "8")
-          .option("checkpointLocation", s"$base/ck")
+          .option("checkpointLocation", run.checkpoint)
           .outputMode("update")
           .start(table)
-        try (0 until n).foreach { i =>
-          val tmp = s"$base/stage_$i"
-          raw.filter(expr(s"(ts - ${tmin}L) DIV ${step}L") === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp)
-          val part = new java.io.File(tmp).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head.toPath
-          java.nio.file.Files.copy(part,
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // each ts-range chunk is its own batch
-        } finally q.stop()
       }
       Tables.withEventTs(spark.read.format("graft").load(table))
         .select(col("user_id"), col("ts").as("last_ts"),

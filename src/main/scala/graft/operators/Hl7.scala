@@ -194,11 +194,8 @@ object Hl7 {
     (spark, dir) => {
       import graft.sources.Ingest
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val base = graft.Scratch.dir("hl7-pipeline")
-      graft.sources.LocalTableStore.deleteTree(base)
-      val in = s"$base/in"
-      new java.io.File(in).mkdirs()
-      val table = s"$base/table"
+      val run = StreamRun(spark, "hl7-pipeline")
+      val table = s"${run.base}/table"
       val msgs = renderMessages(Tables.load(spark, dir, "documents"))
       val msgSchema = StructType(Seq(
         StructField("doc_id", LongType), StructField("hl7", StringType)))
@@ -212,20 +209,9 @@ object Hl7 {
               col("obx_value"), col("obx_status"), col("has_obx"))
             .withColumn("b", lit(id)),
           id)
-      val src = Ingest.readStreamFiles(
-        spark, s"$in/*.parquet", msgSchema, basePath = Some(in))
-      EventOps.withStreamSizing(spark) {
-        // chunks staged once per fixture (r16), copied per invocation
-        val parts = EventOps.stagedChunks(spark, dir, "hl7-pipeline", 4)(i =>
-          msgs.filter(pmod(col("doc_id"), lit(4)) === i))
-        val q = Ingest.foreachBatchSink(src, s"$base/ck")(writer).start()
-        try (0 until 4).foreach { i =>
-          java.nio.file.Files.copy(parts(i),
-            java.nio.file.Paths.get(s"$in/c$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          q.processAllAvailable() // chunk i drains as batch i
-        } finally q.stop()
-      }
+      run.chunked(dir, "hl7-pipeline", msgSchema, 4)(i =>
+        msgs.filter(pmod(col("doc_id"), lit(4)) === i))(src =>
+        Ingest.foreachBatchSink(src, run.checkpoint)(writer).start())
       val dead = Ingest.readQuarantine(spark, table)
       require(dead.filter(col(Ingest.QuarantineReasonCol) =!=
         array(lit("has_payload"))).count() == 0,

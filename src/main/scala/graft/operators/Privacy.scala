@@ -381,9 +381,7 @@ object Privacy {
     (spark, dir) => {
       implicit val store: graft.sources.TableStore =
         graft.sources.TableStore.local
-      val base = graft.Scratch.dir("privacy-budget")
-      graft.sources.LocalTableStore.deleteTree(base)
-      val ledgerDir = s"$base/ledger"
+      val ledgerDir = graft.Scratch.dir("privacy-budget") + "/ledger"
       val src = Tables.load(spark, dir, "orders")
         .select(col("o_orderpriority").as("prio"))
       initBudget(spark, ledgerDir, "orders", totalEps = 3.5)

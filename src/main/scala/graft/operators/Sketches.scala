@@ -486,7 +486,7 @@ object Sketches {
       }.mkString("", "\nUNION ALL ", "\nORDER BY q")
     },
     (spark, dir) => {
-      val in = EventOps.stageEventChunks(spark, dir, 4)
+      val in = StreamRun.stageEventChunks(spark, dir, 4)
       val src = spark.readStream.schema(Tables.eventsRaw)
         .option("maxFilesPerTrigger", 1).parquet(s"$in/*.parquet")
       val gk = udaf(new graft.functions.GkQuantileAgg(GkBuildEps),
@@ -632,7 +632,7 @@ object Sketches {
       }.mkString("", "\nUNION ALL ", "\nORDER BY grp, q")
     },
     (spark, dir) => {
-      val in = EventOps.stageEventChunks(spark, dir, 4)
+      val in = StreamRun.stageEventChunks(spark, dir, 4)
       val src = spark.readStream.schema(Tables.eventsRaw)
         .option("maxFilesPerTrigger", 1).parquet(s"$in/*.parquet")
       val gk = udaf(new graft.functions.GkQuantileAgg(GkBuildEps),
@@ -982,7 +982,7 @@ object Sketches {
       // under the fold — the sketch fold below is what the row times
       val table = thetaTableMemo.getOrElseUpdate((spark, dir), {
         val t = graft.Scratch.dir("theta-incr-table") + "/table"
-        EventOps.withStreamSizing(spark) {
+        StreamRun.withStreamSizing(spark) {
           (0L to 3L).foreach { b =>
             Ingest.upsertParquet(t, Seq("o_orderkey"), nBuckets = 8,
               keepVersions = 8, changeFeed = true)(

@@ -180,25 +180,15 @@ object SqlEntry {
     (spark, dir) => {
       import org.apache.spark.sql.functions._
       import graft.sources.{Ingest, Tables}
-      val base = graft.Scratch.dir("upsert-sql") // tmpfs-backed
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(new java.io.File(base))
-      val table = s"$base/table"
+      val table = graft.Scratch.dir("upsert-sql") + "/table"
       val log = Tables.load(spark, dir, "orders").select(
         col("o_custkey"), col("o_orderdate"), col("o_orderkey"),
         col("o_orderpriority"))
-      val b = log.agg(min(to_date(col("o_orderdate"))),
-        max(to_date(col("o_orderdate")))).head() // 2 scalars
-      val (d0, d1) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
-      val span = java.time.temporal.ChronoUnit.DAYS.between(d0, d1) + 1
-      // batch-sized merge jobs, not corpus-sized (the streaming rows'
-      // StreamStatePartitions rationale applies to the sink's merges)
-      EventOps.withStreamSizing(spark) { (0 until 4).foreach { i =>
-        val chunk = log.filter(expr(
-          s"CAST(datediff(o_orderdate, '$d0') AS BIGINT) * 4 DIV $span") === i)
+      val inChunk = Changes.dateChunk(log, 4)
+      // batch-sized merge jobs, not corpus-sized (see
+      // StreamRun.withStreamSizing)
+      StreamRun.withStreamSizing(spark) { (0 until 4).foreach { i =>
+        val chunk = log.filter(inChunk(i))
         Ingest.upsertParquet(table, Seq("o_custkey"), nBuckets = 8,
           keepVersions = 4)(
           chunk.groupBy("o_custkey")

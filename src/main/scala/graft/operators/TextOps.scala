@@ -1518,18 +1518,8 @@ object TextOps {
   private def stageDeltaFiles(spark: SparkSession, dir: String): (String, Double) = {
     val docs = Tables.load(spark, dir, "documents")
     val cut = docs.agg((max("doc_id") * 0.8).as("cut")).head.getDouble(0)
-    val base = graft.Scratch.dir("stream-incr") // tmpfs-backed staging
-    val in = s"$base/in"
-    new java.io.File(in).mkdirs()
-    // the two crawl drops staged once per fixture (r16), copied into
-    // this invocation's fresh source dir
-    val drops = EventOps.stagedChunks(spark, dir, "stream-incr", 2)(i =>
+    val in = StreamRun.staged(spark, dir, "stream-incr", 2)(i =>
       docs.filter(col("doc_id") >= cut && col("doc_id") % 2 === i))
-    Seq("a", "b").zipWithIndex.foreach { case (label, i) =>
-      java.nio.file.Files.copy(drops(i),
-        java.nio.file.Paths.get(s"$in/$label.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
     (in, cut)
   }
 

@@ -143,9 +143,7 @@ object Vocab {
       import graft.sources.Ingest
       implicit val store: graft.sources.TableStore =
         graft.sources.TableStore.local
-      val base = graft.Scratch.dir("crosswalk-live")
-      graft.sources.LocalTableStore.deleteTree(base)
-      val xwDir = s"$base/crosswalk"
+      val xwDir = graft.Scratch.dir("crosswalk-live") + "/crosswalk"
       val nation = Tables.load(spark, dir, "nation")
       val original = nation
         .select(col("n_nationkey").as("code"), col("n_name"),
