@@ -1,21 +1,15 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // optional args = query-name subset (local iteration only; the
     // driver always runs the full suite). Subset runs skip setup too.
     val only = args.toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // n>=3 runs with per-query MEDIAN: single-shot timings on a shared
     // box are not signal (VERDICT r2 item 2 — five ghost outliers).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", cpus)
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }

@@ -2,26 +2,24 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
-/** SparkSessionExtensions entry point: makes the engine's custom
-  * Catalyst expressions available to ANY session created with
+/** SparkSessionExtensions entry point: the engine's optimizer rules,
+  * its SQL parser, and every function in the [[GraftFunctions.all]]
+  * table. `GraftSession.configure` installs it, so every session the
+  * engine builds (and that session's `newSession()` and cloned streaming
+  * sessions) resolves `graft_cosine_sim(a, b)` etc. from SQL and from
+  * the Column helpers. A session the engine does not build gets the
+  * same by
   *
   * {{{
   * SparkSession.builder()
   *   .withExtensions(new GraftExtensions)            // programmatic, or
   *   .config("spark.sql.extensions", "graft.GraftExtensions") // by conf
   * }}}
-  *
-  * so SQL entry (E1) can call `graft_cosine_sim(a, b)` etc. without the
-  * per-session `GraftFunctions.register` step (which remains for
-  * sessions the engine doesn't construct).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo(classOf[CosineSimilarity].getName, null, name, usage, "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => graft.plans.SimplifySelfCosine)
@@ -32,48 +30,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // OPTIMIZE/REBUCKET/VACUUM/DESCRIBE HISTORY); everything else goes
     // verbatim to the delegate parser
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.COSINE_SIM),
-      info(GraftFunctions.COSINE_SIM,
-        "cosine similarity of two float arrays, double precision"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.SORTED_INTERSECT_COUNT),
-      info(GraftFunctions.SORTED_INTERSECT_COUNT,
-        "count of common elements of two sorted distinct string arrays"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.SORTED_INT_INTERSECT_COUNT),
-      info(GraftFunctions.SORTED_INT_INTERSECT_COUNT,
-        "count of common elements of two sorted distinct int arrays"),
-      (exprs: Seq[Expression]) => SortedIntIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.ARRAY_EQ_COUNT),
-      info(GraftFunctions.ARRAY_EQ_COUNT,
-        "count of positions where two long arrays agree"),
-      (exprs: Seq[Expression]) => ArrayEqCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.SIMHASH64),
-      info(GraftFunctions.SIMHASH64, "64-bit simhash of a token array"),
-      (exprs: Seq[Expression]) => Simhash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.MINHASH_SIG),
-      info(GraftFunctions.MINHASH_SIG, "64-hash minhash signature of a token array"),
-      (exprs: Seq[Expression]) => MinhashSignature(exprs.head, 64)))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.LSH_SIG),
-      info(GraftFunctions.LSH_SIG,
-        "random-hyperplane LSH bucket of a float array; optional plane count (default 8)"),
-      GraftFunctions.lshSignatureBuilder))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.JARO_WINKLER),
-      info(GraftFunctions.JARO_WINKLER,
-        "Jaro-Winkler similarity of two strings (0.7-threshold prefix boost)"),
-      (exprs: Seq[Expression]) => JaroWinkler(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier(GraftFunctions.FOLD_TEXT),
-      info(GraftFunctions.FOLD_TEXT,
-        "canonical text fold: unaccent + casefold + whitespace collapse"),
-      (exprs: Seq[Expression]) => FoldText(exprs.head)))
+    GraftFunctions.all.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, null, f.name, f.usage, ""), f.builder))
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf-scaling probe of the table-format band (SCALE.md's measured
@@ -27,13 +26,8 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-    ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local("graft-scale-probe", cpus)
 
     val scaled = "target/scale-probe/" +
       srcDir.replaceAll("[^A-Za-z0-9.]", "_") + s"_x$factor"

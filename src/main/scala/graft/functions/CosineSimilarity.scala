@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Codegen'd cosine similarity over two float-array columns
@@ -85,129 +83,4 @@ object CosineSimilarity {
     }
     dot / (math.sqrt(nx) * math.sqrt(ny))
   }
-}
-
-/** Session-scoped registration; `cosineSim` / `sortedIntersectCount` are
-  * the Column-level entries.
-  */
-object GraftFunctions {
-  val COSINE_SIM = "graft_cosine_sim"
-  val SORTED_INTERSECT_COUNT = "graft_sorted_intersect_count"
-  val SORTED_INT_INTERSECT_COUNT = "graft_sorted_int_intersect_count"
-  val ARRAY_EQ_COUNT = "graft_array_eq_count"
-  val SIMHASH64 = "graft_simhash64"
-  val MINHASH_SIG = "graft_minhash_signature"
-  val LSH_SIG = "graft_lsh_signature"
-  val JARO_WINKLER = "graft_jaro_winkler"
-  val FOLD_TEXT = "graft_fold_text"
-  val BLOOM_AGG = "graft_bloom_agg"
-  val BLOOM_MIGHT_CONTAIN = "graft_bloom_might_contain"
-
-  /** Idempotent; must run once per session before using the columns. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      COSINE_SIM, exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SORTED_INTERSECT_COUNT,
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SORTED_INT_INTERSECT_COUNT,
-      exprs => SortedIntIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      ARRAY_EQ_COUNT, exprs => ArrayEqCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      SIMHASH64, exprs => Simhash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      MINHASH_SIG, exprs => MinhashSignature(exprs.head, 64), "built-in")
-    reg.createOrReplaceTempFunction(LSH_SIG, lshSignatureBuilder, "built-in")
-    reg.createOrReplaceTempFunction(
-      JARO_WINKLER, exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      FOLD_TEXT, exprs => FoldText(exprs.head), "built-in")
-    // Spark ships mergeable bloom filters for its runtime join pruning
-    // but does not register them as SQL functions; exposing the same
-    // expressions here makes explicit bloom semi-join pruning available
-    // to queries (callers hash with xxhash64 first, as the runtime
-    // filter rule does)
-    reg.createOrReplaceTempFunction(
-      BLOOM_AGG,
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate
-        .BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      BLOOM_MIGHT_CONTAIN,
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Builder shared by [[register]] and `GraftExtensions`: optional
-    * second arg = plane count (foldable int literal); the expression is
-    * general, so the registration is too (ADVICE r3) — default 8
-    * preserves the existing one-arg SQL surface.
-    */
-  private[graft] def lshSignatureBuilder(
-      exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.catalyst.expressions.Expression = {
-    val planes =
-      if (exprs.length <= 1) 8
-      else {
-        val e = exprs(1)
-        // foldable check BEFORE eval: a column argument must produce the
-        // advertised error, not eval()'s internal UnsupportedOperation
-        if (!e.foldable) throw new IllegalArgumentException(
-          s"$LSH_SIG: plane count must be an integer literal, got ${e.sql}")
-        e.eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"$LSH_SIG: plane count must be an integer literal, got $other")
-        }
-      }
-    // the signature is one long: >64 planes would silently alias
-    // (1L << p wraps mod 64) and <=0 is meaningless — fail fast
-    if (planes < 1 || planes > 64) throw new IllegalArgumentException(
-      s"$LSH_SIG: plane count must be in [1, 64], got $planes")
-    LshSignature(exprs.head, planes)
-  }
-
-  def cosineSim(a: Column, b: Column): Column = call_function(COSINE_SIM, a, b)
-
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    call_function(SORTED_INTERSECT_COUNT, a, b)
-
-  def sortedIntIntersectCount(a: Column, b: Column): Column =
-    call_function(SORTED_INT_INTERSECT_COUNT, a, b)
-
-  def arrayEqCount(a: Column, b: Column): Column =
-    call_function(ARRAY_EQ_COUNT, a, b)
-
-  def simhash64(tokens: Column): Column = call_function(SIMHASH64, tokens)
-
-  /** 64-hash minhash signature (array<long>). */
-  def minhashSignature(tokens: Column): Column = call_function(MINHASH_SIG, tokens)
-
-  /** Random-hyperplane LSH bucket (long), `numPlanes` sign bits. */
-  def lshSignature(vec: Column, numPlanes: Int = 8): Column =
-    call_function(LSH_SIG, vec, org.apache.spark.sql.functions.lit(numPlanes))
-
-  /** Jaro-Winkler similarity of two strings (double in [0, 1]). */
-  def jaroWinkler(a: Column, b: Column): Column =
-    call_function(JARO_WINKLER, a, b)
-
-  /** Canonical fold (unaccent + casefold + whitespace collapse). */
-  def foldText(s: Column): Column = call_function(FOLD_TEXT, s)
-
-  /** Mergeable bloom filter over xxhash64(key) (binary). */
-  def bloomAgg(key: Column, estimatedItems: Long, numBits: Long): Column =
-    call_function(BLOOM_AGG, org.apache.spark.sql.functions.xxhash64(key),
-      org.apache.spark.sql.functions.lit(estimatedItems),
-      org.apache.spark.sql.functions.lit(numBits))
-
-  /** Membership probe against a [[bloomAgg]] filter: no false
-    * negatives; false-positive rate set by the build sizing.
-    */
-  def bloomMightContain(bloom: Column, key: Column): Column =
-    call_function(BLOOM_MIGHT_CONTAIN, bloom,
-      org.apache.spark.sql.functions.xxhash64(key))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{Memo, QuerySpec}
-import graft.functions.GraftFunctions
 import graft.sources.{Ingest, LocalTableStore, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -192,7 +191,6 @@ object AnnIndex {
     "q_ann_index_optimize",
     VectorOps.qCosineTopK.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       // derive-once fixture (r16): the 4-slice drifted-index fold is
       // setup; the OPTIMIZE retrain below is what the row times
       val idx = graft.sources.TableCopy.fresh(spark, dir,
@@ -249,7 +247,6 @@ object AnnIndex {
     "q_ann_index_maintained",
     VectorOps.qCosineTopK.oracle, // maintained ≡ fresh ≡ brute force
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val table = sharedEmbCdcTable(spark, dir)
       val ivfPath = Ivf.ensureIndex(spark, dir)
       val centroids = spark.read.parquet(s"$ivfPath/centroids")
@@ -287,7 +284,6 @@ object AnnIndex {
     "q_stream_ann_index",
     VectorOps.qCosineTopK.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val table = sharedEmbCdcTable(spark, dir)
       val ivfPath = Ivf.ensureIndex(spark, dir)
       val centroids = spark.read.parquet(s"$ivfPath/centroids")
@@ -472,7 +468,6 @@ object AnnIndex {
     "q_ann_index_pq_optimize",
     VectorOps.qCosineTopK.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       // derive-once fixture (r16): the drifted-codes fold is setup;
       // the OPTIMIZE retrain-and-re-encode below is what the row times
       val codesTable = graft.sources.TableCopy.fresh(spark, dir,
@@ -513,7 +508,6 @@ object AnnIndex {
     "q_ann_index_pq_maintained",
     VectorOps.qCosineTopK.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val table = sharedEmbCdcTable(spark, dir)
       val (cb, freshCodes) = Pq.indexFor(spark, dir)
       val codesTable = graft.Scratch.dir("ann-index-pq") + "/codes"
@@ -562,7 +556,6 @@ object AnnIndex {
     "q_stream_ann_pq",
     VectorOps.qCosineTopK.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val table = sharedEmbCdcTable(spark, dir)
       val (cb, freshCodes) = Pq.indexFor(spark, dir)
       val run = StreamRun(spark, "ann-pq-stream")

@@ -202,7 +202,6 @@ object Baskets {
       SELECT did, c_custkey AS matched_key, jw
       FROM best WHERE rk = 1 ORDER BY did"""),
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val cust = Tables.load(spark, dir, "customer")
       val dirty = cust.select(col("c_custkey").as("did"),
         when(col("c_custkey") % 3 === 0,

@@ -60,8 +60,6 @@ object Classify {
     (conv(substring(sha2(concat_ws("|", lit(seed), key), 256), 1, 8),
       16, 10).cast("long").cast("double") + 0.5) / 4294967296.0
 
-  private val tokens: Column = split(trim(col("text")), " +")
-
   /** Multinomial Naive Bayes: train on `docs` rows with
     * (label, toks), score `test` rows (id, toks); returns one row per
     * test doc: (id, pred, score_u) where score_u is the winning
@@ -179,7 +177,7 @@ object Classify {
       FROM rk WHERE r = 1 ORDER BY doc_id"""),
     (spark, dir) => {
       val docs = Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), col("lang"), tokens.as("toks"),
+        .select(col("doc_id"), col("lang"), TextOps.tokens(col("text")).as("toks"),
           Splits.portableBucket(col("doc_id").cast("string"),
             "graft-split-v1").as("b"))
       val tr = docs.filter(col("b") >= 20)
@@ -301,7 +299,7 @@ object Classify {
       SELECT doc_id, lang, logw_u, z_u FROM sel ORDER BY doc_id"""),
     (spark, dir) => {
       val docs = Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), col("lang"), tokens.as("toks"))
+        .select(col("doc_id"), col("lang"), TextOps.tokens(col("text")).as("toks"))
       dsirSelect(docs.select(col("doc_id"), col("lang"), col("toks")),
         target = col("lang") === "en", k = 200)
         .join(docs.select("doc_id", "lang"), "doc_id")

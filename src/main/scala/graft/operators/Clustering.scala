@@ -144,7 +144,6 @@ object Clustering {
     Some(s"""WITH $kmeans8x2Ctes
       SELECT vec_id, cluster, sim FROM m2 ORDER BY vec_id"""),
     (spark, dir) => {
-      GraftFunctions.register(spark)
       kmeansCosine(Tables.load(spark, dir, "embeddings"), k = 8, iters = 2)
         .orderBy("vec_id")
     })
@@ -169,7 +168,6 @@ object Clustering {
   def kcenterGreedy(e: DataFrame, k: Int, idCol: String = "vec_id",
                     vecCol: String = "embedding"): DataFrame = {
     val spark = e.sparkSession
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val emb = e.select(col(idCol), col(vecCol))
@@ -284,7 +282,6 @@ object Clustering {
       WHERE comp.comp IS NULL OR comp.comp = ev.vec_id
       ORDER BY ev.vec_id"""),
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val emb = Tables.load(spark, dir, "embeddings")
       val ev = emb.select("vec_id", "embedding")
         .join(assignmentsFor(spark, dir), Seq("vec_id"))
@@ -333,7 +330,6 @@ object Clustering {
     "q_semantic_dedup_banded",
     qSemanticDedup.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val emb = Tables.load(spark, dir, "embeddings")
       val ev = emb.select("vec_id", "embedding")
         .join(assignmentsFor(spark, dir), Seq("vec_id"))

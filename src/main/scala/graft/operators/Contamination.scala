@@ -25,8 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Contamination {
 
-  private def tokens(c: org.apache.spark.sql.Column) = split(trim(c), " +")
-
   val qDecontaminate: QuerySpec = QuerySpec(
     "q_decontaminate",
     Some("""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), ' +') AS toks
@@ -55,7 +53,7 @@ object Contamination {
       // window yield a single whole-doc shingle), so outer ≡ inner here.
       def shingleOf(of: org.apache.spark.sql.DataFrame) =
         of.select(col("doc_id"), explode_outer(
-          array_distinct(TextOps.shingles(tokens(col("text"))))).as("g"))
+          array_distinct(TextOps.shingles(TextOps.tokens(col("text"))))).as("g"))
       // explicit broadcast: the benchmark dictionary is eval-set-sized
       // by nature (here the 2% slice's distinct shingles), so the
       // corpus-sized exploded frame must never shuffle for this join

@@ -430,7 +430,6 @@ object Dedup {
       WHERE c.comp IS NULL OR c.comp = em.vec_id
       GROUP BY em.label ORDER BY em.label"""),
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       val e = graft.sources.Tables.load(spark, dir, "embeddings")
       val pairs = e.as("a").join(e.as("b"),
           col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))

@@ -274,7 +274,7 @@ object Extended {
       GROUP BY tok ORDER BY tok"""),
     (spark, dir) => {
       Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), explode(split(trim(col("text")), " +")).as("tok"))
+        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("tok"))
         .groupBy("tok")
         .agg(count(lit(1)).as("n"), countDistinct("doc_id").as("df"))
         .orderBy("tok")

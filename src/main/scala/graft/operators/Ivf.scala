@@ -26,7 +26,6 @@ object Ivf {
 
   /** Cell centroids as (cid: Int, centroid: array<float>). */
   def buildCentroids(emb: DataFrame, k: Int, iters: Int): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     var centroids = emb.orderBy("vec_id").limit(k)
       .select((row_number().over(Window.orderBy("vec_id")) - 1).as("cid"),
               col("embedding").as("centroid"))

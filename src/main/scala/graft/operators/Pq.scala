@@ -228,7 +228,6 @@ object Pq {
                codebook: DataFrame, codes: DataFrame,
                shortlist: Int, m: Int = M, ks: Int = Ks,
                dim: Int = 64): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val probes = emb.filter(probeFilter)
     val luts = probeLuts(probes, codebook, m, ks, dim)
     val adc = codes.crossJoin(broadcast(luts))
@@ -259,7 +258,6 @@ object Pq {
                   codebook: DataFrame, codes: DataFrame,
                   nProbe: Int, shortlist: Int, m: Int = M, ks: Int = Ks,
                   dim: Int = 64): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val probes = emb.filter(probeFilter)
     val cand = Ivf.probeCells(probes, centroids, nProbe)
       .select("probe_id", "cid")

@@ -55,7 +55,7 @@ object Search {
 
   private def docsFrame(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), split(trim(col("text")), " +").as("toks"))
+      .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
 
   /** Oracle-checked on SCORES for every matching doc (ordered by
     * doc_id, no limit): a top-k cut in a cross-engine hash compare
@@ -105,7 +105,7 @@ object Search {
       FROM e GROUP BY t ORDER BY term"""),
     (spark, dir) => {
       val e = Tables.load(spark, dir, "documents")
-        .select(col("doc_id"), explode(split(trim(col("text")), " +")).as("term"))
+        .select(col("doc_id"), explode(TextOps.tokens(col("text"))).as("term"))
         .distinct()
       e.groupBy("term")
         .agg(count(lit(1)).as("df"),
@@ -164,7 +164,6 @@ object Search {
       FROM lexr l FULL OUTER JOIN vecr v ON l.doc_id = v.doc_id
       ORDER BY rrf DESC, doc_id LIMIT 20"""),
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       import org.apache.spark.sql.expressions.Window
       val listK = 100
       val lex = bm25(docsFrame(spark, dir), Seq("spark", "vector", "stream"))
@@ -228,7 +227,7 @@ object Search {
     (spark, dir) => {
       val docs = Tables.load(spark, dir, "documents")
       val terms = docs.select(col("doc_id"),
-        explode(split(trim(col("text")), " +")).as("term"))
+        explode(TextOps.tokens(col("text"))).as("term"))
       val tf = terms.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
       val df = terms.groupBy("term")
         .agg(count_distinct(col("doc_id")).as("df"))

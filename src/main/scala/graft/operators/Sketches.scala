@@ -101,7 +101,6 @@ object Sketches {
         true AS no_false_negatives, true AS fp_rate_ok
       FROM ex"""),
     (spark, dir) => {
-      graft.functions.GraftFunctions.register(spark)
       import graft.functions.GraftFunctions.{bloomAgg, bloomMightContain}
       val dim = Tables.load(spark, dir, "customer")
         .filter(col("c_acctbal") > 9000).select("c_custkey")

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
 /** Text-analysis + deduplication operators over `documents`
   * (SURVEY.md §2.11; north-star LLM-data-pipeline surface).
   *
-  * All tokenization is `split(trim(text), ' +')` — one definition shared
-  * by every operator so dedup/fingerprint/quality agree with each other
-  * and with the DuckDB oracle (`regexp_split_to_array`).
+  * All tokenization is [[tokens]], `split(trim(text), ' +')` — one
+  * definition shared by every operator so dedup/fingerprint/quality
+  * agree with each other and with the DuckDB oracle
+  * (`regexp_split_to_array`).
   *
   * Scale notes: everything here is per-row narrow work (no shuffle)
   * except the group-bys on derived keys (fingerprint, LSH bands), which
@@ -25,7 +26,7 @@ object TextOps {
   private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on")
 
   /** Shared tokenizer: distinct not applied here. */
-  private def tokens(c: Column): Column = split(trim(c), " +")
+  private[graft] def tokens(c: Column): Column = split(trim(c), " +")
 
   // --- exact dedup: keep-first per key (deterministic via window, not
   //     dropDuplicates which keeps an arbitrary row) ---
@@ -235,7 +236,6 @@ object TextOps {
   private def docsForPairs(spark: SparkSession, dir: String,
                            blockKey: Column,
                            unit: Column => Column = identity): DataFrame = {
-    GraftFunctions.register(spark)
     Tables.load(spark, dir, "documents")
       .select(col("doc_id"), blockKey.as("lang"), tokens(col("text")).as("_toks"))
       .select(col("doc_id"), col("lang"),
@@ -251,7 +251,6 @@ object TextOps {
     * sets and shingle sets run through the identical machinery.
     */
   def jaccardPairsOver(docs0: DataFrame, threshold: Double): DataFrame = {
-    GraftFunctions.register(docs0.sparkSession)
     // the inverted list feeds two consumers (df counts for the
     // dictionary, the id re-join): cache for the build, drop after the
     // checkpointed result below is materialized
@@ -342,7 +341,6 @@ object TextOps {
     * to [[jaccardPairsOver]], pinned by PpjoinSpec.
     */
   def jaccardPairsHashOrdered(docs0: DataFrame, threshold: Double): DataFrame = {
-    GraftFunctions.register(docs0.sparkSession)
     val docs = docs0
       .select(col("doc_id"), col("lang"),
         sort_array(col("toks")).as("toks"), // exact-verify order (binary, = UTF8String.compareTo)
@@ -392,7 +390,6 @@ object TextOps {
     * no explode/shuffle (graft.functions.MinhashSignature).
     */
   def minhashSignatures(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), GraftFunctions.minhashSignature(col("toks")).as("sig"))
   }
 
@@ -417,7 +414,6 @@ object TextOps {
     * corpus is re-tokenized and re-hashed three times per build.
     */
   def minhashPairsOver(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val sigs = minhashSignatures(docs).cache()
     try {
       val rowsPerBand = numHashes / numBands
@@ -452,7 +448,6 @@ object TextOps {
     */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     minhashMemo.getOrElseUpdate((spark, dir, "tokens"), {
-      GraftFunctions.register(spark) // idempotent; covers sessions without GraftExtensions
       val docs = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), array_distinct(tokens(col("text"))).as("toks"))
       minhashPairsOver(docs) // already checkpointed
@@ -465,7 +460,6 @@ object TextOps {
     */
   def minhashShinglePairs(spark: SparkSession, dir: String): DataFrame =
     minhashMemo.getOrElseUpdate((spark, dir, "shingles"), {
-      GraftFunctions.register(spark)
       val docs = Tables.load(spark, dir, "documents")
         .select(col("doc_id"),
           array_distinct(shingles(tokens(col("text")))).as("toks"))
@@ -819,7 +813,6 @@ object TextOps {
       JOIN (SELECT DISTINCT source FROM documents) b ON a.source < b.source
       ORDER BY s1, s2"""),
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val srcs = Tables.load(spark, dir, "documents").select("source").distinct()
       srcs.as("a").join(srcs.as("b"), col("a.source") < col("b.source"))
         .select(col("a.source").as("s1"), col("b.source").as("s2"),
@@ -1040,7 +1033,6 @@ object TextOps {
 
   // --- SimHash (64-bit) — one codegen'd expression per row, no shuffle ---
   def simhash(docs: DataFrame): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), GraftFunctions.simhash64(col("toks")).as("simhash"))
   }
 

@@ -73,7 +73,6 @@ object VectorOps {
     * cosine (rounding before ranking keeps cross-engine rank stable).
     */
   def topK(probes: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.register(probes.sparkSession)
     val joined = broadcast(probes.select(col("vec_id").as("probe_id"),
                                          col("embedding").as("pvec")))
       .crossJoin(corpus.select(col("vec_id").as("neighbor_id"),
@@ -111,7 +110,6 @@ object VectorOps {
       WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.3
       ORDER BY id1, id2"""),
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val e = Tables.load(spark, dir, "embeddings")
       e.as("a").join(e.as("b"),
           col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
@@ -175,7 +173,6 @@ object VectorOps {
     */
   def topKLshMultiprobe(emb: DataFrame, probeFilter: Column, k: Int,
                         numPlanes: Int = 8, radius: Int = 1): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val masks = typedLit(hammingMasks(numPlanes, radius))
     val sig = emb.withColumn("bucket", lshSignature(col("embedding"), numPlanes))
     val probes = sig.filter(probeFilter)
@@ -243,7 +240,6 @@ object VectorOps {
     * threshold.
     */
   def embedCells(emb: DataFrame, numPlanes: Int = 8): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     // norm hoisted into its own projection: embedded in the transform
     // lambda it would re-evaluate per ELEMENT — O(d²) per row on the
     // path advertised as the scale plan
@@ -329,7 +325,6 @@ object VectorOps {
   def embedNearDupBanded(emb: DataFrame, threshold: Double,
                          numPlanes: Int = 8,
                          cells: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     cells.foreach { c =>
       val md = c.schema("bucket").metadata
       require(!md.contains("planes") || md.getLong("planes") == numPlanes.toLong,
@@ -381,7 +376,6 @@ object VectorOps {
     */
   def embedNearDupLshPairs(emb: DataFrame, threshold: Double,
                            numPlanes: Int = 8, radius: Int = 0): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val masks = typedLit(hammingMasks(numPlanes, radius))
     val sig = emb.withColumn("bucket", lshSignature(col("embedding"), numPlanes))
     val ball = sig.select(col("vec_id").as("id1"), col("embedding").as("e1"),
@@ -455,7 +449,6 @@ object VectorOps {
     "q_embed_quantized",
     qEmbedNearDup.oracle,
     (spark, dir) => {
-      GraftFunctions.register(spark)
       val e = Tables.load(spark, dir, "embeddings")
       val exact = embedNearDupBanded(e, 0.3,
         cells = Some(embedCellsFor(spark, dir)))
@@ -488,7 +481,6 @@ object VectorOps {
     */
   def topKSq8(emb: DataFrame, probeFilter: Column, k: Int,
               shortlist: Option[Int]): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     // the compressed-domain table: one int8-scaled vector per row
     val codes = quantizeInt8(emb, "embedding", "qv")
       .select(col("vec_id").as("neighbor_id"), col("qv"))
@@ -561,7 +553,6 @@ object VectorOps {
     */
   def topKBinary(emb: DataFrame, probeFilter: Column, k: Int,
                  shortlist: Option[Int]): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     // the compressed-domain table: 8 B of signature per corpus vector
     val sigs = emb.select(col("vec_id").as("neighbor_id"),
       GraftFunctions.lshSignature(col("embedding"), 64).as("sig"))
@@ -633,7 +624,6 @@ object VectorOps {
   def topKIvfBinary(emb: DataFrame, probeFilter: Column, k: Int,
                     centroids: DataFrame, cells: DataFrame,
                     nProbe: Int, shortlist: Option[Int]): DataFrame = {
-    GraftFunctions.register(emb.sparkSession)
     val pc = Ivf.probeCells(emb.filter(probeFilter), centroids, nProbe)
       .withColumn("psig", GraftFunctions.lshSignature(col("pvec"), 64))
     val cellSigs = cells.withColumn("sig",
@@ -706,7 +696,6 @@ object VectorOps {
     */
   def topKWhere(probes: DataFrame, corpus: DataFrame, candFilter: Column,
                 k: Int): DataFrame = {
-    GraftFunctions.register(probes.sparkSession)
     val pSide = probes.select(
       probes.columns.map(c => col(c).as(s"p_$c")): _*)
     val joined = broadcast(pSide)
@@ -800,8 +789,6 @@ object VectorOps {
     */
   def topKMmr(probes: DataFrame, corpus: DataFrame, k: Int,
               shortlistSize: Int = 50, lambda: Double = 0.7): DataFrame = {
-    val spark = probes.sparkSession
-    GraftFunctions.register(spark)
     val cand = broadcast(probes.select(col("vec_id").as("probe_id"),
         col("embedding").as("pvec")))
       .crossJoin(corpus.select(col("vec_id").as("neighbor_id"),

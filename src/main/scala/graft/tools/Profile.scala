@@ -44,11 +44,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local("graft-profile", cpus)
     try profile(spark, args(0), args(1), args.lift(2).fold(2)(_.toInt))(println)
     finally { Memo.clearAll(); spark.stop() }
   }

@@ -48,7 +48,6 @@ class BasketsSpec extends AnyFunSuite {
 
   test("linkBest: exact match wins; key tie-break on equal scores") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val dirty = Seq((10L, "b1", "martha")).toDF("did", "block", "dname")
     // two clean candidates in the block: the identical string must win
     // over the near-miss; for (20 vs 21) equal-score duplicates the

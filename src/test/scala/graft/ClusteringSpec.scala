@@ -22,7 +22,6 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("two cosine-separable cones split cleanly at k=2") {
-    graft.functions.GraftFunctions.register(spark)
     val out = Clustering.kmeansCosine(corpus, k = 2, iters = 2)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     val evens = (0 until 40 by 2).map(i => out(i.toLong)).toSet
@@ -31,7 +30,6 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("deterministic across runs and partition counts") {
-    graft.functions.GraftFunctions.register(spark)
     val a = Clustering.kmeansCosine(corpus, k = 2, iters = 2)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2))).sortBy(_._1)
     val b = Clustering.kmeansCosine(corpus.repartition(7), k = 2, iters = 2)

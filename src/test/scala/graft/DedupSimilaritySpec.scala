@@ -134,7 +134,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("fused LshSignature expression = functional composition, bit for bit") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     val cmp = emb.select(
       VectorOps.lshSignature(col("embedding"), 8).as("fused"),

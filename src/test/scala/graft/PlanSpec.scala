@@ -158,7 +158,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("SimplifySelfCosine rewrites the self-similarity diagonal to SelfCosine") {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val emb = Tables.load(spark, sf, "embeddings")
     val df = emb.select(
       GraftFunctions.cosineSim(col("embedding"), col("embedding")).as("self"))
@@ -174,7 +173,6 @@ class PlanSpec extends AnyFunSuite {
 
   test("SimplifySelfCosine preserves degenerate-vector semantics (NaN, NULL)") {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1L, Some(Seq(0.0f, 0.0f))), // zero norm → 0/0 = NaN
