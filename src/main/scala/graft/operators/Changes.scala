@@ -2432,7 +2432,9 @@ object Changes {
     })
 
   /** Metadata-only aggregation from the stats manifest
-    * ([[graft.sources.Ingest.countWhere]] / `minMaxMeta`): the
+    * ([[graft.sources.Ingest.countWhere]] / `minMaxMeta`, each asking
+    * the version's manifest loaded once by
+    * [[graft.sources.StatsManifest.load]]): the
     * manifest's `n_rows` + `nulls_<c>` columns answer a whole-table
     * COUNT and the sortCols MIN/MAX with ZERO data-file opens, and a
     * range-bounded COUNT folds fully-inside files from metadata while
@@ -2684,12 +2686,11 @@ object Changes {
       val hi = java.sql.Timestamp.valueOf("2000-01-01 00:00:00")
       // in-query contract: the open bounds the source pushes from this
       // WHERE clause strictly prune the snapshot's file list
-      val mDir = store.child(Ingest.snapshotVersionDir(table),
-        StatsManifest.ManifestDir)
-      val all = StatsManifest.survivingFilesOpt(spark, mDir, Nil).get.size
-      val hit = StatsManifest.survivingFilesOpt(spark, mDir,
-        Seq(("o_orderdate", Some(lo), None), ("o_orderdate", None, Some(hi))))
-        .get.size
+      val m = Ingest.loadManifest(spark, table,
+        Ingest.snapshotVersionDir(table)).get
+      val all = m.files.size
+      val hit = m.surviving(
+        StatsManifest.Bound.open("o_orderdate", Some(lo), Some(hi))).size
       require(hit > 0 && hit < all,
         s"format pushdown did not prune: $hit of $all files")
       spark.read.format("graft").load(table)
@@ -2828,10 +2829,8 @@ object Changes {
           fp.files.length
         case _ => 1
       }.sum
-      val total = graft.sources.StatsManifest.fileRowCounts(spark,
-        store.child(Ingest.snapshotVersionDir(table),
-          graft.sources.StatsManifest.ManifestDir)).map(_.size)
-        .getOrElse(0)
+      val total = Ingest.loadManifest(spark, table,
+        Ingest.snapshotVersionDir(table)).map(_.files.size).getOrElse(0)
       require(total > 0 && nFiles < total,
         s"topN read $nFiles of $total files — no truncation engaged")
       df
@@ -2862,7 +2861,9 @@ object Changes {
     * USING graft` catalog table answer from the stats manifest — the
     * V2 scan's [[org.apache.spark.sql.connector.read.SupportsPushDownAggregates]]
     * replaces the data scan with a manifest fold (plus boundary-file
-    * reads for band edges), closing the r15 gap where only the library
+    * reads for band edges) over the one manifest the scan builder
+    * loads ([[graft.sources.StatsManifest.load]]) and the scan reuses,
+    * closing the r15 gap where only the library
     * spelling (`countWhere` / `minMaxMeta`) reached the metadata path.
     * In-query contracts: each statement's optimized plan carries the
     * aggregate IN ITS SCAN (readSchema is the aggregate row — no data

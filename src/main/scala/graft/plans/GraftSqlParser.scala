@@ -611,8 +611,9 @@ private[plans] object GraftSqlCommands {
   }
 
   /** `GRAFT DESCRIBE STATS '<dir>'` — the metadata-aggregation surface
-    * ([[Ingest.countWhere]] with no bounds + [[Ingest.minMaxMeta]]) as
-    * one SQL row: exact row count, file count, whether the count came
+    * ([[Ingest.countWhere]] with no bounds + [[Ingest.minMaxMeta]], both
+    * answered from the current version's manifest as loaded by
+    * [[graft.sources.StatsManifest.load]]) as one SQL row: exact row count, file count, whether the count came
     * from metadata alone (false under a pending deletion vector or a
     * manifest-less table — the sound degradation), and the sort
     * columns' min/max ranges rendered as text (schema-stable however

@@ -232,24 +232,33 @@ private[graft] object GraftSourceOptions {
       p.get("maxbatchespertrigger").map(_.toLong))
   }
 
-  /** V1 `Filter`s → open-ended stats-manifest bounds on `statCols`.
-    * The filter array is conjunctive, and [[StatsManifest
-    * .survivingFilesOpt]] AND-folds every tuple, so each filter maps
-    * independently — `c = 7` to a closed point, `c >= x` to a
-    * lo-only bound (strict `>` relaxes to inclusive: pruning is a
-    * superset guarantee, the row-level filter stays exact). Filters
-    * on non-stat columns, disjunctions, IN-lists: no bound (the
-    * scan's reader still re-applies them row-level).
+  /** V1 `Filter`s → stats-manifest bounds: the ONE translation the
+    * scan's static pruning and its manifest-answered aggregates share.
+    * The filter array is conjunctive and every manifest consumer
+    * AND-folds the bounds, so each filter maps independently, to at
+    * most one bound — a comparison with a non-NULL value, or
+    * `IsNotNull` (the planner adds it beside every comparison; a
+    * file's null count classifies it exactly). Filters on non-stat
+    * columns, disjunctions, IN-lists: no bound (the scan's reader
+    * still re-applies them row-level). `phys` maps a filter's column
+    * name onto the manifest's; `statCols` are manifest names.
     */
-  def boundsFromFilters(filters: Seq[Filter], statCols: Set[String])
-      : Seq[(String, Option[Any], Option[Any])] =
-    filters.flatMap {
-      case EqualTo(c, v) if statCols(c) => Some((c, Some(v), Some(v)))
-      case GreaterThan(c, v) if statCols(c) => Some((c, Some(v), None))
-      case GreaterThanOrEqual(c, v) if statCols(c) => Some((c, Some(v), None))
-      case LessThan(c, v) if statCols(c) => Some((c, None, Some(v)))
-      case LessThanOrEqual(c, v) if statCols(c) => Some((c, None, Some(v)))
-      case _ => None
+  def boundsFromFilters(filters: Seq[Filter], statCols: Set[String],
+                        phys: String => String = identity)
+      : Seq[StatsManifest.Bound] =
+    filters.flatMap { f =>
+      def bound(c: String, op: String, v: Any): Option[StatsManifest.Bound] =
+        Some(phys(c)).filter(p => statCols(p) && (v != null || op == "notnull"))
+          .map(StatsManifest.Bound(_, op, v))
+      f match {
+        case EqualTo(c, v) => bound(c, "=", v)
+        case GreaterThan(c, v) => bound(c, ">", v)
+        case GreaterThanOrEqual(c, v) => bound(c, ">=", v)
+        case LessThan(c, v) => bound(c, "<", v)
+        case LessThanOrEqual(c, v) => bound(c, "<=", v)
+        case IsNotNull(c) => bound(c, "notnull", null)
+        case _ => None
+      }
     }
 }
 

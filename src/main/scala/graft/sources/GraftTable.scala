@@ -8,7 +8,6 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, sum, udf, when}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, EqualNullSafe => CEqualNullSafe, EqualTo => CEqualTo, Expression, GenericInternalRow, GreaterThan => CGreaterThan, GreaterThanOrEqual => CGreaterThanOrEqual, LessThan => CLessThan, LessThanOrEqual => CLessThanOrEqual, Literal, Predicate, UnsafeProjection}
 import org.apache.spark.sql.catalyst.util.TypeUtils
@@ -258,27 +257,28 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
     aggs.isDefined
   }
 
+  // the served version, resolved once, and its stats manifest, loaded
+  // at most once: on first use by aggregate analysis or by the scan
+  // built here (pruning, LIMIT/TopN truncation, the aggregate fold)
+  private lazy val vDir: String = Ingest.resolveVersionDir(opts.path,
+    opts.tag.map(t => Ingest.tagBatch(opts.path, t)).orElse(opts.versionAsOf))
+  private lazy val manifest: Option[StatsManifest.Manifest] =
+    Ingest.loadManifest(spark, opts.path, vDir)
+
   private def analyzeAggregation(a: Aggregation): Option[Seq[MetaAgg]] = {
     if (opts.readMode != "snapshot" || opts.tag.nonEmpty) return None
     if (a.groupByExpressions.nonEmpty) return None
     if (a.aggregateExpressions.isEmpty) return None
-    val cm = Ingest.colMap(opts.path)
-    val vDir =
-      try Ingest.resolveVersionDir(opts.path, opts.versionAsOf)
+    val dir =
+      try vDir
       catch { case scala.util.control.NonFatal(_) => return None }
-    if (Ingest.deletionVectorFiles(vDir).nonEmpty) return None
-    val manDir = store.child(vDir, StatsManifest.ManifestDir)
-    if (!store.isDirectory(manDir)) return None
-    val mFiles = store.listNames(manDir).filter(_.endsWith(".parquet"))
-      .map(store.child(manDir, _))
-    if (mFiles.isEmpty) return None
-    // driver footer read only — no job
-    val mCols = spark.read.parquet(mFiles: _*).schema.fieldNames.toSet
-    if (!mCols.contains("n_rows") || !mCols.contains("file")) return None
+    if (Ingest.deletionVectorFiles(dir).nonEmpty) return None
+    val m = manifest.getOrElse(return None)
+    if (!m.records("n_rows")) return None
+    val cm = Ingest.colMap(opts.path)
     val statCols = Ingest.tableSortColumns(opts.path)
       .map(Ingest.toPhysicalName(cm, _)).toSet
-      .filter(c => mCols.contains(s"min_$c") && mCols.contains(s"max_$c") &&
-        mCols.contains(s"nulls_$c"))
+      .filter(c => m.records(s"nulls_$c"))
     def physOf(r: NamedReference): Option[String] = r.fieldNames() match {
       case Array(one) => Some(Ingest.toPhysicalName(cm, one))
       case _ => None
@@ -286,10 +286,8 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
     // pushed filters must ALL be stat-column bounds (the manifest can
     // then classify every file); Spark only offers aggregate pushdown
     // when every filter was claimed, so `pushed` is the full set
-    val boundsOk = pushed.forall(f =>
-      CatalystFilters.statBound(f, tableSchema, cm).exists(b =>
-        statCols.contains(b.phys)))
-    if (!boundsOk) return None
+    if (GraftSourceOptions.boundsFromFilters(pushed, statCols,
+        Ingest.toPhysicalName(cm, _)).length != pushed.length) return None
     val calls: Seq[Option[MetaAgg]] = a.aggregateExpressions.toSeq.map {
       case _: CountStar => Some(MetaCountStar())
       case c: Count if !c.isDistinct =>
@@ -320,7 +318,7 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
 
   override def build(): Scan =
     new GraftScan(spark, opts, tableSchema, required, pushed.toIndexedSeq,
-      aggs, limit, topn)
+      aggs, limit, topn, vDir, manifest)
 }
 
 /** V1 `Filter` → bound catalyst expression, by POSITION in the scan's
@@ -330,43 +328,9 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
 private[sources] object CatalystFilters {
   import org.apache.spark.sql.sources._
 
-  /** One pushed bound on a stat column, normalized for manifest
-    * classification: `op` ∈ =, >=, >, <=, <; `value` is the CATALYST
-    * value (ordering-comparable against manifest min/max).
-    */
-  final case class StatBound(phys: String, op: String, value: Any,
-                             dt: DataType) extends Serializable
-
   def translatable(f: Filter, schema: StructType): Boolean =
     toExpression(f, schema.fieldNames.zipWithIndex.toMap, schema,
       exact = true).isDefined
-
-  /** The normalized stat bound of a filter, when it IS one. */
-  def statBound(f: Filter, schema: StructType,
-                cm: Seq[(String, String, Boolean)]): Option[StatBound] = {
-    def mk(c: String, op: String, v: Any): Option[StatBound] =
-      if (v == null || !schema.fieldNames.contains(c)) None
-      else {
-        val dt = schema(c).dataType
-        Some(StatBound(Ingest.toPhysicalName(cm, c), op,
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(dt)(v), dt))
-      }
-    f match {
-      case EqualTo(c, v) => mk(c, "=", v)
-      case GreaterThan(c, v) => mk(c, ">", v)
-      case GreaterThanOrEqual(c, v) => mk(c, ">=", v)
-      case LessThan(c, v) => mk(c, "<", v)
-      case LessThanOrEqual(c, v) => mk(c, "<=", v)
-      // the planner adds IsNotNull beside every comparison; a file's
-      // null count classifies it exactly (and the manifest fold needs
-      // it anyway for the no-bound COUNT(c) case)
-      case IsNotNull(c) if schema.fieldNames.contains(c) =>
-        Some(StatBound(Ingest.toPhysicalName(cm, c), "notnull", null,
-          schema(c).dataType))
-      case _ => None
-    }
-  }
 
   /** Bound expression over `readSchema` positions; `exact = true` is
     * the only mode offered — a filter that cannot be translated in
@@ -445,9 +409,10 @@ private[sources] final class GraftScan(spark: SparkSession,
                                        required: StructType,
                                        pushed: Seq[Filter],
                                        aggs: Option[Seq[MetaAgg]],
-                                       limit: Option[Int] = None,
-                                       topn: Option[(String, Boolean, Int)] =
-                                         None)
+                                       limit: Option[Int],
+                                       topn: Option[(String, Boolean, Int)],
+                                       snapshotDir: => String,
+                                       manifest: => Option[StatsManifest.Manifest])
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
   private implicit def store: TableStore = opts.store
@@ -532,9 +497,7 @@ private[sources] final class GraftScan(spark: SparkSession,
     override def sizeInBytes(): OptionalLong =
       if (opts.readMode != "snapshot") OptionalLong.empty()
       else try {
-        val vDir = Ingest.snapshotVersionDir(root,
-          opts.tag.map(t => Ingest.tagBatch(root, t)).orElse(opts.versionAsOf))
-        val hp = new Path(vDir)
+        val hp = new Path(snapshotDir)
         OptionalLong.of(hp.getFileSystem(
           spark.sparkContext.hadoopConfiguration).getContentSummary(hp)
           .getLength)
@@ -543,9 +506,6 @@ private[sources] final class GraftScan(spark: SparkSession,
   }
 
   // ---- file resolution ------------------------------------------------
-  private def resolvedAsOf: Option[Long] =
-    opts.tag.map(t => Ingest.tagBatch(root, t)).orElse(opts.versionAsOf)
-
   private lazy val dataFilePaths: (Option[String], Seq[String]) =
     opts.readMode match {
       case "changes" =>
@@ -554,29 +514,23 @@ private[sources] final class GraftScan(spark: SparkSession,
           opts.endingBatch.getOrElse(Long.MaxValue)))
       case "quarantine" => (None, Ingest.quarantineFiles(root))
       case _ =>
-        val (vDir, files) = Ingest.snapshotFiles(root, resolvedAsOf)
+        val files = Ingest.snapshotFiles(snapshotDir)
         // stats pruning: pushed bounds → surviving-file list, a strict
         // SUPERSET of the matching rows (the reader re-applies exactly)
-        val bounds = GraftSourceOptions.boundsFromFilters(
-          pushed.map(translatePhysical), statCols)
-        val pruned = StatsManifest.survivingFilesOpt(spark,
-          store.child(vDir, StatsManifest.ManifestDir), bounds) match {
-          case Some(surviving) if bounds.nonEmpty =>
-            // the manifest records input_file_name() URIs; the store
-            // lists plain paths — compare in normalized path space
-            val keep = surviving.map(u => new Path(u).toUri.getPath).toSet
-            files.filter(f => keep.contains(new Path(f).toUri.getPath))
-          case _ => files
-        }
-        (Some(vDir), pruned)
+        val bounds = GraftSourceOptions.boundsFromFilters(pushed, statCols,
+          physName)
+        val pruned =
+          if (bounds.isEmpty) files
+          else manifest.fold(files)(m =>
+            StatsManifest.retain(files, m.surviving(bounds)))
+        (Some(snapshotDir), pruned)
     }
 
   private lazy val statCols: Set[String] =
     Ingest.tableSortColumns(root).map(physName).toSet
 
   /** Rewrite a pushed filter's column names logical → physical for the
-    * manifest-bounds derivation (leaf filters only — bounds ignore
-    * compound shapes anyway).
+    * parquet reader's pushed filters and the row-level re-application.
     */
   private def translatePhysical(f: Filter): Filter = {
     import org.apache.spark.sql.sources._
@@ -638,24 +592,16 @@ private[sources] final class GraftScan(spark: SparkSession,
 
   private def runtimePruned(files: Seq[String]): Seq[String] = {
     if (runtimeFilters.isEmpty || opts.readMode != "snapshot") return files
-    val vDir = dataFilePaths._1.getOrElse(return files)
-    val manDir = store.child(vDir, StatsManifest.ManifestDir)
+    val m = manifest.getOrElse(return files)
     import org.apache.spark.sql.sources.{EqualTo, In}
     runtimeFilters.foldLeft(files) { (fs, f) =>
-      val surviving = f match {
+      f match {
         case In(c, vs) if statCols.contains(physName(c)) &&
           !vs.contains(null) && vs.nonEmpty =>
-          StatsManifest.survivingFilesIn(spark, manDir, physName(c),
-            vs.toIndexedSeq)
+          StatsManifest.retain(fs, m.survivingIn(physName(c), vs.toIndexedSeq))
         case EqualTo(c, v) if statCols.contains(physName(c)) && v != null =>
-          StatsManifest.survivingFilesIn(spark, manDir, physName(c), Seq(v))
-        case _ => None
-      }
-      surviving match {
-        case Some(keep0) =>
-          val keep = keep0.map(u => new Path(u).toUri.getPath).toSet
-          fs.filter(p => keep.contains(new Path(p).toUri.getPath))
-        case None => fs
+          StatsManifest.retain(fs, m.survivingIn(physName(c), Seq(v)))
+        case _ => fs
       }
     }
   }
@@ -668,89 +614,27 @@ private[sources] final class GraftScan(spark: SparkSession,
     * every soundness gate holds: no pushed or runtime filter may drop
     * rows (coverage would be unprovable), no deletion vector may owe
     * deletes (manifest counts are raw, live rows could be fewer), and
-    * EVERY candidate file must be manifest-covered (a pre-upgrade
-    * file with unknown count breaks the running total).
+    * EVERY candidate file must be manifest-covered
+    * ([[StatsManifest.Manifest.limitPrefix]]).
     */
   private def limitTruncate(files: Seq[String]): Seq[String] = limit match {
     case Some(l) if pushed.isEmpty && runtimeFilters.isEmpty &&
-        opts.readMode == "snapshot" =>
-      val vDir = dataFilePaths._1.getOrElse(return files)
-      if (Ingest.deletionVectorFiles(vDir).nonEmpty) return files
-      StatsManifest.fileRowCounts(spark,
-          store.child(vDir, StatsManifest.ManifestDir)) match {
-        case Some(counts) =>
-          val norm = counts.map { case (u, n) =>
-            new Path(u).toUri.getPath -> n }
-          val sorted = files.sorted
-          var acc = 0L
-          val keep = Seq.newBuilder[String]
-          val it = sorted.iterator
-          while (it.hasNext && acc < l) {
-            val f = it.next()
-            norm.get(new Path(f).toUri.getPath) match {
-              case Some(n) => keep += f; acc += n
-              case None => return files
-            }
-          }
-          keep.result()
-        case None => files
-      }
+        opts.readMode == "snapshot" &&
+        Ingest.deletionVectorFiles(snapshotDir).isEmpty =>
+      manifest.fold(files)(_.limitPrefix(files, l))
     case _ => files
   }
 
-  /** TopN truncation: order the manifest by the leading sort column's
-    * file bounds (min ascending / max descending), take a prefix whose
-    * row counts cover k, then keep every file whose bound can still
-    * beat the prefix's WORST kept bound — sound for any later
-    * tiebreak columns (lexicographic rank is decided by the leading
-    * value first). Declines — full list — under the same gates as
-    * [[limitTruncate]] plus: the column must be manifest-covered with
-    * min/max/nulls, and the column must have ZERO nulls table-wide
-    * (null ordering would put unknown rows at one end).
+  /** TopN truncation ([[StatsManifest.Manifest.topnPrefix]]) on the
+    * leading sort column. Declines — full list — under the same gates
+    * as [[limitTruncate]] and when the column is not a stats column.
     */
   private def topnTruncate(files: Seq[String]): Seq[String] = topn match {
     case Some((logical, asc, k)) if pushed.isEmpty &&
-        runtimeFilters.isEmpty && opts.readMode == "snapshot" =>
-      val c = physName(logical)
-      if (!statCols.contains(c)) return files
-      val vDir = dataFilePaths._1.getOrElse(return files)
-      if (Ingest.deletionVectorFiles(vDir).nonEmpty) return files
-      val manDir = store.child(vDir, StatsManifest.ManifestDir)
-      if (!store.isDirectory(manDir)) return files
-      val mparts = store.listNames(manDir)
-        .filter(_.endsWith(".parquet")).map(store.child(manDir, _))
-      if (mparts.isEmpty) return files
-      val m = spark.read.parquet(mparts: _*)
-      val need = Seq("file", "n_rows", s"min_$c", s"max_$c", s"nulls_$c")
-      if (!need.forall(m.schema.fieldNames.contains)) return files
-      // every candidate file must be manifest-covered, none may hold
-      // nulls in the order column (all driver-side, manifest-sized)
-      val md = manDir
-      val norm = udf((u: String) =>
-        new Path(StatsManifest.rebase(md, u)(TableStore.local)).toUri.getPath)
-      val wanted = files.map(f => new Path(f).toUri.getPath).toSet
-      val cand = m.withColumn("_p", norm(col("file")))
-        .filter(col("_p").isin(wanted.toSeq: _*))
-      val stats = cand.agg(count(lit(1)), sum(s"nulls_$c"),
-        sum(when(col(s"min_$c").isNull || col(s"max_$c").isNull, 1L)
-          .otherwise(0L))).head()
-      if (stats.getLong(0) != wanted.size) return files
-      if (stats.isNullAt(1) || stats.getLong(1) != 0L) return files
-      if (stats.getLong(2) != 0L) return files
-      val lead = if (asc) col(s"min_$c").asc else col(s"max_$c").desc
-      val w = org.apache.spark.sql.expressions.Window.orderBy(lead)
-        .rowsBetween(Long.MinValue, -1)
-      val staged = cand.withColumn("_prev",
-        coalesce(sum("n_rows").over(w), lit(0L)))
-      val prefix = staged.filter(col("_prev") < k)
-      val bRow = (if (asc) prefix.agg(max(col(s"max_$c")))
-        else prefix.agg(min(col(s"min_$c")))).head()
-      if (bRow.isNullAt(0)) return files
-      val b = bRow.get(0)
-      val keepDf = if (asc) cand.filter(col(s"min_$c") <= lit(b))
-        else cand.filter(col(s"max_$c") >= lit(b))
-      val keep = keepDf.select("_p").collect().map(_.getString(0)).toSet
-      files.filter(f => keep.contains(new Path(f).toUri.getPath))
+        runtimeFilters.isEmpty && opts.readMode == "snapshot" &&
+        statCols.contains(physName(logical)) &&
+        Ingest.deletionVectorFiles(snapshotDir).isEmpty =>
+      manifest.fold(files)(_.topnPrefix(files, physName(logical), asc, k))
     case _ => files
   }
 
@@ -806,131 +690,43 @@ private[sources] final class GraftScan(spark: SparkSession,
   }
 
   // ---- pushed aggregates ----------------------------------------------
-  /** Classify every manifest row exactly against the pushed bounds
-    * (driver-side — the manifest is O(files) tiny rows, the same bound
-    * the library's own planning holds): fully-inside healthy files
-    * fold into partials from METADATA; boundary or
-    * pre-upgrade-degraded files become the partition's data reads.
+  /** Classify every manifest file against the pushed bounds
+    * ([[StatsManifest.Manifest.classify]], driver-side — the manifest
+    * is O(files) tiny rows): fully-inside healthy files fold into
+    * partials from METADATA; boundary files, and inside files missing
+    * a stat the fold needs, become the partition's data reads.
     */
   private def planAggPartition(as: Seq[MetaAgg]): InputPartition = {
-    val vDir = Ingest.resolveVersionDir(root, opts.versionAsOf)
-    val manDir = store.child(vDir, StatsManifest.ManifestDir)
-    val mFiles = store.listNames(manDir).filter(_.endsWith(".parquet"))
-      .map(store.child(manDir, _))
-    val bounds = pushed.flatMap(f =>
-      CatalystFilters.statBound(f, tableSchema, cm))
+    val m = manifest.getOrElse(throw new IllegalStateException(
+      "graft aggregate pushdown accepted a scan without a manifest — " +
+        "planner bug"))
+    val bounds = GraftSourceOptions.boundsFromFilters(pushed, statCols,
+      physName)
     require(bounds.length == pushed.length,
       "graft aggregate pushdown accepted a non-bound filter — planner bug")
-    val statNames = (bounds.map(_.phys) ++ as.collect {
-      case MetaCountCol(p) => p
-      case MetaMin(p, _) => p
-      case MetaMax(p, _) => p
-    }).distinct
-    val manifest = spark.read.parquet(mFiles: _*)
-    val cols = Seq("file", "n_rows") ++
-      statNames.flatMap(c => Seq(s"min_$c", s"max_$c", s"nulls_$c"))
-    val rows = manifest
-      .select(cols.map(org.apache.spark.sql.functions.col): _*).collect()
-    val idx = cols.zipWithIndex.toMap
-    def ordering(dt: DataType) = TypeUtils.getInterpretedOrdering(dt)
-    val convOf: Map[String, Any => Any] = statNames.map { c =>
-      val lg = Ingest.toLogicalName(cm, c)
-      val dt = tableSchema(lg).dataType
-      c -> org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(dt)
-    }.toMap
-
-    var countStar = 0L
-    val countCol = mutable.Map.empty[String, Long]
-    val minVal = mutable.Map.empty[String, Any]
-    val maxVal = mutable.Map.empty[String, Any]
-    val degrade = mutable.ArrayBuffer.empty[String]
-
-    rows.foreach { r =>
-      def vOf(name: String): Any = {
-        val i = idx(name); if (r.isNullAt(i)) null else r.get(i)
-      }
-      val nRows = vOf("n_rows")
-      def statTriple(c: String): (Any, Any, Any) =
-        (convOf(c)(vOf(s"min_$c")), convOf(c)(vOf(s"max_$c")),
-          vOf(s"nulls_$c"))
-      // classification per bound — STRICT ops stay strict, so a file
-      // holding the bound value on an open side is a boundary read,
-      // never a metadata overcount
-      val cls = bounds.map { b =>
-        val (mn, mx, nl) = statTriple(b.phys)
-        if (b.op == "notnull") {
-          // null count alone classifies exactly: no nulls → every row
-          // passes; all nulls → none; a mix → boundary data read
-          if (nl == null) "unknown"
-          else if (nl.asInstanceOf[Long] == 0L) "inside"
-          else if (nRows != null && nl == nRows) "excluded"
-          else "boundary"
-        }
-        else if (mn == null || mx == null || nl == null) ("unknown")
-        else {
-          val ord = ordering(b.dt)
-          val noNulls = nl.asInstanceOf[Long] == 0L
-          val (inside, overlaps) = b.op match {
-            case "=" => (ord.equiv(mn, b.value) && ord.equiv(mx, b.value) &&
-              noNulls, ord.lteq(mn, b.value) && ord.gteq(mx, b.value))
-            case ">=" => (ord.gteq(mn, b.value) && noNulls,
-              ord.gteq(mx, b.value))
-            case ">" => (ord.gt(mn, b.value) && noNulls,
-              ord.gt(mx, b.value))
-            case "<=" => (ord.lteq(mx, b.value) && noNulls,
-              ord.lteq(mn, b.value))
-            case "<" => (ord.lt(mx, b.value) && noNulls,
-              ord.lt(mn, b.value))
-          }
-          if (!overlaps) "excluded" else if (inside) "inside" else "boundary"
-        }
-      }
-      if (cls.contains("excluded")) ()
-      else if (cls.contains("unknown") || cls.contains("boundary") ||
-        nRows == null)
-        degrade += StatsManifest.rebase(manDir, r.getString(idx("file")))
-      else {
-        // fully inside every bound: answer this file from metadata,
-        // degrading it to a data read if any needed stat is unhealthy
-        val n = nRows.asInstanceOf[Long]
-        val healthy = as.forall {
-          case MetaCountStar() => true
-          case MetaCountCol(p) => statTriple(p)._3 != null
-          case MetaMin(p, _) =>
-            val (mn, _, nl) = statTriple(p)
-            mn != null || (nl != null && nl.asInstanceOf[Long] == n)
-          case MetaMax(p, _) =>
-            val (_, mx, nl) = statTriple(p)
-            mx != null || (nl != null && nl.asInstanceOf[Long] == n)
-        }
-        if (!healthy)
-          degrade += StatsManifest.rebase(manDir, r.getString(idx("file")))
-        else as.foreach {
-          case MetaCountStar() => countStar += n
-          case MetaCountCol(p) =>
-            countCol(p) = countCol.getOrElse(p, 0L) +
-              (n - statTriple(p)._3.asInstanceOf[Long])
-          case MetaMin(p, dt) =>
-            val mn = statTriple(p)._1
-            if (mn != null) {
-              val ord = ordering(dt)
-              minVal(p) = minVal.get(p)
-                .map(cur => if (ord.lt(mn, cur)) mn else cur).getOrElse(mn)
-            }
-          case MetaMax(p, dt) =>
-            val mx = statTriple(p)._2
-            if (mx != null) {
-              val ord = ordering(dt)
-              maxVal(p) = maxVal.get(p)
-                .map(cur => if (ord.gt(mx, cur)) mx else cur).getOrElse(mx)
-            }
-        }
-      }
-    }
+    val (inside, boundary) = m.classify(bounds)
+    val (meta, unhealthy) = inside.partition(r => m.nRows(r).exists(n =>
+      as.forall {
+        case MetaCountStar() => true
+        case MetaCountCol(p) => m.nulls(r, p).isDefined
+        case MetaMin(p, _) =>
+          !r.isNullAt(r.fieldIndex(s"min_$p")) || m.nulls(r, p).contains(n)
+        case MetaMax(p, _) =>
+          !r.isNullAt(r.fieldIndex(s"max_$p")) || m.nulls(r, p).contains(n)
+      }))
+    def extreme(p: String, dt: DataType, v: Any): Option[(String, Any)] =
+      Option(v).map(x => p -> org.apache.spark.sql.catalyst
+        .CatalystTypeConverters.createToCatalystConverter(dt)(x))
+    val countCol = as.collect { case MetaCountCol(p) =>
+      p -> meta.map(r => m.nRows(r).get - m.nulls(r, p).get).sum }.toMap
+    val minVal = as.collect { case MetaMin(p, dt) =>
+      extreme(p, dt, m.least(meta, p)) }.flatten.toMap
+    val maxVal = as.collect { case MetaMax(p, dt) =>
+      extreme(p, dt, m.greatest(meta, p)) }.flatten.toMap
+    val degrade = boundary ++ unhealthy.map(m.file)
     // degrade reads need the agg + filter columns
     val degradeSchema = StructType(
-      (bounds.map(_.phys) ++ as.collect {
+      (bounds.map(_.col) ++ as.collect {
         case MetaCountCol(p) => p
         case MetaMin(p, _) => p
         case MetaMax(p, _) => p
@@ -945,9 +741,8 @@ private[sources] final class GraftScan(spark: SparkSession,
         hadoopConf = spark.sessionState.newHadoopConfWithOptions(Map.empty)))
     val predicate = CatalystFilters.predicateExpression(
       pushed.map(translatePhysical), degradeSchema)
-    GraftAggPartition(as, countStar, countCol.toMap, minVal.toMap,
-      maxVal.toMap, listWithSizes(degrade.toSeq), degradeRead, predicate,
-      degradeSchema, bounds)
+    GraftAggPartition(as, meta.flatMap(m.nRows).sum, countCol, minVal,
+      maxVal, listWithSizes(degrade), degradeRead, predicate, degradeSchema)
   }
 
   // ---- micro-batch stream ---------------------------------------------
@@ -1167,8 +962,7 @@ private[sources] final case class GraftAggPartition(
     degradeFiles: Seq[PartitionedFile],
     degradeRead: Option[PartitionedFile => Iterator[InternalRow]],
     predicate: Option[Expression],
-    degradeSchema: StructType,
-    bounds: Seq[CatalystFilters.StatBound]) extends InputPartition
+    degradeSchema: StructType) extends InputPartition
 
 private[sources] final class GraftAggReaderFactory()
     extends PartitionReaderFactory {

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Source/sink facade (SURVEY.md §2.1) beyond the native Parquet path.
   *
@@ -1335,12 +1335,11 @@ object Ingest {
     val root = tableDir
     val vDir = resolveVersionDir(root, asOfBatch)
     val cm = colMap(root) // bounds arrive logical, the manifest is physical
-    val physBounds = bounds.map { case (c, lo, hi) =>
-      (toPhysicalName(cm, c), lo, hi) }
-    StatsManifest.survivingFilesOpt(spark,
-      store.child(vDir, StatsManifest.ManifestDir), physBounds) match {
+    loadManifest(spark, root, vDir) match {
       case None => readUpsertTable(spark, tableDir, asOfBatch)
-      case Some(files) =>
+      case Some(m) =>
+        val files = m.surviving(bounds.flatMap { case (c, lo, hi) =>
+          StatsManifest.Bound.open(toPhysicalName(cm, c), lo, hi) })
         val base = pinnedReader(spark, root).option("basePath", vDir)
         val scan =
           if (files.isEmpty)
@@ -1351,6 +1350,18 @@ object Ingest {
           applyDeletes(spark, root, vDir, scan).drop(UpsertBucketCol))
     }
   }
+
+  /** The stats manifest of version `vDir` of table `root`, loaded once
+    * ([[StatsManifest.load]]) with the schema the table pins, so no
+    * schema-inference job runs. `None` when the version has none.
+    */
+  private[graft] def loadManifest(spark: SparkSession, root: String,
+                                  vDir: String)
+                                 (implicit store: TableStore)
+      : Option[StatsManifest.Manifest] =
+    StatsManifest.load(spark, store.child(vDir, StatsManifest.ManifestDir),
+      pinnedSchema(root).flatMap(
+        StatsManifest.manifestSchema(tableLayout(root).sortCols, _)))
 
   /** Result of [[countWhere]]: the exact count plus how it was
     * answered — `metaFiles` contributed their manifest `n_rows` with
@@ -1364,16 +1375,18 @@ object Ingest {
     * INCLUSIVELY (`lo <= c AND c <= hi`), answered from the stats
     * manifest wherever metadata suffices — the metadata-only
     * aggregation every lakehouse planner special-cases, surfaced as an
-    * explicit op. Per manifest row (= data file) one of three cases:
+    * explicit op. The version's manifest is loaded once
+    * ([[loadManifest]]) and classifies each data file
+    * ([[StatsManifest.Manifest.classify]]) as one of three cases:
     *
     *   - range strictly INSIDE every bound and zero NULLs in every
     *     bound column → every row matches: contribute `n_rows`, read
     *     nothing (the NULL-count guard matters — min/max ignore NULLs,
     *     so "range inside" alone would overcount files holding NULL
     *     rows that fail the predicate);
-    *   - range DISJOINT from any bound (the [[readUpsertTableWhere]]
-    *     overlap test fails) → no row can match: contribute 0, read
-    *     nothing;
+    *   - range DISJOINT from any bound (the overlap test that
+    *     [[readUpsertTableWhere]] prunes with fails) → no row can
+    *     match: contribute 0, read nothing;
     *   - boundary (overlapping, not inside) → scan THAT FILE and count
     *     the predicate exactly.
     *
@@ -1386,16 +1399,14 @@ object Ingest {
     * fallback, never a wrong answer): no manifest (table never pinned
     * sortCols), a merge-on-read deletion vector on the snapshot
     * (vector-hidden rows are physically present, so file stats lie
-    * about LIVE rows), or a manifest predating the `n_rows` schema.
+    * about LIVE rows), or a file without `n_rows` (a manifest
+    * predating it, or a row carried from one).
     */
   def countWhere(spark: SparkSession, tableDir: String,
                  bounds: Seq[(String, Any, Any)] = Nil)
                 (implicit store: TableStore): MetaCount = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val vDir = resolveVersionDir(tableDir, None)
-    val manDir = store.child(vDir, StatsManifest.ManifestDir)
-    val mparts = parquetFiles(manDir)
-    val hasDv = store.exists(store.child(vDir, "_deletes"))
     // bounds arrive LOGICAL; the manifest and raw files are physical
     val cm = colMap(tableDir)
     val pBounds = bounds.map { case (c, lo, hi) =>
@@ -1409,47 +1420,30 @@ object Ingest {
       MetaCount(scan.filter(rowPred(bounds)).count(), 0L,
         scan.inputFiles.length.toLong, total)
     }
-    if (mparts.isEmpty || hasDv) return fallback
-    val manifest = spark.read.parquet(mparts: _*)
-    val mCols = manifest.columns.toSet
-    val statsOk = mCols.contains("n_rows") &&
-      pBounds.forall { case (c, _, _) =>
-        mCols.contains(s"min_$c") && mCols.contains(s"nulls_$c") }
-    if (!statsOk) return fallback
-    val overlap = coalesce(pBounds.map { case (c, lo, hi) =>
-      col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)
-    }.reduceOption(_ && _).getOrElse(lit(true)), lit(false))
-    val inside = coalesce(pBounds.map { case (c, lo, hi) =>
-      col(s"min_$c") >= lit(lo) && col(s"max_$c") <= lit(hi) &&
-        col(s"nulls_$c") === 0
-    }.reduceOption(_ && _).getOrElse(lit(true)), lit(false))
-    // one row per data file — the same driver-side bound the format's
-    // planning (survivingFiles, the sink's merge plan) already holds
-    val classified = manifest
-      .select(col("file"), col("n_rows"), overlap.as("ov"),
-        inside.as("ins"))
-      .collect()
-    // a manifest row carried from a pre-`n_rows` generation reads NULL
-    // through the unioned schema — metadata counting is then unsound
-    // for the whole snapshot (that file's rows would silently drop)
-    if (classified.exists(_.isNullAt(1))) return fallback
-    val metaRows = classified.iterator
-      .filter(_.getBoolean(3)).map(_.getLong(1)).sum
-    val metaFiles = classified.count(_.getBoolean(3))
-    val boundary = classified.iterator
-      .filter(r => r.getBoolean(2) && !r.getBoolean(3))
-      .map(r => StatsManifest.rebase(manDir, r.getString(0))).toSeq
-    val scanned =
-      if (boundary.isEmpty) 0L
-      else pinnedReader(spark, tableDir).option("basePath", vDir)
-        .parquet(boundary: _*).filter(rowPred(pBounds)).count()
-    MetaCount(metaRows + scanned, metaFiles.toLong, boundary.length.toLong,
-      classified.length.toLong)
+    val manifest =
+      if (store.exists(store.child(vDir, "_deletes"))) None
+      else loadManifest(spark, tableDir, vDir)
+    manifest match {
+      // a file without `n_rows` (a manifest predating it, or a row
+      // carried from one) would silently drop its rows from the count
+      case Some(m) if m.rows.forall(m.nRows(_).isDefined) =>
+        val (inside, boundary) = m.classify(pBounds.flatMap {
+          case (c, lo, hi) => StatsManifest.Bound.closed(c, lo, hi) })
+        val scanned =
+          if (boundary.isEmpty) 0L
+          else pinnedReader(spark, tableDir).option("basePath", vDir)
+            .parquet(boundary: _*).filter(rowPred(pBounds)).count()
+        MetaCount(inside.flatMap(m.nRows).sum + scanned, inside.size.toLong,
+          boundary.size.toLong, m.rows.size.toLong)
+      case _ => fallback
+    }
   }
 
   /** Whole-snapshot MIN/MAX of the table's pinned `sortCols`, answered
     * from the stats manifest ALONE — one row `(min_<c>, max_<c>, …)`
-    * folded over the per-file ranges, no data file opens (file min/max
+    * folded on the driver over the per-file ranges of the once-loaded
+    * manifest ([[loadManifest]]) and returned as a local frame, no
+    * data file opens (file min/max
     * ignore NULLs, so the fold equals the data's MIN/MAX under SQL
     * aggregate NULL semantics; an all-NULL column yields NULL exactly
     * as `min(c)` would). `None` when metadata cannot answer soundly:
@@ -1460,30 +1454,21 @@ object Ingest {
     */
   def minMaxMeta(spark: SparkSession, tableDir: String)
                 (implicit store: TableStore): Option[DataFrame] = {
-    import org.apache.spark.sql.functions.{max, min}
     val vDir = resolveVersionDir(tableDir, None)
-    val manDir = store.child(vDir, StatsManifest.ManifestDir)
-    val mparts = parquetFiles(manDir)
-    if (mparts.isEmpty ||
-        store.exists(store.child(vDir, "_deletes"))) None
-    else {
-      val manifest = spark.read.parquet(mparts: _*)
-      val sortCols = tableLayout(tableDir).sortCols
-      val cm = colMap(tableDir) // output aliases use LOGICAL names
-      def lg(c: String): String = toLogicalName(cm, c)
-      if (sortCols.isEmpty) None
-      else Some(manifest.agg(
-        min(org.apache.spark.sql.functions.col(s"min_${sortCols.head}"))
-          .as(s"min_${lg(sortCols.head)}"),
-        (sortCols.map(c =>
-          max(org.apache.spark.sql.functions.col(s"max_$c"))
-            .as(s"max_${lg(c)}")) ++
-          sortCols.tail.map(c =>
-            min(org.apache.spark.sql.functions.col(s"min_$c"))
-              .as(s"min_${lg(c)}"))): _*)
-        .select(sortCols.flatMap(c =>
-          Seq(org.apache.spark.sql.functions.col(s"min_${lg(c)}"),
-            org.apache.spark.sql.functions.col(s"max_${lg(c)}"))): _*))
+    val sortCols = tableLayout(tableDir).sortCols
+    if (sortCols.isEmpty || store.exists(store.child(vDir, "_deletes"))) None
+    else loadManifest(spark, tableDir, vDir).map { m =>
+      val cm = colMap(tableDir) // output names are LOGICAL
+      val cells = sortCols.flatMap { c =>
+        val lg = toLogicalName(cm, c)
+        Seq(StructField(s"min_$lg", m.schema(s"min_$c").dataType) ->
+            m.least(m.rows, c),
+          StructField(s"max_$lg", m.schema(s"max_$c").dataType) ->
+            m.greatest(m.rows, c))
+      }
+      spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row.fromSeq(cells.map(_._2))),
+        StructType(cells.map(_._1)))
     }
   }
 
@@ -3837,24 +3822,20 @@ object Ingest {
       f.copy(name = toLogicalName(cm, f.name))).toSeq)
   }
 
-  /** Data files of the snapshot a batch read serves (CURRENT /
-    * versionAsOf / tag), with the version dir they live under:
-    * `(vDir, files)`. Complete by the commit protocol; bucket-dir
-    * partitioning is invisible to direct file reads (the bucket id is
-    * a dir name, not a file column).
+  /** Data files of version dir `vDir` — the snapshot a batch read
+    * serves. Complete by the commit protocol; bucket-dir partitioning
+    * is invisible to direct file reads (the bucket id is a dir name,
+    * not a file column).
     */
-  private[sources] def snapshotFiles(root: String, asOf: Option[Long])
+  private[sources] def snapshotFiles(vDir: String)
                                     (implicit store: TableStore)
-      : (String, Seq[String]) = {
-    val vDir = resolveVersionDir(root, asOf)
-    val files = store.listNames(vDir)
+      : Seq[String] =
+    store.listNames(vDir)
       .filter(n => n.startsWith(s"$UpsertBucketCol="))
       .map(store.child(vDir, _))
       .flatMap(d => store.listNames(d)
         .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
         .map(store.child(d, _)))
-    (vDir, files)
-  }
 
   /** The snapshot's merge-on-read deletion-vector parquet files (key
     * lists the scan must anti-filter), empty when the version carries

@@ -1,7 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** File-level min/max data skipping — the manifest layer every
   * lakehouse table format (Delta/Iceberg/Hudi) puts between the query
@@ -23,6 +29,15 @@ import org.apache.spark.sql.functions._
   * snapshot reads), and a lost manifest degrades to a full scan, never
   * a wrong answer (pruning is sound: a file is skipped only when its
   * min/max range provably misses the predicate).
+  *
+  * Reading it is ONE loader: [[load]] collects a version's manifest
+  * once, and every consumer asks the loaded [[Manifest]] — bound
+  * pruning ([[prunedScan]], `Ingest.readUpsertTableWhere`, the V2
+  * scan's pushed filters), runtime join pruning, LIMIT / TopN
+  * truncation, and the metadata aggregates (the V2 aggregate fold,
+  * `Ingest.countWhere`, `Ingest.minMaxMeta`). A V2 scan loads it at
+  * most once. Only the writers' carry of the previous version's rows
+  * reads the part files otherwise.
   */
 object StatsManifest {
 
@@ -310,113 +325,252 @@ object StatsManifest {
     * pruning from the manifest, before any data (or footer) I/O. The
     * returned frame still holds all rows OF THOSE FILES: callers apply
     * their row-level predicate on top (skipping is a superset
-    * guarantee, like partition pruning).
-    *
-    * A file is kept iff `max_c >= lo AND min_c <= hi` for every bound —
-    * the bounding-box overlap test; an all-NULL stats column yields
-    * NULL min/max, which fails the overlap test exactly as 3-valued
-    * logic requires (no non-null row in that file can match a range).
-    * The only driver-side materialization is the surviving FILE LIST —
-    * bounded by file count, the same thing any manifest-based format's
-    * planner holds. An empty survivor set returns a typed empty scan.
+    * guarantee, like partition pruning). An empty survivor set returns
+    * a typed empty scan.
     */
   def prunedScan(spark: SparkSession, path: String,
                  bounds: Seq[(String, Any, Any)])
                 (implicit store: TableStore): DataFrame = {
-    // the manifest dir is underscore-prefixed so TABLE reads never see
-    // it; reading it back therefore names its part files explicitly
-    // (a leading-underscore path handed to the reader is otherwise
-    // subject to the same hidden-file filtering that protects it)
-    val files = survivingFiles(spark, store.child(path, ManifestDir), bounds)
+    val files = load(spark, store.child(path, ManifestDir), None)
       .getOrElse(throw new IllegalArgumentException(
         s"no stats manifest under $path/$ManifestDir — write the table " +
           "with writeWithStats"))
+      .surviving(bounds.flatMap { case (c, lo, hi) => Bound.closed(c, lo, hi) })
     if (files.isEmpty)
       spark.read.parquet(path).filter(lit(false))
     else
       spark.read.option("basePath", path).parquet(files: _*)
   }
 
-  /** The bounding-box overlap test against a manifest directory: the
-    * data files whose `[min_c, max_c]` range can contain a row
-    * matching every `(c, lo, hi)` bound. `None` when no manifest
-    * exists (caller decides whether that degrades to a full scan or
-    * fails). Shared by [[prunedScan]] and the upsert table's
-    * stats-pruned read (`Ingest.readUpsertTableWhere`). The only
-    * driver-side materialization is the surviving file list.
+  /** One bound of a file-skipping probe: `col op value`, `op` one of
+    * `=`, `>=`, `>`, `<=`, `<`, or `notnull` (no value). `col` names
+    * the manifest's (physical) stats column. `value` is an external
+    * Scala value compared through `lit`, so it coerces against the
+    * stats column exactly as a Spark predicate would (a `Long` on an
+    * INT column, a `Timestamp` on an INT96 one).
     */
-  def survivingFiles(spark: SparkSession, manifestDir: String,
-                     bounds: Seq[(String, Any, Any)])
-                    (implicit store: TableStore): Option[Seq[String]] =
-    survivingFilesOpt(spark, manifestDir,
-      bounds.map { case (c, lo, hi) => (c, Some(lo), Some(hi)) })
+  final case class Bound(col: String, op: String, value: Any = null)
 
-  /** [[survivingFiles]] with OPEN-ended bounds: `None` for an endpoint
-    * means unbounded on that side (`c >= lo` alone, or `c <= hi`
-    * alone). The DataSource filter pushdown needs this shape — a
-    * pushed `date >= x` has no upper endpoint but still skips every
-    * file whose `max_date < x`. Same superset guarantee: a file whose
-    * min/max are NULL (all rows NULL in `c`) is skipped, which is
-    * sound because a NULL never satisfies a range predicate.
+  object Bound {
+    /** `lo <= c <= hi`. */
+    def closed(c: String, lo: Any, hi: Any): Seq[Bound] =
+      Seq(Bound(c, ">=", lo), Bound(c, "<=", hi))
+
+    /** [[closed]] with OPEN ends: `None` leaves that side unbounded
+      * (`c >= lo` alone still skips every file whose max is below lo).
+      */
+    def open(c: String, lo: Option[Any], hi: Option[Any]): Seq[Bound] =
+      lo.map(Bound(c, ">=", _)).toSeq ++ hi.map(Bound(c, "<=", _))
+  }
+
+  /** Load the manifest under `manifestDir`: ONE collect of its rows,
+    * each `file` rebased onto the manifest's own location ([[rebase]])
+    * here, once. Given `schema` ([[manifestSchema]] over the table's
+    * pinned schema) no schema-inference job runs; a column a part file
+    * lacks then reads NULL, exactly like a row carried from an older
+    * manifest generation. `None` when no manifest exists.
     */
-  def survivingFilesOpt(spark: SparkSession, manifestDir: String,
-                        bounds: Seq[(String, Option[Any], Option[Any])])
-                       (implicit store: TableStore): Option[Seq[String]] = {
-    val mparts = store.listNames(manifestDir)
+  def load(spark: SparkSession, manifestDir: String,
+           schema: Option[StructType])
+          (implicit store: TableStore): Option[Manifest] = {
+    // the manifest dir is underscore-prefixed so TABLE reads never see
+    // it; reading it back therefore names its part files explicitly
+    val parts = store.listNames(manifestDir)
       .filter(_.endsWith(".parquet")).map(store.child(manifestDir, _))
-    if (mparts.isEmpty) None
+    if (parts.isEmpty) None
     else {
-      val manifest = spark.read.parquet(mparts: _*)
-      val keep = bounds.foldLeft(manifest) { case (m, (c, lo, hi)) =>
-        val m1 = lo.map(v => m.filter(col(s"max_$c") >= lit(v))).getOrElse(m)
-        hi.map(v => m1.filter(col(s"min_$c") <= lit(v))).getOrElse(m1)
+      val df = schema.fold(spark.read)(spark.read.schema(_)).parquet(parts: _*)
+      val sch = StructType(df.schema.fields.map(_.copy(nullable = true)))
+      val fi = sch.fieldIndex("file")
+      Some(new Manifest(spark, sch, df.collect().toSeq.map { r =>
+        val vs = r.toSeq.toArray
+        vs(fi) = rebase(manifestDir, r.getString(fi))
+        new GenericRowWithSchema(vs, sch): Row
+      }))
+    }
+  }
+
+  /** `files` restricted to `keep`, compared in normalized path space (a
+    * recorded path may be a URI where the store lists plain paths).
+    */
+  def retain(files: Seq[String], keep: Seq[String]): Seq[String] = {
+    val k = keep.map(key).toSet
+    files.filter(f => k(key(f)))
+  }
+
+  private def key(p: String): String =
+    new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  /** Driver ordering of a stats column's external values. */
+  private def ordering(dt: DataType): Ordering[Any] =
+    Ordering.by[Any, Any](CatalystTypeConverters
+      .createToCatalystConverter(dt))(TypeUtils.getInterpretedOrdering(dt))
+
+  /** One version's manifest, loaded once ([[load]]): every pruning,
+    * truncation and metadata-aggregate question a scan asks is answered
+    * from these rows on the driver — one row per data file. Bound
+    * predicates run as Column expressions over the rows as a local
+    * relation: Spark folds a Filter/Project over a LocalRelation on the
+    * driver, so no job runs, and a bound coerces exactly as a Spark
+    * predicate would.
+    *
+    * Soundness: a file is skipped only when its stats prove no row
+    * matches, and answered from metadata only when they prove every
+    * row does. The min/max of every stats column are always recorded;
+    * null counts and row counts arrived with later manifest
+    * generations, so a file without them ([[nRows]] / [[nulls]]
+    * `None`) is never answered from metadata.
+    */
+  final class Manifest private[StatsManifest] (spark: SparkSession,
+                                               val schema: StructType,
+                                               val rows: Seq[Row]) {
+    private val idx = schema.fieldNames.zipWithIndex.toMap
+
+    /** The rows as a local relation. */
+    private lazy val frame: DataFrame =
+      spark.createDataFrame(rows.asJava, schema)
+
+    def file(r: Row): String = r.getString(idx("file"))
+
+    def files: Seq[String] = rows.map(file)
+
+    private def count(r: Row, name: String): Option[Long] =
+      idx.get(name).filterNot(r.isNullAt).map(r.getLong)
+
+    def nRows(r: Row): Option[Long] = count(r, "n_rows")
+
+    def nulls(r: Row, c: String): Option[Long] = count(r, s"nulls_$c")
+
+    /** Whether any file records the count column `name`. */
+    def records(name: String): Boolean = rows.exists(count(_, name).isDefined)
+
+    private def countCol(name: String): Column =
+      if (idx.contains(name)) col(name) else lit(null)
+
+    /** The ONE overlap/inside test of a bound against a file's stats:
+      * `(overlaps, inside)`. NULL min/max mean the file holds no
+      * non-NULL value in the column, which no comparison matches; an
+      * unrecorded null count never proves inside.
+      */
+    private def test(b: Bound): (Column, Column) = {
+      val (mn, mx) = (col(s"min_${b.col}"), col(s"max_${b.col}"))
+      val nl = countCol(s"nulls_${b.col}")
+      val v = lit(b.value)
+      val noNulls = nl === 0L
+      val (overlaps, inside) = b.op match {
+        case "=" => (mn <= v && mx >= v, mn === v && mx === v && noNulls)
+        case ">=" => (mx >= v, mn >= v && noNulls)
+        case ">" => (mx > v, mn > v && noNulls)
+        case "<=" => (mn <= v, mx <= v && noNulls)
+        case "<" => (mn < v, mx < v && noNulls)
+        case "notnull" => (!(nl === countCol("n_rows")), noNulls)
       }
-      Some(keep.select("file").collect()
-        .map(r => rebase(manifestDir, r.getString(0))).toSeq)
+      (coalesce(overlaps, lit(b.op == "notnull")), coalesce(inside, lit(false)))
     }
-  }
 
-  /** Per-file row counts from the manifest — the limit-pushdown
-    * truncation's coverage ledger. `None` when no manifest exists or
-    * it predates the `n_rows` column (pre-upgrade manifests must
-    * DECLINE truncation, not guess).
-    */
-  def fileRowCounts(spark: SparkSession, manifestDir: String)
-                   (implicit store: TableStore): Option[Map[String, Long]] = {
-    if (!store.isDirectory(manifestDir)) return None
-    val mparts = store.listNames(manifestDir)
-      .filter(_.endsWith(".parquet")).map(store.child(manifestDir, _))
-    if (mparts.isEmpty) None
-    else {
-      val m = spark.read.parquet(mparts: _*)
-      if (!m.schema.fieldNames.contains("n_rows")) None
-      else Some(m.select("file", "n_rows").collect()
-        .map(r => rebase(manifestDir, r.getString(0)) -> r.getLong(1)).toMap)
+    private def all(cs: Seq[Column]): Column =
+      cs.reduceOption(_ && _).getOrElse(lit(true))
+
+    private def filesWhere(keep: Column): Seq[String] =
+      frame.filter(keep).select("file").collect().map(_.getString(0)).toSeq
+
+    /** The files whose stats can hold a row matching every bound. */
+    def surviving(bounds: Seq[Bound]): Seq[String] =
+      if (bounds.isEmpty) files else filesWhere(all(bounds.map(test(_)._1)))
+
+    /** The files whose `[min_c, max_c]` can hold ANY of `values` — the
+      * point-set test runtime join pruning ships its broadcast keys to
+      * (tighter than the values' envelope when the set is sparse).
+      */
+    def survivingIn(c: String, values: Seq[Any]): Seq[String] =
+      filesWhere(values.map(v => test(Bound(c, "=", v))._1)
+        .reduceOption(_ || _).getOrElse(lit(false)))
+
+    /** Every file classified against all of `bounds`: the rows of the
+      * files wholly INSIDE (every row matches — metadata answers them)
+      * and the BOUNDARY files that must be read. Excluded files are in
+      * neither. With no bounds every file is inside.
+      */
+    def classify(bounds: Seq[Bound]): (Seq[Row], Seq[String]) = {
+      val tests = bounds.map(test)
+      val flags = frame.select(all(tests.map(_._1)), all(tests.map(_._2)))
+        .collect()
+      val (inside, boundary) = rows.zip(flags)
+        .filter(_._2.getBoolean(0)).partition(_._2.getBoolean(1))
+      (inside.map(_._1), boundary.map(p => file(p._1)))
     }
-  }
 
-  /** Point-set overlap test: the data files whose `[min_c, max_c]` box
-    * can contain ANY of `values` (per-value containment OR'd, tighter
-    * than the single `[min(values), max(values)]` envelope when the
-    * set is sparse across a sorted layout). Runtime join pruning ships
-    * its broadcast-collected key set here — values are bounded by the
-    * broadcast threshold by construction. Same superset guarantee as
-    * [[survivingFilesOpt]]; `None` when no manifest exists.
-    */
-  def survivingFilesIn(spark: SparkSession, manifestDir: String,
-                       column: String, values: Seq[Any])
-                      (implicit store: TableStore): Option[Seq[String]] = {
-    val mparts = store.listNames(manifestDir)
-      .filter(_.endsWith(".parquet")).map(store.child(manifestDir, _))
-    if (mparts.isEmpty) None
-    else {
-      val manifest = spark.read.parquet(mparts: _*)
-      val hit = values.map(v =>
-          col(s"min_$column") <= lit(v) && col(s"max_$column") >= lit(v))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      Some(manifest.filter(hit)
-        .select("file").collect()
-        .map(r => rebase(manifestDir, r.getString(0))).toSeq)
+    /** LIMIT coverage: the sorted prefix of `files` whose row counts
+      * reach `l`; all of `files` when a file on the way has no manifest
+      * row or no row count.
+      */
+    def limitPrefix(files: Seq[String], l: Long): Seq[String] = {
+      val counts = rows.map(r => key(file(r)) -> nRows(r)).toMap
+      val keep = Seq.newBuilder[String]
+      var acc = 0L
+      val it = files.sorted.iterator
+      while (it.hasNext && acc < l) {
+        val f = it.next()
+        counts.get(key(f)).flatten match {
+          case Some(n) => keep += f; acc += n
+          case None => return files
+        }
+      }
+      keep.result()
+    }
+
+    /** ORDER BY c LIMIT k coverage: order the `files` by their leading
+      * bound (min ascending / max descending), take the prefix whose
+      * row counts reach k, and keep every file whose bound can still
+      * beat the prefix's worst — a superset of the top-k rows whatever
+      * the later tiebreak columns do. All of `files` unless each has a
+      * manifest row with min, max and a ZERO null count in `c` (NULL
+      * ordering would put unknown rows at one end). An unrecorded row
+      * count adds nothing to the prefix, which only lengthens it.
+      */
+    def topnPrefix(files: Seq[String], c: String, asc: Boolean,
+                   k: Long): Seq[String] = {
+      val (mn, mx) = (idx.get(s"min_$c"), idx.get(s"max_$c")) match {
+        case (Some(a), Some(b)) => (a, b)
+        case _ => return files
+      }
+      val wanted = files.map(key).toSet
+      val cand = rows.filter(r => wanted(key(file(r))))
+      if (cand.isEmpty || cand.size != wanted.size || cand.exists(r =>
+          r.isNullAt(mn) || r.isNullAt(mx) || !nulls(r, c).contains(0L)))
+        return files
+      val ord = ordering(schema(mn).dataType)
+      val lead = if (asc) mn else mx
+      val sorted = cand.sortBy(_.get(lead))(if (asc) ord else ord.reverse)
+      var before = 0L
+      val prefix = sorted.takeWhile { r =>
+        val short = before < k
+        before += nRows(r).getOrElse(0L)
+        short
+      }
+      val keep =
+        if (asc) {
+          val b = prefix.map(_.get(mx)).max(ord)
+          cand.filter(r => ord.lteq(r.get(mn), b))
+        } else {
+          val b = prefix.map(_.get(mn)).min(ord)
+          cand.filter(r => ord.gteq(r.get(mx), b))
+        }
+      retain(files, keep.map(file))
+    }
+
+    /** The least `min_<c>` / greatest `max_<c>` over `rs`, NULLs
+      * skipped; NULL when no file holds a non-NULL value (SQL MIN/MAX).
+      */
+    def least(rs: Seq[Row], c: String): Any = extreme(rs, s"min_$c", _.min(_))
+
+    def greatest(rs: Seq[Row], c: String): Any = extreme(rs, s"max_$c", _.max(_))
+
+    private def extreme(rs: Seq[Row], name: String,
+                        pick: (Seq[Any], Ordering[Any]) => Any): Any = {
+      val i = idx(name)
+      val vs = rs.filterNot(_.isNullAt(i)).map(_.get(i))
+      if (vs.isEmpty) null else pick(vs, ordering(schema(i).dataType))
     }
   }
 }

@@ -42,41 +42,20 @@ class DedupClusterSpec extends AnyFunSuite {
     // plus per-jump probes (a job storm that was ~1/3 of bench time);
     // the rewrite's contract is ONE job per round + setup/resolution.
     // Guard it with a listener so a regression fails loudly.
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val group = "cc-job-count-guard"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // scope to this test's job group: sbt may run other suites
-        // concurrently on the shared session, and their jobs must not
-        // inflate the count
-        if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id")) {
-          counter.incrementAndGet()
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "cc job-count guard")
-    try {
+    // scoped to this test's job group: sbt may run other suites
+    // concurrently on the shared session, and their jobs must not
+    // inflate the count
+    val jobs = org.apache.spark.GraftTestAccess.jobsOf(spark.sparkContext) {
       // 32-node path: adversarial chain shape, ~log rounds
       val pairs = pairsDf((0L until 31L).map(i => (i, i + 1)): _*)
       val comps = Dedup.connectedComponents(pairs)
       assert(comps.count() === 32)
-      // listener events are async; drain the bus deterministically
-      // (fixed sleeps both undercount under load and add latency)
-      org.apache.spark.GraftTestAccess.waitUntilListenerBusEmpty(
-        spark.sparkContext, 30000)
-      // budget: 1 initial count + <=rounds counts + resolution rounds +
-      // final checkpoint + the consuming count; a path of 32 closes in
-      // ~4 rounds with 2 jumps/round, so 20 is generous — the r2 storm
-      // was 35+ on this shape
-      assert(counter.get() <= 20, s"jobs=${counter.get()}")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
+    // budget: 1 initial count + <=rounds counts + resolution rounds +
+    // final checkpoint + the consuming count; a path of 32 closes in
+    // ~4 rounds with 2 jumps/round, so 20 is generous — the r2 storm
+    // was 35+ on this shape
+    assert(jobs.size <= 20, s"jobs=${jobs.size}")
   }
 
   test("durable checkpointing changes nothing but the lineage") {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThanOrEqual}
 import graft.sources.{GraftSource, GraftSourceOptions, Ingest, TableStore}
+import graft.sources.StatsManifest.Bound
 import java.nio.file.Files
 
 /** The `graft` DataSource registration — every standard Spark verb
@@ -74,15 +75,15 @@ class GraftSourceSpec extends AnyFunSuite {
     val dir = tmp() + "/t"
     buildTable(dir)
 
-    // unit level: the filter → open-bound translation
+    // unit level: the filter → bound translation
     val bounds = GraftSourceOptions.boundsFromFilters(
       Seq(GreaterThanOrEqual("v", 21), LessThanOrEqual("v", 61),
         EqualTo("s", "B"), // not a stat column → no bound
-        GreaterThan("v", 20), // strict relaxes to inclusive lo
+        GreaterThan("v", 20), // strict stays strict
         In("v", Array(21, 61)), // IN-list → no bound (row filter only)
         IsNotNull("v")), statCols = Set("v"))
-    assert(bounds === Seq(
-      ("v", Some(21), None), ("v", None, Some(61)), ("v", Some(20), None)))
+    assert(bounds === Seq(Bound("v", ">=", 21), Bound("v", "<=", 61),
+      Bound("v", ">", 20), Bound("v", "notnull")))
 
     // end to end: same rows as the unpruned read under the predicate
     val got = spark.read.format("graft").load(dir)
@@ -94,12 +95,9 @@ class GraftSourceSpec extends AnyFunSuite {
 
     // the bound genuinely skips files: a point probe survives fewer
     // files than the snapshot holds
-    val vDir = Ingest.snapshotVersionDir(dir)
-    val all = graft.sources.StatsManifest.survivingFilesOpt(spark,
-      store.child(vDir, graft.sources.StatsManifest.ManifestDir), Nil).get
-    val hit = graft.sources.StatsManifest.survivingFilesOpt(spark,
-      store.child(vDir, graft.sources.StatsManifest.ManifestDir),
-      Seq(("v", Some(70), Some(70)))).get
+    val m = Ingest.loadManifest(spark, dir, Ingest.snapshotVersionDir(dir)).get
+    val all = m.files
+    val hit = m.surviving(Bound.open("v", Some(70), Some(70)))
     assert(hit.nonEmpty && hit.size < all.size,
       s"expected a strict prune: ${hit.size} of ${all.size}")
   }

@@ -1527,7 +1527,6 @@ abstract class IngestSuiteBase extends AnyFunSuite {
 
   test("a steady-state sorted commit runs at most 10 Spark jobs, all labeled") {
     import spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val table = tmp() + "/job_budget"
     // batch ids no other suite uses: the sink's side threads carry no
     // job group, so their jobs are matched by their `b=<id>` label
@@ -1539,30 +1538,12 @@ abstract class IngestSuiteBase extends AnyFunSuite {
     // the first commit after the bootstrap, then the measured one:
     // updates, inserts and deletes in every bucket
     up(7700001L, (1L to 2000L by 5).map(i => (i, i + 0.5, false)))
-    val group = s"sink-job-budget-${System.nanoTime()}"
     val batchId = 7700002L
-    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        def prop(k: String): String = Option(js.properties)
-          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
-        val desc = prop("spark.job.description")
-        if (prop("spark.jobGroup.id") == group || desc.endsWith(s" b=$batchId"))
-          descs.add(desc)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "sink job budget")
-    try {
+    val jobs = org.apache.spark.GraftTestAccess.jobsOf(spark.sparkContext,
+        alsoMatch = _.endsWith(s" b=$batchId")) {
       up(batchId, (3L to 2000L by 7).map(i => (i, -i.toDouble, i % 3 == 0)) ++
         (2001L to 2200L).map(i => (i, i.toDouble, false)))
-      org.apache.spark.GraftTestAccess.waitUntilListenerBusEmpty(
-        spark.sparkContext, 30000)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    val jobs = descs.toArray.toSeq.map(_.toString)
+    }.map(_.description)
     val label = s"sink:[a-z-]+ b=$batchId".r
     assert(jobs.forall(label.matches), s"unlabeled sink jobs: $jobs")
     assert(jobs.size <= 10, s"${jobs.size} jobs: ${jobs.sorted.mkString(", ")}")
