@@ -1032,8 +1032,7 @@ object Changes {
       FROM live WHERE o_custkey NOT IN (SELECT o_custkey FROM victims)
       GROUP BY o_orderpriority ORDER BY prio"""),
     (spark, dir) => {
-      import graft.sources.{Ingest, TableStore}
-      val store = TableStore.local
+      import graft.sources.{Ingest, Snapshot}
       val table = buildCdcUpsertTable(spark, dir,
         graft.Scratch.dir("upsert-compact"), n = 3, changeFeed = false,
         sortCols = Seq("o_orderdate"), filesPerBucket = 6)
@@ -1046,17 +1045,14 @@ object Changes {
         keepVersions = 3, deleteCol = Some("_deleted"),
         lazyDeletes = true, sortCols = Seq("o_orderdate"),
         filesPerBucket = 6)(victims, 3L)
-      def curDeletes: String = {
-        val cur = store.read(store.child(table, "CURRENT")).get.trim
-        store.child(store.child(table, cur), "_deletes")
-      }
-      val debtBefore = store.isDirectory(curDeletes)
+      def debt: Boolean = Snapshot.resolve(table).hasDeletes
+      val debtBefore = debt
       // no bucket holds > 6 files (filesPerBucket), so the ONLY
       // rewrite driver at this threshold is the deletion vector
       val rewritten = Ingest.compactUpsertTable(spark, table,
         filesOver = 6)
       val selective = rewritten.nonEmpty && rewritten.size < 8
-      val drained = debtBefore && !store.isDirectory(curDeletes)
+      val drained = debtBefore && !debt
       val noop = Ingest.compactUpsertTable(spark, table, filesOver = 6)
         .isEmpty
       require(selective && drained && noop,
@@ -1369,7 +1365,7 @@ object Changes {
       FROM ranked WHERE rn = 1 AND op <> 'D'
       ORDER BY o_custkey"""),
     (spark, dir) => {
-      import graft.sources.Ingest
+      import graft.sources.{Ingest, Snapshot}
       val n = 4
       // derive-once fixture (r16): the 5-batch lazy-delete fold is
       // setup; OPTIMIZE below is what the row times, on a fresh copy
@@ -1394,11 +1390,9 @@ object Changes {
       StreamRun.withStreamSizing(spark) {
         Ingest.optimizeUpsertTable(spark, table)
       }
-      def cur(): java.io.File = new java.io.File(table,
-        new String(java.nio.file.Files.readAllBytes(
-          new java.io.File(table, "CURRENT").toPath)).trim)
-      val genServed = cur().getName == s"v_$n.1"
-      val debtCleared = !new java.io.File(cur(), "_deletes").exists()
+      val snap = Snapshot.resolve(table)
+      val genServed = snap.name == s"v_$n.1"
+      val debtCleared = !snap.hasDeletes
       val lo = java.sql.Timestamp.valueOf("1999-01-01 00:00:00")
       val hi = java.sql.Timestamp.valueOf("2000-01-01 00:00:00")
       val stillPrunes = Ingest.readUpsertTableWhere(spark, table,
@@ -2679,15 +2673,14 @@ object Changes {
         AND o_orderdate < TIMESTAMP '2000-01-01 00:00:00'
       GROUP BY o_orderpriority ORDER BY prio"""),
     (spark, dir) => {
-      import graft.sources.{Ingest, StatsManifest, TableStore}
+      import graft.sources.{Snapshot, StatsManifest, TableStore}
       implicit val store: TableStore = TableStore.local
       val table = sharedSourceTable(spark, dir)
       val lo = java.sql.Timestamp.valueOf("1999-01-01 00:00:00")
       val hi = java.sql.Timestamp.valueOf("2000-01-01 00:00:00")
       // in-query contract: the open bounds the source pushes from this
       // WHERE clause strictly prune the snapshot's file list
-      val m = Ingest.loadManifest(spark, table,
-        Ingest.snapshotVersionDir(table)).get
+      val m = Snapshot.resolve(table).manifest(spark).get
       val all = m.files.size
       val hit = m.surviving(
         StatsManifest.Bound.open("o_orderdate", Some(lo), Some(hi))).size
@@ -2806,7 +2799,7 @@ object Changes {
       FROM ranked WHERE rn = 1 AND op <> 'D'
       ORDER BY odate, custkey LIMIT 10"""),
     (spark, dir) => {
-      import graft.sources.Ingest
+      import graft.sources.Snapshot
       import graft.sources.TableStore
       implicit val store: TableStore = TableStore.local
       val table = sharedSourceTable(spark, dir)
@@ -2829,8 +2822,8 @@ object Changes {
           fp.files.length
         case _ => 1
       }.sum
-      val total = Ingest.loadManifest(spark, table,
-        Ingest.snapshotVersionDir(table)).map(_.files.size).getOrElse(0)
+      val total = Snapshot.resolve(table).manifest(spark)
+        .map(_.files.size).getOrElse(0)
       require(total > 0 && nFiles < total,
         s"topN read $nFiles of $total files — no truncation engaged")
       df

@@ -257,37 +257,31 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
     aggs.isDefined
   }
 
-  // the served version, resolved once, and its stats manifest, loaded
-  // at most once: on first use by aggregate analysis or by the scan
-  // built here (pruning, LIMIT/TopN truncation, the aggregate fold)
-  private lazy val vDir: String = Ingest.resolveVersionDir(opts.path,
-    opts.tag.map(t => Ingest.tagBatch(opts.path, t)).orElse(opts.versionAsOf))
-  private lazy val manifest: Option[StatsManifest.Manifest] =
-    Ingest.loadManifest(spark, opts.path, vDir)
+  // the served snapshot, resolved once on first use by aggregate
+  // analysis or by the scan built here (its manifest loads at most once)
+  private lazy val snap: Snapshot =
+    Snapshot.resolve(opts.path, opts.versionAsOf, opts.tag)
 
   private def analyzeAggregation(a: Aggregation): Option[Seq[MetaAgg]] = {
     if (opts.readMode != "snapshot" || opts.tag.nonEmpty) return None
     if (a.groupByExpressions.nonEmpty) return None
     if (a.aggregateExpressions.isEmpty) return None
-    val dir =
-      try vDir
+    val s =
+      try snap
       catch { case scala.util.control.NonFatal(_) => return None }
-    if (Ingest.deletionVectorFiles(dir).nonEmpty) return None
-    val m = manifest.getOrElse(return None)
+    if (s.hasDeletes) return None
+    val m = s.manifest(spark).getOrElse(return None)
     if (!m.records("n_rows")) return None
-    val cm = Ingest.colMap(opts.path)
-    val statCols = Ingest.tableSortColumns(opts.path)
-      .map(Ingest.toPhysicalName(cm, _)).toSet
-      .filter(c => m.records(s"nulls_$c"))
+    val statCols = s.layout.sortCols.toSet.filter(c => m.records(s"nulls_$c"))
     def physOf(r: NamedReference): Option[String] = r.fieldNames() match {
-      case Array(one) => Some(Ingest.toPhysicalName(cm, one))
+      case Array(one) => Some(s.physicalName(one))
       case _ => None
     }
     // pushed filters must ALL be stat-column bounds (the manifest can
     // then classify every file); Spark only offers aggregate pushdown
     // when every filter was claimed, so `pushed` is the full set
     if (GraftSourceOptions.boundsFromFilters(pushed, statCols,
-        Ingest.toPhysicalName(cm, _)).length != pushed.length) return None
+        s.physicalName).length != pushed.length) return None
     val calls: Seq[Option[MetaAgg]] = a.aggregateExpressions.toSeq.map {
       case _: CountStar => Some(MetaCountStar())
       case c: Count if !c.isDistinct =>
@@ -318,7 +312,7 @@ private[sources] final class GraftScanBuilder(spark: SparkSession,
 
   override def build(): Scan =
     new GraftScan(spark, opts, tableSchema, required, pushed.toIndexedSeq,
-      aggs, limit, topn, vDir, manifest)
+      aggs, limit, topn, snap)
 }
 
 /** V1 `Filter` → bound catalyst expression, by POSITION in the scan's
@@ -411,8 +405,7 @@ private[sources] final class GraftScan(spark: SparkSession,
                                        aggs: Option[Seq[MetaAgg]],
                                        limit: Option[Int],
                                        topn: Option[(String, Boolean, Int)],
-                                       snapshotDir: => String,
-                                       manifest: => Option[StatsManifest.Manifest])
+                                       snap: => Snapshot)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
   private implicit def store: TableStore = opts.store
@@ -465,12 +458,6 @@ private[sources] final class GraftScan(spark: SparkSession,
         .find(pf => Ingest.toLogicalName(cm, pf.name) == f.name)
         .getOrElse(f.copy(name = physName(f.name))) }.toSeq)
 
-  /** The table's keys (physical), force-read when a deletion vector
-    * must anti-filter rows the projection would not otherwise carry.
-    */
-  private lazy val physKeys: Seq[String] =
-    Ingest.tableLayout(root).keys
-
   override def readSchema(): StructType = aggs match {
     case Some(as) => StructType(as.map(_.outField))
     case None => required
@@ -497,7 +484,7 @@ private[sources] final class GraftScan(spark: SparkSession,
     override def sizeInBytes(): OptionalLong =
       if (opts.readMode != "snapshot") OptionalLong.empty()
       else try {
-        val hp = new Path(snapshotDir)
+        val hp = new Path(snap.versionDir)
         OptionalLong.of(hp.getFileSystem(
           spark.sparkContext.hadoopConfiguration).getContentSummary(hp)
           .getLength)
@@ -506,28 +493,29 @@ private[sources] final class GraftScan(spark: SparkSession,
   }
 
   // ---- file resolution ------------------------------------------------
-  private lazy val dataFilePaths: (Option[String], Seq[String]) =
+  private lazy val dataFilePaths: Seq[String] =
     opts.readMode match {
       case "changes" =>
-        (None, Ingest.changeSliceFiles(root,
+        Ingest.changeSliceFiles(root,
           opts.startingBatch.getOrElse(0L),
-          opts.endingBatch.getOrElse(Long.MaxValue)))
-      case "quarantine" => (None, Ingest.quarantineFiles(root))
+          opts.endingBatch.getOrElse(Long.MaxValue))
+      case "quarantine" => Ingest.quarantineFiles(root)
       case _ =>
-        val files = Ingest.snapshotFiles(snapshotDir)
         // stats pruning: pushed bounds → surviving-file list, a strict
         // SUPERSET of the matching rows (the reader re-applies exactly)
         val bounds = GraftSourceOptions.boundsFromFilters(pushed, statCols,
           physName)
-        val pruned =
-          if (bounds.isEmpty) files
-          else manifest.fold(files)(m =>
-            StatsManifest.retain(files, m.surviving(bounds)))
-        (Some(snapshotDir), pruned)
+        if (bounds.isEmpty) snap.dataFiles
+        else manifest.fold(snap.dataFiles)(m =>
+          StatsManifest.retain(snap.dataFiles, m.surviving(bounds)))
     }
 
-  private lazy val statCols: Set[String] =
-    Ingest.tableSortColumns(root).map(physName).toSet
+  private def manifest: Option[StatsManifest.Manifest] = snap.manifest(spark)
+
+  /** The snapshot's stats columns (physical; stats columns cannot be
+    * dropped, so each is live).
+    */
+  private lazy val statCols: Set[String] = snap.layout.sortCols.toSet
 
   /** Rewrite a pushed filter's column names logical → physical for the
     * parquet reader's pushed filters and the row-level re-application.
@@ -583,7 +571,7 @@ private[sources] final class GraftScan(spark: SparkSession,
 
   override def filterAttributes(): Array[NamedReference] =
     if (opts.readMode != "snapshot" || aggs.nonEmpty) Array.empty
-    else Ingest.tableSortColumns(root)
+    else snap.sortCols
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
       .toArray
 
@@ -620,7 +608,7 @@ private[sources] final class GraftScan(spark: SparkSession,
   private def limitTruncate(files: Seq[String]): Seq[String] = limit match {
     case Some(l) if pushed.isEmpty && runtimeFilters.isEmpty &&
         opts.readMode == "snapshot" &&
-        Ingest.deletionVectorFiles(snapshotDir).isEmpty =>
+        !snap.hasDeletes =>
       manifest.fold(files)(_.limitPrefix(files, l))
     case _ => files
   }
@@ -633,7 +621,7 @@ private[sources] final class GraftScan(spark: SparkSession,
     case Some((logical, asc, k)) if pushed.isEmpty &&
         runtimeFilters.isEmpty && opts.readMode == "snapshot" &&
         statCols.contains(physName(logical)) &&
-        Ingest.deletionVectorFiles(snapshotDir).isEmpty =>
+        !snap.hasDeletes =>
       manifest.fold(files)(_.topnPrefix(files, physName(logical), asc, k))
     case _ => files
   }
@@ -642,7 +630,7 @@ private[sources] final class GraftScan(spark: SparkSession,
   override def planInputPartitions(): Array[InputPartition] = aggs match {
     case Some(as) => Array(planAggPartition(as))
     case None => packPartitions(listWithSizes(
-      topnTruncate(limitTruncate(runtimePruned(dataFilePaths._2)))))
+      topnTruncate(limitTruncate(runtimePruned(dataFilePaths)))))
   }
 
   override def createReaderFactory(): PartitionReaderFactory = aggs match {
@@ -652,8 +640,11 @@ private[sources] final class GraftScan(spark: SparkSession,
 
   private[sources] def readerFactory(streaming: Boolean)
       : PartitionReaderFactory = {
-    val (vDirOpt, _) = if (streaming) (None, Nil) else dataFilePaths
-    val dvFiles = vDirOpt.toSeq.flatMap(Ingest.deletionVectorFiles)
+    val dvFiles =
+      if (streaming || opts.readMode != "snapshot") Nil else snap.deletionVector
+    // the table's keys (physical), force-read when the vector must
+    // anti-filter rows the projection would not otherwise carry
+    lazy val physKeys = snap.layout.keys
     // the DV anti-filter needs the key columns and the claimed filters
     // need their referenced columns even when the projection pruned
     // them away — extend the physical read, project back off after

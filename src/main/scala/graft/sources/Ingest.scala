@@ -250,7 +250,7 @@ object Ingest {
     * state — so a streaming writer's monotone batchIds can never
     * collide with maintenance commits.
     */
-  private def parseVersion(name: String): Option[(Long, Int)] =
+  private[sources] def parseVersion(name: String): Option[(Long, Int)] =
     if (!name.startsWith("v_")) None
     else name.stripPrefix("v_").split("\\.", 2) match {
       case Array(b) => scala.util.Try(b.toLong).toOption.map(_ -> 0)
@@ -264,13 +264,13 @@ object Ingest {
   private def versionName(b: Long, gen: Int): String =
     if (gen == 0) s"v_$b" else s"v_$b.$gen"
 
-  private def readCurrentName(root: String)
-                             (implicit store: TableStore): Option[String] =
+  private[sources] def readCurrentName(root: String)
+                                      (implicit store: TableStore): Option[String] =
     store.read(store.child(root, "CURRENT")).map(_.trim).filter(_.nonEmpty)
 
   /** All version dirs under `root` as (dirName, batchId, gen). */
-  private def versionDirs(root: String)
-                         (implicit store: TableStore): Seq[(String, Long, Int)] =
+  private[sources] def versionDirs(root: String)
+                                  (implicit store: TableStore): Seq[(String, Long, Int)] =
     store.listNames(root).filter(n => store.isDirectory(store.child(root, n)))
       .flatMap(n => parseVersion(n).map { case (b, g) => (n, b, g) })
 
@@ -284,9 +284,9 @@ object Ingest {
     * be missing arbitrary files — serving it would return silently
     * partial data (the one as-of crash window the marker closes).
     */
-  private def genComplete(root: String, name: String, gen: Int,
-                          cur: Option[String])
-                         (implicit store: TableStore): Boolean = {
+  private[sources] def genComplete(root: String, name: String, gen: Int,
+                                   cur: Option[String])
+                                  (implicit store: TableStore): Boolean = {
     val dir = store.child(root, name)
     !store.exists(store.child(dir, "_sweeping")) &&
       (gen == 0 || cur.contains(name) ||
@@ -380,7 +380,7 @@ object Ingest {
     // tag pins extend retention: a tagged batch survives every sweep
     // until its tag drops. Pinned batches may sit BELOW the retention
     // suffix — the as-of read's vanished-middle guard knows a pin can
-    // legitimately break the suffix shape (see resolveVersionDir).
+    // legitimately break the suffix shape (see Snapshot.resolve).
     val pinned = tagPinnedBatches(root)
     val retainedBatches = (vds.map(_._2).distinct.filter(committed.contains)
       .sorted(Ordering[Long].reverse).take(math.max(1, keepVersions)) ++
@@ -1276,28 +1276,17 @@ object Ingest {
 
   /** Read an [[upsertParquet]] table — its CURRENT snapshot, or (time
     * travel) the state as of a past batch: the highest RETAINED
-    * COMMITTED snapshot with batchId ≤ `asOfBatch`. Candidate `v_*`
-    * directories are intersected with the `_commits` ledger before
-    * resolution: a directory without a commit record is a crashed
-    * partial build (a writer that died mid-write, swept only by the
-    * NEXT successful commit) and serving it would return torn data —
-    * the one crash window the v9 enumeration missed. The CURRENT
-    * branch needs no such check: the pointer is swapped atomically and
-    * only ever names a fully-built version. Snapshots are immutable
-    * and hard-link-shared, so a historical read costs the same as a
+    * COMMITTED snapshot with batchId ≤ `asOfBatch` ([[Snapshot.resolve]]
+    * — a `v_*` dir without a commit record is a crashed partial build
+    * and is never served). Snapshots are immutable and
+    * hard-link-shared, so a historical read costs the same as a
     * current one; asking for a batch older than the retention window
     * fails loudly rather than silently serving a newer state.
     */
   def readUpsertTable(spark: SparkSession, tableDir: String,
                       asOfBatch: Option[Long] = None)
-                     (implicit store: TableStore): DataFrame = {
-    val root = tableDir
-    val vDir = resolveVersionDir(root, asOfBatch)
-    logicalView(root)(applyDeletes(spark, root, vDir,
-      pinnedReader(spark, root).option("basePath", vDir)
-        .parquet(vDir))
-      .drop(UpsertBucketCol))
-  }
+                     (implicit store: TableStore): DataFrame =
+    Snapshot.resolve(tableDir, asOfBatch).read(spark)
 
   /** Stats-pruned snapshot read: resolve the version like
     * [[readUpsertTable]], then consult its `_stats/` manifest (written
@@ -1331,37 +1320,18 @@ object Ingest {
   def readUpsertTableWhereOpt(spark: SparkSession, tableDir: String,
                               bounds: Seq[(String, Option[Any], Option[Any])],
                               asOfBatch: Option[Long] = None)
-                             (implicit store: TableStore): DataFrame = {
-    val root = tableDir
-    val vDir = resolveVersionDir(root, asOfBatch)
-    val cm = colMap(root) // bounds arrive logical, the manifest is physical
-    loadManifest(spark, root, vDir) match {
-      case None => readUpsertTable(spark, tableDir, asOfBatch)
-      case Some(m) =>
-        val files = m.surviving(bounds.flatMap { case (c, lo, hi) =>
-          StatsManifest.Bound.open(toPhysicalName(cm, c), lo, hi) })
-        val base = pinnedReader(spark, root).option("basePath", vDir)
-        val scan =
-          if (files.isEmpty)
-            base.parquet(vDir).filter(
-              org.apache.spark.sql.functions.lit(false))
-          else base.parquet(files: _*)
-        logicalView(root)(
-          applyDeletes(spark, root, vDir, scan).drop(UpsertBucketCol))
-    }
-  }
+                             (implicit store: TableStore): DataFrame =
+    readWhere(spark, Snapshot.resolve(tableDir, asOfBatch), bounds)
 
-  /** The stats manifest of version `vDir` of table `root`, loaded once
-    * ([[StatsManifest.load]]) with the schema the table pins, so no
-    * schema-inference job runs. `None` when the version has none.
+  /** [[readUpsertTableWhereOpt]] over a resolved snapshot. Bounds
+    * arrive logical; the manifest is physical.
     */
-  private[graft] def loadManifest(spark: SparkSession, root: String,
-                                  vDir: String)
-                                 (implicit store: TableStore)
-      : Option[StatsManifest.Manifest] =
-    StatsManifest.load(spark, store.child(vDir, StatsManifest.ManifestDir),
-      pinnedSchema(root).flatMap(
-        StatsManifest.manifestSchema(tableLayout(root).sortCols, _)))
+  private def readWhere(spark: SparkSession, snap: Snapshot,
+                        bounds: Seq[(String, Option[Any], Option[Any])])
+      : DataFrame =
+    snap.read(spark, snap.manifest(spark).map(_.surviving(bounds.flatMap {
+      case (c, lo, hi) =>
+        StatsManifest.Bound.open(snap.physicalName(c), lo, hi) })))
 
   /** Result of [[countWhere]]: the exact count plus how it was
     * answered — `metaFiles` contributed their manifest `n_rows` with
@@ -1376,7 +1346,7 @@ object Ingest {
     * manifest wherever metadata suffices — the metadata-only
     * aggregation every lakehouse planner special-cases, surfaced as an
     * explicit op. The version's manifest is loaded once
-    * ([[loadManifest]]) and classifies each data file
+    * ([[Snapshot.manifest]]) and classifies each data file
     * ([[StatsManifest.Manifest.classify]]) as one of three cases:
     *
     *   - range strictly INSIDE every bound and zero NULLs in every
@@ -1406,24 +1376,14 @@ object Ingest {
                  bounds: Seq[(String, Any, Any)] = Nil)
                 (implicit store: TableStore): MetaCount = {
     import org.apache.spark.sql.functions.{col, lit}
-    val vDir = resolveVersionDir(tableDir, None)
+    val snap = Snapshot.resolve(tableDir)
     // bounds arrive LOGICAL; the manifest and raw files are physical
-    val cm = colMap(tableDir)
     val pBounds = bounds.map { case (c, lo, hi) =>
-      (toPhysicalName(cm, c), lo, hi) }
+      (snap.physicalName(c), lo, hi) }
     def rowPred(bs: Seq[(String, Any, Any)]): Column = bs
       .map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) }
       .reduceOption(_ && _).getOrElse(lit(true))
-    def fallback: MetaCount = {
-      val scan = readUpsertTableWhere(spark, tableDir, bounds)
-      val total = readUpsertTable(spark, tableDir).inputFiles.length.toLong
-      MetaCount(scan.filter(rowPred(bounds)).count(), 0L,
-        scan.inputFiles.length.toLong, total)
-    }
-    val manifest =
-      if (store.exists(store.child(vDir, "_deletes"))) None
-      else loadManifest(spark, tableDir, vDir)
-    manifest match {
+    (if (snap.hasDeletes) None else snap.manifest(spark)) match {
       // a file without `n_rows` (a manifest predating it, or a row
       // carried from one) would silently drop its rows from the count
       case Some(m) if m.rows.forall(m.nRows(_).isDefined) =>
@@ -1431,18 +1391,23 @@ object Ingest {
           case (c, lo, hi) => StatsManifest.Bound.closed(c, lo, hi) })
         val scanned =
           if (boundary.isEmpty) 0L
-          else pinnedReader(spark, tableDir).option("basePath", vDir)
-            .parquet(boundary: _*).filter(rowPred(pBounds)).count()
+          else snap.scan(spark, Some(boundary))
+            .filter(rowPred(pBounds)).count()
         MetaCount(inside.flatMap(m.nRows).sum + scanned, inside.size.toLong,
           boundary.size.toLong, m.rows.size.toLong)
-      case _ => fallback
+      case _ =>
+        val scan = readWhere(spark, snap,
+          bounds.map { case (c, lo, hi) => (c, Some(lo), Some(hi)) })
+        MetaCount(scan.filter(rowPred(bounds)).count(), 0L,
+          scan.inputFiles.length.toLong,
+          snap.read(spark).inputFiles.length.toLong)
     }
   }
 
   /** Whole-snapshot MIN/MAX of the table's pinned `sortCols`, answered
     * from the stats manifest ALONE — one row `(min_<c>, max_<c>, …)`
     * folded on the driver over the per-file ranges of the once-loaded
-    * manifest ([[loadManifest]]) and returned as a local frame, no
+    * manifest ([[Snapshot.manifest]]) and returned as a local frame, no
     * data file opens (file min/max
     * ignore NULLs, so the fold equals the data's MIN/MAX under SQL
     * aggregate NULL semantics; an all-NULL column yields NULL exactly
@@ -1454,13 +1419,12 @@ object Ingest {
     */
   def minMaxMeta(spark: SparkSession, tableDir: String)
                 (implicit store: TableStore): Option[DataFrame] = {
-    val vDir = resolveVersionDir(tableDir, None)
-    val sortCols = tableLayout(tableDir).sortCols
-    if (sortCols.isEmpty || store.exists(store.child(vDir, "_deletes"))) None
-    else loadManifest(spark, tableDir, vDir).map { m =>
-      val cm = colMap(tableDir) // output names are LOGICAL
+    val snap = Snapshot.resolve(tableDir)
+    val sortCols = snap.layout.sortCols
+    if (sortCols.isEmpty || snap.hasDeletes) None
+    else snap.manifest(spark).map { m =>
       val cells = sortCols.flatMap { c =>
-        val lg = toLogicalName(cm, c)
+        val lg = toLogicalName(snap.colMap, c) // output names are LOGICAL
         Seq(StructField(s"min_$lg", m.schema(s"min_$c").dataType) ->
             m.least(m.rows, c),
           StructField(s"max_$lg", m.schema(s"max_$c").dataType) ->
@@ -1495,7 +1459,7 @@ object Ingest {
       // as-of reads serve it — report THAT, not a retention sweep
       val retained = servableDir(root, b).isDefined ||
         (empties.contains(b) &&
-          scala.util.Try(resolveVersionDir(root, Some(b))).isSuccess)
+          scala.util.Try(Snapshot.resolve(root, Some(b))).isSuccess)
       val cnt =
         if (retained) readUpsertTable(spark, tableDir, Some(b)).count()
         else -1L
@@ -1516,19 +1480,8 @@ object Ingest {
   def describeDetailUpsertTable(spark: SparkSession, tableDir: String)
                                (implicit store: TableStore): DataFrame = {
     val root = tableDir
-    val layout = tableLayout(root)
-    val curName = readCurrentName(root)
-    require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    val (curBatch, gen) = parseVersion(curName.get).get
-    val curDir = store.child(root, curName.get)
-    val skip = Set("_changes", "_deletes", StatsManifest.ManifestDir)
-    def countParquet(dir: String): Long =
-      store.listNames(dir).map { n =>
-        val p = store.child(dir, n)
-        if (store.isDirectory(p)) {
-          if (skip.contains(n)) 0L else countParquet(p)
-        } else if (n.endsWith(".parquet")) 1L else 0L
-      }.sum
+    val snap = Snapshot.resolve(root)
+    val layout = snap.layout
     val lineage = store.read(store.child(root, "_branch_base"))
       .map(_.split('\n').map(_.trim).filter(_.contains('='))
         .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap)
@@ -1539,13 +1492,13 @@ object Ingest {
       layout.keys.mkString(","), layout.buckets,
       if (layout.sortCols.isEmpty) null else layout.sortCols.mkString(","),
       layout.fpb,
-      curBatch, gen.toLong,
+      snap.batch, snap.gen.toLong,
       readLedger(root).size.toLong,
       versionDirs(root).size.toLong,
-      countParquet(curDir),
+      snap.dataFiles.size.toLong,
       store.exists(store.child(root, "_cdf")),
       nCons.toLong,
-      store.exists(store.child(curDir, "_deletes")),
+      snap.hasDeletes,
       lineage.isDefined,
       lineage.flatMap(_.get("batch")).map(_.toLong)
         .map(java.lang.Long.valueOf).orNull.asInstanceOf[java.lang.Long],
@@ -1619,8 +1572,8 @@ object Ingest {
   /** Batches pinned by at least one live tag — consulted by every
     * retention sweep. One small log read per sweep; never data-sized.
     */
-  private def tagPinnedBatches(root: String)
-                              (implicit store: TableStore): Set[Long] =
+  private[sources] def tagPinnedBatches(root: String)
+                                       (implicit store: TableStore): Set[Long] =
     listTags(root).map(_._2).toSet
 
   /** Create tag `name` for the snapshot an as-of read AT `atBatch`
@@ -1660,8 +1613,7 @@ object Ingest {
       s"createTag: batch $atBatch is not committed on $tableDir")
     // resolves or throws the retention error — a tag can only ever be
     // created while its snapshot still exists
-    val pinnedDir = resolveVersionDir(tableDir, Some(atBatch))
-    val pinned = parseVersion(store.baseName(pinnedDir)).get._1
+    val pinned = Snapshot.resolve(tableDir, Some(atBatch)).batch
     val mDir = store.child(tableDir, TagMarkerDir)
     store.createExclusive(mDir, name, s"$pinned") match {
       case Some(true) => () // won the name
@@ -1705,17 +1657,12 @@ object Ingest {
   }
 
   /** Snapshot read AS OF a named tag — [[readUpsertTable]] at the
-    * tag's pinned batch.
+    * tag's pinned batch ([[tagBatch]]).
     */
   def readUpsertTableAtTag(spark: SparkSession, tableDir: String,
                            tag: String)
-                          (implicit store: TableStore): DataFrame = {
-    val b = listTags(tableDir).toMap.getOrElse(tag,
-      throw new IllegalArgumentException(
-        s"no such tag '$tag' on $tableDir " +
-          s"(tags: ${listTags(tableDir).map(_._1).mkString(",")})"))
-    readUpsertTable(spark, tableDir, asOfBatch = Some(b))
-  }
+                          (implicit store: TableStore): DataFrame =
+    Snapshot.resolve(tableDir, tag = Some(tag)).read(spark)
 
   /** The dead-letter table: every row quarantine mode diverted from a
     * COMMITTED batch, with [[QuarantineReasonCol]] (the broken
@@ -1744,7 +1691,7 @@ object Ingest {
       // other read (triage sees today's names; a requeue `fix` speaks
       // logical names and the sink translates back on re-ingest);
       // the blame/batch columns are unmapped and pass through
-      logicalView(tableDir)(
+      logicalView(colMap(tableDir))(
         spark.read.option("mergeSchema", "true").parquet(dirs: _*))
     else {
       val base = pinnedSchema(tableDir).getOrElse(new StructType())
@@ -1756,7 +1703,7 @@ object Ingest {
           org.apache.spark.sql.types.LongType))
       // same mapping on the typed-empty branch — a no-letters read
       // must show the same (logical) columns a letters read would
-      logicalView(tableDir)(
+      logicalView(colMap(tableDir))(
         spark.createDataFrame(spark.sparkContext.emptyRDD[
           org.apache.spark.sql.Row], StructType(fields)))
     }
@@ -1908,44 +1855,12 @@ object Ingest {
       }
   }
 
-  /** Apply a version's merge-on-read deletion vector (`_deletes/` —
-    * see `upsertParquet(lazyDeletes=true)`): anti-join the snapshot
-    * against the vector's keys. A version without a vector reads with
-    * zero overhead. The join is left to the planner rather than
-    * force-broadcast: the vector is churn-bounded (entries leave it at
-    * every bucket rewrite / rebucket), so it is normally broadcast by
-    * size stats, but a table carrying unbounded un-compacted delete
-    * debt degrades to a shuffle join instead of a driver OOM.
-    */
-  private[sources] def applyDeletes(spark: SparkSession, root: String,
-                           vDir: String, df: DataFrame)
-                          (implicit store: TableStore): DataFrame = {
-    val dvDir = store.child(vDir, "_deletes")
-    val hasDv = parquetFiles(dvDir).nonEmpty
-    if (!hasDv) df
-    else {
-      val keys = tableLayout(root).keys
-      df.join(spark.read.parquet(dvDir)
-        .select(keys.map(org.apache.spark.sql.functions.col): _*),
-        keys, "left_anti")
-    }
-  }
-
   /** The table's pinned `_meta` layout ([[TableLayout]]). */
   private[sources] def tableLayout(root: String)
                                   (implicit store: TableStore): TableLayout =
     TableLayout.parse(store.read(store.child(root, "_meta"))
       .getOrElse(throw new IllegalArgumentException(
         s"not an upsert table (no _meta): $root")))
-
-  /** The version directory a snapshot read serves — public so the
-    * `graft` DataSource can price the relation (`sizeInBytes` =
-    * physical bytes of exactly these files) for the broadcast-join
-    * planner. Same committed-only resolution as [[readUpsertTable]].
-    */
-  def snapshotVersionDir(tableDir: String, asOfBatch: Option[Long] = None)
-                        (implicit store: TableStore): String =
-    resolveVersionDir(tableDir, asOfBatch)
 
   /** The committed batch id a tag names; loud when the tag is absent. */
   def tagBatch(tableDir: String, name: String)
@@ -1954,93 +1869,18 @@ object Ingest {
       throw new IllegalArgumentException(
         s"tag '$name' does not exist on $tableDir"))
 
-  private[sources] def resolveVersionDir(root: String, asOfBatch: Option[Long])
-                               (implicit store: TableStore): String = {
-    val cur = readCurrentName(root)
-    require(cur.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    asOfBatch match {
-      case None => store.child(root, cur.get)
-      case Some(b) =>
-        val committed = readLedger(root)
-        val vds = versionDirs(root)
-        val have = vds
-          .collect { case (n, bb, g) if committed.contains(bb) &&
-            genComplete(root, n, g, cur) => bb }.distinct
-        val eligible = have.filter(_ <= b)
-        require(eligible.nonEmpty,
-          s"upsert table has no retained committed snapshot at or before " +
-            s"batch $b (retained: ${have.sorted.mkString(",")}) — raise keepVersions")
-        val best = eligible.max
-        // a COMMITTED batch in (best, b] — whether its dir still
-        // exists but is incomplete (mid-sweep: the `_sweeping` marker
-        // survived a crash mid-delete) or the dir has VANISHED
-        // entirely (a crash after a middle version's delete completed,
-        // before older ones were swept) — was, a moment earlier, the
-        // snapshot this read would rightfully serve; silently
-        // answering with the older `best` state would be wrong data
-        // with no error. Fail loudly. The ascending sweep order in
-        // [[cleanupStale]] makes the vanished case unreachable in a
-        // healthy table (retained batches stay a suffix of the
-        // ledger), so this is defense-in-depth against out-of-band
-        // deletion and pre-fix crash debris. Once a re-run cleanup
-        // completes, the read gives the documented fallback or the
-        // beyond-retention error. Zero-row batches (`_empty` ledger)
-        // commit WITHOUT minting a version dir, so a healthy table
-        // legitimately has committed batches with no snapshot — they
-        // never shadow `best` (their snapshot state IS the previous
-        // version's) and must not trip the guard.
-        val shadowed =
-          committed.filter(bb => bb > best && bb <= b) -- emptyBatchIds(root)
-        // a TAG pin legitimately breaks the suffix shape: retention can
-        // sweep batches between a pinned old snapshot and the retained
-        // suffix, leaving `best` = the pin for this as-of range. That
-        // is a healthy beyond-retention state, not corruption — refuse
-        // with the retention error (serving the pin as-of `b` would be
-        // stale data), not the corruption one.
-        if (shadowed.nonEmpty && tagPinnedBatches(root).contains(best))
-          throw new IllegalArgumentException(
-            s"upsert table has no retained committed snapshot at batch $b " +
-              s"— the nearest older snapshot (batch $best) survives only " +
-              "via a tag pin and the batches between were retention-swept; " +
-              "raise keepVersions or tag the batch you need")
-        require(shadowed.isEmpty, {
-          val (midSweep, vanished) =
-            shadowed.partition(bb => vds.exists(_._2 == bb))
-          s"as-of read of $root at batch $b cannot safely fall back to " +
-            s"batch $best: committed batch(es) " +
-            (if (midSweep.nonEmpty)
-              s"${midSweep.toSeq.sorted.mkString(",")} are mid-sweep " +
-                "(interrupted retention/vacuum delete)" else "") +
-            (if (midSweep.nonEmpty && vanished.nonEmpty) " and " else "") +
-            (if (vanished.nonEmpty)
-              s"${vanished.toSeq.sorted.mkString(",")} have no snapshot dir " +
-                "while an older one survives (non-suffix deletion)" else "") +
-            " — re-run the cleanup (any commit or vacuum) and retry"
-        })
-        servableDir(root, best).get
-    }
-  }
-
   /** A version dir's own bucket count annotation (`_nbuckets`),
     * present on dirs written or stamped by [[rebucketUpsertTable]];
     * absent means the table-level `_meta` count applies.
     */
-  private def versionBuckets(vDir: String)
-                            (implicit store: TableStore): Option[Int] =
+  private[sources] def versionBuckets(vDir: String)
+                                     (implicit store: TableStore): Option[Int] =
     store.read(store.child(vDir, "_nbuckets"))
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
 
-  /** Reader with the table's pinned `_schema` applied, so an
-    * all-deleted / empty-first-batch snapshot (zero data files) still
-    * reads as a typed empty table.
-    */
-  private[sources] def pinnedReader(spark: SparkSession, root: String)
-                          (implicit store: TableStore) =
-    pinnedSchema(root).fold(spark.read)(spark.read.schema(_))
-
   /** The pinned `_schema` as a StructType, when present. */
-  private def pinnedSchema(root: String)
-                          (implicit store: TableStore): Option[StructType] =
+  private[sources] def pinnedSchema(root: String)
+                                   (implicit store: TableStore): Option[StructType] =
     store.read(store.child(root, "_schema")).map(json =>
       org.apache.spark.sql.types.DataType.fromJson(json)
         .asInstanceOf[StructType])
@@ -2398,9 +2238,8 @@ object Ingest {
     * dropped, live renames applied. Every snapshot/feed read ends
     * here; an empty map is the common case and a no-op.
     */
-  private[sources] def logicalView(root: String)(df: DataFrame)
-                         (implicit store: TableStore): DataFrame = {
-    val cm = colMap(root)
+  private[sources] def logicalView(cm: Seq[(String, String, Boolean)])
+                                  (df: DataFrame): DataFrame =
     if (cm.isEmpty) df
     else {
       var out = df
@@ -2412,7 +2251,6 @@ object Ingest {
       }
       out
     }
-  }
 
   /** The current LOGICAL column names of the table: pinned physicals
     * minus dead ones, live renames applied.
@@ -2463,10 +2301,7 @@ object Ingest {
     // validate the FULL current snapshot (physical view — constraint
     // expressions speak creation-time names): any definitively-FALSE
     // row refuses the add
-    val vDir = resolveVersionDir(tableDir, None)
-    val snap = applyDeletes(spark, tableDir, vDir,
-      pinnedReader(spark, tableDir).option("basePath", vDir).parquet(vDir))
-      .drop(UpsertBucketCol)
+    val snap = Snapshot.resolve(tableDir).scan(spark).drop(UpsertBucketCol)
     // ANSI CHECK: a row violates only when the expression is
     // definitively FALSE (NULL passes — same rule the sink screens by)
     val violating = snap.filter(expr(checkExpr) <=>
@@ -2626,18 +2461,16 @@ object Ingest {
                      (implicit store: TableStore): DataFrame = {
     import spark.implicits._
     val root = tableDir
-    val curName = readCurrentName(root)
-    require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    val curDir = store.child(root, curName.get)
-    val fpb = tableLayout(root).fpb
+    val snap = Snapshot.resolve(root)
+    val curDir = snap.versionDir
     val out = Seq.newBuilder[(String, String, String, String)]
-    if (store.exists(store.child(curDir, "_deletes")))
+    if (snap.hasDeletes)
       out += (("OPTIMIZE", root,
         "pending merge-on-read deletion vector (blocks metadata " +
           "aggregates, taxes every read)",
         s"GRAFT OPTIMIZE '$root'"))
     // per-bucket parquet counts of CURRENT — one listing per bucket
-    val cap = fpb * fileSlack
+    val cap = snap.layout.fpb * fileSlack
     val fat = store.listNames(curDir)
       .filter(_.startsWith(s"$UpsertBucketCol="))
       .map { b =>
@@ -2650,7 +2483,7 @@ object Ingest {
         fat.map(_._1).sorted.mkString(","),
         s"${fat.size} bucket(s) over $cap files (max ${fat.map(_._2).max})",
         s"GRAFT COMPACT '$root' OVER $cap FILES"))
-    val dead = colMap(root).filterNot(_._3)
+    val dead = snap.colMap.filterNot(_._3)
     if (dead.nonEmpty)
       out += (("OPTIMIZE PURGE COLUMNS", root,
         s"${dead.size} dropped column(s) still occupy bytes " +
@@ -2702,12 +2535,13 @@ object Ingest {
                         asOfBatch: Option[Long] = None)
                        (implicit store: TableStore): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
-    val keys = tableKeyColumns(tableDir) // the probe speaks logical names
+    val snap = Snapshot.resolve(tableDir, asOfBatch)
+    val keys = snap.keys // the probe speaks logical names
     keys.foreach(k => require(probe.columns.contains(k),
       s"lookup probe is missing key column '$k' (table keys: " +
         s"${keys.mkString(",")})"))
     val probeKeys = probe.select(keys.map(col): _*).distinct()
-    bucketScopedSnapshot(spark, tableDir, probeKeys, keys, asOfBatch)
+    bucketScopedSnapshot(spark, snap, probeKeys, keys)
       .join(broadcast(probeKeys), keys, "left_semi")
   }
 
@@ -2840,45 +2674,41 @@ object Ingest {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     require(filesOver >= 1, s"compactUpsertTable: bad threshold $filesOver")
     val root = tableDir
-    val layout = tableLayout(root)
-    val curName = readCurrentName(root)
-    require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    val curDir = store.child(root, curName.get)
-    val nBuckets = versionBuckets(curDir).getOrElse(layout.buckets)
+    val snap = Snapshot.resolve(root)
+    val layout = snap.layout
+    val curDir = snap.versionDir
+    val nBuckets = snap.buckets
     val overgrown = bucketDirs(curDir)
       .filter { case (_, d) =>
         store.listNames(d).count(_.endsWith(".parquet")) > filesOver }
       .map(_._1).toSet
     // delete debt forces its buckets in: compaction is how the vector
     // drains, and a partial apply would tear it
-    val delDir = store.child(curDir, "_deletes")
     val debt: Set[Long] =
-      if (!store.isDirectory(delDir)) Set.empty
-      else spark.read.parquet(delDir)
+      if (!snap.hasDeletes) Set.empty
+      else spark.read.parquet(snap.deletionVector: _*)
         .select(pmod(xxhash64(layout.keys.map(col): _*),
           lit(nBuckets.toLong)).as("b"))
         .distinct().collect().map(_.getLong(0)).toSet
     val rewrite = overgrown ++ debt
     if (rewrite.isEmpty) return Nil
 
-    val (b, g) = parseVersion(curName.get).get
-    val newName = versionName(b, g + 1)
+    val newName = versionName(snap.batch, snap.gen + 1)
     val newV = freshVersion(root, newName)
     // rewritten buckets collapse to ONE sorted file each — maximum
     // compaction, and the reason a second pass is a guaranteed no-op.
     // (A single file's manifest bounds span the whole bucket; the
     // full-rewrite OPTIMIZE is the pass that restores the fpb-slice
     // layout when tight per-file pruning matters more than file count.)
-    val selected = applyDeletes(spark, root, curDir,
-      pinnedReader(spark, root).option("basePath", curDir).parquet(curDir))
+    val selected = snap.scan(spark)
       .filter(col(UpsertBucketCol).isin(rewrite.toSeq: _*))
     val laid = selected
       .repartition(math.max(1, rewrite.size), col(UpsertBucketCol))
       .sortWithinPartitions(
         (col(UpsertBucketCol) +: layout.sortCols.map(col)): _*)
     rewriteBuckets(spark, newV, laid, Some(rewrite), Some(curDir),
-      layout.sortCols, pinnedSchema(root))
-    commitGeneration("compactUpsertTable", root, curName.get, newName,
+      layout.sortCols, snap.schema)
+    commitGeneration("compactUpsertTable", root, snap.name, newName,
       nBuckets)
     rewrite.toSeq.sorted.map(_.toInt)
   }
@@ -2966,13 +2796,10 @@ object Ingest {
   private def cloneInto(spark: SparkSession, srcDir: String, dstDir: String,
                         lineage: Option[String => String])
                        (implicit store: TableStore): String = {
-    tableLayout(srcDir) // fails fast on non-tables
-    val curName = readCurrentName(srcDir)
-    require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $srcDir")
+    val snap = Snapshot.resolve(srcDir) // fails fast on non-tables
     require(readCurrentName(dstDir).isEmpty,
       s"cloneUpsertTable: $dstDir is already a table (has CURRENT)")
     store.deleteTree(dstDir) // clear any half-built clone debris
-    val srcV = store.child(srcDir, curName.get)
     val dstV = store.child(dstDir, "v_0")
     def linkTree(src: String, dst: String): Unit = {
       store.mkdirs(dst)
@@ -2983,7 +2810,7 @@ object Ingest {
         } else if (n != "_gen_commit") linkInto(s, dst)
       }
     }
-    linkTree(srcV, dstV)
+    linkTree(snap.versionDir, dstV)
     store.writeAtomic(dstDir, "_meta",
       store.read(store.child(srcDir, "_meta")).get)
     store.read(store.child(srcDir, "_schema"))
@@ -2993,10 +2820,10 @@ object Ingest {
     store.read(store.child(srcDir, "_colmap"))
       .foreach(s => store.writeAtomic(dstDir, "_colmap", s))
     lineage.foreach(f =>
-      store.writeAtomic(dstDir, "_branch_base", f(curName.get)))
+      store.writeAtomic(dstDir, "_branch_base", f(snap.name)))
     store.appendLog(store.child(dstDir, "_commits"), "0")
     store.writeAtomic(dstDir, "CURRENT", "v_0")
-    curName.get
+    snap.name
   }
 
   /** Write-audit-publish BRANCH: a zero-copy [[cloneUpsertTable]] that
@@ -3333,10 +3160,13 @@ object Ingest {
     // micro-batch — skip BEFORE building a change set against the
     // post-merge snapshot (which would describe a different batch)
     if (asBatch.exists(readLedger(tableDir).contains)) return None
-    val layout = tableLayout(tableDir)
+    // completing a dangling commit (below) never moves CURRENT, so this
+    // snapshot is the one the change set derives from
+    val snap = Snapshot.resolve(tableDir)
+    val layout = snap.layout
     // the merge speaks LOGICAL names end to end (cur is the logical
     // view, the sink translates back); _meta pins physical
-    val keys = layout.keys.map(toLogicalName(colMap(tableDir), _))
+    val keys = snap.keys
     def checkSet(set: Seq[(String, String)]): Unit = {
       require(set.nonEmpty, "mergeInto: empty SET list")
       require(set.map(_._1).distinct.size == set.size,
@@ -3372,8 +3202,8 @@ object Ingest {
           .map(_.toString).getOrElse("")}) — MERGE requires at most one " +
           "source row per target key")
       val cur =
-        if (needFullTarget) readUpsertTable(spark, tableDir)
-        else bucketScopedSnapshot(spark, tableDir, src, keys)
+        if (needFullTarget) snap.read(spark)
+        else bucketScopedSnapshot(spark, snap, src, keys)
       requireNoTombstoneCol(cur)
       require(!cur.columns.contains("_mrg") && !src.columns.contains("_mrg"),
         "mergeInto: '_mrg' is reserved for the clause-routing column")
@@ -3470,34 +3300,20 @@ object Ingest {
     * bucket ids reach the driver. Deletion vectors apply as on any
     * snapshot read.
     */
-  private def bucketScopedSnapshot(spark: SparkSession, tableDir: String,
-                                   probe: DataFrame, keys: Seq[String],
-                                   asOfBatch: Option[Long] = None)
+  private def bucketScopedSnapshot(spark: SparkSession, snap: Snapshot,
+                                   probe: DataFrame, keys: Seq[String])
                                   (implicit store: TableStore): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val vDir = resolveVersionDir(tableDir, asOfBatch)
-    // the bucket count that hashed THIS version's layout: the dir's own
-    // `_nbuckets` annotation when present (stamped by rebucket — a
-    // retained pre-rebucket snapshot keeps its original count), the
-    // table-level `_meta` otherwise
-    val nBuckets = versionBuckets(vDir)
-      .getOrElse(tableLayout(tableDir).buckets)
-    // ≤ nBuckets small ints — bounded by the table property, not data
+    // hashed by the bucket count of THIS version's layout (a retained
+    // pre-rebucket snapshot keeps its original count); ≤ nBuckets small
+    // ints — bounded by the table property, not data
     val buckets: Seq[Long] = probe
-      .select(pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).as("b"))
+      .select(pmod(xxhash64(keys.map(col): _*),
+        lit(snap.buckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
-    val dirs = buckets
-      .map(b => store.child(vDir, s"$UpsertBucketCol=$b"))
-      .filter(store.isDirectory)
-    val reader = pinnedReader(spark, tableDir)
-    val scan =
-      if (dirs.isEmpty)
-        // typed empty via the pinned schema over the (possibly empty)
-        // version dir — same trick the snapshot read uses
-        reader.option("basePath", vDir).parquet(vDir).filter(lit(false))
-      else reader.option("basePath", vDir).parquet(dirs: _*)
-    logicalView(tableDir)(
-      applyDeletes(spark, tableDir, vDir, scan).drop(UpsertBucketCol))
+    snap.read(spark, Some(buckets
+      .map(b => store.child(snap.versionDir, s"$UpsertBucketCol=$b"))
+      .filter(store.isDirectory)))
   }
 
   /** The tombstone flag column of the batches operations build
@@ -3607,17 +3423,14 @@ object Ingest {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     require(newBuckets > 0, s"rebucketUpsertTable: bad bucket count $newBuckets")
     val root = tableDir
-    val layout = tableLayout(root)
+    val snap = Snapshot.resolve(root)
+    val layout = snap.layout
     val TableLayout(keys, metaBuckets, sortCols, fpb) = layout
-    val curName = readCurrentName(root)
-    require(curName.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    val curDir = store.child(root, curName.get)
     // preserve pinned layout properties (sort/fpb) across the bucket-
     // count change — dropping them would silently stop manifest builds
     def syncMeta(): Unit = store.writeAtomic(root, "_meta",
       layout.copy(buckets = newBuckets).render)
-    if (!forceSameCount &&
-        versionBuckets(curDir).getOrElse(metaBuckets) == newBuckets) {
+    if (!forceSameCount && snap.buckets == newBuckets) {
       // no-op, or completing a rebucket that crashed after the pointer
       // swap but before the _meta update
       if (metaBuckets != newBuckets) syncMeta()
@@ -3625,15 +3438,13 @@ object Ingest {
     }
     // step 1: make every complete retained dir's layout explicit
     // before _meta moves out from under it
-    val cur = readCurrentName(root)
     versionDirs(root).foreach { case (n, _, g) =>
       val d = store.child(root, n)
-      if (genComplete(root, n, g, cur) && versionBuckets(d).isEmpty)
+      if (genComplete(root, n, g, Some(snap.name)) && versionBuckets(d).isEmpty)
         store.writeAtomic(d, "_nbuckets", s"$metaBuckets\n")
     }
     // step 2: the new generation
-    val (b, g) = parseVersion(curName.get).get
-    val newName = versionName(b, g + 1)
+    val newName = versionName(snap.batch, snap.gen + 1)
     val newV = freshVersion(root, newName)
     // the full rewrite applies (and therefore clears) any pending
     // deletion vector — rebucket doubles as delete-debt compaction
@@ -3642,11 +3453,8 @@ object Ingest {
     // the new generation's projection (REORG … PURGE)
     val deadPhys =
       if (!purgeDeadCols) Nil
-      else colMap(root).filterNot(_._3).map(_._1)
-    val rehashed0 = applyDeletes(spark, root, curDir,
-      pinnedReader(spark, root).option("basePath", curDir)
-        .parquet(curDir))
-      .drop(UpsertBucketCol)
+      else snap.colMap.filterNot(_._3).map(_._1)
+    val rehashed0 = snap.scan(spark).drop(UpsertBucketCol)
     val rehashed = deadPhys.filter(rehashed0.columns.contains)
       .foldLeft(rehashed0)(_ drop _)
       .withColumn(UpsertBucketCol,
@@ -3694,10 +3502,10 @@ object Ingest {
           (col(UpsertBucketCol) +: sortCols.map(col)): _*)
         .sortWithinPartitions((col(UpsertBucketCol) +: sortCols.map(col)): _*)
     rewriteBuckets(spark, newV, rehashedLaid, None, None, sortCols,
-      pinnedSchema(root))
+      snap.schema)
     // steps 3–6 ([[commitGeneration]]): the _meta update (and PURGE's
     // narrowing) runs between the swap and the sweep
-    commitGeneration("rewriteGeneration", root, curName.get, newName,
+    commitGeneration("rewriteGeneration", root, snap.name, newName,
       newBuckets, afterSwap = {
       syncMeta()
       if (purgeDeadCols && deadPhys.nonEmpty) {
@@ -3709,10 +3517,10 @@ object Ingest {
         // PRE-purge versions keep their bytes until retention sweeps
         // them (their time-travel reads column-prune through whatever
         // schema is pinned — parquet subset reads are always legal).
-        pinnedSchema(root).foreach(s => store.writeAtomic(root, "_schema",
+        snap.schema.foreach(s => store.writeAtomic(root, "_schema",
           StructType(s.fields.filterNot(f => deadPhys.contains(f.name))
             .toSeq).json))
-        writeColMap(root, colMap(root).filter(_._3))
+        writeColMap(root, snap.colMap.filter(_._3))
       }
     })
   }
@@ -3758,7 +3566,7 @@ object Ingest {
       }
     }
     val chSchema = changeSchema(root)
-    logicalView(root)(
+    logicalView(colMap(root))(
       if (paths.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], chSchema)
@@ -3821,30 +3629,6 @@ object Ingest {
     else StructType(phys.fields.map(f =>
       f.copy(name = toLogicalName(cm, f.name))).toSeq)
   }
-
-  /** Data files of version dir `vDir` — the snapshot a batch read
-    * serves. Complete by the commit protocol; bucket-dir partitioning
-    * is invisible to direct file reads (the bucket id is a dir name,
-    * not a file column).
-    */
-  private[sources] def snapshotFiles(vDir: String)
-                                    (implicit store: TableStore)
-      : Seq[String] =
-    store.listNames(vDir)
-      .filter(n => n.startsWith(s"$UpsertBucketCol="))
-      .map(store.child(vDir, _))
-      .flatMap(d => store.listNames(d)
-        .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-        .map(store.child(d, _)))
-
-  /** The snapshot's merge-on-read deletion-vector parquet files (key
-    * lists the scan must anti-filter), empty when the version carries
-    * no debt.
-    */
-  private[sources] def deletionVectorFiles(vDir: String)
-                                          (implicit store: TableStore)
-      : Seq[String] =
-    parquetFiles(store.child(vDir, "_deletes"))
 
   /** Change-slice parquet files of committed batches in
     * `[fromBatch, toBatch]` — the bounded-CDC file list

@@ -450,9 +450,12 @@ object StatsManifest {
     /** The ONE overlap/inside test of a bound against a file's stats:
       * `(overlaps, inside)`. NULL min/max mean the file holds no
       * non-NULL value in the column, which no comparison matches; an
-      * unrecorded null count never proves inside.
+      * unrecorded null count never proves inside. A bound on a column
+      * the manifest keeps no stats for overlaps every file and proves
+      * none inside: it prunes nothing and leaves each file to be read.
       */
     private def test(b: Bound): (Column, Column) = {
+      if (!idx.contains(s"min_${b.col}")) return (lit(true), lit(false))
       val (mn, mx) = (col(s"min_${b.col}"), col(s"max_${b.col}"))
       val nl = countCol(s"nulls_${b.col}")
       val v = lit(b.value)

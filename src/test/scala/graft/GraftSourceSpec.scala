@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, Row, SaveMode}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThanOrEqual}
-import graft.sources.{GraftSource, GraftSourceOptions, Ingest, TableStore}
+import graft.sources.{GraftSource, GraftSourceOptions, Ingest, Snapshot, TableStore}
 import graft.sources.StatsManifest.Bound
 import java.nio.file.Files
 
@@ -95,7 +95,7 @@ class GraftSourceSpec extends AnyFunSuite {
 
     // the bound genuinely skips files: a point probe survives fewer
     // files than the snapshot holds
-    val m = Ingest.loadManifest(spark, dir, Ingest.snapshotVersionDir(dir)).get
+    val m = Snapshot.resolve(dir).manifest(spark).get
     val all = m.files
     val hit = m.surviving(Bound.open("v", Some(70), Some(70)))
     assert(hit.nonEmpty && hit.size < all.size,
@@ -500,7 +500,7 @@ class GraftSourceSpec extends AnyFunSuite {
     Ingest.upsertParquet(dir, Seq("k"), nBuckets = 2, keepVersions = 4,
       deleteCol = Some("_del"), lazyDeletes = true,
       sortCols = Seq("v"), filesPerBucket = 2)(b1, 1L)
-    val vDir = Ingest.snapshotVersionDir(dir)
+    val vDir = Snapshot.resolve(dir).versionDir
     assert(new java.io.File(s"$vDir/_deletes").isDirectory,
       "fixture did not produce a deletion vector")
     val fmt = spark.read.format("graft").load(dir)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
-import graft.sources.{Ingest, TableStore}
+import graft.sources.{Ingest, Snapshot, TableStore}
 import java.nio.file.Files
 
 /** The stats manifest (`_stats`) as every read consumes it: V2
@@ -104,7 +104,7 @@ class StatsManifestSpec extends AnyFunSuite {
     assert(scannedFiles(graft(dir).limit(5)) < total)
 
     // rewrite the current version's manifest part without n_rows
-    val manDir = s"${Ingest.snapshotVersionDir(dir)}/_stats"
+    val manDir = s"${Snapshot.resolve(dir).versionDir}/_stats"
     val m = spark.read.parquet(manDir).drop("n_rows")
     val rows = m.collect().toSeq
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(manDir))
@@ -162,5 +162,35 @@ class StatsManifestSpec extends AnyFunSuite {
       assert(want.subsetOf(Ingest.readUpsertTableWhere(spark, ts,
         Seq(("v", lo, hi))).collect().toSet))
     } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+  }
+
+  test("a bound on a column without stats prunes nothing and counts exactly") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    def batch(ks: Seq[Long]): DataFrame = ks
+      .map(i => (i, (i * 7919 % 2000).toInt, (i * 31 % 97).toInt))
+      .toDF("k", "v", "a")
+    sortedTable(dir, batch(1L to 2000L), batch(1L to 2000L by 5))
+    val full = Ingest.readUpsertTable(spark, dir)
+    val total = full.inputFiles.length
+    def check(bounds: Seq[(String, Any, Any)]): Unit = {
+      val pred = bounds.map { case (c, lo, hi) =>
+        col(c) >= lit(lo) && col(c) <= lit(hi) }.reduce(_ && _)
+      val want = full.filter(pred).collect().toSet
+      assert(want.nonEmpty)
+      val got = Ingest.readUpsertTableWhere(spark, dir, bounds)
+      assert(want.subsetOf(got.collect().toSet), s"readUpsertTableWhere $bounds")
+      val mc = Ingest.countWhere(spark, dir, bounds)
+      assert(mc.count === want.size.toLong, s"countWhere $bounds")
+      // no file is answered from metadata; every surviving file is read
+      assert(mc.metaFiles === 0L)
+      assert(mc.scannedFiles === got.inputFiles.length.toLong)
+      assert(graft(dir).filter(pred).count() === want.size.toLong)
+    }
+    check(Seq(("a", 10, 20)))
+    check(Seq(("a", 10, 20), ("v", 100, 900)))
+    // the non-stats bound keeps every file the stats bound keeps
+    assert(Ingest.readUpsertTableWhere(spark, dir, Seq(("a", 10, 20)))
+      .inputFiles.length === total)
   }
 }
