@@ -96,8 +96,9 @@ final class GraftSource extends DataSourceRegister
     if (!store.exists(store.child(opts.path, "_meta"))) new StructType()
     else opts.readMode match {
       case "changes" =>
-        val phys = Ingest.changeSchema(opts.path)
-        val dead = Ingest.colMap(opts.path).filterNot(_._3).map(_._1).toSet
+        val v = Versions.read(opts.path)
+        val phys = v.changeSchema
+        val dead = v.colMap.filterNot(_._3).map(_._1).toSet
         Ingest.toLogicalSchema(opts.path,
           StructType(phys.fields.filterNot(f => dead(f.name)).toSeq))
       case "quarantine" =>

@@ -421,7 +421,7 @@ private[sources] final class GraftScan(spark: SparkSession,
 
   /** Full PHYSICAL schema of the scanned files (reader's dataSchema). */
   private lazy val physDataSchema: StructType = opts.readMode match {
-    case "changes" => Ingest.changeSchema(root)
+    case "changes" => feedIndex.changeSchema
     case "quarantine" =>
       // quarantined batches carry the schema of their own era —
       // driver-side union (mergeSchema), exactly the V1 read's rule
@@ -430,6 +430,9 @@ private[sources] final class GraftScan(spark: SparkSession,
       else spark.read.option("mergeSchema", "true").parquet(fs: _*).schema
     case _ => Ingest.physicalDataSchema(root)
   }
+
+  /** The version index a bounded change read resolves through. */
+  private lazy val feedIndex = Versions.read(root)
 
   private def quarantineFallbackSchema: StructType = StructType(
     Ingest.physicalDataSchema(root).fields.toSeq ++ Seq(
@@ -496,7 +499,7 @@ private[sources] final class GraftScan(spark: SparkSession,
   private lazy val dataFilePaths: Seq[String] =
     opts.readMode match {
       case "changes" =>
-        Ingest.changeSliceFiles(root,
+        feedIndex.changeSliceFiles(
           opts.startingBatch.getOrElse(0L),
           opts.endingBatch.getOrElse(Long.MaxValue))
       case "quarantine" => Ingest.quarantineFiles(root)
@@ -750,17 +753,9 @@ private[sources] final class GraftScan(spark: SparkSession,
 
   private[sources] def streamSlicePartitions(fromExcl: Long, toIncl: Long)
       : Array[InputPartition] = {
-    val emptyIds = Ingest.emptyBatchIds(root)
-    val committed = Ingest.readLedger(root)
-      .filter(b => b > fromExcl && b <= toIncl).toSeq.sorted
-    val files = committed.flatMap { b =>
-      Ingest.sliceFilesOfBatch(root, b, emptyIds).getOrElse(
-        throw new IllegalArgumentException(
-          s"change feed for batch $b of $root is beyond the retention " +
-            "window and unpublished — raise keepVersions or start the " +
-            "stream from a later startingBatch"))
-    }
-    packPartitions(listWithSizes(files))
+    // a fresh index per micro-batch: the ledger grows between triggers
+    packPartitions(listWithSizes(Versions.read(root)
+      .changeSliceFiles(fromExcl + 1, toIncl, published = true)))
   }
 }
 

@@ -268,34 +268,9 @@ object Ingest {
                                       (implicit store: TableStore): Option[String] =
     store.read(store.child(root, "CURRENT")).map(_.trim).filter(_.nonEmpty)
 
-  /** All version dirs under `root` as (dirName, batchId, gen). */
-  private[sources] def versionDirs(root: String)
-                                  (implicit store: TableStore): Seq[(String, Long, Int)] =
-    store.listNames(root).filter(n => store.isDirectory(store.child(root, n)))
-      .flatMap(n => parseVersion(n).map { case (b, g) => (n, b, g) })
-
-  /** Is this dir a COMPLETE snapshot? Gen 0 completeness is the
-    * ledger's job (callers intersect with it); a gen ≥ 1 dir is
-    * complete iff CURRENT names it or its `_gen_commit` marker exists
-    * (written after data + feed + metadata, before the pointer swap) —
-    * a crashed maintenance rewrite is therefore never servable. A dir
-    * carrying the `_sweeping` marker ([[sweepDir]]) is NEVER complete
-    * whatever its generation: a sweep died mid-delete, so the dir may
-    * be missing arbitrary files — serving it would return silently
-    * partial data (the one as-of crash window the marker closes).
-    */
-  private[sources] def genComplete(root: String, name: String, gen: Int,
-                                   cur: Option[String])
-                                  (implicit store: TableStore): Boolean = {
-    val dir = store.child(root, name)
-    !store.exists(store.child(dir, "_sweeping")) &&
-      (gen == 0 || cur.contains(name) ||
-        store.exists(store.child(dir, "_gen_commit")))
-  }
-
   /** Delete a version dir crash-safely: stamp `_sweeping` FIRST (an
     * atomic whole-object put), then delete the tree. A crash
-    * mid-delete leaves a half-deleted dir that [[genComplete]] then
+    * mid-delete leaves a half-deleted dir that [[Versions.complete]] then
     * refuses to serve (an as-of read fails loudly as beyond-retention
     * instead of silently returning the surviving fraction of the
     * rows), and the next cleanup re-sweeps it idempotently — the
@@ -332,26 +307,15 @@ object Ingest {
           "(the next cleanup sweeps the orphan build); re-run against " +
           "the new snapshot")
 
-  /** The servable dir (full path) for committed batch `b`: its highest
-    * COMPLETE generation (a maintenance rewrite holds the same state
-    * laid out better, so newest generation always wins).
-    */
-  private[sources] def servableDir(root: String, b: Long)
-                         (implicit store: TableStore): Option[String] = {
-    val cur = readCurrentName(root)
-    versionDirs(root)
-      .collect { case (n, `b`, g) if genComplete(root, n, g, cur) => (n, g) }
-      .sortBy(-_._2).headOption.map(p => store.child(root, p._1))
-  }
-
   /** Drop anything not referenced: crashed partial builds (a gen-0 dir
     * whose batchId is NOT in the ledger, or a gen ≥ 1 dir with no
     * `_gen_commit` that CURRENT doesn't name — garbage whatever its
     * numbers; swept immediately under the single-writer contract), an
-    * orphaned pointer tmp, committed versions beyond the retention
+    * orphaned pointer tmp, committed versions outside the retention
     * window (CURRENT plus the keepVersions-1 highest-batchId committed
-    * others, each represented by its highest complete generation), and
-    * superseded generations of a retained batch. `graceMs` hardens the
+    * others, each represented by its [[Versions.servable]] dir), and
+    * superseded generations of a retained batch. It decides from the
+    * index `v`, read after the commit's swap. `graceMs` hardens the
     * reader/retention race: a complete COMMITTED dir younger (by build
     * mtime) than the grace window survives even when out of retention,
     * so deleting a snapshot from under a reader requires BOTH an
@@ -369,33 +333,26 @@ object Ingest {
     * price of not being able to distinguish "crashed" from "in flight"
     * on a filesystem.
     */
-  private def cleanupStale(root: String, keepVersions: Int,
+  private def cleanupStale(v: Versions, keepVersions: Int,
                            graceMs: Long, inflightGraceMs: Long = 0L)
                           (implicit store: TableStore): Seq[String] = {
-    val cur = readCurrentName(root)
-    val committed = readLedger(root)
+    val root = v.root
+    val committed = v.committed
     val now = System.currentTimeMillis()
-    val vds = versionDirs(root)
-    val curBatch = cur.flatMap(parseVersion).map(_._1)
+    val vds = v.dirs
     // tag pins extend retention: a tagged batch survives every sweep
     // until its tag drops. Pinned batches may sit BELOW the retention
     // suffix — the as-of read's vanished-middle guard knows a pin can
-    // legitimately break the suffix shape (see Snapshot.resolve).
-    val pinned = tagPinnedBatches(root)
+    // legitimately break the suffix shape (see Versions.snapshot).
     val retainedBatches = (vds.map(_._2).distinct.filter(committed.contains)
       .sorted(Ordering[Long].reverse).take(math.max(1, keepVersions)) ++
-      pinned.filter(committed.contains)).toSet
-    // one keeper dir per retained batch: what CURRENT names for the
-    // current batch, the highest complete generation otherwise
-    val keep: Set[String] = retainedBatches.flatMap { b =>
-      if (curBatch.contains(b)) cur
-      else vds.collect { case (n, `b`, g) if genComplete(root, n, g, cur) => (n, g) }
-        .sortBy(-_._2).headOption.map(_._1)
-    } ++ cur
+      v.tags.map(_._2).filter(committed.contains)).toSet
+    // one keeper dir per retained batch
+    val keep: Set[String] = retainedBatches.flatMap(v.servable) ++ v.current
     val swept = vds.filterNot { case (n, _, _) => keep.contains(n) }
       .filterNot { case (n, b, g) =>
-        committed.contains(b) && genComplete(root, n, g, cur) &&
-          graceMs > 0 && now - store.lastModified(store.child(root, n)) < graceMs
+        committed.contains(b) && graceMs > 0 && v.complete(n, g) &&
+          now - store.lastModified(store.child(root, n)) < graceMs
       }
       .filterNot { case (n, b, g) =>
         // possibly a competing OCC writer's in-flight build — see
@@ -838,12 +795,14 @@ object Ingest {
         case None => s"$batchId $ts"
       })
       // in two-writer OCC mode the other writer's uncommitted build may
-      // be legitimately in flight — shield young ones from this sweep
-      cleanupStale(root, keepVersions, graceMs,
+      // be legitimately in flight — shield young ones from this sweep.
+      // The sweep and the feed publish share one post-swap index
+      val after = Versions.read(root)
+      cleanupStale(after, keepVersions, graceMs,
         inflightGraceMs = if (occMode) OccInflightGraceMs else 0L)
       // publish AFTER the ledger append: a crashed uncommitted build
       // must never leak feed files (its rewrite on replay could differ)
-      if (changeFeed) publishFeedSlice(root, batchId)
+      if (changeFeed) publishFeedSlice(after, batchId)
     }
 
     val done: Set[Long] = readLedger(root)
@@ -851,7 +810,7 @@ object Ingest {
       // replay of a committed batch: the merge is a no-op, but heal the
       // commit→publish crash window — link any feed files the crashed
       // attempt didn't get to (idempotent per file)
-      if (changeFeed) publishFeedSlice(root, batchId)
+      if (changeFeed) publishFeedSlice(Versions.read(root), batchId)
       return
     }
     val vName = s"v_$batchId"
@@ -1259,20 +1218,16 @@ object Ingest {
 
   /** The table's pinned key columns, in LOGICAL (user-facing) names. */
   def tableKeyColumns(tableDir: String)
-                     (implicit store: TableStore): Seq[String] = {
-    val cm = colMap(tableDir)
-    tableLayout(tableDir).keys.map(toLogicalName(cm, _))
-  }
+                     (implicit store: TableStore): Seq[String] =
+    Versions.read(tableDir).keys
 
   /** The table's pinned sort (stats) columns in LOGICAL names — empty
     * when the table never pinned `sortCols` (no manifest, no pruned
     * reads). The columns a reader may push range bounds on.
     */
   def tableSortColumns(tableDir: String)
-                      (implicit store: TableStore): Seq[String] = {
-    val cm = colMap(tableDir)
-    tableLayout(tableDir).sortCols.map(toLogicalName(cm, _))
-  }
+                      (implicit store: TableStore): Seq[String] =
+    Versions.read(tableDir).sortCols
 
   /** Read an [[upsertParquet]] table — its CURRENT snapshot, or (time
     * travel) the state as of a past batch: the highest RETAINED
@@ -1445,25 +1400,21 @@ object Ingest {
     * ledger-complete even where data is not). The per-retained-version
     * counts are distributed count() jobs; the driver holds only the
     * ≤ keepVersions summary rows, so the call is retention-bounded,
-    * never table-bounded.
+    * never table-bounded. Every batch resolves through one
+    * [[Versions]] index, so the control plane is read once per call.
     */
   def describeUpsertTable(spark: SparkSession, tableDir: String)
                          (implicit store: TableStore): DataFrame = {
-    val root = tableDir
-    val committed = readLedger(root).toSeq.sorted
-    val curBatch = readCurrentName(root).flatMap(parseVersion).map(_._1)
-    val empties = emptyBatchIds(root)
-    val rows = committed.map { b =>
+    val v = Versions.read(tableDir)
+    val rows = v.committed.toSeq.sorted.map { b =>
       // a committed EMPTY batch mints no version dir, but its snapshot
       // state is fully known (identical to the preceding snapshot) and
       // as-of reads serve it — report THAT, not a retention sweep
-      val retained = servableDir(root, b).isDefined ||
-        (empties.contains(b) &&
-          scala.util.Try(Snapshot.resolve(root, Some(b))).isSuccess)
-      val cnt =
-        if (retained) readUpsertTable(spark, tableDir, Some(b)).count()
-        else -1L
-      (b, retained, cnt, curBatch.contains(b))
+      val snap =
+        if (v.servable(b).isEmpty && !v.empties.contains(b)) None
+        else scala.util.Try(v.snapshot(Some(b))).toOption
+      (b, snap.isDefined, snap.fold(-1L)(_.read(spark).count()),
+        v.currentBatch.contains(b))
     }
     import spark.implicits._
     rows.toDF("batch_id", "retained", "row_count", "is_current")
@@ -1480,7 +1431,8 @@ object Ingest {
   def describeDetailUpsertTable(spark: SparkSession, tableDir: String)
                                (implicit store: TableStore): DataFrame = {
     val root = tableDir
-    val snap = Snapshot.resolve(root)
+    val v = Versions.read(root)
+    val snap = v.snapshot()
     val layout = snap.layout
     val lineage = store.read(store.child(root, "_branch_base"))
       .map(_.split('\n').map(_.trim).filter(_.contains('='))
@@ -1493,8 +1445,8 @@ object Ingest {
       if (layout.sortCols.isEmpty) null else layout.sortCols.mkString(","),
       layout.fpb,
       snap.batch, snap.gen.toLong,
-      readLedger(root).size.toLong,
-      versionDirs(root).size.toLong,
+      v.committed.size.toLong,
+      v.dirs.size.toLong,
       snap.dataFiles.size.toLong,
       store.exists(store.child(root, "_cdf")),
       nCons.toLong,
@@ -1502,35 +1454,14 @@ object Ingest {
       lineage.isDefined,
       lineage.flatMap(_.get("batch")).map(_.toLong)
         .map(java.lang.Long.valueOf).orNull.asInstanceOf[java.lang.Long],
-      listTags(root).size.toLong,
-      // ledger read hoisted OUT of the per-name closure (ADVICE r14:
-      // one log read per quarantined batch was O(n²) in log reads)
-      locally {
-        val committed = readLedger(root)
-        val qRoot = store.child(root, QuarantineDir)
-        store.listNames(qRoot)
-          .count(n => n.startsWith("b_") &&
-            scala.util.Try(n.stripPrefix("b_").toLong).toOption
-              .exists(committed.contains) &&
-            // half-swept dirs (crashed prune) are not servable batches
-            !store.exists(store.child(store.child(qRoot, n), "_sweeping")))
-          .toLong
-      }
+      v.tags.size.toLong,
+      v.quarantined.size.toLong
     )).toDF("keys", "buckets", "sort_cols", "files_per_bucket",
       "current_batch", "generation", "committed_batches",
       "retained_versions", "data_files", "change_feed", "constraints",
       "pending_delete_vector", "is_branch", "branch_base",
       "tags", "quarantined_batches")
   }
-
-  /** Batch ids committed with ZERO rows (`_empty` marker appends) —
-    * batches that minted no version dir yet whose snapshot state is
-    * known: identical to the preceding snapshot.
-    */
-  private[sources] def emptyBatchIds(root: String)
-                           (implicit store: TableStore): Set[Long] =
-    store.readLog(store.child(root, "_empty"))
-      .flatMap(l => scala.util.Try(l.trim.toLong).toOption).toSet
 
   // ---- named snapshot TAGS -------------------------------------------
   //
@@ -1569,13 +1500,6 @@ object Ingest {
     m.toSeq
   }
 
-  /** Batches pinned by at least one live tag — consulted by every
-    * retention sweep. One small log read per sweep; never data-sized.
-    */
-  private[sources] def tagPinnedBatches(root: String)
-                                       (implicit store: TableStore): Set[Long] =
-    listTags(root).map(_._2).toSet
-
   /** Create tag `name` for the snapshot an as-of read AT `atBatch`
     * serves. The tag records the RESOLVED batch (for an empty batch,
     * the version that serves it), so the pin always names a real
@@ -1609,11 +1533,12 @@ object Ingest {
       s"createTag: tag '$name' already exists on $tableDir " +
         s"(batch ${listTags(tableDir).toMap.get(name).getOrElse("?")}) — " +
         "tags are immutable names; dropTag first if the move is intentional")
-    require(readLedger(tableDir).contains(atBatch),
+    val v = Versions.read(tableDir)
+    require(v.committed.contains(atBatch),
       s"createTag: batch $atBatch is not committed on $tableDir")
     // resolves or throws the retention error — a tag can only ever be
     // created while its snapshot still exists
-    val pinned = Snapshot.resolve(tableDir, Some(atBatch)).batch
+    val pinned = v.snapshot(Some(atBatch)).batch
     val mDir = store.child(tableDir, TagMarkerDir)
     store.createExclusive(mDir, name, s"$pinned") match {
       case Some(true) => () // won the name
@@ -1674,27 +1599,21 @@ object Ingest {
     * schema.
     */
   def readQuarantine(spark: SparkSession, tableDir: String)
-                    (implicit store: TableStore): DataFrame = {
-    val qRoot = store.child(tableDir, QuarantineDir)
-    val committed = readLedger(tableDir)
-    val dirs = store.listNames(qRoot)
-      .filter(_.startsWith("b_"))
-      .filter(n => scala.util.Try(n.stripPrefix("b_").toLong)
-        .toOption.exists(committed.contains))
-      .map(n => store.child(qRoot, n))
-      // a dir mid-delete when a prune crashed ([[sweepDir]]'s marker)
-      // must never serve a silently PARTIAL set of dead letters — the
-      // next prune finishes the sweep idempotently
-      .filterNot(d => store.exists(store.child(d, "_sweeping")))
+                    (implicit store: TableStore): DataFrame =
+    quarantineOf(spark, Versions.read(tableDir))
+
+  /** [[readQuarantine]] through an index the caller already holds. */
+  private def quarantineOf(spark: SparkSession, v: Versions): DataFrame = {
+    val dirs = v.quarantined
     if (dirs.nonEmpty)
       // letters surface through the CURRENT column mapping like every
       // other read (triage sees today's names; a requeue `fix` speaks
       // logical names and the sink translates back on re-ingest);
       // the blame/batch columns are unmapped and pass through
-      logicalView(colMap(tableDir))(
+      logicalView(v.colMap)(
         spark.read.option("mergeSchema", "true").parquet(dirs: _*))
     else {
-      val base = pinnedSchema(tableDir).getOrElse(new StructType())
+      val base = v.schema.getOrElse(new StructType())
       val fields = base.fields.filterNot(_.name == UpsertBucketCol) ++ Seq(
         org.apache.spark.sql.types.StructField(QuarantineReasonCol,
           org.apache.spark.sql.types.ArrayType(
@@ -1703,7 +1622,7 @@ object Ingest {
           org.apache.spark.sql.types.LongType))
       // same mapping on the typed-empty branch — a no-letters read
       // must show the same (logical) columns a letters read would
-      logicalView(colMap(tableDir))(
+      logicalView(v.colMap)(
         spark.createDataFrame(spark.sparkContext.emptyRDD[
           org.apache.spark.sql.Row], StructType(fields)))
     }
@@ -1741,7 +1660,8 @@ object Ingest {
                         keepVersions: Int = 2)
                        (implicit store: TableStore): (Long, Long) = {
     import org.apache.spark.sql.functions.{col, max_by, struct}
-    val keys = tableKeyColumns(tableDir) // the letters read logical
+    val v = Versions.read(tableDir)
+    val keys = v.keys // the letters read logical
     val qRoot = store.child(tableDir, QuarantineDir)
     // what this invocation consumes: every committed dead-letter dir
     // BELOW asBatch — strictly below, never `!=`: a replay with an old
@@ -1751,21 +1671,16 @@ object Ingest {
     // crash-replay window (merge committed, dirs not yet swept →
     // re-run recounts the same consumption; fully-swept previous run →
     // consumed = 0 by design).
-    def consumedKeys(): Long = {
-      val d = readQuarantine(spark, tableDir)
-        .filter(col(QuarantineBatchCol) < asBatch)
-      if (d.isEmpty) 0L else d.select(keys.map(col): _*).distinct().count()
-    }
-    val inputKeys = consumedKeys()
-    if (!readLedger(tableDir).contains(asBatch)) {
+    val dead = quarantineOf(spark, v).filter(col(QuarantineBatchCol) < asBatch)
+    val inputKeys =
+      if (dead.isEmpty) 0L else dead.select(keys.map(col): _*).distinct().count()
+    if (!v.committed.contains(asBatch)) {
       if (inputKeys == 0L) return (0L, 0L)
       // the ledger is monotone — a requeue behind the head would break
       // the time-travel suffix invariants
-      require(readLedger(tableDir).forall(_ < asBatch),
+      require(v.committed.forall(_ < asBatch),
         s"requeueQuarantine: asBatch $asBatch must exceed every " +
           s"committed batch of $tableDir")
-      val dead = readQuarantine(spark, tableDir)
-        .filter(col(QuarantineBatchCol) < asBatch)
       // latest source batch wins per key (the merge's own recency
       // rule applied across letter batches); a same-(key, batch) tie —
       // possible when a pre-reduce-violating duplicate pair BOTH
@@ -1778,17 +1693,19 @@ object Ingest {
             struct(col(QuarantineBatchCol), rowStruct)).as("m"))
           .select(col("m.*"))
           .drop(QuarantineReasonCol, QuarantineBatchCol))
-      commitPinned(tableDir, tableLayout(tableDir), keepVersions,
+      commitPinned(tableDir, v.layout, keepVersions,
         quarantine = true)(healedInput, asBatch)
     }
     // sweep the consumed dirs, oldest first (the sweep invariant);
-    // idempotent on replay
-    val committed = readLedger(tableDir)
+    // idempotent on replay. Batches below asBatch were committed
+    // before this call, so the index's ledger answers for them
     store.listNames(qRoot)
       .flatMap(n => scala.util.Try(n.stripPrefix("b_").toLong).toOption
-        .filter(_ < asBatch).filter(committed.contains).map(_ -> n))
+        .filter(_ < asBatch).filter(v.committed.contains).map(_ -> n))
       .sortBy(_._1)
       .foreach { case (_, n) => sweepDir(store.child(qRoot, n)) }
+    // a fresh index: the re-diverted letters are servable once asBatch
+    // is committed
     val rediverted = readQuarantine(spark, tableDir)
       .filter(col(QuarantineBatchCol) === asBatch).count()
     (math.max(0L, inputKeys - rediverted), rediverted)
@@ -1855,19 +1772,10 @@ object Ingest {
       }
   }
 
-  /** The table's pinned `_meta` layout ([[TableLayout]]). */
-  private[sources] def tableLayout(root: String)
-                                  (implicit store: TableStore): TableLayout =
-    TableLayout.parse(store.read(store.child(root, "_meta"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"not an upsert table (no _meta): $root")))
-
   /** The committed batch id a tag names; loud when the tag is absent. */
   def tagBatch(tableDir: String, name: String)
               (implicit store: TableStore): Long =
-    listTags(tableDir).collectFirst { case (`name`, b) => b }.getOrElse(
-      throw new IllegalArgumentException(
-        s"tag '$name' does not exist on $tableDir"))
+    Versions.read(tableDir).tagBatch(name)
 
   /** A version dir's own bucket count annotation (`_nbuckets`),
     * present on dirs written or stamped by [[rebucketUpsertTable]];
@@ -2379,12 +2287,13 @@ object Ingest {
     */
   def dropColumn(tableDir: String, name: String)
                 (implicit store: TableStore): Unit = {
-    val cm = colMap(tableDir)
+    val v = Versions.read(tableDir)
+    val cm = v.colMap
     val logical = logicalNames(tableDir, cm)
     require(logical.contains(name),
       s"dropColumn: no column '$name' (columns: ${logical.mkString(",")})")
     val phys = toPhysicalName(cm, name)
-    val layout = tableLayout(tableDir)
+    val layout = v.layout
     require(!layout.keys.contains(phys),
       s"dropColumn: '$name' is a key column — the layout is pinned on it")
     require(!layout.sortCols.contains(phys),
@@ -2461,7 +2370,8 @@ object Ingest {
                      (implicit store: TableStore): DataFrame = {
     import spark.implicits._
     val root = tableDir
-    val snap = Snapshot.resolve(root)
+    val v = Versions.read(root)
+    val snap = v.snapshot()
     val curDir = snap.versionDir
     val out = Seq.newBuilder[(String, String, String, String)]
     if (snap.hasDeletes)
@@ -2489,20 +2399,12 @@ object Ingest {
         s"${dead.size} dropped column(s) still occupy bytes " +
           s"(${dead.map(_._2).sorted.mkString(",")})",
         s"GRAFT OPTIMIZE '$root' PURGE COLUMNS"))
-    val qDir = store.child(root, QuarantineDir)
-    if (store.isDirectory(qDir)) {
-      val committed = readLedger(root)
-      val qBatches = store.listNames(qDir)
-        .filter(_.startsWith("b_"))
-        .flatMap(n => scala.util.Try(n.drop(2).toLong).toOption)
-        .filter(committed.contains)
-      if (qBatches.size > quarantineKeep)
-        out += (("QUARANTINE PRUNE", qDir,
-          s"${qBatches.size} dead-letter batches retained > " +
-            s"$quarantineKeep",
-          s"GRAFT QUARANTINE PRUNE '$root' KEEP $quarantineKeep BATCHES"))
-    }
-    val retained = versionDirs(root).size
+    if (v.quarantined.size > quarantineKeep)
+      out += (("QUARANTINE PRUNE", store.child(root, QuarantineDir),
+        s"${v.quarantined.size} dead-letter batches retained > " +
+          s"$quarantineKeep",
+        s"GRAFT QUARANTINE PRUNE '$root' KEEP $quarantineKeep BATCHES"))
+    val retained = v.dirs.size
     if (retained > keepVersions)
       out += (("VACUUM", root,
         s"$retained retained versions > $keepVersions",
@@ -2578,7 +2480,8 @@ object Ingest {
   def rebucketUpsertTable(spark: SparkSession, tableDir: String,
                           newBuckets: Int)
                          (implicit store: TableStore): Unit =
-    rewriteGeneration(spark, tableDir, newBuckets, forceSameCount = false)
+    rewriteGeneration(spark, Versions.read(tableDir), newBuckets,
+      forceSameCount = false)
 
   /** OPTIMIZE for the table format: rewrite CURRENT as a new
     * generation at the SAME bucket count — one maintenance pass that
@@ -2595,7 +2498,7 @@ object Ingest {
   def optimizeUpsertTable(spark: SparkSession, tableDir: String,
                           purgeColumns: Boolean = false)
                          (implicit store: TableStore): Unit = {
-    val n = tableLayout(tableDir).buckets
+    val v = Versions.read(tableDir)
     // purgeColumns (`GRAFT OPTIMIZE … PURGE COLUMNS`, Delta's REORG …
     // PURGE): the rewrite additionally excludes column-mapping-dropped
     // physical columns from the new generation, then narrows the
@@ -2604,7 +2507,7 @@ object Ingest {
     // versions keep theirs until retention sweeps them), and the
     // moment the dropped logical name becomes a plain fresh column
     // again for later writes
-    rewriteGeneration(spark, tableDir, n, forceSameCount = true,
+    rewriteGeneration(spark, v, v.layout.buckets, forceSameCount = true,
       purgeDeadCols = purgeColumns)
   }
 
@@ -2635,8 +2538,8 @@ object Ingest {
   def optimizeUpsertTableZorder(spark: SparkSession, tableDir: String,
                                 zorderBy: Seq[String])
                                (implicit store: TableStore): Unit = {
-    val layout = tableLayout(tableDir)
-    val sortCols = layout.sortCols
+    val v = Versions.read(tableDir)
+    val sortCols = v.layout.sortCols
     require(zorderBy.size == 2 || zorderBy.size == 3,
       s"optimizeUpsertTableZorder: 2 or 3 columns, got ${zorderBy.size}")
     require(sortCols.nonEmpty && zorderBy.toSet == sortCols.toSet,
@@ -2644,7 +2547,7 @@ object Ingest {
         s"must be a permutation of the pinned stats columns " +
         s"(${sortCols.mkString(",")}) — the manifest schema every later " +
         "merge carries must not change")
-    rewriteGeneration(spark, tableDir, layout.buckets,
+    rewriteGeneration(spark, v, v.layout.buckets,
       forceSameCount = true, zorderCols = zorderBy)
   }
 
@@ -2735,17 +2638,17 @@ object Ingest {
   def restoreUpsertTable(spark: SparkSession, tableDir: String, toBatch: Long,
                          keepVersions: Int = 2, graceMs: Long = 0L)
                         (implicit store: TableStore): Long = {
-    val committed = readLedger(tableDir)
-    require(committed.contains(toBatch),
+    val v = Versions.read(tableDir)
+    require(v.committed.contains(toBatch),
       s"restoreUpsertTable: batch $toBatch is not committed in $tableDir " +
-        s"(committed: ${committed.toSeq.sorted.mkString(",")})")
-    val newBatch = committed.max + 1
+        s"(committed: ${v.committed.toSeq.sorted.mkString(",")})")
+    val newBatch = v.committed.max + 1
     // rows to write: any target row differing from current (changed or
     // re-inserted); keys to tombstone: present now, absent at toBatch
+    val cur = v.snapshot()
     val diff = diffBatch(s"restoreUpsertTable: $tableDir",
-      readUpsertTable(spark, tableDir, Some(toBatch)),
-      readUpsertTable(spark, tableDir), tableKeyColumns(tableDir))
-    commitPinned(tableDir, tableLayout(tableDir), keepVersions, graceMs,
+      v.snapshot(Some(toBatch)).read(spark), cur.read(spark), cur.keys)
+    commitPinned(tableDir, cur.layout, keepVersions, graceMs,
       Some(TombstoneCol))(diff, newBatch)
     newBatch
   }
@@ -2884,22 +2787,25 @@ object Ingest {
     val kv = lineage.split('\n').map(_.trim).filter(_.contains('='))
       .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
     val srcDir = kv("src")
-    require(readLedger(branchDir).contains(0L), // branch batch 0 = the fork
+    val branch = Versions.read(branchDir)
+    require(branch.committed.contains(0L), // branch batch 0 = the fork
       s"publishUpsertTable: branch $branchDir has no committed fork batch")
-    val target = readUpsertTable(spark, branchDir)
+    val target = branch.snapshot().read(spark)
     // heal a swap-to-append crash window FIRST — skipping straight to
     // the empty-diff no-op would strand the version uncommitted
-    completeDanglingCommit(spark, srcDir, keepVersions, graceMs)
+    val src = completeDanglingCommit(spark, Versions.read(srcDir),
+      keepVersions, graceMs)
+    val srcSnap = src.snapshot()
     // the branch may have WIDENED (the sink's evolution path publishes
     // the new columns)
     def diffVs(ref: DataFrame): DataFrame =
       diffBatch(s"publishUpsertTable: branch $branchDir", target, ref,
-        tableKeyColumns(srcDir))
+        srcSnap.keys)
     // already in sync (a re-run after a committed publish, or a branch
     // the source caught up with) → convergent no-op
-    val syncDiff = diffVs(readUpsertTable(spark, srcDir))
+    val syncDiff = diffVs(srcSnap.read(spark))
     if (syncDiff.isEmpty) return None
-    val head = readLedger(srcDir).max
+    val head = src.committed.max
     if (!force && head != baseOf(branchDir, srcDir))
       throw new java.util.ConcurrentModificationException(
         s"publishUpsertTable: $srcDir advanced past the branch base " +
@@ -2911,11 +2817,11 @@ object Ingest {
     // against its OWN fork (batch 0, must still be retained) so
     // concurrent source commits survive on uncontested keys
     val diff =
-      if (force) diffVs(readUpsertTable(spark, branchDir, Some(0L)))
+      if (force) diffVs(branch.snapshot(Some(0L)).read(spark))
       else syncDiff
     if (force && diff.isEmpty) return None // untouched branch, src moved
     val newBatch = head + 1
-    commitPinned(srcDir, tableLayout(srcDir), keepVersions, graceMs,
+    commitPinned(srcDir, srcSnap.layout, keepVersions, graceMs,
       Some(TombstoneCol))(diff, newBatch)
     Some(newBatch)
   }
@@ -2938,7 +2844,7 @@ object Ingest {
                   keepVersions: Int = 2, graceMs: Long = 0L,
                   lazyDeletes: Boolean = false)
                  (implicit store: TableStore): Option[(Long, Long)] =
-    dmlBatch(spark, tableDir, keepVersions, graceMs, lazyDeletes) { cur =>
+    dmlBatch(spark, tableDir, keepVersions, graceMs, lazyDeletes) { (cur, _) =>
       import org.apache.spark.sql.functions.{expr, lit}
       cur.filter(expr(predicate)).withColumn(TombstoneCol, lit(true))
     }
@@ -2957,17 +2863,15 @@ object Ingest {
   def updateWhere(spark: SparkSession, tableDir: String,
                   set: Seq[(String, String)], predicate: String,
                   keepVersions: Int = 2, graceMs: Long = 0L)
-                 (implicit store: TableStore): Option[(Long, Long)] = {
-    val keys = tableKeyColumns(tableDir) // assignments are logical
-    set.foreach { case (c, _) =>
-      require(!keys.contains(c),
-        s"updateWhere: cannot assign key column '$c' — an update that " +
-          "moves a key is a delete + insert; run them as two statements")
-    }
-    dmlBatch(spark, tableDir, keepVersions, graceMs, lazyDel = false) { cur =>
+                 (implicit store: TableStore): Option[(Long, Long)] =
+    dmlBatch(spark, tableDir, keepVersions, graceMs, lazyDel = false) {
+      (cur, keys) =>
       import org.apache.spark.sql.functions.{expr, lit}
       require(set.nonEmpty, "updateWhere: empty SET list")
-      set.foreach { case (c, _) =>
+      set.foreach { case (c, _) => // assignments and keys are logical
+        require(!keys.contains(c),
+          s"updateWhere: cannot assign key column '$c' — an update that " +
+            "moves a key is a delete + insert; run them as two statements")
         require(cur.columns.contains(c),
           s"updateWhere: '$c' is not a column of $tableDir")
       }
@@ -2988,7 +2892,6 @@ object Ingest {
       // unique in a snapshot, so exceptAll here is a keyed set diff)
       updated.exceptAll(matched).withColumn(TombstoneCol, lit(false))
     }
-  }
 
   /** SQL-shaped MERGE: apply `rows` as the table's next committed
     * batch — upserts by key, tombstones where `deleteCol` (if any) is
@@ -3041,33 +2944,32 @@ object Ingest {
           // heal the commit→publish crash window exactly like the
           // in-sink replay path (idempotent per feed file)
           if (mb == lastMb && store.exists(store.child(tableDir, "_cdf")))
-            publishFeedSlice(tableDir, tableBatch)
+            publishFeedSlice(Versions.read(tableDir), tableBatch)
           return (tableBatch, 0L)
         }
       }
     }
+    val v = Versions.read(tableDir)
     asBatch.foreach { a =>
-      val done = readLedger(tableDir)
-      if (done.contains(a)) return (a, 0L)
-      require(done.forall(_ < a),
+      if (v.committed.contains(a)) return (a, 0L)
+      require(v.committed.forall(_ < a),
         s"upsertInto: pinned batch id $a is below an already-committed " +
           s"id of $tableDir — stale checkpoint / foreign id space")
     }
     val layout =
       if (store.exists(store.child(tableDir, "_meta"))) {
         // callers speak logical names; _meta pins physical
-        val pinned = tableKeyColumns(tableDir)
-        require(keys.isEmpty || keys == pinned,
-          s"upsertInto: $tableDir pins keys [${pinned.mkString(",")}] " +
+        require(keys.isEmpty || keys == v.keys,
+          s"upsertInto: $tableDir pins keys [${v.keys.mkString(",")}] " +
             s"but the call passed [${keys.mkString(",")}]")
-        tableLayout(tableDir)
+        v.layout
       } else { // fresh dir: this call creates the table
         require(keys.nonEmpty,
           s"upsertInto: $tableDir does not exist — pass keys to create it")
         TableLayout(keys, nBuckets)
       }
     val batchId = asBatch.getOrElse(
-      readLedger(tableDir).reduceOption(_ max _).getOrElse(-1L) + 1)
+      v.committed.reduceOption(_ max _).getOrElse(-1L) + 1)
     // the source can be an arbitrary (expensive) query — evaluate it
     // once for both the row count and the merge
     val cached = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -3159,10 +3061,11 @@ object Ingest {
     // caller-pinned batch id that is already committed is a replayed
     // micro-batch — skip BEFORE building a change set against the
     // post-merge snapshot (which would describe a different batch)
-    if (asBatch.exists(readLedger(tableDir).contains)) return None
+    val v = Versions.read(tableDir)
+    if (asBatch.exists(v.committed.contains)) return None
     // completing a dangling commit (below) never moves CURRENT, so this
     // snapshot is the one the change set derives from
-    val snap = Snapshot.resolve(tableDir)
+    val snap = v.snapshot()
     val layout = snap.layout
     // the merge speaks LOGICAL names end to end (cur is the logical
     // view, the sink translates back); _meta pins physical
@@ -3185,7 +3088,7 @@ object Ingest {
         s"${keys.mkString(",")})"))
     // CURRENT may already reflect a swap-to-append-crashed write —
     // commit it before deriving the change set (the dmlBatch rule)
-    completeDanglingCommit(spark, tableDir, keepVersions, graceMs)
+    val healed = completeDanglingCommit(spark, v, keepVersions, graceMs)
     val needFullTarget = clauses.exists {
       case _: NotMatchedBySourceUpdate | _: NotMatchedBySourceDelete => true
       case _ => false
@@ -3282,7 +3185,7 @@ object Ingest {
         val n = change.count()
         if (n == 0) return None
         val newBatch = asBatch.getOrElse(
-          readLedger(tableDir).reduceOption(_ max _).getOrElse(-1L) + 1)
+          healed.committed.reduceOption(_ max _).getOrElse(-1L) + 1)
         commitPinned(tableDir, layout, keepVersions, graceMs,
           Some(TombstoneCol))(change, newBatch)
         Some((newBatch, n))
@@ -3364,38 +3267,46 @@ object Ingest {
     * uncommitted — invisible to as-of reads and bait for the retention
     * sweep. Ops that always replay the same batch id through the sink
     * (restore, upsertInto, the raw sink) self-heal and don't need it.
+    * Returns the index to go on with: `v` itself, or a fresh one when
+    * the heal appended to the ledger.
     */
-  private def completeDanglingCommit(spark: SparkSession, tableDir: String,
+  private def completeDanglingCommit(spark: SparkSession, v: Versions,
                                      keepVersions: Int, graceMs: Long)
-                                    (implicit store: TableStore): Unit =
-    readCurrentName(tableDir).flatMap(parseVersion).map(_._1)
-      .filterNot(readLedger(tableDir).contains).foreach { b =>
-        commitPinned(tableDir, tableLayout(tableDir), keepVersions, graceMs)(
-          readUpsertTable(spark, tableDir).limit(0), b)
-      }
+                                    (implicit store: TableStore): Versions =
+    v.currentBatch.filterNot(v.committed.contains) match {
+      case None => v
+      case Some(b) =>
+        val snap = v.snapshot()
+        commitPinned(v.root, snap.layout, keepVersions, graceMs)(
+          snap.read(spark).limit(0), b)
+        Versions.read(v.root)
+    }
 
-  /** Shared DML shell: build the change set from CURRENT, mint nothing
-    * when it is empty, else commit it as `head + 1` through the sink
-    * (feed-aware, layout-preserving).
+  /** Shared DML shell: build the change set from CURRENT (the logical
+    * rows and the logical keys), mint nothing when it is empty, else
+    * commit it as `head + 1` through the sink (feed-aware,
+    * layout-preserving). The table resolves once.
     */
   private def dmlBatch(spark: SparkSession, tableDir: String,
                        keepVersions: Int, graceMs: Long, lazyDel: Boolean)
-                      (change: DataFrame => DataFrame)
+                      (change: (DataFrame, Seq[String]) => DataFrame)
                       (implicit store: TableStore): Option[(Long, Long)] = {
     // the change set derives from CURRENT, which already reflects a
     // swap-to-append-crashed write — commit it before deciding no-op
-    completeDanglingCommit(spark, tableDir, keepVersions, graceMs)
-    val cur = readUpsertTable(spark, tableDir)
+    val v = completeDanglingCommit(spark, Versions.read(tableDir),
+      keepVersions, graceMs)
+    val snap = v.snapshot()
+    val cur = snap.read(spark)
     requireNoTombstoneCol(cur)
     // the change set derives from a snapshot scan — evaluate it once
     // for both the emptiness check and the merge
-    val batch = change(cur)
+    val batch = change(cur, snap.keys)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = batch.count()
       if (n == 0) return None
-      val newBatch = readLedger(tableDir).reduceOption(_ max _).getOrElse(-1L) + 1
-      commitPinned(tableDir, tableLayout(tableDir), keepVersions, graceMs,
+      val newBatch = v.committed.reduceOption(_ max _).getOrElse(-1L) + 1
+      commitPinned(tableDir, snap.layout, keepVersions, graceMs,
         Some(TombstoneCol), lazyDel)(batch, newBatch)
       Some((newBatch, n))
     } finally { batch.unpersist(); () }
@@ -3414,7 +3325,7 @@ object Ingest {
     }.getOrElse(throw new IllegalStateException(
       s"publishUpsertTable: $branchDir's _branch_base records no fork batch"))
 
-  private def rewriteGeneration(spark: SparkSession, tableDir: String,
+  private def rewriteGeneration(spark: SparkSession, v: Versions,
                                 newBuckets: Int,
                                 forceSameCount: Boolean,
                                 zorderCols: Seq[String] = Nil,
@@ -3422,8 +3333,8 @@ object Ingest {
                                (implicit store: TableStore): Unit = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     require(newBuckets > 0, s"rebucketUpsertTable: bad bucket count $newBuckets")
-    val root = tableDir
-    val snap = Snapshot.resolve(root)
+    val root = v.root
+    val snap = v.snapshot()
     val layout = snap.layout
     val TableLayout(keys, metaBuckets, sortCols, fpb) = layout
     // preserve pinned layout properties (sort/fpb) across the bucket-
@@ -3438,9 +3349,9 @@ object Ingest {
     }
     // step 1: make every complete retained dir's layout explicit
     // before _meta moves out from under it
-    versionDirs(root).foreach { case (n, _, g) =>
+    v.dirs.foreach { case (n, _, g) =>
       val d = store.child(root, n)
-      if (genComplete(root, n, g, Some(snap.name)) && versionBuckets(d).isEmpty)
+      if (v.complete(n, g) && versionBuckets(d).isEmpty)
         store.writeAtomic(d, "_nbuckets", s"$metaBuckets\n")
     }
     // step 2: the new generation
@@ -3533,62 +3444,24 @@ object Ingest {
     * instead of diffing snapshots: an MV refresh folds the post-images
     * and deletes; a replica applies them in batch order.
     *
-    * Availability is retention-bounded like time travel: a committed
-    * batch in range must either have its version retained (the feed
-    * lives inside `v_<b>/_changes`), or be provably change-free (a
-    * non-first empty batch, recorded in `_empty`) — anything else
-    * means the feed was swept and the read FAILS rather than silently
-    * returning a hole. A table without the `_cdf` marker fails
-    * immediately (it never recorded changes).
+    * Availability is bounded by retention like time travel, and the
+    * read answers from the ledger and the retained versions alone
+    * ([[Versions.changeSliceFiles]] holds the contract): a range
+    * reaching a swept batch FAILS rather than silently returning a
+    * hole, whatever the feed's consumers have pruned. A table without
+    * the `_cdf` marker fails immediately (it never recorded changes).
     */
   def readTableChanges(spark: SparkSession, tableDir: String,
                        fromBatch: Long, toBatch: Long)
                       (implicit store: TableStore): DataFrame = {
-    val root = tableDir
-    require(store.exists(store.child(root, "_cdf")),
-      s"$tableDir is not a change-feed table — write it with changeFeed=true")
-    val emptyIds: Set[Long] = emptyBatchIds(root)
-    val committed = readLedger(root)
-      .filter(b => b >= fromBatch && b <= toBatch).toSeq.sorted
-    val paths = committed.flatMap { b =>
-      // generation-aware: a rebucketed version carries its feed forward
-      // (hard-linked into the new generation), so the servable dir is
-      // always where the batch's changes live
-      servableDir(root, b) match {
-        case Some(vDir) =>
-          val ch = store.child(vDir, "_changes")
-          if (store.isDirectory(ch)) Some(ch) else None // zero changes
-        case None if emptyIds.contains(b) => None // provably change-free
-        case None => throw new IllegalArgumentException(
-          s"change feed for batch $b of $tableDir is beyond the retention " +
-            "window (its version was swept) — raise keepVersions/graceMs " +
-            "or consume the feed before it ages out")
-      }
-    }
-    val chSchema = changeSchema(root)
-    logicalView(colMap(root))(
-      if (paths.isEmpty)
+    val v = Versions.read(tableDir)
+    val files = v.changeSliceFiles(fromBatch, toBatch)
+    val chSchema = v.changeSchema
+    logicalView(v.colMap)(
+      if (files.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], chSchema)
-      else spark.read.schema(chSchema).parquet(paths: _*))
-  }
-
-  /** Change-record schema of a change-feed table: the pinned data
-    * schema (bucket col dropped) plus `_change_type` / `_batch_id` —
-    * shared by [[readTableChanges]] and [[changeFeedStream]] so a
-    * zero-change range reads as a typed empty frame and file column
-    * order can never matter.
-    */
-  private[sources] def changeSchema(root: String)
-                          (implicit store: TableStore): StructType = {
-    val dataSchema = pinnedSchema(root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no _schema file"))
-    StructType(
-      dataSchema.fields.filterNot(_.name == UpsertBucketCol).toSeq ++ Seq(
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_batch_id",
-          org.apache.spark.sql.types.LongType)))
+      else spark.read.schema(chSchema).parquet(files: _*))
   }
 
   // ---- DataSource V2 planning surface --------------------------------
@@ -3630,80 +3503,17 @@ object Ingest {
       f.copy(name = toLogicalName(cm, f.name))).toSeq)
   }
 
-  /** Change-slice parquet files of committed batches in
-    * `[fromBatch, toBatch]` — the bounded-CDC file list
-    * ([[readTableChanges]]'s resolution, exposed as paths): per batch
-    * the retained version's `_changes`, with the same
-    * retention-hole failure.
-    */
-  private[sources] def changeSliceFiles(root: String, fromBatch: Long,
-                                        toBatch: Long)
-                                       (implicit store: TableStore)
-      : Seq[String] = {
-    require(store.exists(store.child(root, "_cdf")),
-      s"$root is not a change-feed table — write it with changeFeed=true")
-    val emptyIds = emptyBatchIds(root)
-    readLedger(root).filter(b => b >= fromBatch && b <= toBatch)
-      .toSeq.sorted.flatMap { b =>
-        sliceFilesOfBatch(root, b, emptyIds).getOrElse(
-          throw new IllegalArgumentException(
-            s"change feed for batch $b of $root is beyond the retention " +
-              "window (its version was swept) — raise keepVersions/" +
-              "graceMs or consume the feed before it ages out"))
-      }
-  }
 
-  /** One committed batch's change-slice files for the STREAMING
-    * source: the retained version's `_changes` when present
-    * (authoritative — fully written before the batch committed), else
-    * the published `feed/` hard links (complete once the writer's
-    * replay healed any publish crash — the same eventual-completeness
-    * contract [[changeFeedStream]]'s file tail rides). `None` when the
-    * batch is beyond retention AND unpublished — the caller decides
-    * whether that is a hole (non-empty batch) or silence (empty).
-    */
-  private[sources] def sliceFilesOfBatch(root: String, b: Long,
-                                         emptyIds: Set[Long])
-                                        (implicit store: TableStore)
-      : Option[Seq[String]] = {
-    servableDir(root, b) match {
-      case Some(vDir) =>
-        val ch = store.child(vDir, "_changes")
-        if (!store.isDirectory(ch)) Some(Nil) // committed zero changes
-        else Some(store.listNames(ch)
-          .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
-          .map(store.child(ch, _)))
-      case None =>
-        val feedDir = store.child(root, "feed")
-        val linked =
-          if (!store.isDirectory(feedDir)) Nil
-          else store.listNames(feedDir)
-            .filter(n => n.startsWith(s"b$b-part-") && n.endsWith(".parquet"))
-            .map(store.child(feedDir, _))
-        if (linked.nonEmpty) Some(linked)
-        else if (emptyIds.contains(b)) Some(Nil)
-        else None
-    }
-  }
-
-  /** Committed, non-sweeping dead-letter directories — the quarantine
-    * read's file surface ([[readQuarantine]]'s resolution as paths).
+  /** The dead-letter parquet files — the quarantine read's file
+    * surface ([[readQuarantine]]'s resolution as paths).
     */
   private[sources] def quarantineFiles(root: String)
                                       (implicit store: TableStore)
-      : Seq[String] = {
-    val qRoot = store.child(root, QuarantineDir)
-    val committed = readLedger(root)
-    store.listNames(qRoot)
-      .filter(_.startsWith("b_"))
-      .filter(n => scala.util.Try(n.stripPrefix("b_").toLong)
-        .toOption.exists(committed.contains))
-      .map(n => store.child(qRoot, n))
-      .filterNot(d => store.exists(store.child(d, "_sweeping")))
+      : Seq[String] =
+    Versions.read(root).quarantined
       .flatMap(d => store.listNames(d)
         .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
         .map(store.child(d, _)))
-  }
 
   /** Publish batch `b`'s change slice into the table's PUBLISHED feed
     * directory `feed/` — the append-only file surface a STREAMING
@@ -3721,12 +3531,12 @@ object Ingest {
     * against the ledger instead. No-op when the batch produced no
     * version (a provably change-free batch).
     */
-  private def publishFeedSlice(root: String, batchId: Long)
+  private def publishFeedSlice(v: Versions, batchId: Long)
                               (implicit store: TableStore): Unit = {
-    val feedDir = store.child(root, "feed")
+    val feedDir = store.child(v.root, "feed")
     store.mkdirs(feedDir)
-    servableDir(root, batchId).foreach { vDir =>
-      val ch = store.child(vDir, "_changes")
+    v.servable(batchId).foreach { n =>
+      val ch = store.child(store.child(v.root, n), "_changes")
       if (store.isDirectory(ch)) {
         store.listNames(ch)
           .filter(n => n.startsWith("part-") && n.endsWith(".parquet") &&
@@ -3762,7 +3572,8 @@ object Ingest {
     require(store.exists(store.child(root, "_cdf")),
       s"$tableDir is not a change-feed table — write it with changeFeed=true")
     store.mkdirs(store.child(root, "feed")) // tail-before-first-commit is legal
-    val r = spark.readStream.schema(changeSchema(root)).format("parquet")
+    val r = spark.readStream.schema(Versions.read(root).changeSchema)
+      .format("parquet")
     maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
       .load(store.child(root, "feed"))
   }
@@ -3834,7 +3645,8 @@ object Ingest {
       s"not an upsert table (no _meta): $tableDir")
     val hadTmp = store.exists(store.child(tableDir, "CURRENT.tmp"))
     val sweptVersions =
-      cleanupStale(tableDir, keepVersions, graceMs, inflightGraceMs)
+      cleanupStale(Versions.read(tableDir), keepVersions, graceMs,
+        inflightGraceMs)
     val sweptFeed = feedBeforeBatch.toSeq
       .flatMap(b => pruneChangeFeed(tableDir, b))
     // dead-letter area: orphaned (never-committed) dirs always sweep

@@ -2,29 +2,34 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** One resolved snapshot of an [[Ingest.upsertParquet]] table: the
   * version a read serves and the control-plane state it is read
-  * through, each read ONCE by [[Snapshot.resolve]] — the version dir
-  * (its batch id and generation), the pinned `_meta` layout, the
-  * version's own bucket count, the pinned `_schema`, the `_colmap`
-  * column mapping and the merge-on-read deletion-vector files. The
-  * data-file listing and the `_stats` manifest are loaded on first
-  * use, at most once. Every table reader takes one of these, so a call
-  * can never mix two versions' metadata.
+  * through. [[Versions.snapshot]] builds it from one version index,
+  * which reads the `CURRENT` pointer, the pinned `_meta` layout, the
+  * pinned `_schema` and the `_colmap` column mapping at most once. When
+  * built, the snapshot reads its version's own bucket count and lists
+  * its merge-on-read deletion vector; the data-file listing and the
+  * `_stats` manifest are loaded on first use, at most once. Every table
+  * reader takes one of these, so a call can never mix two versions'
+  * metadata.
   */
-final class Snapshot private (val root: String,
-                              val name: String,
-                              val batch: Long,
-                              val gen: Int,
-                              private[sources] val layout: Ingest.TableLayout,
-                              val buckets: Int,
-                              val schema: Option[StructType],
-                              private[sources] val colMap: Seq[(String, String, Boolean)])
-                             (implicit store: TableStore) {
+final class Snapshot private[sources] (versions: Versions, val name: String)
+                                      (implicit store: TableStore) {
+  val root: String = versions.root
+  val (batch: Long, gen: Int) = Ingest.parseVersion(name).get
+  private[sources] val layout: Ingest.TableLayout = versions.layout
+  val schema: Option[StructType] = versions.schema
+  private[sources] val colMap: Seq[(String, String, Boolean)] = versions.colMap
+
   /** Full path of the served version dir. */
   val versionDir: String = store.child(root, name)
+
+  /** The version's own bucket count (a retained pre-rebucket version
+    * keeps its original one).
+    */
+  val buckets: Int = Ingest.versionBuckets(versionDir).getOrElse(layout.buckets)
 
   /** The vector's dir; the sink never writes an empty one. */
   private val dvDir = store.child(versionDir, "_deletes")
@@ -66,11 +71,10 @@ final class Snapshot private (val root: String,
     Ingest.toPhysicalName(colMap, logical)
 
   /** The pinned keys in logical names. */
-  def keys: Seq[String] = layout.keys.map(Ingest.toLogicalName(colMap, _))
+  def keys: Seq[String] = versions.keys
 
   /** The pinned sort (stats) columns in logical names. */
-  def sortCols: Seq[String] =
-    layout.sortCols.map(Ingest.toLogicalName(colMap, _))
+  def sortCols: Seq[String] = versions.sortCols
 
   /** The snapshot's live rows in PHYSICAL names, bucket column kept:
     * the version read through the pinned schema (so a snapshot with no
@@ -104,43 +108,149 @@ final class Snapshot private (val root: String,
 }
 
 object Snapshot {
+  /** The snapshot a read serves, from a fresh [[Versions]] index: see
+    * [[Versions.snapshot]] for the three modes.
+    */
+  def resolve(root: String, asOfBatch: Option[Long] = None,
+              tag: Option[String] = None)
+             (implicit store: TableStore): Snapshot =
+    Versions.read(root).snapshot(asOfBatch, tag)
+}
+
+/** One table's version index, read once per table operation. Building
+  * it ([[Versions.read]]) reads the `CURRENT` pointer and nothing else;
+  * the pinned `_meta` layout, `_schema` and `_colmap`, the `_commits`
+  * ledger, the `_empty` log, the `_tags` log, the listing of the
+  * table root and that of its dead-letter area are each read on first
+  * use, at most once. A CURRENT-snapshot read therefore reads no
+  * ledger and lists no root.
+  *
+  * It owns the one rule "which version dir serves committed batch b"
+  * ([[servable]]), which the as-of resolver, the change feed, the
+  * retention sweep and the feed publisher all answer through. The
+  * index is a point-in-time view: an op that commits through the sink
+  * reads a new one when it needs the state after its commit.
+  */
+final class Versions private (val root: String, val current: Option[String])
+                             (implicit store: TableStore) {
+  /** The pinned `_meta` layout. */
+  private[sources] lazy val layout: Ingest.TableLayout =
+    Ingest.TableLayout.parse(store.read(store.child(root, "_meta"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"not an upsert table (no _meta): $root")))
+  lazy val schema: Option[StructType] = Ingest.pinnedSchema(root)
+  private[sources] lazy val colMap: Seq[(String, String, Boolean)] =
+    Ingest.colMap(root)
+  /** The committed batch ids (the `_commits` ledger). */
+  lazy val committed: Set[Long] = Ingest.readLedger(root)
+  /** Batch ids committed with ZERO rows (`_empty` appends): batches
+    * that minted no version dir, whose snapshot state is identical to
+    * the preceding snapshot's.
+    */
+  lazy val empties: Set[Long] = store.readLog(store.child(root, "_empty"))
+    .flatMap(l => scala.util.Try(l.trim.toLong).toOption).toSet
+  /** The live tags, in creation order. */
+  lazy val tags: Seq[(String, Long)] = Ingest.listTags(root)
+  /** Every version dir under the root as (name, batch id, generation):
+    * one listing, and a directory probe for the `v_*` names only.
+    */
+  lazy val dirs: Seq[(String, Long, Int)] = store.listNames(root)
+    .flatMap(n => Ingest.parseVersion(n).map { case (b, g) => (n, b, g) })
+    .filter(d => store.isDirectory(store.child(root, d._1)))
+
+  /** The committed dead-letter dirs (`_quarantine/b_<batch>`, full
+    * paths). A dir a crashed prune left mid-delete (its `_sweeping`
+    * marker) must never serve a silently PARTIAL set of letters; the
+    * next prune finishes it.
+    */
+  lazy val quarantined: Seq[String] = {
+    val qRoot = store.child(root, Ingest.QuarantineDir)
+    store.listNames(qRoot)
+      .filter(n => n.startsWith("b_") && scala.util.Try(n.drop(2).toLong)
+        .toOption.exists(committed.contains))
+      .map(store.child(qRoot, _))
+      .filterNot(d => store.exists(store.child(d, "_sweeping")))
+  }
+
+  /** The batch id CURRENT serves. */
+  val currentBatch: Option[Long] = current.flatMap(Ingest.parseVersion).map(_._1)
+
+  /** The pinned keys in logical names. */
+  def keys: Seq[String] = layout.keys.map(Ingest.toLogicalName(colMap, _))
+
+  /** The pinned sort (stats) columns in logical names. */
+  def sortCols: Seq[String] =
+    layout.sortCols.map(Ingest.toLogicalName(colMap, _))
+
+  private val completeness =
+    scala.collection.concurrent.TrieMap.empty[String, Boolean]
+
+  /** Is this listed dir a COMPLETE snapshot? Probed at most once per
+    * dir. Gen 0 completeness is the ledger's job (callers intersect
+    * with it); a gen ≥ 1 dir is complete iff CURRENT names it or its
+    * `_gen_commit` marker exists (written after data + feed + metadata,
+    * before the pointer swap), so a crashed maintenance rewrite is
+    * never servable. A dir carrying the `_sweeping` marker is NEVER
+    * complete whatever its generation: a sweep died mid-delete, so the
+    * dir may be missing arbitrary files, and serving it would return
+    * silently partial data (the one as-of crash window the marker
+    * closes).
+    */
+  private[sources] def complete(name: String, gen: Int): Boolean =
+    completeness.getOrElseUpdate(name, {
+      val dir = store.child(root, name)
+      !store.exists(store.child(dir, "_sweeping")) &&
+        (gen == 0 || current.contains(name) ||
+          store.exists(store.child(dir, "_gen_commit")))
+    })
+
+  /** The version dir NAME that serves committed batch `b`: the one
+    * CURRENT names for the current batch, else the batch's newest
+    * complete generation (a maintenance rewrite holds the same state
+    * laid out better). `None` when no complete dir of `b` is left: the
+    * batch was swept, or it was a zero-row batch.
+    */
+  def servable(b: Long): Option[String] =
+    if (currentBatch.contains(b)) current
+    else dirs.collect { case (n, `b`, g) if complete(n, g) => (n, g) }
+      .sortBy(-_._2).headOption.map(_._1)
+
+  /** The committed batch a tag names; loud when the tag is absent. */
+  def tagBatch(name: String): Long =
+    tags.collectFirst { case (`name`, b) => b }.getOrElse(
+      throw new IllegalArgumentException(
+        s"tag '$name' does not exist on $root"))
+
   /** Resolve the snapshot a read serves, in one of three modes:
     *
     *   - CURRENT (no `asOfBatch`, no `tag`): the version the `CURRENT`
     *     pointer names. The pointer is swapped atomically and only ever
     *     names a fully built version.
     *   - as of a batch (`asOfBatch = Some(b)`): the highest RETAINED
-    *     COMMITTED snapshot with batch id ≤ `b`, its newest complete
-    *     generation. Candidate `v_*` dirs are intersected with the
+    *     COMMITTED snapshot with batch id ≤ `b`, served by its
+    *     [[servable]] dir. Candidate `v_*` dirs are intersected with the
     *     `_commits` ledger (a dir without a commit record is a crashed
-    *     partial build) and with [[Ingest.genComplete]]. A batch older
+    *     partial build) and with [[complete]]. A batch older
     *     than retention fails loudly rather than serving a newer state.
     *   - at a tag (`tag = Some(name)`): as of the batch the tag pins
-    *     ([[Ingest.tagBatch]], loud when the tag is absent). A tag wins
-    *     over `asOfBatch`.
+    *     ([[tagBatch]], loud when the tag is absent). A tag wins over
+    *     `asOfBatch`.
+    *
+    * The layout, schema and column map are read here (once per index),
+    * so the snapshot never mixes two versions' metadata.
     */
-  def resolve(root: String, asOfBatch: Option[Long] = None,
-              tag: Option[String] = None)
-             (implicit store: TableStore): Snapshot = {
-    val at = tag.map(Ingest.tagBatch(root, _)).orElse(asOfBatch)
-    val cur = Ingest.readCurrentName(root)
-    require(cur.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    val name = at.fold(cur.get)(versionAsOf(root, cur, _))
-    val (batch, gen) = Ingest.parseVersion(name).get
-    val layout = Ingest.tableLayout(root)
-    new Snapshot(root, name, batch, gen, layout,
-      Ingest.versionBuckets(store.child(root, name)).getOrElse(layout.buckets),
-      Ingest.pinnedSchema(root), Ingest.colMap(root))
+  def snapshot(asOfBatch: Option[Long] = None,
+               tag: Option[String] = None): Snapshot = {
+    val at = tag.map(tagBatch).orElse(asOfBatch)
+    require(current.nonEmpty, s"upsert table has no CURRENT pointer: $root")
+    new Snapshot(this, at.fold(current.get)(asOf))
   }
 
   /** The version dir NAME an as-of read at batch `b` serves. */
-  private def versionAsOf(root: String, cur: Option[String], b: Long)
-                         (implicit store: TableStore): String = {
-    val committed = Ingest.readLedger(root)
-    val vds = Ingest.versionDirs(root)
-    val complete = vds.filter { case (n, bb, g) =>
-      committed.contains(bb) && Ingest.genComplete(root, n, g, cur) }
-    val have = complete.map(_._2).distinct
+  private def asOf(b: Long): String = {
+    val have = dirs.collect {
+      case (n, bb, g) if committed.contains(bb) && complete(n, g) => bb
+    }.distinct
     val eligible = have.filter(_ <= b)
     require(eligible.nonEmpty,
       s"upsert table has no retained committed snapshot at or before " +
@@ -164,15 +274,14 @@ object Snapshot {
     // legitimately has committed batches with no snapshot — they
     // never shadow `best` (their snapshot state IS the previous
     // version's) and must not trip the guard.
-    val shadowed =
-      committed.filter(bb => bb > best && bb <= b) -- Ingest.emptyBatchIds(root)
+    val shadowed = committed.filter(bb => bb > best && bb <= b) -- empties
     // a TAG pin legitimately breaks the suffix shape: retention can
     // sweep batches between a pinned old snapshot and the retained
     // suffix, leaving `best` = the pin for this as-of range. That
     // is a healthy beyond-retention state, not corruption — refuse
     // with the retention error (serving the pin as-of `b` would be
     // stale data), not the corruption one.
-    if (shadowed.nonEmpty && Ingest.tagPinnedBatches(root).contains(best))
+    if (shadowed.nonEmpty && tags.exists(_._2 == best))
       throw new IllegalArgumentException(
         s"upsert table has no retained committed snapshot at batch $b " +
           s"— the nearest older snapshot (batch $best) survives only " +
@@ -180,7 +289,7 @@ object Snapshot {
           "raise keepVersions or tag the batch you need")
     require(shadowed.isEmpty, {
       val (midSweep, vanished) =
-        shadowed.partition(bb => vds.exists(_._2 == bb))
+        shadowed.partition(bb => dirs.exists(_._2 == bb))
       s"as-of read of $root at batch $b cannot safely fall back to " +
         s"batch $best: committed batch(es) " +
         (if (midSweep.nonEmpty)
@@ -192,8 +301,81 @@ object Snapshot {
             "while an older one survives (non-suffix deletion)" else "") +
         " — re-run the cleanup (any commit or vacuum) and retry"
     })
-    // the newest complete generation of `best` (a maintenance rewrite
-    // holds the same state laid out better)
-    complete.filter(_._2 == best).maxBy(_._3)._1
+    servable(best).get
   }
+
+  /** The change-record schema of a change-feed table: the pinned data
+    * schema (bucket column dropped) plus `_change_type` / `_batch_id`,
+    * so a zero-change range reads as a typed empty frame and file
+    * column order never matters.
+    */
+  def changeSchema: StructType = {
+    val data = schema.getOrElse(
+      throw new IllegalArgumentException(s"$root has no _schema file"))
+    StructType(
+      data.fields.filterNot(_.name == Ingest.UpsertBucketCol).toSeq ++ Seq(
+        StructField("_change_type", StringType),
+        StructField("_batch_id", LongType)))
+  }
+
+  /** The change-slice parquet files of the committed batches in
+    * `[from, to]`, in batch order: the one resolver behind every
+    * change-feed read, and the one place its retention contract lives.
+    *
+    *   - A batch whose version is retained serves its [[servable]]
+    *     dir's `_changes` files (a rebucketed version carries its feed
+    *     forward, hard-linked into the new generation). No `_changes`
+    *     means the batch committed zero changes.
+    *   - A zero-row batch (`_empty`) is provably change-free.
+    *   - BOUNDED reads ([[Ingest.readTableChanges]], the V2
+    *     `read=changes` batch scan; `published = false`) answer from
+    *     the ledger and the retained versions alone, so a range has one
+    *     right answer whatever the feed's consumers have pruned: any
+    *     other batch is beyond retention and the read FAILS rather than
+    *     return a hole.
+    *   - The STREAMING source (`published = true`) additionally falls
+    *     back to the batch's published `feed/` links
+    *     ([[Ingest.changeFeedStream]]'s surface), which outlive
+    *     retention until the consumers prune them; it fails only when
+    *     a non-empty batch is both swept and unpublished.
+    *
+    * A table without the `_cdf` marker fails at once: it never recorded
+    * changes.
+    */
+  def changeSliceFiles(from: Long, to: Long,
+                       published: Boolean = false): Seq[String] = {
+    require(store.exists(store.child(root, "_cdf")),
+      s"$root is not a change-feed table — write it with changeFeed=true")
+    def parts(dir: String, prefix: String): Seq[String] =
+      store.listNames(dir)
+        .filter(n => n.startsWith(prefix) && n.endsWith(".parquet"))
+        .map(store.child(dir, _))
+    lazy val feed = parts(store.child(root, "feed"), "b")
+    committed.filter(b => b >= from && b <= to).toSeq.sorted.flatMap { b =>
+      servable(b) match {
+        case Some(n) =>
+          parts(store.child(store.child(root, n), "_changes"), "part-")
+        case None =>
+          val linked =
+            if (!published) Nil
+            else feed.filter(f => store.baseName(f).startsWith(s"b$b-part-"))
+          if (linked.nonEmpty || empties.contains(b)) linked
+          else throw new IllegalArgumentException(
+            s"change feed for batch $b of $root is beyond the retention " +
+              "window (its version was swept" +
+              (if (published) " and its slice is unpublished) — raise " +
+                "keepVersions or start the stream from a later startingBatch"
+              else ") — raise keepVersions/graceMs or consume the feed " +
+                "before it ages out"))
+      }
+    }
+  }
+}
+
+object Versions {
+  /** A fresh index of `root`: reads `CURRENT` now, everything else on
+    * first use.
+    */
+  def read(root: String)(implicit store: TableStore): Versions =
+    new Versions(root, Ingest.readCurrentName(root))
 }

@@ -417,6 +417,33 @@ class GraftSourceSpec extends AnyFunSuite {
       e.getMessage.contains("MICRO_BATCH_READ"))
   }
 
+  test("bounded change reads fail past retention; the stream drains the published feed") {
+    import spark.implicits._
+    val dir = tmp() + "/t"
+    Seq(Seq((1L, 10), (2L, 20)), Seq((3L, 30), (4L, 40))).zipWithIndex
+      .foreach { case (rows, b) =>
+        Ingest.upsertParquet(dir, Seq("k"), nBuckets = 4, keepVersions = 1,
+          changeFeed = true)(rows.toDF("k", "v"), b.toLong)
+      }
+    // v_0 was swept: its slice survives only as published feed/ links,
+    // which a bounded read must not answer from
+    def retentionError(e: Throwable): Boolean =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("beyond the retention")))
+    assert(retentionError(intercept[IllegalArgumentException](
+      Ingest.readTableChanges(spark, dir, 0L, 1L))))
+    for (end <- Seq(0L, 1L))
+      assert(retentionError(intercept[Exception](
+        spark.read.format("graft").option("read", "changes")
+          .option("startingBatch", "0").option("endingBatch", end.toString)
+          .load(dir).collect())), s"V2 read of batches 0..$end")
+    val q = spark.readStream.format("graft").option("read", "changes")
+      .load(dir).writeStream.format("memory").queryName("feed_v2_swept")
+      .option("checkpointLocation", tmp() + "/sck").start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("feed_v2_swept").count() === 4)
+  }
+
   test("maxBatchesPerTrigger bounds stream admission per micro-batch") {
     val dir = tmp() + "/t"
     buildTable(dir) // 2 committed batches
