@@ -99,14 +99,14 @@ final class GraftSource extends DataSourceRegister
         val v = Versions.read(opts.path)
         val phys = v.changeSchema
         val dead = v.colMap.filterNot(_._3).map(_._1).toSet
-        Ingest.toLogicalSchema(opts.path,
+        Ingest.toLogicalSchema(v.colMap,
           StructType(phys.fields.filterNot(f => dead(f.name)).toSeq))
       case "quarantine" =>
         Ingest.readQuarantine(
           org.apache.spark.sql.SparkSession.active, opts.path).schema
       case _ =>
-        Ingest.toLogicalSchema(opts.path,
-          Ingest.physicalDataSchema(opts.path))
+        val v = Versions.read(opts.path)
+        Ingest.toLogicalSchema(v.colMap, Ingest.physicalDataSchema(v))
     }
   }
 

@@ -118,8 +118,7 @@ private[sources] final class GraftTable(opts: GraftSourceOptions,
     if (tableSchema.nonEmpty) {
       caps.add(TableCapability.BATCH_READ)
       caps.add(TableCapability.V1_BATCH_WRITE)
-      if (opts.readMode == "changes" &&
-        store.exists(store.child(opts.path, "_cdf")))
+      if (opts.readMode == "changes" && Versions.read(opts.path).changeFeed)
         caps.add(TableCapability.MICRO_BATCH_READ)
     }
     caps
@@ -415,27 +414,28 @@ private[sources] final class GraftScan(spark: SparkSession,
   // `required` speaks LOGICAL names; files speak physical. Positional
   // identity makes the mapping free: read physical columns in the
   // required order, declare logical names over the same positions.
-  private lazy val cm = Ingest.colMap(root)
+  /** The version index every read mode's schemas and the change read
+    * resolve through.
+    */
+  private lazy val index = Versions.read(root)
+  private def cm = index.colMap
   private def physName(logical: String): String =
     Ingest.toPhysicalName(cm, logical)
 
   /** Full PHYSICAL schema of the scanned files (reader's dataSchema). */
   private lazy val physDataSchema: StructType = opts.readMode match {
-    case "changes" => feedIndex.changeSchema
+    case "changes" => index.changeSchema
     case "quarantine" =>
       // quarantined batches carry the schema of their own era —
       // driver-side union (mergeSchema), exactly the V1 read's rule
       val fs = Ingest.quarantineFiles(root)
       if (fs.isEmpty) quarantineFallbackSchema
       else spark.read.option("mergeSchema", "true").parquet(fs: _*).schema
-    case _ => Ingest.physicalDataSchema(root)
+    case _ => Ingest.physicalDataSchema(index)
   }
 
-  /** The version index a bounded change read resolves through. */
-  private lazy val feedIndex = Versions.read(root)
-
   private def quarantineFallbackSchema: StructType = StructType(
-    Ingest.physicalDataSchema(root).fields.toSeq ++ Seq(
+    Ingest.physicalDataSchema(index).fields.toSeq ++ Seq(
       StructField(Ingest.QuarantineReasonCol,
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.StringType)),
@@ -499,7 +499,7 @@ private[sources] final class GraftScan(spark: SparkSession,
   private lazy val dataFilePaths: Seq[String] =
     opts.readMode match {
       case "changes" =>
-        feedIndex.changeSliceFiles(
+        index.changeSliceFiles(
           opts.startingBatch.getOrElse(0L),
           opts.endingBatch.getOrElse(Long.MaxValue))
       case "quarantine" => Ingest.quarantineFiles(root)
@@ -746,8 +746,7 @@ private[sources] final class GraftScan(spark: SparkSession,
       "graft streaming read serves the CHANGE FEED — spell it " +
         "spark.readStream.format(\"graft\").option(\"read\", \"changes\")" +
         ".load(dir)")
-    require(store.exists(store.child(root, "_cdf")),
-      s"$root is not a change-feed table — write it with changeFeed=true")
+    index.requireChangeFeed()
     new GraftMicroBatchStream(this, opts, root)
   }
 
@@ -776,7 +775,7 @@ private[sources] final class GraftMicroBatchStream(scan: GraftScan,
   private implicit def store: TableStore = opts.store
 
   private def ledgerMax: Long =
-    Ingest.readLedger(root).reduceOption(_ max _).getOrElse(-1L)
+    Versions.read(root).committed.reduceOption(_ max _).getOrElse(-1L)
 
   // Trigger.AvailableNow: pin the drain target at query start so the
   // run processes exactly the history committed by then (batches a

@@ -141,52 +141,6 @@ object Ingest {
   val QuarantineReasonCol = "_violated"
   val QuarantineBatchCol = "_q_batch"
 
-  /** Committed batchIds of an upsert table. A torn/garbage line from a
-    * crash mid-append degrades to "uncommitted" (safe: the merge is
-    * idempotent), never a hard failure. Shared by the writer's replay
-    * check, `cleanupStale`, and — critically — the time-travel read:
-    * a `v_*` directory NOT in this set is a crashed partial build and
-    * must never be served as a snapshot.
-    */
-  private[sources] def readLedger(root: String)(implicit store: TableStore): Set[Long] =
-    store.readLog(store.child(root, "_commits"))
-      .flatMap(l => scala.util.Try(l.trim.split("\\s+")(0).toLong).toOption)
-      .toSet
-
-  /** One streaming-writer transaction annotation in the commit ledger:
-    * `<batchId> txn=<writerId>:<microBatchId>` — the batch id and the
-    * writer token ride the SAME atomic append, so a commit can never
-    * exist without its dedupe record. On the object/Hadoop stores an
-    * append is one atomic object; on local POSIX a torn line degrades
-    * the same way the plain ledger always has (leading token kept,
-    * annotation lost) — which downgrades that ONE micro-batch from
-    * exactly-once to at-least-once, and an upsert re-merge of the same
-    * rows is state-idempotent.
-    */
-  private val TxnLine = """(\d+)\s+txn=([A-Za-z0-9._\-]+):(\d+)(?:\s.*)?""".r
-
-  /** `ts=<epochMillis>` commit-wall-clock annotation (always the LAST
-    * token — annotations compose left-to-right after the batch id).
-    * Powers TIMESTAMP AS OF; commits from builds predating the
-    * annotation simply have none and resolve as "before every
-    * timestamped commit", which is chronologically true.
-    */
-  private val TsToken = """\bts=(\d+)\b""".r
-
-  /** batch id → commit wall-clock millis, for the commits that carry
-    * the annotation.
-    */
-  private[sources] def readCommitTimes(root: String)
-                                      (implicit store: TableStore)
-      : Map[Long, Long] =
-    store.readLog(store.child(root, "_commits"))
-      .flatMap { l =>
-        for {
-          b <- scala.util.Try(l.trim.split("\\s+")(0).toLong).toOption
-          m <- TsToken.findFirstMatchIn(l)
-        } yield b -> m.group(1).toLong
-      }.toMap
-
   /** The newest committed batch whose commit wall-clock is at or
     * before `millis` — TIMESTAMP AS OF resolution. Commits without a
     * `ts=` annotation (pre-upgrade) count as arbitrarily old. Refuses
@@ -197,39 +151,17 @@ object Ingest {
     */
   def batchAtTimestamp(tableDir: String, millis: Long)
                       (implicit store: TableStore): Long = {
-    val times = readCommitTimes(tableDir)
-    val eligible = readLedger(tableDir)
-      .filter(b => times.get(b).forall(_ <= millis))
+    val v = Versions.read(tableDir)
+    val times = v.commitTimes
+    val eligible = v.committed.filter(b => times.get(b).forall(_ <= millis))
     require(eligible.nonEmpty,
       s"no commit of $tableDir is at or before timestamp $millis — " +
         "the table did not exist yet (earliest commit is " +
-        s"${readLedger(tableDir).minOption.map(b => times.get(b)
+        s"${v.committed.minOption.map(b => times.get(b)
           .map(_.toString).getOrElse("untimestamped"))
           .getOrElse("<none>")})")
     eligible.max
   }
-
-  /** Streaming writer transactions: writerId → (highest recorded
-    * micro-batch id, the TABLE batch id it committed as). The table
-    * batch id is what the replay no-op path heals feed publication
-    * with; per-writer max because micro-batch ids are contiguous per
-    * checkpoint.
-    */
-  private def readTxns(root: String)(implicit store: TableStore)
-      : Map[String, (Long, Long)] =
-    store.readLog(store.child(root, "_commits"))
-      .flatMap { l =>
-        l.trim match {
-          case TxnLine(b, w, mb) =>
-            scala.util.Try((w, mb.toLong, b.toLong)).toOption
-          case _ => None
-        }
-      }
-      .groupBy(_._1)
-      .map { case (w, es) =>
-        val top = es.maxBy(_._2)
-        w -> (top._2, top._3)
-      }
 
   /** Public read of the committed-batch ledger — the freshness token
     * external derivations (e.g. [[graft.plans.MvCatalog.UpsertPin]])
@@ -238,7 +170,7 @@ object Ingest {
     */
   def committedBatchIds(tableDir: String)
                        (implicit store: TableStore): Set[Long] =
-    readLedger(tableDir)
+    Versions.read(tableDir).committed
 
   /** Version-dir name: `v_<batchId>` (generation 0 — written by the
     * upsert protocol itself; complete iff its batchId is in the
@@ -299,13 +231,21 @@ object Ingest {
   private def swapCurrent(root: String, expected: Option[String], to: String,
                           during: String)(implicit store: TableStore): Unit =
     if (!store.putConditional(root, "CURRENT", expected, to))
-      throw new java.util.ConcurrentModificationException(
-        s"$during: CURRENT of $root moved from " +
-          s"${expected.getOrElse("<none>")} to " +
-          s"${readCurrentName(root).getOrElse("<none>")} while it was " +
-          "built — a concurrent writer committed. Nothing was swapped " +
-          "(the next cleanup sweeps the orphan build); re-run against " +
-          "the new snapshot")
+      throw movedUnder(root, expected, during)
+
+  /** The loud failure of a commit whose base `expected` is no longer
+    * CURRENT: a concurrent writer committed, and nothing was swapped.
+    */
+  private def movedUnder(root: String, expected: Option[String],
+                         during: String)(implicit store: TableStore)
+      : java.util.ConcurrentModificationException =
+    new java.util.ConcurrentModificationException(
+      s"$during: CURRENT of $root moved from " +
+        s"${expected.getOrElse("<none>")} to " +
+        s"${readCurrentName(root).getOrElse("<none>")} while it was " +
+        "built — a concurrent writer committed. Nothing was swapped " +
+        "(the next cleanup sweeps any orphan build); re-run against " +
+        "the new snapshot")
 
   /** Drop anything not referenced: crashed partial builds (a gen-0 dir
     * whose batchId is NOT in the ledger, or a gen ≥ 1 dir with no
@@ -443,6 +383,19 @@ object Ingest {
       .flatMap(n => scala.util.Try(n.stripPrefix(s"$UpsertBucketCol=").toLong)
         .toOption.map(_ -> store.child(vDir, n)))
       .filter { case (_, d) => store.isDirectory(d) }
+
+  /** Refuse to clear the build dir `name` of a commit based on `base`
+    * once `CURRENT` has moved from `base`: a competitor that committed
+    * the same batch id after the caller's index was read left its
+    * version dir there, and clearing it would destroy a committed
+    * snapshot. A crashed attempt's partial build leaves `CURRENT` at
+    * `base`. Reads the pointer only when the dir exists.
+    */
+  private def requireOwnBuildDir(root: String, name: String,
+                                 base: Option[String], during: String)
+                                (implicit store: TableStore): Unit =
+    if (store.exists(store.child(root, name)) && readCurrentName(root) != base)
+      throw movedUnder(root, base, during)
 
   /** An empty build dir for version `name`, clear of any partial build
     * a crashed attempt left there.
@@ -618,6 +571,14 @@ object Ingest {
     * ([[OccInflightGraceMs]]) so the race is closed from both sides.
     * Retries re-run the merge at full cost; contended tables should
     * still prefer one writer per table.
+    *
+    * The CAS contract: each attempt reads one [[Versions]] index and
+    * commits against the version it read. The replay check, the pins
+    * and the merge base all answer from that index, and the pointer
+    * CAS expects the `CURRENT` it named — never a re-read just before
+    * the swap — so a competing commit that lands after the read fails
+    * the attempt (and, with `occRetries`, re-merges against a fresh
+    * index) instead of being merged over.
     */
   def upsertParquet(tableDir: String, keys: Seq[String], nBuckets: Int = 16,
                     keepVersions: Int = 1, deleteCol: Option[String] = None,
@@ -631,12 +592,6 @@ object Ingest {
                     txn: Option[(String, Long)] = None)
                    (batch: DataFrame, batchId: Long)
                    (implicit store: TableStore): Unit = {
-    // column mapping: callers speak LOGICAL names (keys, sortCols and
-    // the batch itself); storage speaks physical — translate once here
-    val cm = colMap(tableDir)
-    val layout = TableLayout(keys.map(toPhysicalName(cm, _)), nBuckets,
-      sortCols.map(toPhysicalName(cm, _)), filesPerBucket)
-    val physBatch = physicalizeBatch(tableDir, batch, deleteCol.toSet)
     // occMode reflects "this TABLE is operated two-writer" and must
     // survive the retry countdown: deriving it from retries-remaining
     // would run the LAST retry's post-commit cleanup with no in-flight
@@ -644,12 +599,17 @@ object Ingest {
     // can no longer re-merge
     val occMode = occRetries > 0
     def attempt(retriesLeft: Int): Unit = {
-      // consulted only by the OCC conflict guard below — single-writer
-      // tables (the default, dominant path) skip the extra control read
-      val before = if (occMode) readCurrentName(tableDir) else None
-      try upsertOnce(tableDir, layout, keepVersions, deleteCol, graceMs,
+      // one index per attempt, so a retry sees the competitor's commit.
+      // Callers speak LOGICAL names (keys, sortCols and the batch
+      // itself); storage speaks physical — translated through the
+      // index's column map
+      val v = Versions.read(tableDir)
+      val cm = v.colMap
+      val layout = TableLayout(keys.map(toPhysicalName(cm, _)), nBuckets,
+        sortCols.map(toPhysicalName(cm, _)), filesPerBucket)
+      try upsertOnce(v, layout, keepVersions, deleteCol, graceMs,
         changeFeed, lazyDeletes, constraints, occMode, quarantine, txn)(
-        physBatch, batchId)
+        physicalizeBatch(v, batch, deleteCol.toSet), batchId)
       catch {
         // a competing commit moved CURRENT mid-merge: nothing durable was
         // written, the merge is replay-idempotent, so re-merging against
@@ -672,7 +632,7 @@ object Ingest {
         // until the last attempt.
         case scala.util.control.NonFatal(e)
             if retriesLeft > 0 && !e.isInstanceOf[IllegalArgumentException] &&
-              readCurrentName(tableDir) != before =>
+              readCurrentName(tableDir) != v.current =>
           attempt(retriesLeft - 1)
       }
     }
@@ -681,12 +641,18 @@ object Ingest {
 
   /** The sink entry for the commits an operation makes itself (RESTORE,
     * PUBLISH, DML, MERGE, upsertInto, requeue, the dangling-commit
-    * heal): the table's pinned `layout` (physical names) and its
-    * pinned change-feed flag, so an op's batch always matches the
-    * table it lands in. Single-writer, no constraints passed (the
-    * pinned set still screens).
+    * heal): the op's own index `v`, the table's pinned `layout`
+    * (physical names) and its pinned change-feed flag, so an op's batch
+    * always matches the table it lands in. The CAS contract: an op
+    * commits against the version it read. The sink checks and merges
+    * through `v` and CASes `CURRENT` from `v.current`, so a competing
+    * commit that landed after the op resolved its index — even one
+    * that took the batch id the op minted — fails loudly with
+    * [[java.util.ConcurrentModificationException]] and leaves nothing
+    * durable, instead of passing for a replay. Single-writer, no
+    * constraints passed (the pinned set still screens).
     */
-  private def commitPinned(tableDir: String, layout: TableLayout,
+  private def commitPinned(v: Versions, layout: TableLayout,
                            keepVersions: Int, graceMs: Long = 0L,
                            deleteCol: Option[String] = None,
                            lazyDeletes: Boolean = false,
@@ -694,12 +660,12 @@ object Ingest {
                            txn: Option[(String, Long)] = None)
                           (batch: DataFrame, batchId: Long)
                           (implicit store: TableStore): Unit =
-    upsertOnce(tableDir, layout, keepVersions, deleteCol, graceMs,
-      changeFeed = store.exists(store.child(tableDir, "_cdf")), lazyDeletes,
+    upsertOnce(v, layout, keepVersions, deleteCol, graceMs,
+      changeFeed = v.changeFeed, lazyDeletes,
       constraints = Nil, occMode = false, quarantine, txn)(
-      physicalizeBatch(tableDir, batch, deleteCol.toSet), batchId)
+      physicalizeBatch(v, batch, deleteCol.toSet), batchId)
 
-  private def upsertOnce(tableDir: String, layout: TableLayout,
+  private def upsertOnce(v: Versions, layout: TableLayout,
                     keepVersions: Int, deleteCol: Option[String],
                     graceMs: Long, changeFeed: Boolean,
                     lazyDeletes: Boolean,
@@ -712,7 +678,7 @@ object Ingest {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, count,
       first, lit, max, pmod, when, xxhash64}
     val spark = batch.sparkSession
-    val root = tableDir
+    val root = v.root
     val TableLayout(keys, nBuckets, sortCols, filesPerBucket) = layout
     store.mkdirs(root)
     val commitsPath = store.child(root, "_commits")
@@ -726,10 +692,10 @@ object Ingest {
       s"upsertParquet: sortCols ${sortCols.mkString(",")} not all present " +
         s"in the batch (columns: ${batch.columns.mkString(",")})")
     val metaStr = layout.render
-    store.read(store.child(root, "_meta")) match {
+    v.meta match {
       case None => store.writeAtomic(root, "_meta", metaStr)
       case Some(have) => require(have == metaStr,
-        s"upsertParquet: table $tableDir was created with [${have.trim
+        s"upsertParquet: table $root was created with [${have.trim
           .replace('\n', ' ')}] but this call passed [${metaStr.trim
           .replace('\n', ' ')}] — keys are immutable; the bucket count " +
           "changes only through rebucketUpsertTable (then pass the new count)")
@@ -738,15 +704,14 @@ object Ingest {
     // (some batches recorded, some not) is worse than no feed, so the
     // marker is pinned before the first commit and every later call
     // must agree with it
-    val cdfPath = store.child(root, "_cdf")
-    if (changeFeed && !store.exists(cdfPath)) {
-      require(readLedger(root).isEmpty,
-        s"upsertParquet: table $tableDir has committed batches with no " +
+    if (changeFeed && !v.changeFeed) {
+      require(v.committed.isEmpty,
+        s"upsertParquet: table $root has committed batches with no " +
           "change feed — the feed cannot start mid-history")
       store.writeAtomic(root, "_cdf", "")
     }
-    require(!store.exists(cdfPath) || changeFeed,
-      s"upsertParquet: table $tableDir records a change feed — " +
+    require(!v.changeFeed || changeFeed,
+      s"upsertParquet: table $root records a change feed — " +
         "pass changeFeed=true (a silent hole would corrupt the feed)")
     // CHECK constraints are a create-time table property: pinned in
     // `_constraints` before the first commit, enforced on every later
@@ -754,36 +719,30 @@ object Ingest {
     // sometimes holds is not an invariant). ANSI CHECK semantics: a
     // row violates only when the expression is definitively FALSE —
     // NULL passes (write `c IS NOT NULL` for NOT NULL).
+    val have = v.constraints
     val pinnedCons: Seq[(String, String)] =
-      store.read(store.child(root, "_constraints")) match {
-        case Some(pinned) =>
-        val have = pinned
-          .linesIterator.filter(_.nonEmpty)
-          .map(_.split("=", 2)).collect { case Array(n, e) => n -> e }.toSeq
+      if (have.nonEmpty) {
         // subset comparison (by name+expr): the pinned set can only
         // GROW through the explicit, data-validating ALTER
         // ([[addTableConstraint]]) — a caller still passing the
         // creation-time set remains correct; enforcement always uses
         // the PINNED set whatever the caller passes
         require(constraints.toSet.subsetOf(have.toSet),
-          s"upsertParquet: table $tableDir pins constraints " +
+          s"upsertParquet: table $root pins constraints " +
             s"[${have.map(_._1).mkString(",")}] — pass a subset or none " +
             "(the sink cannot introduce constraints; use " +
             "addTableConstraint / GRAFT ALTER ADD CONSTRAINT)")
         have
-      case None if constraints.nonEmpty =>
-        require(readLedger(root).isEmpty,
-          s"upsertParquet: table $tableDir has committed batches with no " +
+      } else if (constraints.nonEmpty) {
+        require(v.committed.isEmpty,
+          s"upsertParquet: table $root has committed batches with no " +
             "constraints — invariants cannot start mid-history")
         require(constraints.forall(c => c._1.nonEmpty && !c._1.contains("=")),
           "upsertParquet: constraint names must be non-empty and '='-free")
-        store.writeAtomic(root, "_constraints",
-          constraints.map { case (n, e) => s"$n=$e" }.mkString("", "\n", "\n"))
+        writeConstraints(root, constraints)
         constraints
-      case None => Nil
-    }
+      } else Nil
 
-    def readCurrent(): Option[String] = readCurrentName(root)
     def commit(): Unit = {
       // a streaming writer's (writerId, microBatchId) token rides the
       // SAME append as the batch id — commit and dedupe record are one
@@ -805,16 +764,15 @@ object Ingest {
       if (changeFeed) publishFeedSlice(after, batchId)
     }
 
-    val done: Set[Long] = readLedger(root)
-    if (done.contains(batchId)) {
+    if (v.committed.contains(batchId)) {
       // replay of a committed batch: the merge is a no-op, but heal the
       // commit→publish crash window — link any feed files the crashed
       // attempt didn't get to (idempotent per file)
-      if (changeFeed) publishFeedSlice(Versions.read(root), batchId)
+      if (changeFeed) publishFeedSlice(v, batchId)
       return
     }
     val vName = s"v_$batchId"
-    if (readCurrent().contains(vName)) {
+    if (v.current.contains(vName)) {
       commit() // crash between swap and append: state already has the batch
       return
     }
@@ -845,7 +803,7 @@ object Ingest {
     def dataOf(df: DataFrame): DataFrame = deleteCol.fold(df)(df.drop(_))
     val batchSchema = dataOf(bkAll).schema
     val tableSchema: StructType =
-      pinnedSchema(root) match {
+      v.schema match {
         case None =>
         store.writeAtomic(root, "_schema", batchSchema.json)
         batchSchema
@@ -873,11 +831,12 @@ object Ingest {
           widened
         }
       }
-    // the snapshot this merge is based on: the swap CASes CURRENT
-    // from it, so a competing commit fails loudly ([[swapCurrent]])
-    var mergeBase: Option[String] = None
-    def swap(): Unit = swapCurrent(root, mergeBase, vName,
-      s"upsertParquet: batch $batchId")
+    // the snapshot this merge is based on — the CURRENT the index
+    // read: the swap CASes CURRENT from it, so a competing commit fails
+    // loudly ([[swapCurrent]])
+    val mergeBase = v.current
+    val during = s"upsertParquet: batch $batchId"
+    def swap(): Unit = swapCurrent(root, mergeBase, vName, during)
     // independent data-plane writes launched during the merge and all
     // awaited BEFORE the pointer swap (and in the finally, so a crashed
     // attempt never leaves a job racing a caller's cleanup)
@@ -921,7 +880,7 @@ object Ingest {
           } catch {
             case ae: org.apache.spark.sql.AnalysisException =>
               throw new IllegalArgumentException(
-                s"upsertParquet: a pinned constraint of $tableDir does not " +
+                s"upsertParquet: a pinned constraint of $root does not " +
                   s"resolve against batch $batchId (${ae.getMessage.linesIterator
                     .next()}). Constraints must reference table columns " +
                   "only — tombstones are exempt by contract, so the delete " +
@@ -939,7 +898,7 @@ object Ingest {
             .map(i => s"${viol(i)._1} (${counts.getLong(i)} rows)")
           throw new IllegalArgumentException(
             s"upsertParquet: batch $batchId violates pinned constraint(s) " +
-              s"${broken.mkString("[", ", ", "]")} of $tableDir — nothing " +
+              s"${broken.mkString("[", ", ", "]")} of $root — nothing " +
               "was written (reject-batch semantics: fix or filter the feed)")
         } else {
           // QUARANTINE (dead-letter) mode: violating upsert rows are
@@ -1000,7 +959,7 @@ object Ingest {
         // letters must be durable before the ledger records the batch,
         // or a crash-replay would no-op and lose them
         awaitDataPlane()
-        if (readCurrent().nonEmpty) {
+        if (mergeBase.nonEmpty) {
           // a non-first empty batch commits no version; record it so
           // readTableChanges can prove "zero changes" — and DESCRIBE
           // HISTORY can report the batch's (unchanged) snapshot state —
@@ -1008,11 +967,11 @@ object Ingest {
           // after a crash re-appends — duplicates are harmless (parsed
           // as a set).
           store.appendLog(store.child(root, "_empty"), s"$batchId")
-        }
-        if (readCurrent().isEmpty) {
+        } else {
           // first-ever batch is empty: the table must still become
           // readable (foreachBatch legitimately delivers an empty batch
           // 0), so commit an EMPTY snapshot — _schema carries the type
+          requireOwnBuildDir(root, vName, mergeBase, during)
           val newV = store.child(root, vName)
           store.deleteTree(newV)
           dataOf(bk).write.partitionBy(UpsertBucketCol)
@@ -1042,31 +1001,29 @@ object Ingest {
       // deletion vector instead
       val rewriteB: Set[Long] = if (lazyDeletes) upsertBuckets else touched
 
+      requireOwnBuildDir(root, vName, mergeBase, during)
       val newV = freshVersion(root, vName)
-      mergeBase = readCurrent() // the snapshot this merge is based on
-      val curDir = mergeBase.map(store.child(root, _))
+      // the merge base as the index resolved it — the op that read the
+      // index shares its bucket count and deletion vector
+      val base = mergeBase.map(_ => v.snapshot())
+      val curDir = base.map(_.versionDir)
       // a rebucket that crashed between its pointer swap and its _meta
       // update leaves CURRENT hashed with a different count than _meta
       // — merging against it with this call's count would scope the
       // rewrite to the WRONG buckets (the same key alive in two
       // places). Fail loudly; re-running rebucketUpsertTable completes
       // the protocol idempotently.
-      curDir.foreach { d =>
-        versionBuckets(d).foreach(vb => require(vb == nBuckets,
-          s"upsertParquet: CURRENT snapshot of $tableDir is hashed into " +
-            s"$vb buckets but this call passed $nBuckets — re-run " +
-            s"rebucketUpsertTable($vb) to complete the interrupted " +
-            "rebucket, then pass the new count"))
-      }
+      base.foreach(snap => require(snap.buckets == nBuckets,
+        s"upsertParquet: CURRENT snapshot of $root is hashed into " +
+          s"${snap.buckets} buckets but this call passed $nBuckets — re-run " +
+          s"rebucketUpsertTable(${snap.buckets}) to complete the interrupted " +
+          "rebucket, then pass the new count"))
       def dirsOf(d: String, bs: Set[Long]): Seq[String] =
         bs.toSeq.sorted.map(b => store.child(d, s"$UpsertBucketCol=$b"))
           .filter(store.isDirectory)
       val rewriteDirs = curDir.toSeq.flatMap(dirsOf(_, rewriteB))
       // the prior version's deletion vector (keys + bucket), if any
-      val prevDv: Option[DataFrame] = curDir
-        .map(d => store.child(d, "_deletes"))
-        .filter(d => parquetFiles(d).nonEmpty)
-        .map(d => spark.read.parquet(d))
+      val prevDv: Option[DataFrame] = base.flatMap(_.deletes(spark))
       val prevDvKeys = prevDv.map(_.select(keys.map(col): _*))
       // every batch key — upsert or tombstone — evicts its old row from
       // the rewritten buckets; only non-tombstone rows are re-inserted.
@@ -1430,15 +1387,10 @@ object Ingest {
     */
   def describeDetailUpsertTable(spark: SparkSession, tableDir: String)
                                (implicit store: TableStore): DataFrame = {
-    val root = tableDir
-    val v = Versions.read(root)
+    val v = Versions.read(tableDir)
     val snap = v.snapshot()
     val layout = snap.layout
-    val lineage = store.read(store.child(root, "_branch_base"))
-      .map(_.split('\n').map(_.trim).filter(_.contains('='))
-        .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap)
-    val nCons = store.read(store.child(root, "_constraints"))
-      .map(_.linesIterator.count(_.contains('='))).getOrElse(0)
+    val lineage = v.lineage
     import spark.implicits._
     Seq((
       layout.keys.mkString(","), layout.buckets,
@@ -1448,8 +1400,8 @@ object Ingest {
       v.committed.size.toLong,
       v.dirs.size.toLong,
       snap.dataFiles.size.toLong,
-      store.exists(store.child(root, "_cdf")),
-      nCons.toLong,
+      v.changeFeed,
+      v.constraints.size.toLong,
       snap.hasDeletes,
       lineage.isDefined,
       lineage.flatMap(_.get("batch")).map(_.toLong)
@@ -1693,7 +1645,7 @@ object Ingest {
             struct(col(QuarantineBatchCol), rowStruct)).as("m"))
           .select(col("m.*"))
           .drop(QuarantineReasonCol, QuarantineBatchCol))
-      commitPinned(tableDir, v.layout, keepVersions,
+      commitPinned(v, v.layout, keepVersions,
         quarantine = true)(healedInput, asBatch)
     }
     // sweep the consumed dirs, oldest first (the sweep invariant);
@@ -1742,7 +1694,7 @@ object Ingest {
     keepBatches.foreach(k => require(k >= 0,
       s"pruneQuarantine: keepBatches must be >= 0, got $k"))
     val qRoot = store.child(tableDir, QuarantineDir)
-    val committed = readLedger(tableDir)
+    val committed = Versions.read(tableDir).committed
     val now = System.currentTimeMillis()
     val entries = store.listNames(qRoot).flatMap { n =>
       if (!n.startsWith("b_")) None
@@ -1785,13 +1737,6 @@ object Ingest {
                                      (implicit store: TableStore): Option[Int] =
     store.read(store.child(vDir, "_nbuckets"))
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-
-  /** The pinned `_schema` as a StructType, when present. */
-  private[sources] def pinnedSchema(root: String)
-                                   (implicit store: TableStore): Option[StructType] =
-    store.read(store.child(root, "_schema")).map(json =>
-      org.apache.spark.sql.types.DataType.fromJson(json)
-        .asInstanceOf[StructType])
 
   /** The layout a table pins in `_meta` at its first commit, in
     * PHYSICAL column names: hash keys, bucket count, and — when the
@@ -2101,30 +2046,6 @@ object Ingest {
 
   // --- column mapping (metadata-only RENAME / DROP COLUMN) ---
 
-  /** Column-mapping state of a table (`_colmap`, one atomic control
-    * object): `(physical, logical, live)` per NON-identity column.
-    * Physical names are immutable once written into parquet files and
-    * the pinned `_schema`; logical names are the user-facing surface
-    * ([[renameColumn]] / [[dropColumn]] rewrite only this object —
-    * zero data I/O, the ALTER TABLE cost model a 100-TB table
-    * requires). A column absent from the map is identity-mapped and
-    * live. A dead entry (`live = false`) is a DROP: the physical
-    * column stays in history and the pinned schema, reads project it
-    * out, and a later re-add of the same logical name mints a FRESH
-    * physical name — dropped data is never resurrected (the field-ID
-    * discipline, spelled with disjoint names instead of numeric ids:
-    * [[renameColumn]] refuses targets that collide with any pinned
-    * physical name, so logical→physical lookup is never ambiguous).
-    */
-  private[sources] def colMap(root: String)
-                    (implicit store: TableStore): Seq[(String, String, Boolean)] =
-    store.read(store.child(root, "_colmap")).toSeq
-      .flatMap(_.split('\n')).map(_.trim).filter(_.nonEmpty).map { l =>
-        val p = l.split('\t')
-        require(p.length == 3, s"$root/_colmap: torn entry '$l'")
-        (p(0), p(1), p(2) == "1")
-      }
-
   private def writeColMap(root: String, cm: Seq[(String, String, Boolean)])
                          (implicit store: TableStore): Unit =
     store.writeAtomic(root, "_colmap",
@@ -2163,10 +2084,9 @@ object Ingest {
   /** The current LOGICAL column names of the table: pinned physicals
     * minus dead ones, live renames applied.
     */
-  private def logicalNames(root: String,
-                           cm: Seq[(String, String, Boolean)])
-                          (implicit store: TableStore): Seq[String] = {
-    val phys = pinnedSchema(root).map(_.fieldNames.toSeq).getOrElse(Nil)
+  private def logicalNames(v: Versions): Seq[String] = {
+    val cm = v.colMap
+    val phys = v.schema.map(_.fieldNames.toSeq).getOrElse(Nil)
     val dead = cm.filterNot(_._3).map(_._1).toSet
     phys.filterNot(dead).filterNot(_ == UpsertBucketCol)
       .map(p => toLogicalName(cm, p))
@@ -2200,16 +2120,14 @@ object Ingest {
     // expression would be parsed back as a bogus second entry
     require(!checkExpr.contains("\n") && !checkExpr.contains("\r"),
       "addTableConstraint: expression must be single-line")
-    val have: Seq[(String, String)] =
-      store.read(store.child(tableDir, "_constraints")).toSeq
-        .flatMap(_.linesIterator).filter(_.nonEmpty)
-        .map(_.split("=", 2)).collect { case Array(n, e) => n -> e }
+    val v = Versions.read(tableDir)
+    val have = v.constraints
     require(!have.exists(_._1 == name),
       s"addTableConstraint: '$name' already pinned on $tableDir")
     // validate the FULL current snapshot (physical view — constraint
     // expressions speak creation-time names): any definitively-FALSE
     // row refuses the add
-    val snap = Snapshot.resolve(tableDir).scan(spark).drop(UpsertBucketCol)
+    val snap = v.snapshot().scan(spark).drop(UpsertBucketCol)
     // ANSI CHECK: a row violates only when the expression is
     // definitively FALSE (NULL passes — same rule the sink screens by)
     val violating = snap.filter(expr(checkExpr) <=>
@@ -2218,9 +2136,7 @@ object Ingest {
       s"addTableConstraint: $violating current row(s) of $tableDir " +
         s"violate '$name' — an invariant the data does not hold cannot " +
         "be pinned (heal the data first)")
-    store.writeAtomic(tableDir, "_constraints",
-      (have :+ (name -> checkExpr))
-        .map { case (n, e) => s"$n=$e" }.mkString("", "\n", "\n"))
+    writeConstraints(tableDir, have :+ (name -> checkExpr))
   }
 
   /** DROP a pinned CHECK constraint — metadata-only (`GRAFT ALTER
@@ -2230,20 +2146,20 @@ object Ingest {
     */
   def dropTableConstraint(tableDir: String, name: String)
                          (implicit store: TableStore): Unit = {
-    val have: Seq[(String, String)] =
-      store.read(store.child(tableDir, "_constraints")).toSeq
-        .flatMap(_.linesIterator).filter(_.nonEmpty)
-        .map(_.split("=", 2)).collect { case Array(n, e) => n -> e }
+    val have = Versions.read(tableDir).constraints
     require(have.exists(_._1 == name),
       s"dropTableConstraint: no constraint '$name' on $tableDir " +
         s"(pinned: ${have.map(_._1).mkString(",")})")
-    store.writeAtomic(tableDir, "_constraints",
-      have.filterNot(_._1 == name)
-        .map { case (n, e) => s"$n=$e" } match {
-        case Nil => ""
-        case ls => ls.mkString("", "\n", "\n")
-      })
+    writeConstraints(tableDir, have.filterNot(_._1 == name))
   }
+
+  /** Pin `cs` as the table's `_constraints` ([[Versions.constraints]]
+    * reads it back), one atomic whole-object write.
+    */
+  private def writeConstraints(root: String, cs: Seq[(String, String)])
+                              (implicit store: TableStore): Unit =
+    store.writeAtomic(root, "_constraints",
+      cs.map { case (n, e) => s"$n=$e\n" }.mkString)
 
   /** Metadata-only RENAME COLUMN: rewrite `_colmap` so reads surface
     * `to` where files store `from`'s physical column — no version, no
@@ -2262,15 +2178,15 @@ object Ingest {
                   (implicit store: TableStore): Unit = {
     require(ColNameOk.matches(to),
       s"renameColumn: bad target column name '$to'")
-    val cm = colMap(tableDir)
-    val logical = logicalNames(tableDir, cm)
+    val v = Versions.read(tableDir)
+    val cm = v.colMap
+    val logical = logicalNames(v)
     require(logical.contains(from),
       s"renameColumn: no column '$from' (columns: ${logical.mkString(",")})")
     require(!logical.contains(to),
       s"renameColumn: column '$to' already exists")
     val phys = toPhysicalName(cm, from)
-    val pinnedPhys = pinnedSchema(tableDir).map(_.fieldNames.toSet)
-      .getOrElse(Set.empty)
+    val pinnedPhys = v.schema.map(_.fieldNames.toSet).getOrElse(Set.empty)
     require(to == phys || !pinnedPhys.contains(to),
       s"renameColumn: '$to' collides with a physical column name — " +
         "pick a name never used by this table's storage")
@@ -2289,7 +2205,7 @@ object Ingest {
                 (implicit store: TableStore): Unit = {
     val v = Versions.read(tableDir)
     val cm = v.colMap
-    val logical = logicalNames(tableDir, cm)
+    val logical = logicalNames(v)
     require(logical.contains(name),
       s"dropColumn: no column '$name' (columns: ${logical.mkString(",")})")
     val phys = toPhysicalName(cm, name)
@@ -2310,10 +2226,10 @@ object Ingest {
     * schema still carries are null-filled so the widen-only check and
     * the bucket-merge union stay satisfied.
     */
-  private def physicalizeBatch(root: String, batch: DataFrame,
+  private def physicalizeBatch(v: Versions, batch: DataFrame,
                                skipCols: Set[String])
                               (implicit store: TableStore): DataFrame = {
-    val cm = colMap(root)
+    var cm = v.colMap
     if (cm.isEmpty) return batch
     import org.apache.spark.sql.functions.lit
     var df = batch
@@ -2322,15 +2238,15 @@ object Ingest {
         df = df.withColumnRenamed(lg, p)
     }
     val retired = cm.filterNot(_._3).map(_._1).toSet
-    val pinned = pinnedSchema(root)
+    val pinned = v.schema
     val pinnedNames = pinned.map(_.fieldNames.toSet).getOrElse(Set.empty)
     df.columns.filter(c => retired.contains(c) && !skipCols(c)).foreach { c =>
       val taken = pinnedNames ++ df.columns ++ retired
       val fresh = Iterator.from(2).map(i => s"${c}__$i")
         .find(f => !taken.contains(f)).get
       df = df.withColumnRenamed(c, fresh)
-      writeColMap(root,
-        colMap(root).filterNot(_._1 == fresh) :+ ((fresh, c, true)))
+      cm = cm.filterNot(_._1 == fresh) :+ ((fresh, c, true))
+      writeColMap(v.root, cm)
     }
     pinned.foreach(_.fields
       .filter(f => retired.contains(f.name) && !df.columns.contains(f.name))
@@ -2648,7 +2564,7 @@ object Ingest {
     val cur = v.snapshot()
     val diff = diffBatch(s"restoreUpsertTable: $tableDir",
       v.snapshot(Some(toBatch)).read(spark), cur.read(spark), cur.keys)
-    commitPinned(tableDir, cur.layout, keepVersions, graceMs,
+    commitPinned(v, cur.layout, keepVersions, graceMs,
       Some(TombstoneCol))(diff, newBatch)
     newBatch
   }
@@ -2714,14 +2630,9 @@ object Ingest {
       }
     }
     linkTree(snap.versionDir, dstV)
-    store.writeAtomic(dstDir, "_meta",
-      store.read(store.child(srcDir, "_meta")).get)
-    store.read(store.child(srcDir, "_schema"))
-      .foreach(s => store.writeAtomic(dstDir, "_schema", s))
-    store.read(store.child(srcDir, "_constraints"))
-      .foreach(s => store.writeAtomic(dstDir, "_constraints", s))
-    store.read(store.child(srcDir, "_colmap"))
-      .foreach(s => store.writeAtomic(dstDir, "_colmap", s))
+    // the pinned table properties travel verbatim
+    Seq("_meta", "_schema", "_constraints", "_colmap").foreach(n =>
+      store.read(store.child(srcDir, n)).foreach(store.writeAtomic(dstDir, n, _)))
     lineage.foreach(f =>
       store.writeAtomic(dstDir, "_branch_base", f(snap.name)))
     store.appendLog(store.child(dstDir, "_commits"), "0")
@@ -2780,14 +2691,17 @@ object Ingest {
                          keepVersions: Int = 2, graceMs: Long = 0L,
                          force: Boolean = false)
                         (implicit store: TableStore): Option[Long] = {
-    val lineage = store.read(store.child(branchDir, "_branch_base"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"publishUpsertTable: $branchDir is not a WAP branch " +
-          "(no _branch_base lineage — was it created by branchUpsertTable?)"))
-    val kv = lineage.split('\n').map(_.trim).filter(_.contains('='))
-      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap
-    val srcDir = kv("src")
     val branch = Versions.read(branchDir)
+    val kv = branch.lineage.getOrElse(throw new IllegalArgumentException(
+      s"publishUpsertTable: $branchDir is not a WAP branch " +
+        "(no _branch_base lineage — was it created by branchUpsertTable?)"))
+    val srcDir = kv("src")
+    // the batch the branch forked from, taken from the source CURRENT's
+    // version name at clone time (race-free: the linked snapshot names
+    // its own batch)
+    lazy val base = kv.get("batch").map(_.toLong).getOrElse(
+      throw new IllegalStateException(
+        s"publishUpsertTable: $branchDir's _branch_base records no fork batch"))
     require(branch.committed.contains(0L), // branch batch 0 = the fork
       s"publishUpsertTable: branch $branchDir has no committed fork batch")
     val target = branch.snapshot().read(spark)
@@ -2806,10 +2720,10 @@ object Ingest {
     val syncDiff = diffVs(srcSnap.read(spark))
     if (syncDiff.isEmpty) return None
     val head = src.committed.max
-    if (!force && head != baseOf(branchDir, srcDir))
+    if (!force && head != base)
       throw new java.util.ConcurrentModificationException(
         s"publishUpsertTable: $srcDir advanced past the branch base " +
-          s"(base=${baseOf(branchDir, srcDir)}, head=$head) — the audit ran " +
+          s"(base=$base, head=$head) — the audit ran " +
           "against a stale snapshot; re-branch and re-audit, or pass " +
           "force=true to merge the branch's own changes over the head")
     // non-force: head == base, so the source CURRENT *is* the fork
@@ -2821,7 +2735,7 @@ object Ingest {
       else syncDiff
     if (force && diff.isEmpty) return None // untouched branch, src moved
     val newBatch = head + 1
-    commitPinned(srcDir, srcSnap.layout, keepVersions, graceMs,
+    commitPinned(src, srcSnap.layout, keepVersions, graceMs,
       Some(TombstoneCol))(diff, newBatch)
     Some(newBatch)
   }
@@ -2932,24 +2846,24 @@ object Ingest {
     require(asBatch.isEmpty || txn.isEmpty,
       "upsertInto: asBatch pins the table id space, txn scopes dedupe " +
         "per writer — pass one or the other, never both")
+    // the txn-replay check, the id space and the commit share one index
+    val v = Versions.read(tableDir)
     txn.foreach { case (wid, mb) =>
       require(wid.nonEmpty &&
         wid.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
         s"upsertInto: writer id '$wid' must be [A-Za-z0-9._-]+ (it is " +
           "parsed back out of the commit ledger)")
-      readTxns(tableDir).get(wid).foreach { case (lastMb, tableBatch) =>
+      v.txns.get(wid).foreach { case (lastMb, tableBatch) =>
         if (mb <= lastMb) {
           // crash-replayed micro-batch: the data landed as `tableBatch`
           // the first time — no-op before evaluating the source, but
           // heal the commit→publish crash window exactly like the
           // in-sink replay path (idempotent per feed file)
-          if (mb == lastMb && store.exists(store.child(tableDir, "_cdf")))
-            publishFeedSlice(Versions.read(tableDir), tableBatch)
+          if (mb == lastMb && v.changeFeed) publishFeedSlice(v, tableBatch)
           return (tableBatch, 0L)
         }
       }
     }
-    val v = Versions.read(tableDir)
     asBatch.foreach { a =>
       if (v.committed.contains(a)) return (a, 0L)
       require(v.committed.forall(_ < a),
@@ -2957,7 +2871,7 @@ object Ingest {
           s"id of $tableDir — stale checkpoint / foreign id space")
     }
     val layout =
-      if (store.exists(store.child(tableDir, "_meta"))) {
+      if (v.meta.nonEmpty) {
         // callers speak logical names; _meta pins physical
         require(keys.isEmpty || keys == v.keys,
           s"upsertInto: $tableDir pins keys [${v.keys.mkString(",")}] " +
@@ -2975,7 +2889,7 @@ object Ingest {
     val cached = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = cached.count()
-      commitPinned(tableDir, layout, keepVersions, graceMs, deleteCol,
+      commitPinned(v, layout, keepVersions, graceMs, deleteCol,
         txn = txn)(cached, batchId)
       (batchId, n)
     } finally { cached.unpersist(); () }
@@ -3186,7 +3100,7 @@ object Ingest {
         if (n == 0) return None
         val newBatch = asBatch.getOrElse(
           healed.committed.reduceOption(_ max _).getOrElse(-1L) + 1)
-        commitPinned(tableDir, layout, keepVersions, graceMs,
+        commitPinned(healed, layout, keepVersions, graceMs,
           Some(TombstoneCol))(change, newBatch)
         Some((newBatch, n))
       } finally { change.unpersist(); () }
@@ -3277,7 +3191,7 @@ object Ingest {
       case None => v
       case Some(b) =>
         val snap = v.snapshot()
-        commitPinned(v.root, snap.layout, keepVersions, graceMs)(
+        commitPinned(v, snap.layout, keepVersions, graceMs)(
           snap.read(spark).limit(0), b)
         Versions.read(v.root)
     }
@@ -3306,24 +3220,11 @@ object Ingest {
       val n = batch.count()
       if (n == 0) return None
       val newBatch = v.committed.reduceOption(_ max _).getOrElse(-1L) + 1
-      commitPinned(tableDir, snap.layout, keepVersions, graceMs,
+      commitPinned(v, snap.layout, keepVersions, graceMs,
         Some(TombstoneCol), lazyDel)(batch, newBatch)
       Some((newBatch, n))
     } finally { batch.unpersist(); () }
   }
-
-  /** The batch id a WAP branch forked from — the `batch=` line
-    * [[branchUpsertTable]] recorded in `_branch_base`, taken from the
-    * source CURRENT's version name at clone time (race-free: the
-    * linked snapshot names its own batch).
-    */
-  private def baseOf(branchDir: String, srcDir: String)
-                    (implicit store: TableStore): Long =
-    store.read(store.child(branchDir, "_branch_base")).flatMap {
-      _.split('\n').map(_.trim).find(_.startsWith("batch="))
-        .map(_.drop("batch=".length).toLong)
-    }.getOrElse(throw new IllegalStateException(
-      s"publishUpsertTable: $branchDir's _branch_base records no fork batch"))
 
   private def rewriteGeneration(spark: SparkSession, v: Versions,
                                 newBuckets: Int,
@@ -3479,12 +3380,10 @@ object Ingest {
     * in pinned order. Rows in data files carry exactly these columns
     * (plus schema-evolution NULLs for physicals added later).
     */
-  private[sources] def physicalDataSchema(root: String)
-                                         (implicit store: TableStore)
-      : StructType = {
-    val pinned = pinnedSchema(root).getOrElse(
-      throw new IllegalArgumentException(s"$root has no _schema file"))
-    val dead = colMap(root).filterNot(_._3).map(_._1).toSet
+  private[sources] def physicalDataSchema(v: Versions): StructType = {
+    val pinned = v.schema.getOrElse(
+      throw new IllegalArgumentException(s"${v.root} has no _schema file"))
+    val dead = v.colMap.filterNot(_._3).map(_._1).toSet
     StructType(pinned.fields
       .filterNot(f => f.name == UpsertBucketCol || dead(f.name)).toSeq)
   }
@@ -3494,15 +3393,11 @@ object Ingest {
     * applies the column mapping for free by declaring logical names
     * over the physically-read positions).
     */
-  private[sources] def toLogicalSchema(root: String, phys: StructType)
-                                      (implicit store: TableStore)
-      : StructType = {
-    val cm = colMap(root)
+  private[sources] def toLogicalSchema(cm: Seq[(String, String, Boolean)],
+                                       phys: StructType): StructType =
     if (cm.isEmpty) phys
     else StructType(phys.fields.map(f =>
       f.copy(name = toLogicalName(cm, f.name))).toSeq)
-  }
-
 
   /** The dead-letter parquet files — the quarantine read's file
     * surface ([[readQuarantine]]'s resolution as paths).
@@ -3569,10 +3464,10 @@ object Ingest {
                        maxFilesPerTrigger: Option[Int] = None)
                       (implicit store: TableStore): DataFrame = {
     val root = tableDir
-    require(store.exists(store.child(root, "_cdf")),
-      s"$tableDir is not a change-feed table — write it with changeFeed=true")
+    val v = Versions.read(root)
+    v.requireChangeFeed()
     store.mkdirs(store.child(root, "feed")) // tail-before-first-commit is legal
-    val r = spark.readStream.schema(Versions.read(root).changeSchema)
+    val r = spark.readStream.schema(v.changeSchema)
       .format("parquet")
     maxFilesPerTrigger.fold(r)(n => r.option("maxFilesPerTrigger", n))
       .load(store.child(root, "feed"))
@@ -3641,12 +3536,10 @@ object Ingest {
                         inflightGraceMs: Long = 0L,
                         quarantineKeepBatches: Option[Int] = None)
                        (implicit store: TableStore): DataFrame = {
-    require(store.exists(store.child(tableDir, "_meta")),
-      s"not an upsert table (no _meta): $tableDir")
+    val v = Versions.read(tableDir)
+    v.layout // fails on a non-table
     val hadTmp = store.exists(store.child(tableDir, "CURRENT.tmp"))
-    val sweptVersions =
-      cleanupStale(Versions.read(tableDir), keepVersions, graceMs,
-        inflightGraceMs)
+    val sweptVersions = cleanupStale(v, keepVersions, graceMs, inflightGraceMs)
     val sweptFeed = feedBeforeBatch.toSeq
       .flatMap(b => pruneChangeFeed(tableDir, b))
     // dead-letter area: orphaned (never-committed) dirs always sweep

@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** One resolved snapshot of an [[Ingest.upsertParquet]] table: the
   * version a read serves and the control-plane state it is read
@@ -41,6 +41,10 @@ final class Snapshot private[sources] (versions: Versions, val name: String)
     .filter(_.endsWith(".parquet")).map(store.child(dvDir, _))
 
   def hasDeletes: Boolean = deletionVector.nonEmpty
+
+  /** The deletion vector's rows (keys + bucket), when there is one. */
+  private[sources] def deletes(spark: SparkSession): Option[DataFrame] =
+    if (hasDeletes) Some(spark.read.parquet(dvDir)) else None
 
   /** The version's data files (`bkt=*` / `part-*.parquet`). */
   lazy val dataFiles: Seq[String] =
@@ -95,9 +99,8 @@ final class Snapshot private[sources] (versions: Versions, val name: String)
       case Some(Nil) => base.parquet(versionDir).filter(lit(false))
       case Some(ps) => base.parquet(ps: _*)
     }
-    if (!hasDeletes) rows
-    else rows.join(spark.read.parquet(dvDir).select(layout.keys.map(col): _*),
-      layout.keys, "left_anti")
+    deletes(spark).fold(rows)(dv =>
+      rows.join(dv.select(layout.keys.map(col): _*), layout.keys, "left_anti"))
   }
 
   /** [[scan]] as the user sees it: bucket column dropped, column
@@ -119,30 +122,87 @@ object Snapshot {
 
 /** One table's version index, read once per table operation. Building
   * it ([[Versions.read]]) reads the `CURRENT` pointer and nothing else;
-  * the pinned `_meta` layout, `_schema` and `_colmap`, the `_commits`
-  * ledger, the `_empty` log, the `_tags` log, the listing of the
-  * table root and that of its dead-letter area are each read on first
-  * use, at most once. A CURRENT-snapshot read therefore reads no
+  * every pinned table property (the `_meta` layout, `_schema`,
+  * `_colmap`, `_constraints` and the `_cdf` change-feed marker), the
+  * `_commits` ledger, the `_empty` log, the `_tags` log, the listing of
+  * the table root and that of its dead-letter area are each read on
+  * first use, at most once. A CURRENT-snapshot read therefore reads no
   * ledger and lists no root.
   *
   * It owns the one rule "which version dir serves committed batch b"
   * ([[servable]]), which the as-of resolver, the change feed, the
   * retention sweep and the feed publisher all answer through. The
-  * index is a point-in-time view: an op that commits through the sink
-  * reads a new one when it needs the state after its commit.
+  * index is a point-in-time view: the sink checks and commits against
+  * the index of the op that calls it ([[Ingest.upsertParquet]] reads
+  * one per attempt), and an op reads a new one when it needs the state
+  * after its commit.
   */
 final class Versions private (val root: String, val current: Option[String])
                              (implicit store: TableStore) {
+  /** The raw pinned `_meta` text; `None` before the first commit. */
+  private[sources] lazy val meta: Option[String] =
+    store.read(store.child(root, "_meta"))
   /** The pinned `_meta` layout. */
   private[sources] lazy val layout: Ingest.TableLayout =
-    Ingest.TableLayout.parse(store.read(store.child(root, "_meta"))
-      .getOrElse(throw new IllegalArgumentException(
+    Ingest.TableLayout.parse(meta.getOrElse(
+      throw new IllegalArgumentException(
         s"not an upsert table (no _meta): $root")))
-  lazy val schema: Option[StructType] = Ingest.pinnedSchema(root)
+  /** The pinned `_schema`: the table's DATA schema in physical names,
+    * bucket column included.
+    */
+  lazy val schema: Option[StructType] =
+    store.read(store.child(root, "_schema"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+  /** Column-mapping state (`_colmap`): `(physical, logical, live)` per
+    * NON-identity column. Physical names are immutable once written
+    * into parquet files and the pinned `_schema`; logical names are the
+    * user-facing surface ([[Ingest.renameColumn]] / [[Ingest.dropColumn]]
+    * rewrite only this object — zero data I/O). A column absent from
+    * the map is identity-mapped and live. A dead entry is a DROP: the
+    * physical column stays in history, reads project it out, and a
+    * later re-add of the logical name mints a FRESH physical name, so
+    * dropped data is never resurrected (a rename refuses targets that
+    * collide with any pinned physical name, so lookup is unambiguous).
+    */
   private[sources] lazy val colMap: Seq[(String, String, Boolean)] =
-    Ingest.colMap(root)
-  /** The committed batch ids (the `_commits` ledger). */
-  lazy val committed: Set[Long] = Ingest.readLedger(root)
+    store.read(store.child(root, "_colmap")).toSeq
+      .flatMap(_.split('\n')).map(_.trim).filter(_.nonEmpty).map { l =>
+        val p = l.split('\t')
+        require(p.length == 3, s"$root/_colmap: torn entry '$l'")
+        (p(0), p(1), p(2) == "1")
+      }
+  /** Does the table record a change feed (the `_cdf` marker)? */
+  lazy val changeFeed: Boolean = store.exists(store.child(root, "_cdf"))
+  /** A WAP branch's lineage, `_branch_base`'s `key=value` lines
+    * (`src`, the fork `batch`); `None` off a branch.
+    */
+  lazy val lineage: Option[Map[String, String]] =
+    store.read(store.child(root, "_branch_base")).map(_.split('\n')
+      .map(_.trim).filter(_.contains('='))
+      .map { l => val i = l.indexOf('='); l.take(i) -> l.drop(i + 1) }.toMap)
+  /** The pinned CHECK constraints `(name, expression)`, in pin order:
+    * `_constraints` holds one `name=expr` entry per line.
+    */
+  lazy val constraints: Seq[(String, String)] =
+    store.read(store.child(root, "_constraints")).toSeq
+      .flatMap(_.linesIterator).filter(_.nonEmpty)
+      .map(_.split("=", 2)).collect { case Array(n, e) => n -> e }
+  /** The `_commits` ledger, parsed once. */
+  private lazy val ledger: Seq[Versions.Commit] = Versions.readLedger(root)
+  /** The committed batch ids. */
+  lazy val committed: Set[Long] = ledger.map(_.batch).toSet
+  /** batch id → commit wall-clock millis, for the commits that carry
+    * the `ts=` annotation.
+    */
+  lazy val commitTimes: Map[Long, Long] =
+    ledger.flatMap(c => c.ts.map(c.batch -> _)).toMap
+  /** Streaming writer transactions: writerId → (highest recorded
+    * micro-batch id, the TABLE batch id it committed as), which the
+    * replay no-op path heals feed publication with.
+    */
+  lazy val txns: Map[String, (Long, Long)] =
+    ledger.flatMap(c => c.txn.map { case (w, mb) => w -> (mb, c.batch) })
+      .groupMapReduce(_._1)(_._2)((a, b) => if (b._1 > a._1) b else a)
   /** Batch ids committed with ZERO rows (`_empty` appends): batches
     * that minted no version dir, whose snapshot state is identical to
     * the preceding snapshot's.
@@ -157,6 +217,11 @@ final class Versions private (val root: String, val current: Option[String])
   lazy val dirs: Seq[(String, Long, Int)] = store.listNames(root)
     .flatMap(n => Ingest.parseVersion(n).map { case (b, g) => (n, b, g) })
     .filter(d => store.isDirectory(store.child(root, d._1)))
+
+  /** Fails unless the table records a change feed. */
+  def requireChangeFeed(): Unit =
+    require(changeFeed,
+      s"$root is not a change-feed table — write it with changeFeed=true")
 
   /** The committed dead-letter dirs (`_quarantine/b_<batch>`, full
     * paths). A dir a crashed prune left mid-delete (its `_sweeping`
@@ -237,14 +302,21 @@ final class Versions private (val root: String, val current: Option[String])
     *     `asOfBatch`.
     *
     * The layout, schema and column map are read here (once per index),
-    * so the snapshot never mixes two versions' metadata.
+    * so the snapshot never mixes two versions' metadata. The CURRENT
+    * snapshot is built once per index, so an op and the sink it commits
+    * through share its bucket count and deletion vector.
     */
   def snapshot(asOfBatch: Option[Long] = None,
-               tag: Option[String] = None): Snapshot = {
-    val at = tag.map(tagBatch).orElse(asOfBatch)
+               tag: Option[String] = None): Snapshot =
+    tag.map(tagBatch).orElse(asOfBatch) match {
+      case None => head
+      case Some(b) => requireCurrent(); new Snapshot(this, asOf(b))
+    }
+
+  private lazy val head: Snapshot = { requireCurrent(); new Snapshot(this, current.get) }
+
+  private def requireCurrent(): Unit =
     require(current.nonEmpty, s"upsert table has no CURRENT pointer: $root")
-    new Snapshot(this, at.fold(current.get)(asOf))
-  }
 
   /** The version dir NAME an as-of read at batch `b` serves. */
   private def asOf(b: Long): String = {
@@ -344,8 +416,7 @@ final class Versions private (val root: String, val current: Option[String])
     */
   def changeSliceFiles(from: Long, to: Long,
                        published: Boolean = false): Seq[String] = {
-    require(store.exists(store.child(root, "_cdf")),
-      s"$root is not a change-feed table — write it with changeFeed=true")
+    requireChangeFeed()
     def parts(dir: String, prefix: String): Seq[String] =
       store.listNames(dir)
         .filter(n => n.startsWith(prefix) && n.endsWith(".parquet"))
@@ -378,4 +449,31 @@ object Versions {
     */
   def read(root: String)(implicit store: TableStore): Versions =
     new Versions(root, Ingest.readCurrentName(root))
+
+  /** One `_commits` entry: `<batchId>[ txn=<writerId>:<microBatchId>]
+    * ts=<epochMillis>`. The writer token rides the same atomic append
+    * as the batch id, so a commit never exists without its dedupe
+    * record; `ts=` powers TIMESTAMP AS OF (older commits lack it).
+    */
+  private final case class Commit(batch: Long, txn: Option[(String, Long)],
+                                  ts: Option[Long])
+
+  private val TxnToken = """txn=([A-Za-z0-9._\-]+):(\d+)""".r
+  private val TsToken = """\bts=(\d+)\b""".r
+
+  /** Parse the ledger. A torn line from a crash mid-append degrades to
+    * "uncommitted" (the merge is idempotent), never a hard failure; one
+    * torn after its batch id loses only its annotations (that one
+    * micro-batch becomes at-least-once). A `v_*` dir whose batch id is
+    * missing is a crashed partial build, never served.
+    */
+  private def readLedger(root: String)(implicit store: TableStore): Seq[Commit] =
+    store.readLog(store.child(root, "_commits")).flatMap { l =>
+      val toks = l.trim.split("\\s+")
+      scala.util.Try(toks(0).toLong).toOption.map(b => Commit(b,
+        toks.lift(1).collect { case TxnToken(w, mb) =>
+          scala.util.Try(w -> mb.toLong).toOption }.flatten,
+        TsToken.findFirstMatchIn(l)
+          .flatMap(m => scala.util.Try(m.group(1).toLong).toOption)))
+    }
 }

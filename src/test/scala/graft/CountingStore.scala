@@ -8,21 +8,26 @@ import graft.sources.TableStore
   * specs that pin how often one call reads a table's metadata:
   *
   *   - `calls(name)`: whole-object reads by object name (`CURRENT`,
-  *     `_meta`, `_schema`, `_colmap`, ...), plus every probe (`exists`
-  *     / `isDirectory` / `listNames`) of a deletion vector under
-  *     `_deletes`;
+  *     `_meta`, `_schema`, `_colmap`, `_constraints`, `_nbuckets`, ...),
+  *     plus every probe (`exists` / `isDirectory` / `listNames`) of a
+  *     deletion vector under `_deletes` and of the `_cdf` change-feed
+  *     marker;
   *   - `logs(name)`: log reads by log name (`_commits`, `_empty`,
   *     `_tags`);
   *   - `listings(path)`: directory listings by full path, so
   *     `listings(tableDir)` counts listings of the table root.
+  *
+  * Open for specs that also act on a store call (a competing commit
+  * landing mid-operation).
   */
-final class CountingStore(d: TableStore) extends TableStore {
+class CountingStore(d: TableStore) extends TableStore {
   val calls = mutable.Map.empty[String, Int].withDefaultValue(0)
   val logs = mutable.Map.empty[String, Int].withDefaultValue(0)
   val listings = mutable.Map.empty[String, Int].withDefaultValue(0)
 
   private def probe(p: String): Unit =
-    if (baseName(p) == "_deletes") calls("_deletes") += 1
+    if (baseName(p) == "_deletes" || baseName(p) == "_cdf")
+      calls(baseName(p)) += 1
 
   override def exists(p: String): Boolean = { probe(p); d.exists(p) }
   override def isDirectory(p: String): Boolean = { probe(p); d.isDirectory(p) }

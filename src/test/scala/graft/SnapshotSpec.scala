@@ -10,7 +10,11 @@ import graft.sources.{Ingest, LocalTableStore, TableStore}
   * versions' metadata. A CURRENT read lists no table root. Operations
   * that walk versions or commit resolve the table through one version
   * index, so their control-plane reads do not grow with the number of
-  * versions. Counted through a delegating [[CountingStore]].
+  * versions. The sink commits through the index of the op that calls
+  * it: one commit reads each pinned table property once, and an op
+  * commits against the version it read, so a competing commit that
+  * landed after the op resolved fails it loudly. Counted through a
+  * delegating [[CountingStore]].
   */
 class SnapshotSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -97,11 +101,36 @@ class SnapshotSpec extends AnyFunSuite {
       Seq((1L, b.toInt), (10 * b + 2, 0), (10 * b + 3, 0)).toDF("k", "v"), b)
   }
 
+  /** A 4-bucket change-feed table in quarantine mode under a pinned
+    * constraint, with 3 committed batches: the first diverts one
+    * violating row, the last lazily deletes key 3, so CURRENT carries a
+    * deletion vector.
+    */
+  private def quarantineFeedTable(): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-qfeed")
+      .toString + "/t"
+    Seq(Seq((1L, 1, false), (2L, 2, false), (3L, 3, false), (4L, -1, false)),
+      Seq((1L, 10, false), (5L, 5, false)),
+      Seq((3L, 0, true))).zipWithIndex.foreach { case (rows, b) =>
+      Ingest.upsertParquet(dir, Seq("k"), nBuckets = 4, keepVersions = 100,
+        deleteCol = Some("_del"), lazyDeletes = true, changeFeed = true,
+        constraints = Seq("v_nonneg" -> "v >= 0"), quarantine = true)(
+        rows.toDF("k", "v", "_del"), b.toLong)(LocalTableStore)
+    }
+    dir
+  }
+
+  /** Index reads: at most one each per op, the commit included. */
+  private val IndexReads = Seq("CURRENT", "_meta", "_schema", "_colmap")
+  /** Per-snapshot and per-property reads a commit makes once. */
+  private val CommitReads = Seq("_deletes", "_nbuckets", "_constraints", "_cdf")
+
   /** The control-plane counts of one call on table `dir`. */
   private def counted(dir: String)(body: TableStore => Unit): Map[String, Int] = {
     val s = new CountingStore(LocalTableStore)
     body(s)
-    (Seq("CURRENT", "_meta", "_schema", "_colmap").map(n => n -> s.calls(n)) ++
+    ((IndexReads ++ CommitReads).map(n => n -> s.calls(n)) ++
       Seq("_commits", "_empty").map(n => n -> s.logs(n)) :+
       ("root listing" -> s.listings(dir))).toMap
   }
@@ -111,8 +140,9 @@ class SnapshotSpec extends AnyFunSuite {
       val dir = feedTable(n)
       val changes = counted(dir)(implicit s =>
         Ingest.readTableChanges(spark, dir, 0L, n - 1L).collect())
+      // every batch's snapshot lists its own vector and bucket count
       val history = counted(dir)(implicit s =>
-        Ingest.describeUpsertTable(spark, dir).collect())
+        Ingest.describeUpsertTable(spark, dir).collect()) -- CommitReads
       assert(Ingest.describeUpsertTable(spark, dir)(LocalTableStore)
         .filter("retained").count() === n)
       val plain = counted(dir)(implicit s => commit(dir, n.toLong))
@@ -128,8 +158,27 @@ class SnapshotSpec extends AnyFunSuite {
     val large = budgets(6)
     // what a table's version count must not move
     assert(small === large)
-    val got = large.toMap
-    large.foreach { case (op, c) =>
+    val q = quarantineFeedTable()
+    val update = counted(q)(implicit s =>
+      assert(Ingest.updateWhere(spark, q, Seq("v" -> "v + 1"), "k = 1",
+        keepVersions = 100).map(_._2) === Some(1L)))
+    val merge = counted(q)(implicit s => {
+      import spark.implicits._
+      assert(Ingest.mergeInto(spark, q, Seq((2L, 20), (6L, 6)).toDF("k", "v"),
+        Seq(Ingest.MatchedUpdate(None, Seq("v" -> "s.v")),
+          Ingest.NotMatchedInsert(None)), keepVersions = 100)
+        .map(_._2) === Some(2L))
+    })
+    // the commits landed on top of the lazy delete and the quarantine
+    locally {
+      import spark.implicits._
+      assert(Ingest.readUpsertTable(spark, q)(LocalTableStore)
+        .as[(Long, Int)].collect().toMap ===
+        Map(1L -> 11, 2L -> 20, 5L -> 5, 6L -> 6))
+    }
+    val all = large :+ ("updateWhere" -> update) :+ ("mergeInto" -> merge)
+    val got = all.toMap
+    all.foreach { case (op, c) =>
       info(s"$op: ${c.toSeq.sorted.map { case (k, v) => s"$k $v" }.mkString(", ")}")
     }
     Seq("CURRENT", "root listing", "_commits").foreach(k =>
@@ -137,15 +186,58 @@ class SnapshotSpec extends AnyFunSuite {
     got("describeUpsertTable").foreach { case (k, c) =>
       assert(c <= 1, s"describeUpsertTable $k ${c}x") }
     // a plain commit: one root listing (the post-commit sweep and the
-    // feed publish share it); the pointer is read for the replay check,
-    // the CAS base and the sweep
+    // feed publish share it); the pointer is read by the commit's index
+    // (the replay check and the CAS base) and by the sweep's
     val plain = got("commit")
     assert(plain("root listing") === 1)
-    Map("CURRENT" -> 3, "_meta" -> 1, "_schema" -> 1, "_colmap" -> 2,
+    Map("CURRENT" -> 2, "_meta" -> 1, "_schema" -> 1, "_colmap" -> 1,
       "_commits" -> 2).foreach { case (k, c) =>
       assert(plain(k) <= c, s"commit $k ${plain(k)}x") }
-    // an op resolves once on top of the commit it makes
-    for (op <- Seq("deleteWhere", "restoreUpsertTable"); (k, c) <- got(op))
-      assert(c <= plain(k) + 1, s"$op $k ${c}x (commit ${plain(k)}x)")
+    val ops = Seq("deleteWhere", "restoreUpsertTable", "updateWhere", "mergeInto")
+    // an op's index is its commit's: no more index reads than a plain
+    // commit; an as-of op lists the root (and reads `_empty`) once more
+    for (op <- ops; (k, c) <- got(op) if !CommitReads.contains(k)) {
+      val allowed = if (IndexReads.contains(k)) plain(k) else plain(k) + 1
+      assert(c <= allowed, s"$op $k ${c}x (commit ${plain(k)}x)")
+    }
+    // each pinned property once per commit, and each resolved snapshot
+    // lists its vector and reads its bucket count once (a restore
+    // resolves the target version too)
+    for (op <- "commit" +: ops; k <- CommitReads) {
+      val snaps = if (op == "restoreUpsertTable" && k != "_constraints" &&
+        k != "_cdf") 2 else 1
+      assert(got(op)(k) === snaps, s"$op $k ${got(op)(k)}x")
+    }
+  }
+
+  test("an op whose table gains a competing commit after it resolved fails loudly") {
+    import spark.implicits._
+    val dir = feedTable(2)
+    // the competitor commits batch 2 — the id deleteWhere mints from the
+    // index it read — on the sink's first store call
+    var raced = false
+    val racing = new CountingStore(LocalTableStore) {
+      override def mkdirs(p: String): Unit = {
+        if (p == dir && !raced) { raced = true; commit(dir, 2L)(LocalTableStore) }
+        super.mkdirs(p)
+      }
+    }
+    intercept[java.util.ConcurrentModificationException] {
+      Ingest.deleteWhere(spark, dir, "k = 2", keepVersions = 100)(racing)
+    }
+    assert(raced)
+    // nothing of the delete is durable: the competitor's batch 2 is the
+    // table's state, its change slice and its published feed
+    implicit val store: TableStore = LocalTableStore
+    assert(Ingest.committedBatchIds(dir) === Set(0L, 1L, 2L))
+    assert(Ingest.readUpsertTable(spark, dir).as[(Long, Int)].collect().toMap ===
+      Map(1L -> 2, 2L -> 0, 3L -> 0, 12L -> 0, 13L -> 0, 22L -> 0, 23L -> 0))
+    assert(Ingest.readTableChanges(spark, dir, 2L, 2L)
+      .select("k", "_change_type").as[(Long, String)].collect().toSet ===
+      Set((1L, "update_preimage"), (1L, "update_postimage"), (22L, "insert"),
+        (23L, "insert")))
+    // the op re-run against the new head deletes as batch 3
+    assert(Ingest.deleteWhere(spark, dir, "k = 2", keepVersions = 100) ===
+      Some((3L, 1L)))
   }
 }
