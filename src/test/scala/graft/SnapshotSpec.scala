@@ -227,7 +227,7 @@ class SnapshotSpec extends AnyFunSuite {
     }
     assert(raced)
     // nothing of the delete is durable: the competitor's batch 2 is the
-    // table's state, its change slice and its published feed
+    // table's state and its change slice
     implicit val store: TableStore = LocalTableStore
     assert(Ingest.committedBatchIds(dir) === Set(0L, 1L, 2L))
     assert(Ingest.readUpsertTable(spark, dir).as[(Long, Int)].collect().toMap ===
