@@ -414,7 +414,7 @@ object Ingest {
     *
     *   - `v_<batchId>/bkt=N/part-….parquet` — immutable versioned
     *     snapshots, hash-bucketed on `keys`
-    *     (`pmod(xxhash64(keys), nBuckets)`)
+    *     ([[TableLayout.bucketOf]])
     *   - `CURRENT` — the snapshot pointer; updated by writing
     *     `CURRENT.tmp` and an ATOMIC rename over it, so readers
     *     ([[readUpsertTable]]) always resolve a fully-written version —
@@ -676,10 +676,10 @@ object Ingest {
                    (batch: DataFrame, batchId: Long)
                    (implicit store: TableStore): Unit = {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, count,
-      first, lit, max, pmod, when, xxhash64}
+      first, lit, max, when}
     val spark = batch.sparkSession
     val root = v.root
-    val TableLayout(keys, nBuckets, sortCols, filesPerBucket) = layout
+    val TableLayout(keys, nBuckets, sortCols, _) = layout
     store.mkdirs(root)
     val commitsPath = store.child(root, "_commits")
 
@@ -787,7 +787,7 @@ object Ingest {
     require(!lazyDeletes || deleteCol.nonEmpty,
       "upsertParquet: lazyDeletes without deleteCol — there is nothing to defer")
     val bkAll = batch.withColumn(UpsertBucketCol,
-      pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)))
+      TableLayout.bucketOf(keys, nBuckets))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the table's DATA schema (tombstone marker excluded, bucket col
     // included) — pinned once so an empty snapshot stays readable:
@@ -1120,44 +1120,8 @@ object Ingest {
             survivors.join(broadcast(dv), keys, "left_anti"))
             .unionByName(upserts)
         }
-      // layout of the rewritten buckets: hash-partitioned one-file-per-
-      // bucket by default; with pinned sortCols, RANGE-partitioned on
-      // (bucket, sortCols) into ~filesPerBucket slices per bucket and
-      // sorted within — each file then covers a tight sortCols range,
-      // which is what makes the per-file manifest actually prune (hash
-      // buckets alone have full-range bounds on every column). The range
-      // bounds come from the rewritten files' footer stats — the values
-      // their manifest rows hold — and the batch's key ranges
-      // ([[rangeBounds]]); only when those lack a rewritten bucket (the
-      // first commit, a newly filled bucket) or exact stats does the
-      // range partitioning sample the merged rows for them, one job more
-      val laidOut =
-        if (sortCols.isEmpty)
-          merged.repartition(math.max(1, rewriteB.size), col(UpsertBucketCol))
-        else {
-          import org.apache.spark.sql.functions.{element_at, filter, size, typedLit}
-          val order = col(UpsertBucketCol) +: sortCols.map(col)
-          val parts = math.max(1, rewriteB.size * filesPerBucket)
-          val prior = sortKey.fold(Map.empty[Long, Seq[FileRange]])(_ =>
-            footerRanges(spark, rewriteDirs, sortCols.head, tableSchema))
-          val ranged =
-            if (rewriteB.nonEmpty && rewriteB.forall(prior.contains)) {
-              // the batch's upserts count as one more file per bucket, so
-              // keys beyond the old range (an append-only time column)
-              // get slices of their own
-              val (first, bounds) = rangeBounds(
-                prior.map { case (b, fs) => b -> (fs ++ upsertRanges.get(b)) },
-                rewriteB.toSeq.sorted, parts)
-              merged.repartitionById(parts,
-                element_at(typedLit(first), col(UpsertBucketCol)) +
-                  size(filter(element_at(typedLit(bounds),
-                    col(UpsertBucketCol)), sortKey.get > _)))
-            }
-            else merged.repartitionByRange(parts, order: _*)
-          ranged.sortWithinPartitions(order: _*)
-        }
-      rewriteBuckets(spark, newV, laidOut, Some(rewriteB), curDir, sortCols,
-        Some(tableSchema), (name, body) => phase(name)(body()))
+      rewriteBuckets(spark, newV, merged, Some(rewriteB), base, layout,
+        Some(tableSchema), upsertRanges, phase = (n, body) => phase(n)(body()))
       // overlapped data-plane writes (capture / dv / quarantine) must
       // all be durable before the snapshot becomes visible
       awaitDataPlane()
@@ -1756,6 +1720,15 @@ object Ingest {
   }
 
   private[sources] object TableLayout {
+    /** The bucket a row of `keys` hashes to among `buckets`:
+      * `pmod(xxhash64(keys), buckets)`, the one definition every writer
+      * and every bucket-scoped read shares.
+      */
+    def bucketOf(keys: Seq[String], buckets: Int): Column = {
+      import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+      pmod(xxhash64(keys.map(col): _*), lit(buckets.toLong))
+    }
+
     def parse(meta: String): TableLayout = {
       val m = meta.linesIterator.map(_.split("=", 2))
         .collect { case Array(k, v) => k -> v }.toMap
@@ -1913,35 +1886,80 @@ object Ingest {
   }
 
   /** The bucket rewrite every version build shares (sink merge,
-    * selective compaction, generation rewrite): write `laidOut` — the
-    * rows of the `rewritten` buckets (every bucket when `None`), laid
-    * out by the caller — into the fresh build dir `newV`, link every
-    * other bucket of `base` (the snapshot being replaced) forward
-    * ([[linkFiles]]), then build the manifest when `sortCols` are
-    * pinned ([[writeVersionManifest]]). `phase` labels the write and
-    * manifest jobs. Data plane only: the caller's commit makes the
-    * version visible.
+    * selective compaction, generation rewrite), and the one place rows
+    * become files. `rows` hold the `rewritten` buckets (every bucket of
+    * `layout` when `None`), bucket column included. One rule lays them
+    * out, each file sorted on (bucket, sort columns), or on (bucket,
+    * `order`) for ZORDER's Morton key:
+    *
+    *  - one file per bucket when no sort columns are pinned or `fpb`
+    *    is 1 (compaction);
+    *  - else `fpb` range slices per bucket, so each file covers a tight
+    *    sort-column range and the manifest prunes. The bounds come from
+    *    the footer stats of `base`'s rewritten files, `batchRanges`
+    *    counting as one more file per bucket ([[footerRanges]],
+    *    [[rangeBounds]]); a range partitioning samples the rows for
+    *    them, one job more, when `base` has another bucket count or
+    *    lacks a bucket or exact stats, or `order` is given.
+    *
+    * Every other bucket of `base` is linked forward ([[linkFiles]]) and
+    * the manifest built when sort columns are pinned
+    * ([[writeVersionManifest]]). `phase` labels the write and manifest
+    * jobs. Data plane only: the caller's commit makes the version
+    * visible.
     */
   private def rewriteBuckets(spark: SparkSession, newV: String,
-                             laidOut: DataFrame, rewritten: Option[Set[Long]],
-                             base: Option[String], sortCols: Seq[String],
+                             rows: DataFrame, rewritten: Option[Set[Long]],
+                             base: Option[Snapshot], layout: TableLayout,
                              schema: Option[StructType],
+                             batchRanges: Map[Long, FileRange] = Map.empty,
+                             order: Option[Column] = None,
                              phase: (String, () => Unit) => Unit =
                                (_, body) => body())
                             (implicit store: TableStore): Unit = {
+    import org.apache.spark.sql.functions.{col, element_at, filter, size, typedLit}
+    val sortCols = layout.sortCols
+    val bucket = col(UpsertBucketCol)
+    val inBucket = bucket +: order.fold(sortCols.map(col))(Seq(_))
+    val baseDirs = base.toSeq.flatMap(b => bucketDirs(b.versionDir))
+    val nRewritten = rewritten.fold(layout.buckets)(_.size)
+    val laidOut =
+      if (sortCols.isEmpty || layout.fpb == 1)
+        rows.repartition(math.max(1, nRewritten), bucket)
+      else {
+        val parts = math.max(1, nRewritten * layout.fpb)
+        // the footer-placed bounds, when the base's files describe every
+        // rewritten bucket under this bucket count
+        val placed = for {
+          s <- schema if order.isEmpty
+          b <- base if b.buckets == layout.buckets
+          key <- rangeKey(col(sortCols.head), s(sortCols.head).dataType)
+          bs = rewritten.getOrElse(baseDirs.map(_._1).toSet).toSeq.sorted
+          prior = footerRanges(spark,
+            baseDirs.collect { case (id, d) if bs.contains(id) => d },
+            sortCols.head, s)
+          if bs.nonEmpty && bs.forall(prior.contains)
+        } yield {
+          val (first, bounds) = rangeBounds(
+            bs.map(id => id -> (prior(id) ++ batchRanges.get(id))).toMap,
+            bs, parts)
+          rows.repartitionById(parts, element_at(typedLit(first), bucket) +
+            size(filter(element_at(typedLit(bounds), bucket), key > _)))
+        }
+        placed.getOrElse(rows.repartitionByRange(parts, inBucket: _*))
+      }
     // append, NOT overwrite: newV is a fresh build dir, so overwrite's
     // implicit whole-dir delete is redundant — and in the sink it would
     // race the OVERLAPPED _changes/_deletes writers' staging dirs inside
     // newV (they may start before this job)
-    phase("merge-write", () => laidOut
+    phase("merge-write", () => laidOut.sortWithinPartitions(inBucket: _*)
       .write.partitionBy(UpsertBucketCol).mode("append").parquet(newV))
-    base.toSeq.flatMap(bucketDirs)
-      .filterNot { case (b, _) => rewritten.forall(_(b)) }
+    baseDirs.filterNot { case (b, _) => rewritten.forall(_(b)) }
       .foreach { case (_, d) =>
         linkFiles(d, store.child(newV, store.baseName(d))) }
     if (sortCols.nonEmpty)
       phase("manifest", () => writeVersionManifest(spark, newV, rewritten,
-        base, sortCols, schema))
+        base.map(_.versionDir), sortCols, schema))
   }
 
   /** The one generation commit (selective compaction, OPTIMIZE,
@@ -2332,8 +2350,8 @@ object Ingest {
   /** Point-lookup read of an [[upsertParquet]] table: scan ONLY the
     * bucket dirs the probe keys hash to, then exact-match inside them.
     * This is the read path the hash-bucketed layout exists for — a
-    * key's row can live in exactly one bucket (`pmod(xxhash64(keys),
-    * nBuckets)`, pinned in `_meta`), so a k-key lookup reads O(k)
+    * key's row can live in exactly one bucket ([[TableLayout.bucketOf]]
+    * over the count pinned in `_meta`), so a k-key lookup reads O(k)
     * buckets however large the table is, where the plain
     * [[readUpsertTable]]-then-filter scans every file.
     *
@@ -2369,18 +2387,18 @@ object Ingest {
     * bucket count must track table size (16 buckets is right for
     * gigabytes and hopeless at 100 TB, where a bucket should stay a
     * few GB). The CURRENT snapshot is rewritten under the NEW hash
-    * (`pmod(xxhash64(keys), newBuckets)`) as a new GENERATION of the
-    * same committed batch — `v_<b>.<gen+1>` — never a new batchId, so
-    * a streaming writer's monotone batchIds can't collide with
-    * maintenance commits and the ledger stays the pure batch history.
+    * ([[TableLayout.bucketOf]] over `newBuckets`) as a new GENERATION
+    * of the same committed batch — `v_<b>.<gen+1>` — never a new
+    * batchId, so a streaming writer's monotone batchIds can't collide
+    * with maintenance commits and the ledger stays pure batch history.
     *
     * Protocol order, crash-safe at every step:
     *   1. stamp `_nbuckets` into every retained version dir that lacks
     *      one (their layout was implied by `_meta`, which is about to
     *      move — the annotation makes it explicit, so time-travel
     *      point lookups keep pruning correctly);
-    *   2. build the new generation (data re-hashed + re-partitioned,
-    *      one file per bucket — [[rewriteBuckets]]);
+    *   2. build the new generation (data re-hashed and laid out by the
+    *      pinned layout — [[rewriteBuckets]]);
     *   3. the one generation commit ([[commitGeneration]]): feed
     *      linked forward, `_gen_commit` marker, CURRENT swap, sweep of
     *      the superseded generation (same reader race as retention:
@@ -2391,7 +2409,7 @@ object Ingest {
     *      completes an interrupted rebucket idempotently).
     *
     * Doubles as small-file compaction for the snapshot: the rewrite
-    * yields exactly one file per non-empty bucket.
+    * lays every bucket out afresh ([[rewriteBuckets]]).
     */
   def rebucketUpsertTable(spark: SparkSession, tableDir: String,
                           newBuckets: Int)
@@ -2479,10 +2497,11 @@ object Ingest {
     *
     * It builds `v_<b>.<g+1>` through [[rewriteBuckets]] (rewritten
     * buckets written, carried buckets linked, manifest rows carried
-    * for them and fresh for the rest) and commits it through the one
-    * generation commit ([[commitGeneration]]). The deletion vector is
-    * fully applied (its buckets are forced into the rewrite set) and
-    * NOT carried forward.
+    * for them and fresh for the rest) at `fpb = 1` — ONE sorted file
+    * per rewritten bucket — and commits it through the one generation
+    * commit ([[commitGeneration]]). The deletion vector is fully
+    * applied (its buckets are forced into the rewrite set) and NOT
+    * carried forward.
     *
     * Returns the bucket ids rewritten — empty means no debt anywhere
     * and NO new generation was minted (a true no-op).
@@ -2490,25 +2509,19 @@ object Ingest {
   def compactUpsertTable(spark: SparkSession, tableDir: String,
                          filesOver: Int = 4)
                         (implicit store: TableStore): Seq[Int] = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import org.apache.spark.sql.functions.col
     require(filesOver >= 1, s"compactUpsertTable: bad threshold $filesOver")
     val root = tableDir
     val snap = Snapshot.resolve(root)
-    val layout = snap.layout
-    val curDir = snap.versionDir
-    val nBuckets = snap.buckets
-    val overgrown = bucketDirs(curDir)
+    val overgrown = bucketDirs(snap.versionDir)
       .filter { case (_, d) =>
         store.listNames(d).count(_.endsWith(".parquet")) > filesOver }
       .map(_._1).toSet
     // delete debt forces its buckets in: compaction is how the vector
-    // drains, and a partial apply would tear it
-    val debt: Set[Long] =
-      if (!snap.hasDeletes) Set.empty
-      else spark.read.parquet(snap.deletionVector: _*)
-        .select(pmod(xxhash64(layout.keys.map(col): _*),
-          lit(nBuckets.toLong)).as("b"))
-        .distinct().collect().map(_.getLong(0)).toSet
+    // drains, and a partial apply would tear it. The vector records
+    // each entry's bucket, so nothing is re-hashed
+    val debt: Set[Long] = snap.deletes(spark).fold(Set.empty[Long])(
+      _.select(UpsertBucketCol).distinct().collect().map(_.getLong(0)).toSet)
     val rewrite = overgrown ++ debt
     if (rewrite.isEmpty) return Nil
 
@@ -2519,16 +2532,11 @@ object Ingest {
     // (A single file's manifest bounds span the whole bucket; the
     // full-rewrite OPTIMIZE is the pass that restores the fpb-slice
     // layout when tight per-file pruning matters more than file count.)
-    val selected = snap.scan(spark)
-      .filter(col(UpsertBucketCol).isin(rewrite.toSeq: _*))
-    val laid = selected
-      .repartition(math.max(1, rewrite.size), col(UpsertBucketCol))
-      .sortWithinPartitions(
-        (col(UpsertBucketCol) +: layout.sortCols.map(col)): _*)
-    rewriteBuckets(spark, newV, laid, Some(rewrite), Some(curDir),
-      layout.sortCols, snap.schema)
+    rewriteBuckets(spark, newV,
+      snap.scan(spark).filter(col(UpsertBucketCol).isin(rewrite.toSeq: _*)),
+      Some(rewrite), Some(snap), snap.layout.copy(fpb = 1), snap.schema)
     commitGeneration("compactUpsertTable", root, snap.name, newName,
-      nBuckets)
+      snap.buckets)
     rewrite.toSeq.sorted.map(_.toInt)
   }
 
@@ -3120,13 +3128,11 @@ object Ingest {
   private def bucketScopedSnapshot(spark: SparkSession, snap: Snapshot,
                                    probe: DataFrame, keys: Seq[String])
                                   (implicit store: TableStore): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     // hashed by the bucket count of THIS version's layout (a retained
     // pre-rebucket snapshot keeps its original count); ≤ nBuckets small
     // ints — bounded by the table property, not data
     val buckets: Seq[Long] = probe
-      .select(pmod(xxhash64(keys.map(col): _*),
-        lit(snap.buckets.toLong)).as("b"))
+      .select(TableLayout.bucketOf(keys, snap.buckets).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq.sorted
     snap.read(spark, Some(buckets
       .map(b => store.child(snap.versionDir, s"$UpsertBucketCol=$b"))
@@ -3232,12 +3238,12 @@ object Ingest {
                                 zorderCols: Seq[String] = Nil,
                                 purgeDeadCols: Boolean = false)
                                (implicit store: TableStore): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+    import org.apache.spark.sql.functions.{col, lit}
     require(newBuckets > 0, s"rebucketUpsertTable: bad bucket count $newBuckets")
     val root = v.root
     val snap = v.snapshot()
     val layout = snap.layout
-    val TableLayout(keys, metaBuckets, sortCols, fpb) = layout
+    val metaBuckets = layout.buckets
     // preserve pinned layout properties (sort/fpb) across the bucket-
     // count change — dropping them would silently stop manifest builds
     def syncMeta(): Unit = store.writeAtomic(root, "_meta",
@@ -3269,17 +3275,13 @@ object Ingest {
     val rehashed0 = snap.scan(spark).drop(UpsertBucketCol)
     val rehashed = deadPhys.filter(rehashed0.columns.contains)
       .foldLeft(rehashed0)(_ drop _)
-      .withColumn(UpsertBucketCol,
-        pmod(xxhash64(keys.map(col): _*), lit(newBuckets.toLong)))
-    // same layout discipline as the sink: range-sliced sorted files per
-    // bucket when sortCols are pinned (rebucket must not destroy the
-    // clustering the manifest depends on), one file per bucket
-    // otherwise — unless a ZORDER pass asked for interleaved
-    // clustering, in which case the slices follow the Morton key over
-    // the (quantized) stats columns and the manifest's per-file boxes
-    // become tight on EVERY dimension instead of the leading one
-    val rehashedLaid =
-      if (zorderCols.nonEmpty) {
+      .withColumn(UpsertBucketCol, TableLayout.bucketOf(layout.keys, newBuckets))
+    // the pinned layout ([[rewriteBuckets]]); a ZORDER pass orders each
+    // bucket along the Morton key over the (quantized) stats columns, so
+    // the manifest's per-file boxes are tight on EVERY dimension
+    val zorder =
+      if (zorderCols.isEmpty) None
+      else {
         // one stats pass quantizes each dim by linear min/max scaling
         // into the curve's bit budget (16 bits × 2 / 10 bits × 3)
         val statAggs = zorderCols.flatMap(c => Seq(
@@ -3298,23 +3300,13 @@ object Ingest {
               ((col(zorderCols(i)).cast("double") - lo) / (hi - lo) *
                 (levels - 1)).cast("long"), lit(0L)), lit(levels - 1))
         }
-        val zk =
+        Some(
           if (zorderCols.size == 2)
             graft.operators.Layout.zkey2(quant(0), quant(1))
-          else graft.operators.Layout.zkey3(quant(0), quant(1), quant(2))
-        rehashed.withColumn("__zk", zk)
-          .repartitionByRange(newBuckets * fpb,
-            col(UpsertBucketCol), col("__zk"))
-          .sortWithinPartitions(col(UpsertBucketCol), col("__zk"))
-          .drop("__zk") // projection preserves partitioning + order
+          else graft.operators.Layout.zkey3(quant(0), quant(1), quant(2)))
       }
-      else if (sortCols.isEmpty)
-        rehashed.repartition(newBuckets, col(UpsertBucketCol))
-      else rehashed.repartitionByRange(newBuckets * fpb,
-          (col(UpsertBucketCol) +: sortCols.map(col)): _*)
-        .sortWithinPartitions((col(UpsertBucketCol) +: sortCols.map(col)): _*)
-    rewriteBuckets(spark, newV, rehashedLaid, None, None, sortCols,
-      snap.schema)
+    rewriteBuckets(spark, newV, rehashed, None, Some(snap),
+      layout.copy(buckets = newBuckets), snap.schema, order = zorder)
     // steps 3–6 ([[commitGeneration]]): the _meta update (and PURGE's
     // narrowing) runs between the swap and the sweep
     commitGeneration("rewriteGeneration", root, snap.name, newName,

@@ -42,9 +42,9 @@ final class Snapshot private[sources] (versions: Versions, val name: String)
 
   def hasDeletes: Boolean = deletionVector.nonEmpty
 
-  /** The deletion vector's rows (keys + bucket), when there is one. */
+  /** The deletion vector's rows (keys + bucket), from its listed files. */
   private[sources] def deletes(spark: SparkSession): Option[DataFrame] =
-    if (hasDeletes) Some(spark.read.parquet(dvDir)) else None
+    if (hasDeletes) Some(spark.read.parquet(deletionVector: _*)) else None
 
   /** The version's data files (`bkt=*` / `part-*.parquet`). */
   lazy val dataFiles: Seq[String] =

@@ -1423,16 +1423,24 @@ abstract class IngestSuiteBase extends AnyFunSuite {
       Seq(("value", 999L, 2000L))).filter(col("value") >= 999L)
     assert(wide.select("user_id").as[Long].collect().toSeq === Seq(10L))
     // rebucket preserves the layout properties and rebuilds the manifest
+    def rows(): Set[(Long, Long)] = Ingest.readUpsertTable(spark, table)
+      .select("user_id", "value").as[(Long, Long)].collect().toSet
+    val beforeRebucket = rows()
     Ingest.rebucketUpsertTable(spark, table, 4)
     val cur = new java.io.File(table, currentName(table))
     assert(new java.io.File(cur, "_stats").isDirectory,
       "rebucket dropped the manifest")
+    assert(rows() === beforeRebucket)
+    // every row sits in the bucket the new count hashes it to
+    assert(Ingest.lookupUpsertTable(spark, table,
+      (1L to 300L).toDF("user_id")).count() === beforeRebucket.size)
     val again = Ingest.readUpsertTableWhere(spark, table,
       Seq(("value", 10L, 40L))).filter(col("value").between(10, 40))
     assert(again.select("user_id").as[Long].collect().toSet ===
       (11L to 40L).toSet - 20L) // 10 was re-valued to 1000 in batch 2
     assert(again.inputFiles.length <
       Ingest.readUpsertTable(spark, table).inputFiles.length)
+    assertManifestMatchesScan(table, Seq("value"))
   }
 
   /** The CURRENT version's manifest rows against the rows
@@ -1562,7 +1570,12 @@ abstract class IngestSuiteBase extends AnyFunSuite {
     assert(new java.io.File(table, "v_1/_deletes").isDirectory)
     val before = Ingest.readUpsertTable(spark, table)
       .select("user_id", "value").as[(Long, Long)].collect().toSet
-    Ingest.optimizeUpsertTable(spark, table)
+    // the slice bounds come from the old files' footer stats, so no job
+    // samples the rows for them: vector read, vector broadcast, shuffle,
+    // write, manifest (a sampled layout runs 6)
+    val jobs = org.apache.spark.GraftTestAccess.jobsOf(spark.sparkContext)(
+      Ingest.optimizeUpsertTable(spark, table))
+    assert(jobs.size === 5, jobs.mkString(", "))
     def cur(): java.io.File = new java.io.File(table, currentName(table))
     // new generation of the SAME batch: no batchId minted, debt applied
     assert(cur().getName === "v_1.1", cur().getName)
@@ -2116,6 +2129,12 @@ abstract class IngestSuiteBase extends AnyFunSuite {
 
     val rewritten = Ingest.compactUpsertTable(spark, t, filesOver = 2)
     assert(rewritten === expectRewrite)
+    // each rewritten bucket collapses to exactly one file; the sparse
+    // bucket's only key was deleted, so it keeps none
+    val compacted = filesPerBucket("v_1.1")
+    fragmented.foreach(b => assert(compacted.get(b).map(_.size) === Some(1),
+      s"bucket $b: ${compacted.get(b).map(_.map(_.getName))}"))
+    assert(compacted.get(sparseB).forall(_.isEmpty))
     // state: all dense keys live, the deleted key stays gone
     val got = Ingest.readUpsertTable(spark, t)
       .select("k").as[Long].collect().toSet

@@ -84,6 +84,30 @@ class SnapshotSpec extends AnyFunSuite {
     assert(repeated.result() === Nil)
   }
 
+  test("a deletion-vector read names its files and logs no ignored path") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val dir = table(lazyDeletes = true)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-snapshot-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(capture)
+    try assert(Ingest.readUpsertTable(spark, dir)(LocalTableStore)
+      .count() === 199L)
+    finally { root.removeAppender(capture); capture.stop() }
+    // other suites may log concurrently: only this table's paths count
+    val ignored = seen.toArray.map(_.toString)
+      .filter(m => m.contains("All paths were ignored") && m.contains(dir))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
+
   /** A 4-bucket change-feed table keeping every version, with `n`
     * committed batches: each upserts two fresh keys and updates key 1.
     */
